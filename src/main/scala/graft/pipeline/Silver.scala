@@ -9,6 +9,10 @@ import graft.ops.{Categorize, Cleaning, Duration}
   * one wide projection per entity built from the cleaning combinators; a
   * narrow, shuffle-free map stage (zero joins except broadcast mapping
   * enrichment), exactly the reference's one-CTE-per-entity CTAS shape.
+  *
+  * [[run]] reads bronze through [[Layer.read]] (footer schema, no
+  * inference job) and writes its four entities as one concurrent
+  * [[Layer.wave]].
   */
 object Silver {
 
@@ -233,21 +237,19 @@ object Silver {
         default = "Other").as("category"))
 
   def run(spark: SparkSession, outDir: String): Unit = {
-    val b = (n: String) => spark.read.parquet(s"$outDir/bronze/$n")
-    // orders partitioned by year: queries with an order_year predicate
-    // prune whole directories at the file-index level — at 100 TB this is
-    // the difference between scanning one year and scanning the decade.
-    cleanOrders(b("orders"))
-      .withColumn("order_year", year(col("order_date")))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("order_year")
-      .parquet(s"$outDir/silver/orders")
-    Seq(
-      "lineitem" -> cleanLineitem(b("lineitem")),
-      "part" -> cleanPart(b("part")),
-      "customer" -> b("customer")
-    ).foreach { case (n, df) =>
-      df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/silver/$n")
-    }
+    val b = (n: String) => Layer.read(spark, s"$outDir/bronze/$n")
+    val w = (n: String) => s"$outDir/silver/$n"
+    Layer.wave(
+      // orders partitioned by year: queries with an order_year predicate
+      // prune whole directories at the file-index level — at 100 TB this is
+      // the difference between scanning one year and scanning the decade.
+      () => cleanOrders(b("orders"))
+        .withColumn("order_year", year(col("order_date")))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("order_year")
+        .parquet(w("orders")),
+      () => cleanLineitem(b("lineitem")).write.mode(SaveMode.Overwrite).parquet(w("lineitem")),
+      () => cleanPart(b("part")).write.mode(SaveMode.Overwrite).parquet(w("part")),
+      () => b("customer").write.mode(SaveMode.Overwrite).parquet(w("customer")))
   }
 }

@@ -1,17 +1,36 @@
 package graft.pipeline
 
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SaveMode
+import org.scalatest.BeforeAndAfterAll
+
 import graft.SparkSpec
 
 /** End-to-end medallion build at sf0.001 — the composed bronze→silver→gold
-  * dataflow with S8 uniqueness assertions firing inside Gold.run. */
-class PipelineSpec extends SparkSpec {
+  * dataflow with S8 uniqueness assertions firing inside Gold.run. Built
+  * once into a temp dir that every test reads. */
+class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
 
-  test("bronze → silver → gold runs end-to-end with assertions green") {
-    val out = "/root/repo/target/pipeline_spec"
-    Bronze.run(spark, "/root/testdata/sf0.001", out)
+  private val sf = "/root/testdata/sf0.001"
+  private lazy val out = Files.createTempDirectory("graft-pipeline-spec").toString
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    Bronze.run(spark, sf, out)
     Silver.run(spark, out)
     Gold.run(spark, out) // throws if any S8 uniqueness assertion fails
+  }
 
+  override def afterAll(): Unit =
+    try FileUtils.deleteDirectory(new File(out)) finally super.afterAll()
+
+  test("bronze → silver → gold runs end-to-end with assertions green") {
     val fact = spark.read.parquet(s"$out/gold/fact_orders")
     fact.count() shouldBe spark.read.parquet(s"$out/bronze/orders").count()
     fact.columns should contain allOf ("segment_key", "order_date_key", "total_price")
@@ -22,7 +41,6 @@ class PipelineSpec extends SparkSpec {
 
   test("silver orders are year-partitioned and a year predicate prunes at the file index") {
     import org.apache.spark.sql.functions.col
-    val out = "/root/repo/target/pipeline_spec"
     val pruned = spark.read.parquet(s"$out/silver/orders")
       .filter(col("order_year") === 1995)
     val plan = pruned.queryExecution.executedPlan.toString
@@ -32,7 +50,74 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("gold dim_dates built as CTAS + append (S6) stays gap- and overlap-free") {
-    val dd = spark.read.parquet("/root/repo/target/pipeline_spec/gold/dim_dates")
+    val dd = spark.read.parquet(s"$out/gold/dim_dates")
     dd.count() shouldBe (365 + 366 + 365 + 365).toLong // 1995..1998
+  }
+
+  /** Spark jobs started while `body` runs. The listener bus delivers
+    * events in order, so once the listener has seen a sentinel job start
+    * it has seen every job that started before it. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val starts = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties).flatMap(p => Option(p.getProperty("sentinel")))
+          .getOrElse(""))
+    }
+    def sentinel(tag: String): Seq[String] = {
+      sc.setLocalProperty("sentinel", tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("sentinel", null)
+      Iterator.continually(starts.poll(60, TimeUnit.SECONDS))
+        .map { t => assert(t != null, s"sentinel $tag never started"); t }
+        .takeWhile(_ != tag).toSeq
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("before")
+      body
+      sentinel("after").size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Layer.read launches no Spark job and returns the written schema") {
+    for (table <- Seq("bronze/orders", "silver/orders")) {
+      val path = s"$out/$table"
+      var schema: org.apache.spark.sql.types.StructType = null
+      jobsDuring { schema = Layer.read(spark, path).schema } shouldBe 0
+      schema shouldBe spark.read.parquet(path).schema
+    }
+    // the footer keeps the written type, not Schemas.all's `timestamp`
+    Layer.read(spark, s"$out/bronze/orders").schema("o_orderdate").dataType.typeName shouldBe
+      "timestamp_ntz"
+    Layer.read(spark, s"$out/silver/orders").columns should contain("order_year")
+  }
+
+  test("Layer.wave waits for every write, then rethrows the first failure") {
+    Layer.wave(() => { Thread.sleep(100); 1 }, () => 2) shouldBe Seq(1, 2)
+
+    val secondDone = new AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Layer.wave(
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(500); secondDone.set(true) },
+        () => throw new IllegalStateException("third"))
+    }
+    e.getMessage shouldBe "first"
+    secondDone.get shouldBe true
+  }
+
+  test("an S8 violation in Gold's second wave fails Gold.run") {
+    val dup = Files.createTempDirectory("graft-pipeline-dup").toString
+    try {
+      Bronze.run(spark, sf, dup)
+      Silver.run(spark, dup)
+      val path = s"$dup/silver/orders"
+      val orders = spark.read.parquet(path)
+      spark.createDataFrame(java.util.List.of(orders.head()), orders.schema)
+        .write.mode(SaveMode.Append).partitionBy("order_year").parquet(path)
+      val e = intercept[IllegalArgumentException](Gold.run(spark, dup))
+      e.getMessage should include("S8 uniqueness violated on fact_orders(o_orderkey)")
+    } finally FileUtils.deleteDirectory(new File(dup))
   }
 }
