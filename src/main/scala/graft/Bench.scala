@@ -912,14 +912,14 @@ object Bench {
               // (shuffle_ratio ~0) while the full recompute pays the
               // corpus-sized assignment + dominance exchanges.
               ("q174_incremental_semdedup",
-                Queries.q174IncrementalSemdedup _, Queries.q174FullRecompute _),
+                Queries.q174IncrementalSemdedup(_, _), Queries.q174FullRecompute _),
               // q176 joins the EXCHANGE-BOUND family: the rebuild
               // shuffles corpus-sized window rows (occ groupBy + per-doc
               // start collection) where the maintenance broadcasts
               // delta-sized id/key sets into the stored-index scan and
               // shuffles only delta-adjacent keys' occurrences.
               ("q176_incremental_span_dedup",
-                Queries.q176IncrementalSpanDedup _, Queries.q176FullRecompute _),
+                Queries.q176IncrementalSpanDedup(_, _), Queries.q176FullRecompute _),
               // q179's code-table halves (q159's regime, incl. its r18
               // shift): the rebuild re-computes the per-(id, subspace)
               // argmin over the whole snapshot — since r18 as an
@@ -935,7 +935,7 @@ object Bench {
               // cpu_ratio — delta-only tokenization + hashing vs the
               // full-corpus re-sketch.
               ("q180_incremental_cms",
-                Queries.q180IncrementalCms _, Queries.q180FullRecompute _))
+                Queries.q180IncrementalCms(_, _), Queries.q180FullRecompute _))
               .filter(p => scaleFilter(p._1))
               .map { case (n, m, r) =>
                 try s""""$n":{"sf01":${fmtPair(m, r, sfDir)},"sf1":${fmtPair(m, r, sf1Dir)}}"""

@@ -224,14 +224,11 @@ object Queries {
       .limit(100)
 
   /** Flagship: opportunity_rank structural clone (aact_gold_layer.sql:260-349,
-    * SURVEY §7.3) — J5/J6, A3-A5, F1/F16, P7, W1. */
-  def q17OpportunityScore(s: SparkSession, dir: String): DataFrame =
-    q17OpportunityScore(s, dir, maxGlobalRankBytes = 64L << 20)
-
-  /** `maxGlobalRankBytes = 0` forces the distributed rank tier (PlanSpec
-    * pins its window-free shape; OpportunitySpec pins tier equality). */
-  private[graft] def q17OpportunityScore(s: SparkSession, dir: String,
-                                         maxGlobalRankBytes: Long): DataFrame =
+    * SURVEY §7.3) — J5/J6, A3-A5, F1/F16, P7, W1. The global rank is
+    * tiered by [[graft.Tier]] (PlanSpec pins the distributed rank's
+    * window-free shape; OpportunitySpec pins tier equality). */
+  def q17OpportunityScore(s: SparkSession, dir: String,
+                          maxGlobalRankBytes: Long = Tier.LocalBytes): DataFrame =
     Opportunity.opportunityRank(
       t(s, dir, "orders"), t(s, dir, "lineitem"),
       t(s, dir, "part"), t(s, dir, "customer"),
@@ -772,15 +769,11 @@ object Queries {
     * count is the AUTO √N rule ([[Similarity.ivfAssignment]]) — probing
     * nProbe of ~√N lists bounds the scan to ~nProbe·√N candidates and
     * keeps the assignment pass subquadratic as N grows (the sf1 bench
-    * block measured the fixed-stride blow-up this replaced). */
-  def q52AnnIvfTopk(s: SparkSession, dir: String): DataFrame =
-    q52AnnIvfTopk(s, dir, maxLocalBytes = 64L << 20)
-
-  /** `maxLocalBytes = 0` forces the distributed chain (PlanSpec pins
-    * both tiers; SimilaritySpec pins their equality on near-tie
-    * vectors). */
-  private[graft] def q52AnnIvfTopk(s: SparkSession, dir: String,
-                                   maxLocalBytes: Long): DataFrame =
+    * block measured the fixed-stride blow-up this replaced). Tiered by
+    * [[graft.Tier]] (PlanSpec pins both tiers; SimilaritySpec pins their
+    * equality on near-tie vectors). */
+  def q52AnnIvfTopk(s: SparkSession, dir: String,
+                    maxLocalBytes: Long = Tier.LocalBytes): DataFrame =
     Similarity.ivfTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
       col("vec_id") % 50 === 0, k = 5, centroidEvery = 0, nProbe = 3,
       maxLocalBytes)
@@ -2195,7 +2188,7 @@ object Queries {
     * stored blocks instead of each paying scan + quantize +
     * localCheckpoint. Path carries the quantization scale + schema
     * version so a semantics change rebuilds the artifact. */
-  private def quantizedPoints(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def quantizedPoints(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
     val path = s"${Tables.scratchDir(s)}/qpoints_e6_v1/$sfTag"
     Tables.servedArtifact(s, path) {
@@ -2244,24 +2237,20 @@ object Queries {
     * rank by EXACT quantized L2 distance — integer end to end, so
     * distances AND ranks hash-match the unrolled oracle. Completes the
     * ANN family: brute force (q24), hyperplane LSH (q25), seed-centroid
-    * IVF (q52), and now the trained quantizer the others approximate. */
-  def q103TrainedIvfTopk(s: SparkSession, dir: String): DataFrame =
-    q103TrainedIvfTopk(s, dir, maxLocalBytes = 64L << 20)
-
-  /** q103's tiered body (r19 — the q117/q116 serving-tier treatment at
-    * the exact-IVF layer): under the fail-closed Catalyst size-stats
-    * guard the probe→list→exact-rank serve runs as the ONE
+    * IVF (q52), and now the trained quantizer the others approximate.
+    *
+    * Serving tier (r19 — the q117/q116 treatment at the exact-IVF
+    * layer): when [[graft.Tier]] admits the points and the trained
+    * centroids, the probe→list→exact-rank serve runs as the ONE
     * [[graft.ops.Cluster.ivfServeLocal]] task, with the inverted lists
     * derived by the zero-exchange [[graft.ops.Cluster.assignQ]] fold
     * (bit-equal to ivfSearchQPts' rank-1 rows — the ClusterSpec-pinned
-    * equality). `maxLocalBytes = 0` forces the distributed chain. */
-  private[graft] def q103TrainedIvfTopk(s: SparkSession, dir: String,
-                                        maxLocalBytes: Long): DataFrame = {
+    * equality). */
+  def q103TrainedIvfTopk(s: SparkSession, dir: String,
+                         maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val pts = quantizedPoints(s, dir)
     val panel = pts.filter(col("id") % 50 === 0).select(col("id"))
-    if (maxLocalBytes > 0 &&
-        pts.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, pts, trainedCentroids(s, dir)))
       Cluster.ivfServeLocal(pts, trainedCentroids(s, dir),
         Cluster.assignQ(pts, trainedCentroids(s, dir))
           .select(col("id"), col("cluster_id")),
@@ -2637,31 +2626,26 @@ object Queries {
     * re-rank — and distances AND ranks hash-match. Completes the ANN
     * family's production axis: q103 trains the coarse quantizer
     * (inverted lists), this trains the fine one (compressed residual
-    * scan); a full IVF-PQ deployment composes the two. */
-  def q116PqTopk(s: SparkSession, dir: String): DataFrame =
-    q116PqTopk(s, dir, maxLocalBytes = 64L << 20)
-
-  /** q116's tiered body (r19): PQ-only top-k is IVF-PQ with NO coarse
-    * route — every candidate is in scope — so the guarded one-task serve
-    * is [[graft.ops.Pq.serveStoredLocal]] over a SINGLETON list (every
-    * id in cluster 0, one empty-vector centroid, nProbe 1): the probe
-    * trivially selects the one list, candidates = all ids minus self,
-    * and the ADC matched-sum / (adc, cand_id) shortlist /
-    * (dist, cand_id) exact re-rank are the kernel's existing arms —
-    * step-for-step [[graft.ops.Pq.topKQ]] (PqSpec pins the equality;
-    * `maxLocalBytes = 0` forces the distributed chain). */
-  private[graft] def q116PqTopk(s: SparkSession, dir: String,
-                                maxLocalBytes: Long): DataFrame = {
+    * scan); a full IVF-PQ deployment composes the two.
+    *
+    * Serving tier (r19, under [[graft.Tier]]): PQ-only top-k is IVF-PQ
+    * with NO coarse route — every candidate is in scope — so the
+    * one-task serve is [[graft.ops.Pq.serveStoredLocal]] over a
+    * SINGLETON list (every id in cluster 0, one empty-vector centroid,
+    * nProbe 1): the probe trivially selects the one list, candidates =
+    * all ids minus self, and the ADC matched-sum / (adc, cand_id)
+    * shortlist / (dist, cand_id) exact re-rank are the kernel's
+    * existing arms — step-for-step [[graft.ops.Pq.topKQ]] (PqSpec pins
+    * the equality). */
+  def q116PqTopk(s: SparkSession, dir: String,
+                 maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val pts = quantizedPoints(s, dir)
     val codes = pqCodes(s, dir)
     val panel = pts.filter(col("id") % 50 === 0).select(col("id"))
     // Guarded sum includes the codebook artifact (ADVICE r19): books are
     // m·k rows by construction, but the guard should enforce that, not
     // assume it — an unexpectedly corpus-sized model must fail closed.
-    if (maxLocalBytes > 0 &&
-        Seq(pts, codes, pqBooks(s, dir))
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, pts, codes, pqBooks(s, dir)))
       graft.ops.Pq.serveStoredLocal(pts,
         s.range(1).select(lit(0L).as("cluster_id"),
           array().cast("array<bigint>").as("cv")),
@@ -2683,8 +2667,21 @@ object Queries {
     * entry times exactly what a serving deployment runs per query batch:
     * route → compressed scan → re-rank, never a full-corpus pass over raw
     * vectors. Fixed-point end to end; the oracle replays both trainers
-    * and the full search, distances AND ranks hash-checked. */
-  def q117IvfpqTopk(s: SparkSession, dir: String): DataFrame = {
+    * and the full search, distances AND ranks hash-checked.
+    *
+    * Serving tier — the q179 treatment applied to the LIVE composition
+    * (r19): when [[graft.Tier]] admits the points, codes and both model
+    * artifacts, the whole route→ADC→re-rank runs as the ONE
+    * [[graft.ops.Pq.serveStoredLocal]] task, with the inverted lists
+    * derived in-plan by [[graft.ops.Cluster.assignQ]] (the
+    * zero-exchange broadcast-centroid argmin — bit-equal to
+    * [[graft.ops.Cluster.rankCentroidsQ]]'s rank-1 rows, the equality
+    * ClusterSpec pins), so the distributed chain's ~12 serving stages
+    * of scheduler latency collapse while the arithmetic, tie-breaks and
+    * the density-stable shortlist bound stay step-for-step identical
+    * (PqSpec pins tier equality incl. a pct-binding corpus). */
+  def q117IvfpqTopk(s: SparkSession, dir: String,
+                    maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     // oversample 64, not q116's 4: the testdata embeddings are
     // near-random — PQ's adversarial case, where 8 codewords per 16-dim
     // subspace (3-bit codes, kept tiny so the oracle can replay both
@@ -2708,23 +2705,6 @@ object Queries {
     // corpus: 3200), which is what keeps the q83e recall gate above its
     // 0.3 floor at BOTH densities with the same 3-bit codebooks. The
     // oracle replays the derived bound from its own count.
-    q117IvfpqTopk(s, dir, maxLocalBytes = 64L << 20)
-  }
-
-  /** q117's tiered body — the q179 serving-tier treatment applied to
-    * the LIVE composition (r19): under the fail-closed Catalyst
-    * size-stats guard over (pts, codes) the whole route→ADC→re-rank
-    * runs as the ONE [[graft.ops.Pq.serveStoredLocal]] task, with the
-    * inverted lists derived in-plan by [[graft.ops.Cluster.assignQ]]
-    * (the zero-exchange broadcast-centroid argmin — bit-equal to
-    * [[graft.ops.Cluster.rankCentroidsQ]]'s rank-1 rows, the equality
-    * ClusterSpec pins), so the distributed chain's ~12 serving stages
-    * of scheduler latency collapse while the arithmetic, tie-breaks and
-    * the density-stable shortlist bound stay step-for-step identical
-    * (PqSpec pins tier equality incl. a pct-binding corpus;
-    * `maxLocalBytes = 0` forces the distributed chain). */
-  private[graft] def q117IvfpqTopk(s: SparkSession, dir: String,
-                                   maxLocalBytes: Long): DataFrame = {
     val pts = quantizedPoints(s, dir)
     val codes = pqCodes(s, dir)
     val panel = pts.filter(col("id") % 50 === 0 && col("id") < 10000000L)
@@ -2732,10 +2712,8 @@ object Queries {
     // Guarded sum includes the model artifacts (ADVICE r19): centroids
     // and codebooks are k-/m·k-row tables by construction, but the guard
     // should enforce that, not assume it.
-    if (maxLocalBytes > 0 &&
-        Seq(pts, codes, pqBooks(s, dir), trainedCentroids(s, dir))
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, pts, codes, pqBooks(s, dir),
+        trainedCentroids(s, dir)))
       graft.ops.Pq.serveStoredLocal(pts, trainedCentroids(s, dir),
         pqBooks(s, dir), codes,
         graft.ops.Cluster.assignQ(pts, trainedCentroids(s, dir)),
@@ -3442,30 +3420,25 @@ object Queries {
     * oracle replays BOTH rankers — q167's integer BM25 arithmetic AND
     * the full IVF recompute (train + assign + probe + quantized
     * distances, the q159 CTEs over the unfiltered corpus) — and the
-    * fusion bit-for-bit. */
-  def q170HybridRrf(s: SparkSession, dir: String): DataFrame =
-    q170HybridRrf(s, dir, maxLocalBytes = 64L << 20)
-
-  /** SERVING TIER (late r16 — the q171/q174 treatment applied to the
-    * serving-node composition): when the seven stored artifacts'
-    * Catalyst size estimates all fit, the whole hybrid retrieval runs
-    * as ONE task ([[graft.ops.Fusion.hybridServeLocal]] — what a query
-    * node actually does: serve standing probes from in-memory index
-    * structures). Fails CLOSED to the distributed composition (whose
-    * shape PlanSpec pins on forced builds); `maxLocalBytes = 0` forces
-    * it. Cross-tier equality asserted by FusionSpec at sf0.01 and by
-    * the oracle's dual-ranker replay every round. */
-  private[graft] def q170HybridRrf(s: SparkSession, dir: String,
-                                   maxLocalBytes: Long): DataFrame = {
+    * fusion bit-for-bit.
+    *
+    * SERVING TIER (late r16 — the q171/q174 treatment applied to the
+    * serving-node composition): when [[graft.Tier]] admits the seven
+    * stored artifacts, the whole hybrid retrieval runs as ONE task
+    * ([[graft.ops.Fusion.hybridServeLocal]] — what a query node
+    * actually does: serve standing probes from in-memory index
+    * structures); otherwise the distributed composition runs (PlanSpec
+    * pins its shape on forced builds). Cross-tier equality asserted by
+    * FusionSpec at sf0.01 and by the oracle's dual-ranker replay every
+    * round. */
+  def q170HybridRrf(s: SparkSession, dir: String,
+                    maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val (post, dfT, stats) = bm25Index(s, dir)
     val panel = bm25Panel(s, dir, dfT)
     val pts = quantizedPoints(s, dir)
     val cents = trainedCentroids(s, dir)
     val lists = fullIvfLists(s, dir)
-    if (maxLocalBytes > 0 &&
-        Seq(post, dfT, stats, panel, pts, cents, lists)
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, post, dfT, stats, panel, pts, cents, lists))
       return graft.ops.Fusion.hybridServeLocal(post, dfT, stats, panel,
         pts, cents, lists, kLex = 10, topKSem = 10, nProbe = 2,
         kRrf = 60, maxRank = 10, topN = 10)
@@ -3710,22 +3683,15 @@ object Queries {
     * AND the policy bits. No separate io pair: the maintenance IS
     * [[graft.ops.AdditiveCounts]], whose delta-sized-IO claim is
     * measured on q155/q160/q171 every round. */
-  def q173VocabMaintain(s: SparkSession, dir: String): DataFrame =
-    q173VocabMaintain(s, dir, maxLocalBytes = 64L << 20)
-
-  private[graft] def q173VocabMaintain(s: SparkSession, dir: String,
-                                       maxLocalBytes: Long): DataFrame = {
+  def q173VocabMaintain(s: SparkSession, dir: String,
+                        maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val newSnap = q145NewSnap(s, dir)
     // ONE-TASK maintain-and-serve tier (round 17 — the q171/q180
     // treatment; the cell sat at 1.3-1.9 s standalone against a 0.38 s
-    // twin, all delta-sized stage latency). Fail-CLOSED on Catalyst
-    // size stats over all four stored inputs; maxLocalBytes = 0 forces
-    // the distributed chain (spec-pinned tier equality).
-    val inputs = Seq(prevUnitCounts(s, dir), prevSnapshotHashes(s, dir),
-      q145OldSnap(s, dir), newSnap)
-    if (maxLocalBytes > 0 &&
-        inputs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    // twin, all delta-sized stage latency), guarded by [[graft.Tier]]
+    // over all four stored inputs (spec-pinned tier equality).
+    if (Tier.fits(maxLocalBytes, prevUnitCounts(s, dir),
+        prevSnapshotHashes(s, dir), q145OldSnap(s, dir), newSnap))
       return graft.ops.Bpe.maintainVocabServeLocal(prevUnitCounts(s, dir),
         prevSnapshotHashes(s, dir),
         q145OldSnapOn(Tables.table(s, dir, "documents")),
@@ -3877,35 +3843,30 @@ object Queries {
     * comers HERE — the q131/k-means caveat: this gate certifies the
     * chain's arithmetic bit-for-bit, while each stage's discriminating
     * behavior is pinned by its own operator gate (q18/q76 exact dedup,
-    * q137 drop/rewrite, q141 scoring) and specs. */
-  def q143CorpusBuild(s: SparkSession, dir: String): DataFrame =
-    q143CorpusBuild(s, dir, maxLocalBytes = 64L << 20)
-
-  /** q143's tiered body (r19 — the q145 serving-tier treatment applied
-    * to the FULL build, closing the VERDICT r18 ask-#1 floor): at
-    * build-serving scale the distributed chain is ~21 stages whose
-    * largest stage runs well under the scheduler latency it pays
-    * (ProfileQ: 2.1 s stage-wall sum spread over 21 stages for a
-    * ~1.1-1.6 s cell). Under the fail-closed Catalyst size-stats guard
-    * the whole quality→exact-canon→decon→LM→manifest chain runs as the
-    * ONE [[graft.ops.CorpusMaintain.manifestLocal]] task with EMPTY
+    * q137 drop/rewrite, q141 scoring) and specs.
+    *
+    * Build-serving tier (r19 — the q145 treatment applied to the FULL
+    * build, closing the VERDICT r18 ask-#1 floor): at build-serving
+    * scale the distributed chain is ~21 stages whose largest stage runs
+    * well under the scheduler latency it pays (ProfileQ: 2.1 s
+    * stage-wall sum spread over 21 stages for a ~1.1-1.6 s cell). When
+    * [[graft.Tier]] admits the corpus and both model artifacts, the
+    * whole quality→exact-canon→decon→LM→manifest chain runs as the ONE
+    * [[graft.ops.CorpusMaintain.manifestLocal]] task with EMPTY
     * previous-build inputs — every document takes the kernel's
     * recomputed path, which IS the full-build chain (the same kernel
     * q145 serves through, whose cross-tier equality IncrementalBuildSpec
     * pins; QueryTierSpec pins the q143 composition directly). The eval
     * window keys and LM model ride the same stored artifacts both tiers
-    * read. `maxLocalBytes = 0` forces the distributed chain. */
-  private[graft] def q143CorpusBuild(s: SparkSession, dir: String,
-                                     maxLocalBytes: Long): DataFrame = {
+    * read. */
+  def q143CorpusBuild(s: SparkSession, dir: String,
+                      maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val d = t(s, dir, "documents")
     // Guarded sum includes the eval-key and LM-model artifacts (ADVICE
     // r19): both are model-sized by construction, but the guard should
     // enforce that, not assume it — an unexpectedly corpus-sized
     // artifact must fail closed to the distributed chain.
-    if (maxLocalBytes > 0 &&
-        Seq(d, evalWindowKeys(s, dir), lmModel(s, dir))
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes) &&
+    if (Tier.fits(maxLocalBytes, d, evalWindowKeys(s, dir), lmModel(s, dir)) &&
         d.schema("doc_id").dataType == org.apache.spark.sql.types.LongType) {
       val noPrevHashes = d.select(col("doc_id"),
         lit(null).cast("string").as("content_hash")).limit(0)
@@ -4279,27 +4240,22 @@ object Queries {
     * occupancy cap, and exact-Jaccard verification — so a hash match
     * IS the equivalence theorem for the emitted pair set; the sbt spec
     * asserts the same equality in-engine against a fresh full-index
-    * build. */
-  def q148IncrementalMinhash(s: SparkSession, dir: String): DataFrame =
-    q148IncrementalMinhash(s, dir, maxLocalBytes = 64L << 20)
-
-  /** ONE-TASK TIER (VERDICT r14 ask #2 — the q153 treatment): the whole
+    * build.
+    *
+    * ONE-TASK TIER (VERDICT r14 ask #2 — the q153 treatment): the whole
     * maintain-and-serve chain is ~30 AQE stages of pure scheduling
     * latency on a megabyte corpus (every intermediate here is kilobytes
-    * — 38k band rows, ~1.2k candidates at sf0.1), so under a Catalyst
-    * size-stats guard the identical computation runs as ONE task over
-    * the three stored/new inputs ([[graft.ops.Dedup
-    * .maintainedMinHashPairsLocal]]). Fails CLOSED: unknown or large
-    * estimates (stats default to Long.Max) take the distributed chain,
-    * and `maxLocalBytes = 0` forces it (spec coverage). Cross-tier
-    * equality is pinned by IncrementalBuildSpec (this tier vs the
-    * distributed full rebuild) and by the oracle's full-recompute
-    * replay at sf0.01 every round. */
-  private[graft] def q148IncrementalMinhash(s: SparkSession, dir: String,
-                                            maxLocalBytes: Long): DataFrame = {
+    * — 38k band rows, ~1.2k candidates at sf0.1), so when
+    * [[graft.Tier]] admits the three stored/new inputs the identical
+    * computation runs as ONE task over them ([[graft.ops.Dedup
+    * .maintainedMinHashPairsLocal]]). Cross-tier equality is pinned by
+    * IncrementalBuildSpec (this tier vs the distributed full rebuild)
+    * and by the oracle's full-recompute replay at sf0.01 every round. */
+  def q148IncrementalMinhash(s: SparkSession, dir: String,
+                             maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val newSnap = q145NewSnap(s, dir)
-    val est = newSnap.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (maxLocalBytes > 0 && est <= BigInt(maxLocalBytes) &&
+    if (Tier.fits(maxLocalBytes, prevMinhashIndex(s, dir),
+          prevSnapshotHashes(s, dir), newSnap) &&
         newSnap.schema("doc_id").dataType ==
           org.apache.spark.sql.types.LongType)
       return Dedup.maintainedMinHashPairsLocal(
@@ -4718,23 +4674,16 @@ object Queries {
     * batch≡incremental theorem; Bm25Spec asserts the same equality
     * in-engine (index tables AND both serving tiers).
     *
-    * SERVING TIER: under a fail-closed Catalyst size-stats guard over
-    * (stored postings, stored hashes, new snapshot), the whole chain
-    * runs as ONE task ([[graft.ops.Bm25.maintainAndServeLocal]] — the
-    * q148/q153 treatment); `maxLocalBytes = 0` forces the distributed
-    * chain (spec + PlanSpec coverage). */
-  def q171IncrementalBm25(s: SparkSession, dir: String): DataFrame =
-    q171IncrementalBm25(s, dir, maxLocalBytes = 64L << 20)
-
-  private[graft] def q171IncrementalBm25(s: SparkSession, dir: String,
-                                         maxLocalBytes: Long): DataFrame = {
+    * SERVING TIER: when [[graft.Tier]] admits (stored postings, stored
+    * hashes, new snapshot), the whole chain runs as ONE task
+    * ([[graft.ops.Bm25.maintainAndServeLocal]] — the q148/q153
+    * treatment; spec + PlanSpec coverage of both tiers). */
+  def q171IncrementalBm25(s: SparkSession, dir: String,
+                          maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val newSnap = q145NewSnap(s, dir)
     val prevPost = prevBm25Postings(s, dir)
     val prevHashes = prevSnapshotHashes(s, dir)
-    if (maxLocalBytes > 0 &&
-        Seq(prevPost, prevHashes, newSnap)
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, prevPost, prevHashes, newSnap))
       return graft.ops.Bm25.maintainAndServeLocal(prevPost, prevHashes,
         newSnap, "doc_id", "text", k = 5)
     // Persisted: the delta feeds the reuse semi-join, the re-tokenize
@@ -4835,26 +4784,20 @@ object Queries {
     * asserts the same equality in-engine plus the non-vacuity counts
     * (added, removed AND untouched clusters all > 0).
     *
-    * SERVING TIER: under a fail-closed Catalyst size-stats guard over
-    * all five inputs the whole chain runs as ONE task
+    * SERVING TIER: when [[graft.Tier]] admits all five inputs the
+    * whole chain runs as ONE task
     * ([[graft.ops.SemDedup.incrementalManifestLocal]] — the q153/q171
     * treatment; the distributed chain is ~25 stages of scheduling
-    * latency on kilobyte deltas); `maxLocalBytes = 0` forces the
-    * distributed chain (spec coverage with plan-divergence asserts). */
-  def q174IncrementalSemdedup(s: SparkSession, dir: String): DataFrame =
-    q174IncrementalSemdedup(s, dir, maxLocalBytes = 64L << 20)
-
-  private[graft] def q174IncrementalSemdedup(s: SparkSession, dir: String,
-                                             maxLocalBytes: Long): DataFrame = {
+    * latency on kilobyte deltas; spec coverage with plan-divergence
+    * asserts). */
+  def q174IncrementalSemdedup(s: SparkSession, dir: String,
+                              maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val prevLists = prevSemLists(s, dir)
     val prevManifest = prevSemManifest(s, dir)
     val newPts = quantizedPoints(s, dir).filter(col("id") % 101 =!= 0)
     val newEmb = t(s, dir, "embeddings").filter(col("vec_id") % 101 =!= 0)
     val cents = trainedCentroidsSem(s, dir)
-    if (maxLocalBytes > 0 &&
-        Seq(prevLists, prevManifest, newPts, newEmb, cents)
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, prevLists, prevManifest, newPts, newEmb, cents))
       return graft.ops.SemDedup.incrementalManifestLocal(prevLists,
         prevManifest, newPts, newEmb, cents, "vec_id", "embedding",
         minCosine = 0.45)
@@ -5094,24 +5037,21 @@ object Queries {
     * short-circuit values; false→true (promoted — its duplicate left the
     * corpus) → stages 3-4 run for the first time, together with the
     * delta docs, against the SAME stable eval windows and stored LM
-    * model. */
-  def q145IncrementalCorpusBuild(s: SparkSession, dir: String): DataFrame =
-    q145IncrementalCorpusBuild(s, dir, maxLocalBytes = 64L << 20)
-
-  /** ONE-TASK TIER (the q148 treatment applied to the manifest layer —
-    * the last latency-floor cell): under a Catalyst size-stats guard
-    * the whole incremental build runs as one task over the stored
-    * artifacts + new snapshot ([[graft.ops.CorpusMaintain
+    * model.
+    *
+    * ONE-TASK TIER (the q148 treatment applied to the manifest layer —
+    * the last latency-floor cell): when [[graft.Tier]] admits the new
+    * snapshot and all four stored artifacts, the whole incremental build
+    * runs as one task over them ([[graft.ops.CorpusMaintain
     * .manifestLocal]] — the eval-key set and LM model ride the same
-    * tagged union into the task, no driver collect). Fails CLOSED to
-    * the distributed chain; `maxLocalBytes = 0` forces it (spec
-    * coverage, and IncrementalBuildSpec asserts cross-tier equality
-    * against the distributed full rebuild). */
-  private[graft] def q145IncrementalCorpusBuild(s: SparkSession, dir: String,
-                                                maxLocalBytes: Long): DataFrame = {
+    * tagged union into the task, no driver collect).
+    * IncrementalBuildSpec asserts cross-tier equality against the
+    * distributed full rebuild. */
+  def q145IncrementalCorpusBuild(s: SparkSession, dir: String,
+                                 maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val newSnap = q145NewSnap(s, dir)
-    val est = newSnap.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (maxLocalBytes > 0 && est <= BigInt(maxLocalBytes) &&
+    if (Tier.fits(maxLocalBytes, newSnap, prevSnapshotHashes(s, dir),
+          prevCorpusBuild(s, dir), evalWindowKeys(s, dir), lmModel(s, dir)) &&
         newSnap.schema("doc_id").dataType ==
           org.apache.spark.sql.types.LongType)
       return graft.ops.CorpusMaintain.manifestLocal(
@@ -5432,11 +5372,8 @@ object Queries {
     * test is exactly this cell's shape: batch boundaries are immaterial,
     * so the per-file split and this three-step plan reach the same
     * model. */
-  def q175StreamLmChain(s: SparkSession, dir: String): DataFrame =
-    q175StreamLmChain(s, dir, maxLocalBytes = 64L << 20)
-
-  private[graft] def q175StreamLmChain(s: SparkSession, dir: String,
-                                       maxLocalBytes: Long): DataFrame = {
+  def q175StreamLmChain(s: SparkSession, dir: String,
+                        maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     def hashes(df: DataFrame): DataFrame =
       df.select(col("doc_id"),
         TextStats.contentHash(col("text")).as("content_hash"))
@@ -5451,18 +5388,13 @@ object Queries {
     val m0 = prevLmModel(s, dir)
     // ONE-TASK chain tier (the q153/q176 treatment): three hash-diff +
     // combine steps are ~15 delta-sized stages of scheduling latency at
-    // serving scale (measured ~3.5 s at sf0.1 vs a 0.05 s retrain twin).
-    // Fail-CLOSED on Catalyst size stats; maxLocalBytes = 0 forces the
-    // distributed chain (spec coverage keeps the scale path pinned).
-    // Statuses re-derive per doc from content hashes inside the task —
-    // the same comparison diffHashed makes (MaintainStreamSpec and
-    // IncrementalBuildSpec pin tier equality; the oracle's full-retrain
-    // replay certifies both tiers).
+    // serving scale (measured ~3.5 s at sf0.1 vs a 0.05 s retrain twin),
+    // guarded by [[graft.Tier]]. Statuses re-derive per doc from content
+    // hashes inside the task — the same comparison diffHashed makes
+    // (MaintainStreamSpec and IncrementalBuildSpec pin tier equality;
+    // the oracle's full-retrain replay certifies both tiers).
     val localChain = chainOf(Tables.table(s, dir, "documents"))
-    if (maxLocalBytes > 0 &&
-        (m0 +: localChain)
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, m0 +: localChain: _*))
       return LmScore.maintainCountsChainLocal(m0, localChain,
         "doc_id", "text")
     val Seq(e0, e1, e2, e3) = chainOf(t(s, dir, "documents"))
@@ -5540,27 +5472,19 @@ object Queries {
     * corpus-sized index (see the operator's scaladoc). The oracle
     * replays the FULL recompute over the new snapshot, so a hash match
     * IS the batch≡incremental theorem. */
-  def q176IncrementalSpanDedup(s: SparkSession, dir: String): DataFrame =
-    q176IncrementalSpanDedup(s, dir, maxLocalBytes = 64L << 20)
-
-  private[graft] def q176IncrementalSpanDedup(s: SparkSession, dir: String,
-                                              maxLocalBytes: Long): DataFrame = {
+  def q176IncrementalSpanDedup(s: SparkSession, dir: String,
+                               maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val newSnap = q145NewSnap(s, dir)
     // ONE-TASK serving tier (the q153/q145/q148 treatment): the
     // distributed maintenance is ~20 delta-sized stages of pure
     // scheduling latency at serving scale (measured 13-18 s at sf0.1
     // against the 1.4 s full rebuild — no single stage over 2 s, all
-    // driver/AQE floor). Fail-CLOSED on Catalyst size stats over all
-    // five stored inputs (missing stats default to Long.Max → the
-    // distributed chain); maxLocalBytes = 0 forces distributed (spec
-    // coverage keeps the scale path pinned). Cross-tier equality is
-    // asserted by ExactSpansSpec/IncrementalBuildSpec and by the
-    // oracle's full-recompute replay every round.
-    val inputs = Seq(prevSpanIndex(s, dir), prevSpanOcc(s, dir),
-      prevSpanManifest(s, dir), prevSnapshotHashes(s, dir), newSnap)
-    if (maxLocalBytes > 0 &&
-        inputs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    // driver/AQE floor). Guarded by [[graft.Tier]] over all five stored
+    // inputs. Cross-tier equality is asserted by
+    // ExactSpansSpec/IncrementalBuildSpec and by the oracle's
+    // full-recompute replay every round.
+    if (Tier.fits(maxLocalBytes, prevSpanIndex(s, dir), prevSpanOcc(s, dir),
+        prevSpanManifest(s, dir), prevSnapshotHashes(s, dir), newSnap))
       return ExactSpans.maintainSpanDedupAllLocal(newSnap,
         prevSnapshotHashes(s, dir), prevSpanIndex(s, dir),
         prevSpanOcc(s, dir), prevSpanManifest(s, dir),
@@ -5701,7 +5625,7 @@ object Queries {
     * runs once per snapshot at artifact-build time, and every serving
     * call reads the parquet store. Path carries the snapshot convention
     * (%19 retention) + PQ parameters + schema version. */
-  private def q179StoredCodes(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def q179StoredCodes(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
     val path = s"${Tables.scratchDir(s)}/pq_codes_maint_m4_k8_i2_e6_n19_v1/$sfTag"
     Tables.servedArtifact(s, path) {
@@ -5712,7 +5636,7 @@ object Queries {
   /** [[q159MaintainedLists]] as a STORED artifact — the coarse half of
     * the maintained ANN serving stack, persisted beside the fine codes
     * ([[q179StoredCodes]]) under the same snapshot convention. */
-  private def q179StoredLists(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def q179StoredLists(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
     val path = s"${Tables.scratchDir(s)}/ivf_lists_maint_k8_i2_e6_n19_v1/$sfTag"
     Tables.servedArtifact(s, path) {
@@ -5737,25 +5661,19 @@ object Queries {
     * Both maintained artifacts are READ FROM THE STORE
     * ([[q179StoredCodes]]/[[q179StoredLists]] — maintenance runs once
     * per snapshot at artifact-build time, the operator's own thesis),
-    * and under a fail-closed Catalyst size-stats guard over (codes,
-    * lists, new snapshot) the whole serve runs as ONE task
+    * and when [[graft.Tier]] admits (codes, lists, new snapshot, trained
+    * centroids, codebooks) the whole serve runs as ONE task
     * ([[graft.ops.Pq.serveStoredLocal]] — the q148/q153/q171/q180
-    * treatment); `maxLocalBytes = 0` forces the distributed serve
-    * (IncrementalBuildSpec pins tier equality). */
-  def q179IncrementalIvfpq(s: SparkSession, dir: String): DataFrame =
-    q179IncrementalIvfpq(s, dir, maxLocalBytes = 64L << 20)
-
-  private[graft] def q179IncrementalIvfpq(s: SparkSession, dir: String,
-                                          maxLocalBytes: Long): DataFrame = {
+    * treatment; IncrementalBuildSpec pins tier equality). */
+  def q179IncrementalIvfpq(s: SparkSession, dir: String,
+                           maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val newPts = quantizedPoints(s, dir).filter(col("id") % 19 =!= 0)
     val codes = q179StoredCodes(s, dir)
     val lists = q179StoredLists(s, dir)
     val panel = newPts.filter(col("id") % 50 === 0 && col("id") < 10000000L)
       .select(col("id"))
-    if (maxLocalBytes > 0 &&
-        Seq(codes, lists, newPts)
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, codes, lists, newPts,
+        trainedCentroids(s, dir), pqBooks(s, dir)))
       graft.ops.Pq.serveStoredLocal(newPts, trainedCentroids(s, dir),
         pqBooks(s, dir), codes, lists, m = 4, queries = panel,
         k = 5, nProbe = 2, oversample = 64)
@@ -5813,23 +5731,17 @@ object Queries {
     * words of the %101 base docs — the q159 panel discipline) against
     * the maintained cells, with the N/200 heavy flag. A guarded
     * one-task tier ([[graft.ops.Cms.maintainServeLocal]], the
-    * q153/q175/q176 treatment) serves small inputs; fail-closed,
+    * q153/q175/q176 treatment) serves inputs [[graft.Tier]] admits;
     * forced-distributed spec'd. The oracle replays the FULL sketch over
     * the new snapshot plus the same probe, so a hash match is the
     * batch≡incremental theorem for the cells AND the total AND the
     * serving path — collision false positives included. */
-  def q180IncrementalCms(s: SparkSession, dir: String): DataFrame =
-    q180IncrementalCms(s, dir, maxLocalBytes = 64L << 20)
-
-  private[graft] def q180IncrementalCms(s: SparkSession, dir: String,
-                                        maxLocalBytes: Long): DataFrame = {
+  def q180IncrementalCms(s: SparkSession, dir: String,
+                         maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val newSnap = q145NewSnap(s, dir)
     val oldSnap = q145OldSnap(s, dir)
-    val inputs = Seq(prevCmsCells(s, dir), prevSnapshotHashes(s, dir),
-      oldSnap, newSnap)
-    if (maxLocalBytes > 0 &&
-        inputs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, prevCmsCells(s, dir),
+        prevSnapshotHashes(s, dir), oldSnap, newSnap))
       return Cms.maintainServeLocal(prevCmsCells(s, dir),
         prevSnapshotHashes(s, dir),
         q145OldSnapOn(Tables.table(s, dir, "documents")),
@@ -5908,18 +5820,11 @@ object Queries {
     * ONE-TASK chain tier ([[graft.ops.Cms.maintainServeChainLocal]],
     * the q175 treatment): three hash-diff + cell-combine + probe steps
     * are ~15 delta-sized stages of scheduling latency at serving scale.
-    * Fail-CLOSED on Catalyst size stats; `maxLocalBytes = 0` forces the
-    * distributed chain (spec coverage pins tier equality). */
-  def q181StreamCmsChain(s: SparkSession, dir: String): DataFrame =
-    q181StreamCmsChain(s, dir, maxLocalBytes = 64L << 20)
-
-  private[graft] def q181StreamCmsChain(s: SparkSession, dir: String,
-                                        maxLocalBytes: Long): DataFrame = {
+    * Guarded by [[graft.Tier]] (spec coverage pins tier equality). */
+  def q181StreamCmsChain(s: SparkSession, dir: String,
+                         maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val localChain = fullChainOf(Tables.table(s, dir, "documents"))
-    if (maxLocalBytes > 0 &&
-        (prevCmsCells(s, dir) +: localChain)
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, prevCmsCells(s, dir) +: localChain: _*))
       return Cms.maintainServeChainLocal(prevCmsCells(s, dir), localChain,
         "doc_id", "text", CmsPanelPred)
     val chain = fullChainOf(t(s, dir, "documents"))
@@ -5950,22 +5855,15 @@ object Queries {
     * versioned store) is asserted equal to the retrain by
     * MaintainStreamSpec.
     *
-    * ONE-TASK chain tier ([[graft.ops.Dsir.maintainSplitChainLocal]]);
-    * fail-CLOSED size-stats guard, `maxLocalBytes = 0` forces the
-    * distributed chain (spec-pinned tier equality). */
-  def q182StreamDsirChain(s: SparkSession, dir: String): DataFrame =
-    q182StreamDsirChain(s, dir, maxLocalBytes = 64L << 20)
-
-  private[graft] def q182StreamDsirChain(s: SparkSession, dir: String,
-                                         maxLocalBytes: Long): DataFrame = {
+    * ONE-TASK chain tier ([[graft.ops.Dsir.maintainSplitChainLocal]]),
+    * guarded by [[graft.Tier]] (spec-pinned tier equality). */
+  def q182StreamDsirChain(s: SparkSession, dir: String,
+                          maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val targetPred = col("doc_id") % 20 === 0
     val prevT = prevDsirModel(s, dir, target = true)
     val prevR = prevDsirModel(s, dir, target = false)
     val localChain = fullChainOf(Tables.table(s, dir, "documents"))
-    if (maxLocalBytes > 0 &&
-        (Seq(prevT, prevR) ++ localChain)
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, Seq(prevT, prevR) ++ localChain: _*))
       return graft.ops.Dsir.maintainSplitChainLocal(prevT, prevR, localChain,
         "doc_id", "text", targetPred)
     val chain = fullChainOf(t(s, dir, "documents"))
@@ -6025,19 +5923,12 @@ object Queries {
     *
     * ONE-TASK chain tier ([[graft.ops.AdditiveCounts
     * .maintainChainLocal]] with the [[graft.ops.Bm25.localDocTerms]]
-    * replica); fail-CLOSED size-stats guard, `maxLocalBytes = 0`
-    * forces the distributed chain (spec-pinned tier equality). */
-  def q183StreamBm25DfChain(s: SparkSession, dir: String): DataFrame =
-    q183StreamBm25DfChain(s, dir, maxLocalBytes = 64L << 20)
-
-  private[graft] def q183StreamBm25DfChain(s: SparkSession, dir: String,
-                                           maxLocalBytes: Long): DataFrame = {
+    * replica), guarded by [[graft.Tier]] (spec-pinned tier equality). */
+  def q183StreamBm25DfChain(s: SparkSession, dir: String,
+                            maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val prevDf = prevBm25Df(s, dir).select(col("term"), col("df").as("cnt"))
     val localChain = fullChainOf(Tables.table(s, dir, "documents"))
-    if (maxLocalBytes > 0 &&
-        (prevDf +: localChain)
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, prevDf +: localChain: _*))
       return graft.ops.AdditiveCounts.maintainChainLocal(prevDf, "term",
           localChain, "doc_id", "text", graft.ops.Bm25.localDocTerms _)
         .select(col("term"), col("cnt").as("df"))
@@ -6066,25 +5957,18 @@ object Queries {
     * MaintainStreamSpec.
     *
     * ONE-TASK chain tier (the shared [[graft.ops.AdditiveCounts
-    * .maintainChainLocal]] with [[graft.ops.Bpe.localUnitWindows]]);
-    * fail-CLOSED guard, `maxLocalBytes = 0` forces the distributed
-    * chain. The top-2048 cap is applied PER TIER through the same
-    * (n desc, word) total order — an in-task bounded heap in the local
-    * tier, TakeOrdered over the maintained model in the distributed
-    * chain — with the cross-tier equality of the capped output
-    * spec-pinned (IncrementalBuildSpec's q184 tier test), so both
+    * .maintainChainLocal]] with [[graft.ops.Bpe.localUnitWindows]]),
+    * guarded by [[graft.Tier]]. The top-2048 cap is applied PER TIER
+    * through the same (n desc, word) total order — an in-task bounded
+    * heap in the local tier, TakeOrdered over the maintained model in
+    * the distributed chain — with the cross-tier equality of the capped
+    * output spec-pinned (IncrementalBuildSpec's q184 tier test), so both
     * tiers release the same table. */
-  def q184StreamBpeUnitsChain(s: SparkSession, dir: String): DataFrame =
-    q184StreamBpeUnitsChain(s, dir, maxLocalBytes = 64L << 20)
-
-  private[graft] def q184StreamBpeUnitsChain(s: SparkSession, dir: String,
-                                             maxLocalBytes: Long): DataFrame = {
+  def q184StreamBpeUnitsChain(s: SparkSession, dir: String,
+                              maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val prev = prevUnitCounts(s, dir).select(col("word"), col("n").as("cnt"))
     val localChain = fullChainOf(Tables.table(s, dir, "documents"))
-    if (maxLocalBytes > 0 &&
-        (prev +: localChain)
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (Tier.fits(maxLocalBytes, prev +: localChain: _*))
       // cap applied IN-task (bounded heap) — the tier-equality spec
       // compares against the distributed TakeOrdered through the same
       // (n desc, word) total order.

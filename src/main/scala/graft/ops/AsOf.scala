@@ -81,14 +81,14 @@ object AsOf {
     * mega-key hazard the range formulation exists for is bounded by the
     * input bound itself. Semantically identical (AsOfSpec asserts tier
     * equality incl. both directions, null keys/times and tolerance);
-    * the guard fails CLOSED — unknown or large estimates take the
-    * scale-proof range-exchange path, and `smallInputMaxBytes = 0`
-    * forces it (specs pin the distributed shape that way). */
+    * [[graft.Tier]] decides, and inputs it does not admit take the
+    * scale-proof range-exchange path (specs pin the distributed shape
+    * with `smallInputMaxBytes = 0`). */
   def joinAsOf(left: DataFrame, right: DataFrame, keys: Seq[String],
                leftTime: String, rightTime: String, payload: Seq[String],
                direction: Direction = Backward, prefix: String = "asof_",
                tolerance: Option[(Column, Column) => Column] = None,
-               smallInputMaxBytes: Long = 64L << 20): DataFrame = {
+               smallInputMaxBytes: Long = graft.Tier.LocalBytes): DataFrame = {
     require(keys.nonEmpty, "as-of join needs at least one partition key")
     val payloadAll = (rightTime +: payload.filterNot(_ == rightTime)).distinct
 
@@ -125,16 +125,9 @@ object AsOf {
       case Backward => col("_t").asc
       case Forward  => col("_t").desc
     }
-    // Tier pick from Catalyst's size estimates — driver-side plan
-    // arithmetic, zero jobs, and only paid when the tier is enabled
-    // (smallInputMaxBytes = 0 must not optimize both subtrees twice
-    // just to discard the answer). Estimates degrade toward HUGE
-    // (missing stats default to conf.defaultSizeInBytes = Long.Max),
-    // so an unknown size fails closed to the distributed path.
-    def estBytes = left.queryExecution.optimizedPlan.stats.sizeInBytes +
-      right.queryExecution.optimizedPlan.stats.sizeInBytes
-    val matched: DataFrame = if (smallInputMaxBytes > 0 &&
-        estBytes <= BigInt(smallInputMaxBytes)) {
+    // Tier pick ([[graft.Tier]]): driver-side plan arithmetic, zero
+    // jobs, and no optimizer work when smallInputMaxBytes = 0.
+    val matched: DataFrame = if (graft.Tier.fits(smallInputMaxBytes, left, right)) {
       // Textbook tier: one per-key running-last window. Null semantics
       // line up with the distributed path for free: right null rows are
       // already dropped; a null-KEYED left row's window partition holds

@@ -358,10 +358,10 @@ object Bpe {
     // when the vocabulary is KB-scale (q129 measured 0.6-1.5 s of pure
     // stage latency against a 0.19 s twin). Guarded on Catalyst size
     // stats — NOT a count() — so the unrolled path's zero-actions-
-    // inside-train contract is untouched, and fail-CLOSED (missing
-    // stats read huge → unrolled plan). The caller's numeric cap is
-    // honored through the same stats: when the optimizer knows a row
-    // count it must sit under `maxLocalWords` (the deep tier's count()
+    // inside-train contract is untouched; the byte half is
+    // [[graft.Tier]] under the derived `byteCap`. The caller's numeric
+    // cap is honored through the same stats: when the optimizer knows a
+    // row count it must sit under `maxLocalWords` (the deep tier's count()
     // contract); when it doesn't (ADVICE r18 — Catalyst rarely carries
     // rowCount for parquet scans), the byte bound TIGHTENS to
     // maxLocalWords × 12 bytes — a conservative floor on one (word, n)
@@ -377,7 +377,7 @@ object Bpe {
              else BigInt(12L * maxLocalWords))
       if (maxLocalWords > 0 &&
           st.rowCount.forall(_ <= BigInt(maxLocalWords)) &&
-          st.sizeInBytes <= byteCap)
+          graft.Tier.fits(byteCap.toLong, wf))
         return trainLocal(wf, rounds, topWords)
     } else {
       // ONE-TASK TIER for deep budgets over one-task vocabularies (the

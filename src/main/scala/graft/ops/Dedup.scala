@@ -878,7 +878,7 @@ object Dedup {
   def incrementalClusters(oldPairs0: DataFrame, newPairs0: DataFrame,
                           oldManifest: DataFrame, newUniverse: DataFrame,
                           idCol: String, maxIterations: Int = 20,
-                          maxLocalBytes: Long = 64L << 20): DataFrame = {
+                          maxLocalBytes: Long = graft.Tier.LocalBytes): DataFrame = {
     // WHOLE-CHAIN ONE-TASK TIER (VERDICT r15 ask #1 — the q148 treatment
     // applied at the cluster layer): the maintenance chain below is two
     // pair-table EXCEPTs, a closure semi-join cascade, a stats job + an
@@ -887,14 +887,11 @@ object Dedup {
     // (the r15 judge measured the registered q153 cell at >=1.0 s
     // min-of-3 against a 0.023 s twin, all of it stage floor: the
     // union-find fast path engages only AFTER the stats job +
-    // checkpoint + delta-join stages have run). Under a Catalyst
-    // size-stats guard over ALL FOUR inputs the identical computation
-    // runs as ONE task ([[incrementalClustersLocal]]): pair delta,
-    // affected-cluster closure, union-find, verbatim reuse. Fails
-    // CLOSED — unknown/large estimates (missing stats default to
-    // Long.Max) take the distributed chain, non-Long ids take the
-    // distributed chain, and `maxLocalBytes = 0` forces it (spec
-    // coverage keeps the scale path pinned). Cross-tier equality is
+    // checkpoint + delta-join stages have run). When [[graft.Tier]]
+    // admits ALL FOUR inputs the identical computation runs as ONE task
+    // ([[incrementalClustersLocal]]): pair delta, affected-cluster
+    // closure, union-find, verbatim reuse. Non-Long ids take the
+    // distributed chain. Cross-tier equality is
     // asserted by DedupSpec (incl. the randomized delta property) and
     // by the q153 oracle's full-recompute replay every round.
     val longT = org.apache.spark.sql.types.LongType
@@ -905,10 +902,8 @@ object Dedup {
         oldManifest.schema(idCol).dataType == longT &&
         oldManifest.schema("cluster_id").dataType == longT &&
         newUniverse.schema(idCol).dataType == longT
-    if (maxLocalBytes > 0 && idsAreLong &&
-        Seq(oldPairs0, newPairs0, oldManifest, newUniverse)
-          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .sum <= BigInt(maxLocalBytes))
+    if (idsAreLong && graft.Tier.fits(maxLocalBytes,
+        oldPairs0, newPairs0, oldManifest, newUniverse))
       return incrementalClustersLocal(oldPairs0, newPairs0, oldManifest,
         newUniverse, idCol)
     val oldPairs = oldPairs0.select(col("doc_a"), col("doc_b"))

@@ -41,31 +41,27 @@ object Opportunity {
   def opportunityRank(orders: DataFrame, lineitem: DataFrame,
                       part: DataFrame, customer: DataFrame,
                       excludePattern: String = "%old%",
-                      maxGlobalRankBytes: Long = 64L << 20): DataFrame = {
+                      maxGlobalRankBytes: Long = graft.Tier.LocalBytes): DataFrame = {
     // TIERED global rank (r20, the window-audit item): the rank's input
     // was the one partition-less window frame in the engine that GROWS
     // with the corpus (qualifying conditions ∝ the part dimension ∝ SF
     // — every other global frame is bounded by a constant or a config
     // knob), so the unconditional SinglePartition rank was the audit's
-    // lone scale-killer candidate. The guard is the engine's standard
-    // fail-closed Catalyst size-stats tier: inputs estimated under
-    // `maxGlobalRankBytes` keep the reference-exact single-window rank
-    // (missing stats default to Long.Max → distributed); anything
-    // larger ranks via [[SurrogateKeys.denseRankKey]] over ascending
+    // lone scale-killer candidate. Inputs [[graft.Tier]] admits under
+    // `maxGlobalRankBytes` keep the reference-exact single-window rank;
+    // the rest rank via [[SurrogateKeys.denseRankKey]] over ascending
     // (-score, p_name) — the range-exchange + per-partition row_number
     // + broadcast-offsets two-phase — which yields the IDENTICAL dense
     // 1..N rank (negation reverses the IEEE order for every non-NaN
-    // pair; scores are finite by construction). `maxGlobalRankBytes = 0`
-    // forces the distributed rank (OpportunitySpec pins tier equality;
-    // PlanSpec pins that the forced tier carries no partition-less
-    // window). The guard sums the RAW input stats — post-aggregation
-    // the frame only shrinks, so the estimate is an upper bound.
+    // pair; scores are finite by construction). OpportunitySpec pins
+    // tier equality; PlanSpec pins that the forced tier carries no
+    // partition-less window. The guard sums the RAW input stats —
+    // post-aggregation the frame only shrinks, so the estimate is an
+    // upper bound.
     val scores = opportunityScores(orders, lineitem, part, customer,
       excludePattern)
-    val small = maxGlobalRankBytes > 0 &&
-      Seq(orders, lineitem, part, customer)
-        .map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-        .sum <= BigInt(maxGlobalRankBytes)
+    val small = graft.Tier.fits(maxGlobalRankBytes,
+      orders, lineitem, part, customer)
     val ranked =
       if (small)
         scores.withColumn("opportunity_rank",

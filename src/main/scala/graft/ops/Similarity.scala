@@ -185,13 +185,8 @@ object Similarity {
 
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
               queryPred: Column, k: Int, centroidEvery: Int,
-              nProbe: Int): DataFrame =
-    ivfTopK(emb, idCol, vecCol, queryPred, k, centroidEvery, nProbe,
-      LocalServeBytes)
-
-  private[graft] def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
-                             queryPred: Column, k: Int, centroidEvery: Int,
-                             nProbe: Int, maxLocalBytes: Long): DataFrame =
+              nProbe: Int,
+              maxLocalBytes: Long = graft.Tier.LocalBytes): DataFrame =
     if (localTierOk(emb, idCol, vecCol, maxLocalBytes))
       ivfTopKLocal(emb, idCol, vecCol, queryPred, k, centroidEvery,
         Left(nProbe))
@@ -211,14 +206,8 @@ object Similarity {
     * driver action. */
   def ivfTopKFrac(emb: DataFrame, idCol: String, vecCol: String,
                   queryPred: Column, k: Int, centroidEvery: Int,
-                  probeFrac: Double, nProbeMin: Int = 3): DataFrame =
-    ivfTopKFrac(emb, idCol, vecCol, queryPred, k, centroidEvery, probeFrac,
-      nProbeMin, LocalServeBytes)
-
-  private[graft] def ivfTopKFrac(emb: DataFrame, idCol: String, vecCol: String,
-                                 queryPred: Column, k: Int, centroidEvery: Int,
-                                 probeFrac: Double, nProbeMin: Int,
-                                 maxLocalBytes: Long): DataFrame = {
+                  probeFrac: Double, nProbeMin: Int = 3,
+                  maxLocalBytes: Long = graft.Tier.LocalBytes): DataFrame = {
     require(probeFrac > 0 && probeFrac <= 1, s"probeFrac=$probeFrac out of (0,1]")
     if (localTierOk(emb, idCol, vecCol, maxLocalBytes))
       ivfTopKLocal(emb, idCol, vecCol, queryPred, k, centroidEvery,
@@ -228,18 +217,13 @@ object Similarity {
         Right((probeFrac, nProbeMin)))
   }
 
-  /** One-task serving budget (Catalyst-estimated input bytes) for the
-    * live-IVF tier — the q179/q117/q148 guard value. Fail-CLOSED: missing
-    * stats default to Long.Max and take the distributed chain; 0 forces
-    * it (spec/plan pins). The id/vector type checks keep the kernel's
-    * row readers total — any other shape serves distributed. */
-  private val LocalServeBytes = 64L << 20
-
+  /** The live-IVF tier's guard: [[graft.Tier]] over the corpus, plus
+    * id/vector type checks that keep the kernel's row readers total —
+    * any other shape serves distributed. */
   private def localTierOk(emb: DataFrame, idCol: String, vecCol: String,
                           maxLocalBytes: Long): Boolean = {
     import org.apache.spark.sql.types._
-    maxLocalBytes > 0 &&
-      emb.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(maxLocalBytes) &&
+    graft.Tier.fits(maxLocalBytes, emb) &&
       emb.schema(idCol).dataType == LongType &&
       (emb.schema(vecCol).dataType match {
         case ArrayType(FloatType, _) => true

@@ -324,6 +324,33 @@ class IncrementalBuildSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("q103/q145/q148/q179 tier guards count every input their local kernel reads") {
+    // Each cap is exactly the estimate of the inputs a guard that
+    // skipped the stored artifacts/models would sum. The local kernels
+    // also read those, so the full sum exceeds the cap and every cell
+    // must fail closed to its distributed chain. The default cap keeps
+    // the comparison non-vacuous: there, each cell serves one task.
+    def est(inputs: org.apache.spark.sql.DataFrame*): Long =
+      inputs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum.toLong
+    val pts = Queries.quantizedPoints(spark, dir)
+    val newSnap = Queries.q145NewSnap(spark, dir)
+    val cases = Seq[(String, Long => org.apache.spark.sql.DataFrame, Long, String)](
+      ("q103", Queries.q103TrainedIvfTopk(spark, dir, _), est(pts), "Coalesce 1"),
+      ("q145", Queries.q145IncrementalCorpusBuild(spark, dir, _), est(newSnap),
+        "MapPartitions"),
+      ("q148", Queries.q148IncrementalMinhash(spark, dir, _), est(newSnap),
+        "MapPartitions"),
+      ("q179", Queries.q179IncrementalIvfpq(spark, dir, _),
+        est(Queries.q179StoredCodes(spark, dir), Queries.q179StoredLists(spark, dir),
+          pts.filter(col("id") % 19 =!= 0)),
+        "MapPartitions"))
+    for ((q, cell, cap, localMarker) <- cases) withClue(s"$q at cap $cap: ") {
+      cell(Tier.LocalBytes).queryExecution.executedPlan.toString should include(localMarker)
+      cell(cap).queryExecution.executedPlan.toString should not include localMarker
+    }
+    spark.catalog.clearCache()
+  }
+
   test("q179's one-task serve tier ≡ the distributed stored-artifact serve, row for row") {
     // maxLocalBytes = 0 forces the distributed ivfPqTopKStored chain
     // (probe window, list equi-join, ADC lookup join + sum, shortlist

@@ -75,7 +75,7 @@ class PlanSpec extends SparkSpec {
     // The registered cell under the stats guard keeps the reference-
     // exact single-window rank (the frame is report-sized at guarded
     // input sizes; OpportunitySpec pins tier equality).
-    plan(Queries.q17OpportunityScore) should include("row_number()")
+    plan(Queries.q17OpportunityScore(_, _)) should include("row_number()")
   }
 
   test("q28: all three dims broadcast into the fact build") {
@@ -126,7 +126,7 @@ class PlanSpec extends SparkSpec {
     // ONE task over the raw embeddings — Coalesce(1)+mapPartitions,
     // zero shuffles (SimilaritySpec pins tier equality on near-tie
     // vectors).
-    val local = plan(Queries.q52AnnIvfTopk)
+    val local = plan(Queries.q52AnnIvfTopk(_, _))
     local should include("Coalesce 1")
     shuffles(local) shouldBe 0
   }
@@ -240,7 +240,7 @@ class PlanSpec extends SparkSpec {
     // over the tagged union); the only shuffle left is assignQ's k-row
     // centroid fold aggregate (q101's pinned constant) — a regression
     // that re-distributes the guarded serve adds exchanges and trips.
-    val local = plan(Queries.q117IvfpqTopk)
+    val local = plan(Queries.q117IvfpqTopk(_, _))
     local should include("Coalesce 1")
     shuffles(local) should be <= 1
   }
@@ -269,7 +269,7 @@ class PlanSpec extends SparkSpec {
     // r19 serving tier: the registered cell under the stats guard is one
     // task (Coalesce(1)+mapPartitions); the only shuffle is assignQ's
     // k-row centroid fold.
-    val local = plan(Queries.q103TrainedIvfTopk)
+    val local = plan(Queries.q103TrainedIvfTopk(_, _))
     local should include("Coalesce 1")
     shuffles(local) should be <= 1
   }
@@ -362,7 +362,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q145: incremental build reads stored artifacts, not re-derived subtrees") {
-    val p = plan(Queries.q145IncrementalCorpusBuild)
+    val p = plan(Queries.q145IncrementalCorpusBuild(_, _))
     // previous manifest, previous fingerprint table, eval window set and
     // the LM model must come from their parquet artifacts
     Seq("corpus_build_old_v1", "corpus_hashes_old_v1", "eval_windows8_v1",
@@ -509,7 +509,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q170: the serving tier reads all seven stored artifacts in ONE task") {
-    val p = plan(Queries.q170HybridRrf)
+    val p = plan(Queries.q170HybridRrf(_, _))
     // the default build is the one-task serving tier (late r16): a
     // tagged union of the stored BM25 index + panel and the stored
     // IVF structures into a single MapPartitions — no join, no window,
