@@ -964,6 +964,7 @@ object Bench {
               "q116_pq_topk" -> ((sp: SparkSession, d: String) => Queries.q116PqTopk(sp, d, 0L)),
               "q117_ivfpq_topk" -> ((sp: SparkSession, d: String) => Queries.q117IvfpqTopk(sp, d, 0L)),
               "q143_corpus_build" -> ((sp: SparkSession, d: String) => Queries.q143CorpusBuild(sp, d, 0L)),
+              "q144_all_span_dedup" -> ((sp: SparkSession, d: String) => Queries.q144AllSpanDedup(sp, d, 0L)),
               "q145_incremental_corpus" ->
                 ((sp: SparkSession, d: String) => Queries.q145IncrementalCorpusBuild(sp, d, 0L)),
               "q148_incremental_minhash" ->

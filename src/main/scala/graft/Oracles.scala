@@ -948,17 +948,18 @@ object Oracles {
         |  SELECT doc_id,
         |    md5(lower(trim(regexp_replace(
         |      CASE WHEN doc_id % 13 = 0 THEN text || ' v1' ELSE text END,
-        |      '\s+', ' ', 'g')))) AS old_hash
+        |      '\s+', ' ', 'g')))) AS old_hash, TRUE AS in_old
         |  FROM documents WHERE doc_id % 17 <> 0),
         |n AS (
         |  SELECT doc_id,
-        |    md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS new_hash
+        |    md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS new_hash,
+        |    TRUE AS in_new
         |  FROM documents WHERE doc_id % 19 <> 0),
         |d AS (
         |  SELECT coalesce(o.doc_id, n.doc_id) AS doc_id, old_hash, new_hash,
-        |    CASE WHEN old_hash IS NULL THEN 'added'
-        |         WHEN new_hash IS NULL THEN 'removed'
-        |         WHEN old_hash <> new_hash THEN 'changed'
+        |    CASE WHEN in_old IS NULL THEN 'added'
+        |         WHEN in_new IS NULL THEN 'removed'
+        |         WHEN old_hash IS DISTINCT FROM new_hash THEN 'changed'
         |         ELSE 'unchanged' END AS status
         |  FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id)
         |SELECT doc_id, old_hash, new_hash, status,

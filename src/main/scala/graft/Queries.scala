@@ -4055,10 +4055,14 @@ object Queries {
     * somewhere. Two linear passes (window explode + one keyed groupBy),
     * no suffix array, no self-join; the oracle replays detection,
     * canonical choice, coverage union AND the rewritten text, so the
-    * final corpus is hash-checked. */
-  def q144AllSpanDedup(s: SparkSession, dir: String): DataFrame =
-    graft.ops.ExactSpans.dedupSpansAll(
-      t(s, dir, "documents"), "doc_id", "text", minLen = 4)
+    * final corpus is hash-checked. A corpus [[graft.Tier]] admits under
+    * `maxLocalBytes` runs the operator's one-task tier (one stage
+    * instead of five); `maxLocalBytes = 0` forces the distributed chain
+    * (IncrementalBuildSpec pins the two tiers equal). */
+  def q144AllSpanDedup(s: SparkSession, dir: String,
+                       maxLocalBytes: Long = ExactSpans.LocalAllBytes): DataFrame =
+    ExactSpans.dedupSpansAll(t(s, dir, "documents"), "doc_id", "text",
+      minLen = 4, maxLocalBytes = maxLocalBytes)
 
   /** Maximal duplicated-span inventory ([[graft.ops.ExactSpans
     * .maximalSpans]]) — the suffix-array REPORTING view beside q144's

@@ -98,9 +98,8 @@ private[graft] object AdditiveCounts {
       def add(key: String, d: Long): Unit =
         delta.update(key, delta.getOrElse(key, 0L) + d)
       // NULL text contributes nothing, mirroring the distributed chain:
-      // a null hash reads "added"/"removed" in diffHashed and the
-      // occurrence legs' tokenizers drop null rows, so a null-text doc
-      // never moves a count there — coercing null to "" here used to
+      // the occurrence legs' tokenizers drop null rows, so a null-text
+      // doc never moves a count there — coercing null to "" here used to
       // fold the EMPTY-STRING key's legs instead (a real divergence for
       // q183's df, where empty text is a counted term but null drops).
       def fold(text: String, sign: Long): Unit =
@@ -112,10 +111,10 @@ private[graft] object AdditiveCounts {
           old.get(id) match {
             case None => fold(t, 1L) // added
             case Some(ot) =>
-              // NULL-involving transitions first (distributed mirror: a
-              // null hash reads "added"/"removed", so text→null
+              // NULL-involving transitions first (distributed mirror:
+              // diffHashed reads null↔text as "changed", so text→null
               // subtracts the old terms, null→text adds the new, and
-              // null→null is no change). The changedKeys fast path is a
+              // null→null is unchanged). The changedKeys fast path is a
               // text→text contract — null pairs take the plain legs,
               // where fold's null guard gives the exact distributed
               // outcome.

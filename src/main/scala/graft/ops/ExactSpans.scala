@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import scala.collection.mutable
+
 /** Exact duplicated-SPAN deduplication — the "Deduplicating Training Data
   * Makes Language Models Better" (Lee et al. 2022) operation: find every
   * length-L token window that occurs more than once ANYWHERE in the
@@ -174,25 +176,180 @@ object ExactSpans {
     * marked AND canonical start lists together (conditional collect_set,
     * single shuffle), then the O(tokens + spans) interval sweep: kept =
     * gaps(marked) ∪ cover(canonical). Output the family manifest:
-    * (doc_id, n_tokens, n_removed, deduped_text). */
+    * (doc_id, n_tokens, n_removed, deduped_text).
+    *
+    * Inputs [[graft.Tier]] admits under `maxLocalBytes` take a ONE-TASK
+    * tier instead ([[dedupSpansAllLocal]]): at serving scale the chain
+    * above is five stages of scheduling and AQE replanning around well
+    * under a second of work. Its default cap is [[LocalAllBytes]], not
+    * [[graft.Tier.LocalBytes]] — see there for why. `maxLocalBytes = 0`
+    * forces the distributed chain (ExactSpansSpec runs every all-lengths
+    * case on both tiers and asserts equal rows). */
   def dedupSpansAll(docs: DataFrame, idCol: String, textCol: String,
-                    minLen: Int): DataFrame =
-    dedupSpansAll(docs, idCol, textCol, minLen, PosRange)
-
-  /** [[dedupSpansAll]] with an explicit position-encoding bound — same
-    * contract as the [[dedupSpans]] overload. */
-  def dedupSpansAll(docs: DataFrame, idCol: String, textCol: String,
-                    minLen: Int, posRange: Long): DataFrame = {
+                    minLen: Int, posRange: Long = PosRange,
+                    maxLocalBytes: Long = LocalAllBytes): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2; got $minLen")
     require(posRange >= minLen,
       s"posRange must be >= minLen ($minLen); got $posRange")
     require(posRange <= Int.MaxValue,
       s"posRange must be <= Int.MaxValue; got $posRange — chunk longer " +
         "documents upstream instead")
+    if (graft.Tier.fits(maxLocalBytes, docs))
+      return dedupSpansAllLocal(docs, idCol, textCol, minLen, posRange)
     val L = minLen
     val tok = tokens(docs, idCol, textCol)
     val win = windows(tok, L, posRange)
     finishAll(tok, startsFor(win, spanOcc(win, posRange), posRange), L)
+  }
+
+  /** [[dedupSpansAll]]'s local-tier cap: [[graft.Tier.LocalBytes]] / 16
+    * (4 MB of estimated input). The one-task kernel holds every token
+    * (one String each) and a hash table of two to four slots per window
+    * in the task's heap: tens of bytes of heap per byte of Catalyst's
+    * `documents` estimate. On the 10× corpus (a 626 KB estimate, about
+    * 272k tokens) that is about 14 MB of tokens plus 21 MB of table
+    * arrays, 56 B per byte; a per-window-map prototype measured 67 B per
+    * byte. At the shared 64 MB budget that rate needs about 4.3 GB, past
+    * a 4 GB driver; at 4 MB it needs about 270 MB. */
+  val LocalAllBytes: Long = graft.Tier.LocalBytes / 16
+
+  /** [[dedupSpansAll]]'s ONE-TASK tier: the whole manifest in a single
+    * `mapPartitions` task over (id, text). Each document is tokenized
+    * once (the [[LocalText]] replica of [[TextStats.words]] over
+    * `lower`); one open-addressing table keyed BY REFERENCE — (document,
+    * start) into the token arrays, a content hash over the window's L
+    * token hashes, token-by-token equality — holds each distinct
+    * window's (count, min-encoded canonical occurrence), so no per-window
+    * string is ever built; then every document is rewritten by
+    * [[KeepSweep]], the sweep the maintenance kernel shares.
+    *
+    * The distributed chain's edge cases hold exactly: null text emits
+    * (id, null, null, null); documents shorter than L or longer than
+    * `posRange` tokens pass through (tokens re-joined by single spaces);
+    * a null-id document's windows count toward duplication but never
+    * own a canonical, and it is never rewritten (its null key joins no
+    * start list). Documents are keyed by id, one row per id — the
+    * family's snapshot contract. */
+  private def dedupSpansAllLocal(docs: DataFrame, idCol: String,
+                                 textCol: String, L: Int,
+                                 posRange: Long): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col(idCol).cast("long"), col(textCol)).coalesce(1)
+      .mapPartitions { rows =>
+        val ids = mutable.ArrayBuffer.empty[java.lang.Long]
+        val toks = mutable.ArrayBuffer.empty[Array[String]]
+        rows.foreach { r =>
+          ids += (if (r.isNullAt(0)) null else r.getLong(0))
+          toks += (if (r.isNullAt(1)) null
+            else LocalText.words(r.getString(1).toLowerCase()))
+        }
+        def inDomain(ws: Array[String]): Boolean =
+          ws != null && ws.length >= L && ws.length <= posRange
+        // off(d): document d's first window in the flat window order.
+        val off = new Array[Int](toks.length + 1)
+        var d = 0
+        while (d < toks.length) {
+          val ws = toks(d)
+          val nw = if (inDomain(ws)) ws.length - L + 1L else 0L
+          require(off(d) + nw <= (1 << 29),
+            "too many windows for the one-task tier; lower maxLocalBytes")
+          off(d + 1) = off(d) + nw.toInt
+          d += 1
+        }
+        var cap = 2
+        while (cap < 2L * off(toks.length)) cap <<= 1
+        val mask = cap - 1
+        val ref = Array.fill(cap)(-1L) // (document << 32) | start
+        val cnt = new Array[Int](cap)
+        val canon = Array.fill(cap)(Long.MaxValue)
+        val slot = new Array[Int](off(toks.length))
+        def sameWindow(r: Long, ws: Array[String], p: Int): Boolean = {
+          val os = toks((r >>> 32).toInt)
+          val op = (r & 0xffffffffL).toInt
+          var j = 0
+          while (j < L && os(op + j) == ws(p + j)) j += 1
+          j == L
+        }
+        d = 0
+        while (d < toks.length) {
+          val ws = toks(d)
+          val hasId = ids(d) != null
+          val base = if (hasId) Math.multiplyExact(ids(d).longValue, posRange)
+            else 0L
+          var p = 0
+          while (p < off(d + 1) - off(d)) {
+            var h = 1
+            var j = 0
+            while (j < L) { h = 31 * h + ws(p + j).hashCode; j += 1 }
+            var s = scala.util.hashing.MurmurHash3.finalizeHash(h, L) & mask
+            while (ref(s) != -1L && !sameWindow(ref(s), ws, p)) s = (s + 1) & mask
+            if (ref(s) == -1L) ref(s) = (d.toLong << 32) | p
+            cnt(s) += 1
+            if (hasId) canon(s) = math.min(canon(s), Math.addExact(base, p.toLong))
+            slot(off(d) + p) = s
+            p += 1
+          }
+          d += 1
+        }
+        Iterator.tabulate[ManifestRow](toks.length) { d =>
+          val ws = toks(d)
+          if (ws == null) (ids(d), null, null, null)
+          else {
+            val sweep = new KeepSweep(ws, L)
+            if (ids(d) != null) {
+              val base = ids(d).longValue * posRange
+              var p = 0
+              while (p < off(d + 1) - off(d)) {
+                val s = slot(off(d) + p)
+                if (cnt(s) >= 2) sweep.stamp(p, base + p == canon(s))
+                p += 1
+              }
+            }
+            sweep.row(ids(d))
+          }
+        }
+      }.toDF("doc_id", "n_tokens", "n_removed", "deduped_text")
+  }
+
+  /** A manifest row in the one-task kernels, boxed so that null text
+    * keeps the distributed chain's (id, null, null, null). */
+  private type ManifestRow =
+    (java.lang.Long, java.lang.Long, java.lang.Long, String)
+
+  /** One document's all-lengths rewrite in the one-task kernels
+    * ([[dedupSpansAllLocal]], [[maintainSpanDedupAllLocal]]): [[stamp]]
+    * each duplicated-window occurrence, then [[row]] sweeps the tokens
+    * once — a token is kept iff no marked occurrence covers it or a
+    * canonical one does (diff-array interval stamping, O(tokens +
+    * spans); [[finishAll]]'s gaps(marked) ∪ cover(canonical)). */
+  private final class KeepSweep(ws: Array[String], L: Int) {
+    private val n = ws.length
+    private val marked = new Array[Int](n + 1)
+    private val canonical = new Array[Int](n + 1)
+
+    /** Covers tokens [p, p + L) as a marked or a canonical occurrence. */
+    def stamp(p: Int, isCanonical: Boolean): Unit = {
+      val diff = if (isCanonical) canonical else marked
+      diff(p) += 1
+      diff(math.min(n, p + L)) -= 1
+    }
+
+    /** The manifest row: (doc_id, n_tokens, n_removed, deduped_text). */
+    def row(id: java.lang.Long): ManifestRow = {
+      val sb = new java.lang.StringBuilder
+      var kept = 0L
+      var mc = 0; var cc = 0; var i = 0
+      while (i < n) {
+        mc += marked(i); cc += canonical(i)
+        if (mc == 0 || cc > 0) {
+          if (kept > 0) sb.append(' ')
+          sb.append(ws(i)); kept += 1
+        }
+        i += 1
+      }
+      (id, n.toLong, n - kept, sb.toString)
+    }
   }
 
   /** The dup-key SUMMARY over a window index: (key, n, canon
@@ -422,45 +579,49 @@ object ExactSpans {
         nullL.as("_p"), col("n_tokens").cast("long").as("_l1"),
         col("n_removed").cast("long").as("_l2")))
     tagged.coalesce(1).mapPartitions { it =>
-      import scala.collection.mutable
+      // Null text, hash and manifest fields stay null, as in the
+      // distributed chain: a null-text document hashes to null, has no
+      // windows, and its manifest row is (id, null, null, null).
       val newText = mutable.HashMap.empty[Long, String]
       val prevHash = mutable.HashMap.empty[Long, String]
       val idxRows = mutable.ArrayBuffer.empty[(Long, Long, String)]
       val occ = mutable.HashMap.empty[String, (Long, Long)]
-      val man = mutable.HashMap.empty[Long, (Long, Long, String)]
+      val man = mutable.HashMap.empty[Long, ManifestRow]
+      def boxed(row: org.apache.spark.sql.Row, i: Int): java.lang.Long =
+        if (row.isNullAt(i)) null else row.getLong(i)
       it.foreach { row =>
         row.getString(0) match {
-          case "d" => newText.update(row.getLong(1),
-            if (row.isNullAt(2)) "" else row.getString(2))
+          case "d" => newText.update(row.getLong(1), row.getString(2))
           case "h" => prevHash.update(row.getLong(1), row.getString(2))
           case "i" => idxRows += ((row.getLong(1), row.getLong(3),
             row.getString(2)))
           case "o" => occ.update(row.getString(2),
             (row.getLong(4), row.getLong(5)))
           case _ => man.update(row.getLong(1),
-            (row.getLong(4), row.getLong(5),
-              if (row.isNullAt(2)) "" else row.getString(2)))
+            (row.getLong(1), boxed(row, 4), boxed(row, 5), row.getString(2)))
         }
       }
-      // Hash diff (LocalText.contentHash = Spark's md5/trim/lower chain).
+      // Hash diff (LocalText.contentHash = Spark's md5/trim/lower chain),
+      // null-safe like SnapshotDelta.diffHashed.
       val inIds = mutable.HashSet.empty[Long]
       val outIds = mutable.HashSet.empty[Long]
       newText.foreach { case (id, t) =>
         prevHash.get(id) match {
           case None => inIds += id
           case Some(h) =>
-            if (h != LocalText.contentHash(t)) { inIds += id; outIds += id }
+            val nh = if (t == null) null else LocalText.contentHash(t)
+            if (h != nh) { inIds += id; outIds += id }
         }
       }
       prevHash.keysIterator.foreach(id =>
         if (!newText.contains(id)) outIds += id)
-      // Delta docs' re-windowed text.
+      // Delta docs' re-windowed text (null for null text).
       def wordsOf(id: Long): Array[String] =
-        LocalText.words(newText(id).toLowerCase())
+        Option(newText(id)).map(t => LocalText.words(t.toLowerCase())).orNull
       val addWin = mutable.ArrayBuffer.empty[(Long, Long, String)]
       inIds.foreach { id =>
         val ws = wordsOf(id)
-        if (ws.length >= L && ws.length <= posRange) {
+        if (ws != null && ws.length >= L && ws.length <= posRange) {
           var p = 0
           while (p <= ws.length - L) {
             val sb = new java.lang.StringBuilder(ws(p))
@@ -508,37 +669,21 @@ object ExactSpans {
       eachNewIndexRow((d, p, k) =>
         if (inIds.contains(d) || aff.contains(d))
           byDoc.getOrElseUpdate(d, mutable.ArrayBuffer.empty) += ((p, k)))
-      // Rewrite one recompute doc: kept = NOT marked-covered OR
-      // canonical-covered (diff-array interval stamping, O(tokens+spans)).
-      def rewrite(id: Long): (Long, Long, Long, String) = {
+      // Rewrite one recompute doc.
+      def rewrite(id: Long): ManifestRow = {
         val ws = wordsOf(id)
-        val n = ws.length
-        val mDiff = new Array[Int](n + 1)
-        val cDiff = new Array[Int](n + 1)
-        byDoc.get(id).foreach(_.foreach { case (p, k) =>
-          newOcc.get(k).foreach { canon =>
-            val diffArr = if (id * posRange + p == canon) cDiff else mDiff
-            diffArr(p.toInt) += 1
-            diffArr(math.min(n, p.toInt + L)) -= 1
-          }
-        })
-        val sb = new java.lang.StringBuilder
-        var kept = 0L
-        var mc = 0; var cc = 0; var i = 0
-        while (i < n) {
-          mc += mDiff(i); cc += cDiff(i)
-          if (mc == 0 || cc > 0) {
-            if (kept > 0) sb.append(' ')
-            sb.append(ws(i)); kept += 1
-          }
-          i += 1
+        if (ws == null) (id, null, null, null)
+        else {
+          val sweep = new KeepSweep(ws, L)
+          byDoc.get(id).foreach(_.foreach { case (p, k) =>
+            newOcc.get(k).foreach(canon =>
+              sweep.stamp(p.toInt, id * posRange + p == canon))
+          })
+          sweep.row(id)
         }
-        (id, n.toLong, n - kept, sb.toString)
       }
-      newText.keysIterator.map { id =>
-        if (inIds.contains(id) || aff.contains(id)) rewrite(id)
-        else { val (nt, nr, txt) = man(id); (id, nt, nr, txt) }
-      }
+      newText.keysIterator.map(id =>
+        if (inIds.contains(id) || aff.contains(id)) rewrite(id) else man(id))
     }.toDF("doc_id", "n_tokens", "n_removed", "deduped_text")
   }
 

@@ -39,17 +39,24 @@ object SnapshotDelta {
     * crawl's fingerprint table, so the NEXT crawl's delta never re-reads
     * (or re-hashes) the previous snapshot's text at all — the old side
     * is a stored-artifact scan of two skinny columns. Same output
-    * contract as [[diff]]. */
+    * contract as [[diff]].
+    *
+    * Presence is an explicit per-side marker, never the hash: a
+    * null-text document hashes to null, and reading that as "absent"
+    * would call a null-text document present in both snapshots "added"
+    * (maintenance then keeps its stored row AND recomputes it). Hashes
+    * compare null-safely, so null→null is unchanged and null↔text is
+    * changed. */
   def diffHashed(oldHashes: DataFrame, newHashes: DataFrame): DataFrame = {
-    def side(df: DataFrame, as: String): DataFrame =
+    def side(df: DataFrame, as: String, mark: String): DataFrame =
       df.select(col("doc_id").cast("long").as("doc_id"),
-        col("content_hash").as(as))
-    side(oldHashes, "old_hash")
-      .join(side(newHashes, "new_hash"), Seq("doc_id"), "full_outer")
+        col("content_hash").as(as), lit(true).as(mark))
+    side(oldHashes, "old_hash", "_in_old")
+      .join(side(newHashes, "new_hash", "_in_new"), Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("old_hash"), col("new_hash"),
-        when(col("old_hash").isNull, "added")
-          .when(col("new_hash").isNull, "removed")
-          .when(col("old_hash") =!= col("new_hash"), "changed")
+        when(col("_in_old").isNull, "added")
+          .when(col("_in_new").isNull, "removed")
+          .when(!(col("old_hash") <=> col("new_hash")), "changed")
           .otherwise("unchanged").as("status"))
       .withColumn("needs_processing",
         col("status").isin("added", "changed"))

@@ -166,6 +166,21 @@ class IncrementalBuildSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("q144's one-task tier ≡ the distributed all-lengths chain, row for row") {
+    // maxLocalBytes = 0 forces the five-stage distributed chain (window
+    // explode, keyed aggregate, join back, per-doc start lists, sweep)
+    // on the same corpus. Plan asserts keep the comparison non-vacuous.
+    val localF = Queries.q144AllSpanDedup(spark, dir)
+    val distF = Queries.q144AllSpanDedup(spark, dir, maxLocalBytes = 0L)
+    localF.queryExecution.executedPlan.toString should include("MapPartitions")
+    distF.queryExecution.executedPlan.toString should not include "MapPartitions"
+    val local = localF.collect().map(_.toSeq).sortBy(_.toString)
+    val dist = distF.collect().map(_.toSeq).sortBy(_.toString)
+    local should not be empty
+    local shouldBe dist
+    spark.catalog.clearCache()
+  }
+
   test("q175's one-task chain tier ≡ the distributed three-step chain, row for row") {
     // maxLocalBytes = 0 forces the distributed chain (three hash-diff
     // deltas + three chained maintainCounts combines) on the same
@@ -267,9 +282,9 @@ class IncrementalBuildSpec extends SparkSpec {
   }
 
   test("the generic chain tier mirrors the distributed null-text semantics (df legs)") {
-    // Adversarial tier equality on data the corpus never produces: a
-    // null hash reads "added"/"removed" in diffHashed and the docTerms
-    // leg drops null rows, so null→text adds, text→null subtracts, and
+    // Adversarial tier equality on data the corpus never produces:
+    // diffHashed reads null↔text as "changed" and the docTerms leg
+    // drops null rows, so null→text adds, text→null subtracts, and
     // null→null (or null present only on one side) moves nothing. The
     // local tier used to coerce null to "" and fold the EMPTY-STRING
     // term's legs — a real df divergence since empty text IS a counted

@@ -340,17 +340,26 @@ class PlanSpec extends SparkSpec {
     // EAGER build-time rounds through the scale-safe two-phase
     // denseRankKey (windows partitioned by spark_partition_id, never
     // global) — the served plan reads the checkpointed LCP frame, so
-    // the final plan stays window-free too
-    Seq(Queries.q144AllSpanDedup _, Queries.q146MaximalSpans _).foreach { q =>
+    // the final plan stays window-free too. q144 is pinned on its
+    // forced distributed chain, the 100 TB shape.
+    val q144Dist = Queries.q144AllSpanDedup(_, _, 0L)
+    Seq(q144Dist, Queries.q146MaximalSpans _).foreach { q =>
       val p = plan(q)
       p.split("\n").filterNot(_.contains("WindowGroupLimit"))
         .count(_.contains("Window")) shouldBe 0
     }
     // q144's canonical choice is the map-side-combined aggregate
-    plan(Queries.q144AllSpanDedup) should include("HashAggregate")
+    plan(q144Dist) should include("HashAggregate")
     // q146's reporting plan reads the stored suffix index, never
     // re-derives the doubling construction in-query
     plan(Queries.q146MaximalSpans) should include("suffix_f_v1")
+  }
+
+  test("q144: a corpus under the cap runs the one-task tier, no shuffle") {
+    val p = plan(Queries.q144AllSpanDedup(_, _))
+    p should include("MapPartitions")
+    p should include("Coalesce 1")
+    p should not include "Exchange"
   }
 
   test("q25: portable LSH top-k runs the native projection kernel, queries broadcast") {

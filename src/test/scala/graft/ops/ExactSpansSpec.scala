@@ -166,9 +166,29 @@ class ExactSpansSpec extends SparkSpec {
     }
   }
 
+  /** dedupSpansAll's rows on BOTH tiers: the default tier over a
+    * stats-carrying local relation (one task — asserted from the plan)
+    * and the forced distributed chain over the two-partition RDD frame;
+    * the rows must be equal. */
+  private def dedupSpansAll(minLen: Int, posRange: Long, rows: Row*): Seq[Row] = {
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    val localF = ExactSpans.dedupSpansAll(
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+      "doc_id", "text", minLen, posRange)
+    val distF = ExactSpans.dedupSpansAll(
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema),
+      "doc_id", "text", minLen, posRange, maxLocalBytes = 0L)
+    localF.queryExecution.executedPlan.toString should include("MapPartitions")
+    distF.queryExecution.executedPlan.toString should not include "MapPartitions"
+    val local = localF.collect().toSeq.sortBy(_.toString)
+    local shouldBe distF.collect().toSeq.sortBy(_.toString)
+    local
+  }
+
   private def runAll(minLen: Int, rows: (Long, String)*) =
-    ExactSpans.dedupSpansAll(docs(rows: _*), "doc_id", "text", minLen)
-      .collect()
+    dedupSpansAll(minLen, ExactSpans.PosRange,
+        rows.map { case (i, t) => Row(i, t) }: _*)
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
       .toMap
 
@@ -316,6 +336,34 @@ class ExactSpansSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("dedupSpansAll: null, empty, short, over-posRange and null-id docs match on both tiers") {
+    // posRange=8: doc 5 (10 tokens) is outside the domain — it passes
+    // through re-joined, and its "b c d e" window does not count. The
+    // null-id docs' windows DO count (doc 8's only occurrence of
+    // "q r s t" is duplicated through one) but never own a canonical,
+    // so doc 8 keeps it; the null-id docs themselves pass through.
+    val out = dedupSpansAll(4, 8L,
+      Row(1L, null),
+      Row(2L, ""),
+      Row(3L, "a b c"),
+      Row(5L, "A  b c d e f g h i j"),
+      Row(6L, "x b c d e"),
+      Row(7L, "b c d e y"),
+      Row(8L, "q r s t u"),
+      Row(null, "z b c d e"),
+      Row(null, "q r s t"))
+    out.toSet shouldBe Set(
+      Row(1L, null, null, null),
+      Row(2L, 1L, 0L, ""),
+      Row(3L, 3L, 0L, "a b c"),
+      Row(5L, 10L, 0L, "a b c d e f g h i j"),
+      Row(6L, 5L, 0L, "x b c d e"),
+      Row(7L, 5L, 4L, "y"),
+      Row(8L, 5L, 0L, "q r s t u"),
+      Row(null, 5L, 0L, "z b c d e"),
+      Row(null, 4L, 0L, "q r s t"))
+  }
+
   test("dedupSpansAll: short docs pass through; bounds validated") {
     val out = runAll(4, 5L -> "a b c", 6L -> "a b c")
     out(5L) shouldBe ((3L, 0L, "a b c"))
@@ -340,13 +388,16 @@ class ExactSpansSpec extends SparkSpec {
     6L -> "k l m",
     7L -> "z1 z2 a b c d",
     10L -> "g1 g2 g3 g4 h1",
-    11L -> "z9 g1 g2 g3 g4")
+    11L -> "z9 g1 g2 g3 g4",
+    9L -> null)
   // DELTA: d1 removed (canonical of "a b c d" moves to d2 — an UNTOUCHED
   // doc regains its text), d4 changed, d0 added (duplicates d5's whole
   // text with a SMALLER id — an untouched doc becomes fully cut), d8
   // added (duplicates d3's prefix — d3 turns canonical, d8 is cut), d12
   // added (a THIRD occurrence of d10/d11's key: count changes, canonical
   // does not — its holders reuse verbatim while the summary row updates).
+  // d9 has null text in both snapshots: unchanged, so its stored
+  // (id, null, null, null) row is reused once.
   private val newCorpus = Seq(
     0L -> "e f g h",
     2L -> "y1 a b c d y2",
@@ -358,7 +409,8 @@ class ExactSpansSpec extends SparkSpec {
     8L -> "p q r s v",
     10L -> "g1 g2 g3 g4 h1",
     11L -> "z9 g1 g2 g3 g4",
-    12L -> "x9 x8 g1 g2 g3 g4")
+    12L -> "x9 x8 g1 g2 g3 g4",
+    9L -> null)
 
   private def hashes(rows: Seq[(Long, String)]) =
     docs(rows: _*).select(org.apache.spark.sql.functions.col("doc_id"),
@@ -385,7 +437,8 @@ class ExactSpansSpec extends SparkSpec {
 
   test("maintenance recomputes UNTOUCHED docs whose windows flipped status") {
     val out = maintained().collect()
-      .map(r => r.getLong(0) -> ((r.getLong(2), r.getString(3)))).toMap
+      .map(r => r.getLong(0) -> ((r.getAs[java.lang.Long](2), r.getString(3))))
+      .toMap
     // d2: was cut under d1's canonical; d1's removal hands it ownership
     out(2L) shouldBe ((0L, "y1 a b c d y2"))
     // d5: untouched text, but the added d0 (smaller id) steals canonical
@@ -403,6 +456,7 @@ class ExactSpansSpec extends SparkSpec {
     // corruption-proof in the whitebox test)
     out(12L) shouldBe ((4L, "x9 x8"))
     out(11L) shouldBe ((4L, "z9"))
+    out(9L) shouldBe ((null, null)) // null text stays null
   }
 
   test("untouched docs outside the closure reuse their manifest rows VERBATIM") {

@@ -28,6 +28,16 @@ class SnapshotDeltaSpec extends SparkSpec {
       4L -> (("added", true)))
   }
 
+  test("null text is present, not absent: null→null unchanged, null↔text changed") {
+    // A null text hashes to null; presence comes from the side markers.
+    val old = snap(1L -> null, 2L -> null, 3L -> "alpha", 5L -> null)
+    val neu = snap(1L -> null, 2L -> "beta", 3L -> null, 4L -> null)
+    val out = SnapshotDelta.diff(old, neu, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
+    out shouldBe Map(1L -> "unchanged", 2L -> "changed", 3L -> "changed",
+      4L -> "added", 5L -> "removed")
+  }
+
   test("whitespace-only drift reads unchanged (normalized content hash)") {
     val old = snap(7L -> "a   b  c")
     val neu = snap(7L -> " a b c ")
