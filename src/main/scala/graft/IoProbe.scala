@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness for [[IoEvidence]]: prints per-component task-metric
@@ -10,11 +9,7 @@ import org.apache.spark.sql.functions._
 object IoProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build(GraftSession.cpus)
     Queries.q148IncrementalMinhash(spark, dir)
       .write.format("noop").mode("overwrite").save()
     Queries.q153IncrementalClusters(spark, dir)

@@ -3213,6 +3213,7 @@ object Oracles {
     // All-lengths exact-substring dedup: q132's window/canonical replay
     // at L=4 plus the coverage-level keep rule — a token survives iff no
     // non-canonical duplicated window covers it OR a canonical one does.
+    // A null-text document stays null; a fully removed one reads ''.
 
     "q144_all_span_dedup" ->
       """WITH tok AS (
@@ -3246,7 +3247,8 @@ object Oracles {
         |  FROM kept GROUP BY doc_id)
         |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens,
         |  CAST(len(t.ws) - coalesce(a.n_kept, 0) AS BIGINT) AS n_removed,
-        |  coalesce(a.txt, '') AS deduped_text
+        |  CASE WHEN t.ws IS NULL THEN NULL ELSE coalesce(a.txt, '') END
+        |    AS deduped_text
         |FROM tok t LEFT JOIN agg a USING (doc_id)""".stripMargin,
 
     // EXACT maximal duplicated-span inventory: the suffix-array

@@ -1,13 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for named queries to files.
   *
   * `runMain graft.PlanDump <outDir> <suffix> <query...>` writes
   * `<outDir>/<query>_<suffix>.txt` for each query — the round's
-  * before/after plan evidence (plans/rNN/). Session config matches
-  * [[Bench]]'s measured config (shuffle partitions 8, AQE on) so the
+  * before/after plan evidence (plans/rNN/). Session config is
+  * [[GraftSession]]'s bench config (shuffle partitions 8) so the
   * dumped plan is the shape the bench times; with AQE the dump is the
   * initial plan (isFinalPlan=false), which pins exchange/join/scan
   * structure — the part the optimization claims are about. */
@@ -18,16 +16,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(8)
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
       SparkEntry.queries.get(n) match {

@@ -2030,7 +2030,7 @@ object Queries {
     // The per-doc chunk count rides the frame as `_n_tot` (computed from
     // the words array before the explode), which removes the old `tot`
     // branch's third chunk pass, its groupBy, and the re-attach join
-    // (r20, guide §2.4 — ProfileQ measured each chunk pass at ~7.3 s CPU
+    // (r20, guide §2.4 — a per-stage profile measured each chunk pass at ~7.3 s CPU
     // at sf0.1). The remaining two consumers (drop-set aggregate +
     // anti-join probe) deliberately RECOMPUTE the chunk chain rather
     // than share a persisted copy: an r20 A/B that persisted it
@@ -3848,7 +3848,7 @@ object Queries {
     * Build-serving tier (r19 — the q145 treatment applied to the FULL
     * build, closing the VERDICT r18 ask-#1 floor): at build-serving
     * scale the distributed chain is ~21 stages whose largest stage runs
-    * well under the scheduler latency it pays (ProfileQ: 2.1 s
+    * well under the scheduler latency it pays (per-stage profile: 2.1 s
     * stage-wall sum spread over 21 stages for a ~1.1-1.6 s cell). When
     * [[graft.Tier]] admits the corpus and both model artifacts, the
     * whole quality→exact-canon→decon→LM→manifest chain runs as the ONE

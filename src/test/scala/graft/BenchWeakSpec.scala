@@ -1,5 +1,7 @@
 package graft
 
+import scala.io.Source
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -94,5 +96,28 @@ class BenchWeakSpec extends AnyFunSuite with Matchers {
     WeakRule.gateCandidate(1.405, stallFlag = false, err = false, 0.04) shouldBe true
     WeakRule.gateCandidate(1.405, stallFlag = true, err = false, 0.04) shouldBe false
     WeakRule.gateCandidate(0.41, stallFlag = false, err = false, 0.04) shouldBe false
+  }
+
+  test("Bench's scale and forced-distributed tables name each registered query once, with positive bounds") {
+    // A renamed cell must not silently drop out of the 10x growth gate;
+    // Bench.main requires the same at startup.
+    for (names <- Seq(Bench.ScaleCells.map(_._1), Bench.DistCells.map(_._1))) {
+      names.filterNot(SparkEntry.queries.contains) shouldBe empty
+      names.diff(names.distinct) shouldBe empty
+    }
+    Bench.ScaleCells.filterNot(_._2 > 0) shouldBe empty
+  }
+
+  test("perfbench's copy of the bench session config matches GraftSession") {
+    // perfbench is a separate build and keeps its own session builder;
+    // every spark.sql literal it sets must be GraftSession's value.
+    val src = Source.fromFile("perfbench/src/main/scala/graftbench/Main.scala", "UTF-8")
+    val text = try src.mkString finally src.close()
+    val set = """\.config\("(spark\.sql\.[^"]+)",\s*"([^"]*)"\)""".r
+      .findAllMatchIn(text).map(m => m.group(1) -> m.group(2)).toSeq
+    set.map(_._1) should contain allOf ("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.enabled", "spark.sql.extensions")
+    val graft = GraftSession.conf(8).toMap
+    set.foreach { case (k, v) => withClue(k) { graft.get(k) shouldBe Some(v) } }
   }
 }
