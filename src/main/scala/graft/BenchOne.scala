@@ -40,7 +40,12 @@ object BenchOne {
     if (profile) spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
-        stages.synchronized(stages += ((si.stageId, si.name.take(60),
+        // Named by the distinct operation scopes of the stage's RDDs
+        // (`Exchange`, `WholeStageCodegen (3)`, …), as the plan names its
+        // operators: an AQE query stage's call site is the same
+        // CompletableFuture lambda for every stage.
+        val ops = si.rddInfos.sortBy(_.id).flatMap(_.scope).map(_.name.trim).distinct
+        stages.synchronized(stages += ((si.stageId, ops.mkString(", ").take(100),
           si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L),
           si.taskMetrics.executorRunTime)))
       }

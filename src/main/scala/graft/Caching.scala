@@ -14,14 +14,14 @@ import scala.util.DynamicVariable
   * recomputed once per downstream consumer when the caller finally
   * acts), so the frames outlive the call. Bench and Verify release them
   * with `spark.catalog.clearCache()`, but a long-lived session running
-  * e.g. [[Tables.servedArtifact]] builds would accumulate
+  * e.g. [[Tables.artifact]] builds would accumulate
   * MEMORY_AND_DISK blocks across builds.
   *
   * `withCachedFrames { ... }` fixes the lifetime: persists registered
   * during the block (via [[CacheScope.persist]], which operators call
   * through [[CacheScope.scopedPersist]]) are unpersisted when the block
   * exits — the right wrapper for any build whose terminal ACTION runs
-  * inside the block, which is exactly the servedArtifact shape (the
+  * inside the block, which is exactly the artifact shape (the
   * parquet write completes before the block returns, so nothing lazy
   * escapes). Outside any scope, `scopedPersist` degrades to a plain
   * `persist` and the session-wide clearCache contract applies

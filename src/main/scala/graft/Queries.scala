@@ -286,18 +286,16 @@ object Queries {
     * build this is the canonical silver artifact: shingle extraction reads
     * every byte of text once per snapshot, so paying it once and
     * equi-joining the materialized set is the difference between one
-    * corpus scan and five. Same `_SUCCESS`-gated `writePathIfAbsent`
+    * corpus scan and five. Same `_SUCCESS`-gated [[Tables.artifact]]
     * contract as the other scratch artifacts; the path carries the
     * shingle/cap parameters and a schema version, so a semantics change
     * rebuilds rather than silently reusing stale data. */
   private def corpusShingles(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/shingles_n3_df${MaxShingleDf}_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"shingles_n3_df${MaxShingleDf}_v1/$sfTag") {
       Dedup.capShingleDf(
         Dedup.shingleSet(t(s, dir, "documents"), "doc_id", "text", 3),
         MaxShingleDf)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -310,17 +308,15 @@ object Queries {
     * recall gate (q83a) all consume the SAME edge list; in a production
     * pipeline it is a silver artifact written once per snapshot, exactly
     * like q46's bucketed tables and q87's partitioned layout (same
-    * `writePathIfAbsent` amortization contract — `_SUCCESS`-gated, so a
+    * [[Tables.artifact]] amortization contract — `_SUCCESS`-gated, so a
     * half-written directory is rebuilt, not trusted). Built from the
     * [[corpusShingles]] artifact, so the build itself pays only the
     * self-join, not a second shingle extraction. */
   private def neardupPairs(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/neardup_pairs_n3_j05_df${MaxShingleDf}_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"neardup_pairs_n3_j05_df${MaxShingleDf}_v1/$sfTag") {
       Dedup.ngramJaccardPairsFromShingles(corpusShingles(s, dir), "doc_id",
         minJaccard = 0.5)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -592,15 +588,13 @@ object Queries {
     * production pipeline runs it once per corpus snapshot and every
     * downstream consumer (canonical assignment q40, survivor selection
     * q76) reads the manifest; re-running CC per consumer would repay the
-    * loop's barriers every time. Same `writePathIfAbsent` contract and
+    * loop's barriers every time. Same [[Tables.artifact]] contract and
     * parameter-salted path as the artifacts it derives from. */
   private def neardupClusters(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/neardup_clusters_n3_j05_df${MaxShingleDf}_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"neardup_clusters_n3_j05_df${MaxShingleDf}_v1/$sfTag") {
       Dedup.nearDupClustersFromPairs(neardupPairs(s, dir),
         t(s, dir, "documents").select(col("doc_id")), "doc_id")
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -963,11 +957,9 @@ object Queries {
     // runs once per snapshot; every audit — this one, and any future
     // eval-set revision — probes the stored table.
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/grams8_v1/$sfTag"
-    val grams = Tables.servedArtifact(s, path) {
+    val grams = Tables.artifact(s, s"grams8_v1/$sfTag") {
       Dedup.shingleSet(t(s, dir, "documents"), "doc_id", "text", 8)
         .withColumnRenamed("shingle", "gram")
-        .write.mode("overwrite").parquet(path)
     }
     val evalGrams = grams.filter(col("doc_id") % 20 === 0)
       .select(col("gram")).distinct()
@@ -1467,11 +1459,9 @@ object Queries {
     * its sides read stored tables and the cell times the comparison. */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/minhash_pairs_k16_r2_j05_df${MaxShingleDf}_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"minhash_pairs_k16_r2_j05_df${MaxShingleDf}_v1/$sfTag") {
       Dedup.minHashNearDupPairsFromShingles(corpusShingles(s, dir), "doc_id", 16, 2, 0.5)
         .select(col("doc_a"), col("doc_b"))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -1512,10 +1502,8 @@ object Queries {
     // timing cell is q22); the cell times the exactness COMPARISON, which
     // is its actual claim.
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val fpPath = s"${Tables.scratchDir(s)}/simhash_fp_odd_v1/$sfTag"
-    val fp = Tables.servedArtifact(s, fpPath) {
+    val fp = Tables.artifact(s, s"simhash_fp_odd_v1/$sfTag") {
       Dedup.simHash(sample, "doc_id", "text")
-        .write.mode("overwrite").parquet(fpPath)
     }
     val brute = fp.select(col("doc_id").as("doc_a"), col("simhash").as("_sa"))
       .crossJoin(fp.select(col("doc_id").as("doc_b"), col("simhash").as("_sb")))
@@ -1540,12 +1528,10 @@ object Queries {
     * end-to-end and is hash-checked. */
   private def exactTopK(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/exact_topk_q50_k5_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"exact_topk_q50_k5_v1/$sfTag") {
       Similarity.bruteForceTopK(Tables.wide(s, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") % 50 === 0, k = 5)
         .select(col("query_id"), col("cand_id"), col("cosine"))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -1556,8 +1542,7 @@ object Queries {
     * one. Same build-once artifact contract. */
   private def exactTopKL2(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/exact_topk_l2_q50b_k5_v2/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"exact_topk_l2_q50b_k5_v2/$sfTag") {
       val pts = quantizedPoints(s, dir)
       // FIXED standing query panel, base-corpus ids only — the SAME
       // panel contract as q117 (its round-13 growth lesson): a ground
@@ -1578,7 +1563,6 @@ object Queries {
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 5)
         .select(col("query_id"), col("cand_id"))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -1641,12 +1625,10 @@ object Queries {
     // LSH timing cell is q25; this gate audits recall of what the served
     // index returns, both sides stored tables (same shape as [[exactTopK]]).
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val lshPath = s"${Tables.scratchDir(s)}/lsh_topk_t4_b8_q50_k5_v1/$sfTag"
-    val lsh = Tables.servedArtifact(s, lshPath) {
+    val lsh = Tables.artifact(s, s"lsh_topk_t4_b8_q50_k5_v1/$sfTag") {
       Similarity.lshTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") % 50 === 0, k = 5, tables = 4, bits = 8)
         .select(col("query_id"), col("cand_id"))
-        .write.mode("overwrite").parquet(lshPath)
     }.withColumn("_f", lit(1L))
     exactTopK(s, dir).join(lsh, Seq("query_id", "cand_id"), "left")
       .agg(count(lit(1)).as("n_exact"),
@@ -1671,13 +1653,11 @@ object Queries {
     // Served IVF result, same contract as [[q83cAnnLshRecall]] (the LIVE
     // seed-centroid IVF timing cell is q52).
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val ivfPath = s"${Tables.scratchDir(s)}/ivf_topk_auto_f15_q50_k5_v2/$sfTag"
-    val ivf = Tables.servedArtifact(s, ivfPath) {
+    val ivf = Tables.artifact(s, s"ivf_topk_auto_f15_q50_k5_v2/$sfTag") {
       Similarity.ivfTopKFrac(t(s, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") % 50 === 0, k = 5, centroidEvery = 0,
           probeFrac = 0.15, nProbeMin = 3)
         .select(col("query_id"), col("cand_id"))
-        .write.mode("overwrite").parquet(ivfPath)
     }.withColumn("_f", lit(1L))
     exactTopK(s, dir).join(ivf, Seq("query_id", "cand_id"), "left")
       .agg(count(lit(1)).as("n_exact"),
@@ -1781,17 +1761,15 @@ object Queries {
     * mechanism that turns a decade-wide fact scan into one year. */
   def q87DppPrune(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "orders")
-    // _v1: versioned like every writePathIfAbsent artifact, so a change
+    // _v1: versioned like every Tables.artifact name, so a change
     // to cleanOrders/partitioning semantics rebuilds rather than reuses.
-    val path = s"${Tables.scratchDir(s)}/dpp_v1/$sfTag/orders"
     // Build-once (same amortized-artifact contract as q46's bucketed
     // table): the partitioned layout is the durable artifact DPP prunes
     // against; rewriting it per invocation would make every run — and the
     // bench cell — time the setup write instead of the pruned read.
-    val fact = Tables.servedArtifact(s, path) {
+    val fact = Tables.artifact(s, s"dpp_v1/$sfTag/orders", "order_year") {
       graft.pipeline.Silver.cleanOrders(t(s, dir, "orders"))
         .withColumn("order_year", year(col("order_date")))
-        .write.mode("overwrite").partitionBy("order_year").parquet(path)
     }
     val leapYear = DateDim.dateDim(s, "1995-01-01", "1997-12-31")
       .groupBy(col("year").as("order_year"))
@@ -2190,11 +2168,9 @@ object Queries {
     * version so a semantics change rebuilds the artifact. */
   private[graft] def quantizedPoints(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/qpoints_e6_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"qpoints_e6_v1/$sfTag") {
       t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), Cluster.quantize(col("embedding")).as("qv"))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -2207,10 +2183,8 @@ object Queries {
     * training recurrence, not to move data. */
   private def trainedCentroids(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/kmeans_k8_i2_e6_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"kmeans_k8_i2_e6_v1/$sfTag") {
       Cluster.train(quantizedPoints(s, dir), k = 8, iterations = 2)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -2281,14 +2255,13 @@ object Queries {
     // Path carries the shingle parameters + a schema version (same
     // invalidation contract as [[corpusShingles]]): a semantics change
     // rebuilds the artifact instead of silently reusing a stale one.
-    val path = s"${Tables.scratchDir(s)}/shingle_index_n3_df${MaxShingleDf}_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"shingle_index_n3_df${MaxShingleDf}_v1/$sfTag") {
       val sh = Dedup.capShingleDf(
         Dedup.shingleSet(
           t(s, dir, "documents").filter(col("doc_id") % 10 =!= 0),
           "doc_id", "text", 3), MaxShingleDf)
       val sized = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("m"))
-      sh.join(sized, Seq("doc_id")).write.mode("overwrite").parquet(path)
+      sh.join(sized, Seq("doc_id"))
     }
   }
 
@@ -2418,8 +2391,7 @@ object Queries {
     * once rather than re-run per measure. */
   private def shingleIntersections(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/shingle_intersections_n3_df${MaxShingleDf}_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"shingle_intersections_n3_df${MaxShingleDf}_v1/$sfTag") {
       val sh = corpusShingles(s, dir)
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("m"))
       sh.select(col("doc_id").as("doc_a"), col("shingle"))
@@ -2429,7 +2401,6 @@ object Queries {
         .agg(count(lit(1)).as("intersection"))
         .join(sizes.select(col("doc_id").as("doc_a"), col("m").as("size_a")), Seq("doc_a"))
         .join(sizes.select(col("doc_id").as("doc_b"), col("m").as("size_b")), Seq("doc_b"))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -2598,10 +2569,8 @@ object Queries {
     * version in the path). */
   private def pqBooks(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/pq_books_m4_k8_i2_e6_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"pq_books_m4_k8_i2_e6_v1/$sfTag") {
       graft.ops.Pq.trainCodebooks(quantizedPoints(s, dir), m = 4, k = 8, iterations = 2)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -2610,10 +2579,8 @@ object Queries {
     * floats); ADC queries scan THIS, not embeddings. */
   private def pqCodes(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/pq_codes_m4_k8_i2_e6_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"pq_codes_m4_k8_i2_e6_v1/$sfTag") {
       graft.ops.Pq.encode(quantizedPoints(s, dir), pqBooks(s, dir), m = 4)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -3135,13 +3102,11 @@ object Queries {
     // artifacts, the same build-once contract as the BPE merge/vocab
     // tables — survives executor loss where a localCheckpoint would not.
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val base = s"${Tables.scratchDir(s)}/qf_perceptron_v1/$sfTag"
+    val base = s"qf_perceptron_v1/$sfTag"
     graft.ops.QualityFilter.trainPerceptron(
       t(s, dir, "documents"), "doc_id", "text", "n_chars",
       when(col("lang") === "en", 1L).otherwise(-1L), rounds = 3,
-      store = (label, df) => Tables.servedArtifact(s, s"$base/$label") {
-        df.write.mode("overwrite").parquet(s"$base/$label")
-      })
+      store = (label, df) => Tables.artifact(s, s"$base/$label")(df))
   }
 
   /** Build-once corpus word-frequency table (word, n) — BPE training's
@@ -3155,10 +3120,8 @@ object Queries {
     * hash-checks end-to-end. */
   private def bpeWordFreq(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/bpe_wordfreq_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"bpe_wordfreq_v1/$sfTag") {
       graft.ops.Bpe.wordFreq(t(s, dir, "documents"), "text")
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -3189,7 +3152,7 @@ object Queries {
     * lineage-truncated iteration (eager 1-row top-pair checkpoints,
     * vocab checkpoint every 8 rounds, superseded snapshots released on
     * supersession — peak storage two vocabulary-sized frames at any
-    * budget; frames scope-released by the servedArtifact build's
+    * budget; frames scope-released by the artifact build's
     * withCachedFrames wrapper, ask #7). SERVED, not timed live: BPE is
     * inherently sequential — 32 dependent top-pair selections are 32
     * driver barriers in ANY distributed engine (~160 ms/round here,
@@ -3333,18 +3296,15 @@ object Queries {
   private def bm25Index(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val base = s"${Tables.scratchDir(s)}/bm25_idx_v1/$sfTag"
-    val post = Tables.servedArtifact(s, s"$base/postings") {
+    val base = s"bm25_idx_v1/$sfTag"
+    val post = Tables.artifact(s, s"$base/postings") {
       graft.ops.Bm25.postings(t(s, dir, "documents"), "doc_id", "text")
-        .write.mode("overwrite").parquet(s"$base/postings")
     }
-    val dfT = Tables.servedArtifact(s, s"$base/df") {
+    val dfT = Tables.artifact(s, s"$base/df") {
       graft.ops.Bm25.docFreq(post)
-        .write.mode("overwrite").parquet(s"$base/df")
     }
-    val stats = Tables.servedArtifact(s, s"$base/stats") {
+    val stats = Tables.artifact(s, s"$base/stats") {
       graft.ops.Bm25.corpusStats(post)
-        .write.mode("overwrite").parquet(s"$base/stats")
     }
     (post, dfT, stats)
   }
@@ -3392,10 +3352,7 @@ object Queries {
   private def bm25Panel(s: SparkSession, dir: String,
                         dfT: DataFrame): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/bm25_idx_v1/$sfTag/panel"
-    Tables.servedArtifact(s, path) {
-      bm25QueryPanel(dfT).write.mode("overwrite").parquet(path)
-    }
+    Tables.artifact(s, s"bm25_idx_v1/$sfTag/panel")(bm25QueryPanel(dfT))
   }
 
   /** HYBRID retrieval via Reciprocal-Rank Fusion ([[graft.ops.Fusion
@@ -3467,11 +3424,9 @@ object Queries {
     * this one is the serve-everything index a retrieval stack ships). */
   private def fullIvfLists(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/ivf_lists_full_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"ivf_lists_full_v1/$sfTag") {
       Cluster.assignQ(quantizedPoints(s, dir), trainedCentroids(s, dir))
         .select(col("id"), col("cluster_id"))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -3493,13 +3448,10 @@ object Queries {
     // stale or drifted artifact hash-mismatches.
     val tag = s"${Tables.corpusTag(s, dir, "documents")}__" +
       Tables.corpusTag(s, dir, "embeddings")
-    val servedPath = s"${Tables.scratchDir(s)}/hybrid_rrf_ivf_q4_v1/$tag"
-    val served = Tables.servedArtifact(s, servedPath) {
+    val served = Tables.artifact(s, s"hybrid_rrf_ivf_q4_v1/$tag") {
       q170HybridRrf(s, dir).select(col("query_id"), col("doc_id"))
-        .write.mode("overwrite").parquet(servedPath)
     }.withColumn("_f", lit(1L))
-    val refPath = s"${Tables.scratchDir(s)}/hybrid_rrf_brute_q4_v1/$tag"
-    val reference = Tables.servedArtifact(s, refPath) {
+    val reference = Tables.artifact(s, s"hybrid_rrf_brute_q4_v1/$tag") {
       val (post, dfT, stats) = bm25Index(s, dir)
       val lex = graft.ops.Bm25.topKQueries(post, bm25Panel(s, dir, dfT),
           k = 10, dfT = Some(dfT), stats = Some(stats))
@@ -3512,7 +3464,6 @@ object Queries {
           Seq("lex" -> lex, "sem" -> bruteSem), kRrf = 60, maxRank = 10,
           topN = 10)
         .select(col("query_id"), col("doc_id"))
-        .write.mode("overwrite").parquet(refPath)
     }
     reference.join(served, Seq("query_id", "doc_id"), "left")
       .agg(count(lit(1)).as("n_exact"),
@@ -3597,11 +3548,9 @@ object Queries {
     * contract). */
   private def trainedBpe512(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/bpe_r512_units_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"bpe_r512_units_v1/$sfTag") {
       graft.ops.Bpe.trainFromWordFreq(bpe512Units(s, dir),
           rounds = 512, topWords = 50)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -3656,11 +3605,9 @@ object Queries {
     * leave the top-k only if its full count is tracked. */
   private def prevUnitCounts(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/bpe8k_unitcounts_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"bpe8k_unitcounts_old_v1/$sfTag") {
       bpe8kUnitWindows(q145OldSnap(s, dir))
         .groupBy(col("word")).agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -3735,11 +3682,9 @@ object Queries {
     * stored artifact. */
   private def trainedBpe8k(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/bpe_r8k_units_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"bpe_r8k_units_v1/$sfTag") {
       graft.ops.Bpe.trainFromWordFreq(bpe8kUnits(s, dir),
           rounds = 8192, topWords = 50)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -3747,14 +3692,12 @@ object Queries {
     * segmentations) — [[q147BpeTrain32]]'s stored artifact. */
   private def trainedBpe32(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/bpe_r32_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"bpe_r32_v1/$sfTag") {
       // maxLocalWords = 0: q147 exists to pin the DISTRIBUTED iterative
       // trainer in a hash-checked, growth-gated cell — the one-task
       // tier has its own deep-budget cell (q163).
       graft.ops.Bpe.trainFromWordFreq(bpeWordFreq(s, dir),
           rounds = 32, topWords = 50, maxLocalWords = 0L)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -3774,12 +3717,10 @@ object Queries {
     * same contract as [[trainedCentroids]] for q102/q103). */
   private def trainedBpeMerges(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/bpe_r3_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"bpe_r3_v1/$sfTag") {
       graft.ops.Bpe.trainFromWordFreq(bpeWordFreq(s, dir),
           rounds = 3, topWords = 1)
         .filter(col("kind") === "merge")
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -3793,11 +3734,9 @@ object Queries {
     * ships its vocab, it does not re-derive segmentations per query. */
   private def trainedBpeVocab(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/bpe_vocab_r3_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"bpe_vocab_r3_v1/$sfTag") {
       graft.ops.Bpe.encodeVocab(t(s, dir, "documents"), "text",
         trainedBpeMerges(s, dir), nMerges = 3)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4010,11 +3949,9 @@ object Queries {
     * derived per corpus snapshot. */
   private def lmModel(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/lm_bigram_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"lm_bigram_v1/$sfTag") {
       graft.ops.LmScore.trainCounts(t(s, dir, "documents"),
           "doc_id", "text", col("lang") === "en")
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4138,15 +4075,13 @@ object Queries {
   /** Build-once per-position longest-duplicated-prefix table
     * (doc_id, p, n, f) over the documents corpus — the suffix-index
     * artifact q146 reports from ([[graft.ops.Suffix.longestDupPrefix]]
-    * runs at build time, inside the scoped-cache servedArtifact
+    * runs at build time, inside the scoped-cache artifact
     * wrapper). */
   private def suffixDupPrefix(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/suffix_f_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"suffix_f_v1/$sfTag") {
       graft.ops.Suffix.longestDupPrefix(
           t(s, dir, "documents"), "doc_id", "text")
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4178,10 +4113,8 @@ object Queries {
     * incremental system actually has on disk when the new crawl lands. */
   private def prevCorpusBuild(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/corpus_build_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"corpus_build_old_v1/$sfTag") {
       corpusBuildCore(s, dir, q145OldSnap(s, dir))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4193,8 +4126,7 @@ object Queries {
     * test there; q143/q145 serve this stored set, the deployed shape). */
   private def evalWindowKeys(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/eval_windows8_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"eval_windows8_v1/$sfTag") {
       val ws = TextStats.words(lower(col("text")))
       t(s, dir, "documents").filter(col("doc_id") % 20 === 0)
         .filter(size(ws) >= 8)
@@ -4203,7 +4135,6 @@ object Queries {
         .select(array_join(slice(col("ws"), col("p") + 1, lit(8)), " ")
           .as("key"))
         .distinct()
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4215,12 +4146,10 @@ object Queries {
     * [[prevCorpusBuild]]. */
   private def prevMinhashIndex(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/minhash_idx16_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"minhash_idx16_old_v1/$sfTag") {
       Dedup.minHashSignaturesPortable(
           Dedup.shingleSet(q145OldSnap(s, dir), "doc_id", "text", 3),
           "doc_id", k = 16)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4331,12 +4260,10 @@ object Queries {
     * would invalidate [[q153IncrementalClusters]]'s component reuse. */
   private def incStopShingles(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/stop_shingles3_df${MaxShingleDf}_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"stop_shingles3_df${MaxShingleDf}_old_v1/$sfTag") {
       Dedup.stopShingles(
           Dedup.shingleSet(q145OldSnap(s, dir), "doc_id", "text", 3),
           MaxShingleDf)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4350,9 +4277,7 @@ object Queries {
                            old: Boolean): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
     val tag = if (old) "old" else "new"
-    val path =
-      s"${Tables.scratchDir(s)}/neardup_pairs_stop_j05_${tag}_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"neardup_pairs_stop_j05_${tag}_v1/$sfTag") {
       val snap = if (old) q145OldSnap(s, dir) else q145NewSnap(s, dir)
       Dedup.ngramJaccardPairsFromShingles(
           Dedup.removeStopShingles(
@@ -4360,7 +4285,6 @@ object Queries {
             incStopShingles(s, dir)),
           "doc_id", minJaccard = 0.5)
         .select(col("doc_a"), col("doc_b"))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4368,12 +4292,10 @@ object Queries {
     * what the maintenance pass has on disk when the new crawl lands. */
   private def prevClustersInc(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/neardup_clusters_stop_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"neardup_clusters_stop_old_v1/$sfTag") {
       Dedup.nearDupClustersFromPairs(
           incSnapPairs(s, dir, old = true),
           q145OldSnap(s, dir).select(col("doc_id")), "doc_id")
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4421,11 +4343,9 @@ object Queries {
     * docs) — the stored artifact [[q155IncrementalLm]] maintains. */
   private def prevLmModel(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/lm_bigram_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"lm_bigram_old_v1/$sfTag") {
       graft.ops.LmScore.trainCounts(q145OldSnap(s, dir),
           "doc_id", "text", col("lang") === "en")
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4485,12 +4405,10 @@ object Queries {
     * content-addressed, so snapshots only add/remove ids). */
   private def prevIvfLists(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/ivf_lists_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"ivf_lists_old_v1/$sfTag") {
       Cluster.assignQ(quantizedPoints(s, dir).filter(col("id") % 17 =!= 0),
           trainedCentroids(s, dir))
         .select(col("id"), col("cluster_id"))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4570,12 +4488,10 @@ object Queries {
                             target: Boolean): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
     val tag = if (target) "target" else "raw"
-    val path = s"${Tables.scratchDir(s)}/dsir_buckets3_${tag}_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"dsir_buckets3_${tag}_old_v1/$sfTag") {
       graft.ops.Dsir.trainBucketCounts(q145OldSnap(s, dir),
           "doc_id", "text",
           if (target) col("doc_id") % 20 === 0 else col("doc_id") % 20 =!= 0)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4621,13 +4537,11 @@ object Queries {
     * keep the live in-plan diff. */
   private def servedSnapshotDelta(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/snapshot_delta_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"snapshot_delta_v1/$sfTag") {
       graft.ops.SnapshotDelta.diffHashed(
           prevSnapshotHashes(s, dir),
           q145NewSnap(s, dir).select(col("doc_id"),
             TextStats.contentHash(col("text")).as("content_hash")))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4644,19 +4558,15 @@ object Queries {
     * text is scanned once across all of them. */
   private def prevBm25Postings(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/bm25_idx_old_v1/$sfTag/postings"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"bm25_idx_old_v1/$sfTag/postings") {
       graft.ops.Bm25.postings(q145OldSnap(s, dir), "doc_id", "text")
-        .write.mode("overwrite").parquet(path)
     }
   }
 
   private def prevBm25Df(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/bm25_idx_old_v1/$sfTag/df"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"bm25_idx_old_v1/$sfTag/df") {
       graft.ops.Bm25.docFreq(prevBm25Postings(s, dir))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4731,12 +4641,10 @@ object Queries {
     * replayed by the oracle as (count+15)//16. */
   private[graft] def trainedCentroidsSem(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/kmeans_occ16_i2_e6_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"kmeans_occ16_i2_e6_old_v1/$sfTag") {
       val pts = quantizedPoints(s, dir).filter(col("id") % 97 =!= 0)
       val k = math.max(1L, (pts.count() + 15L) / 16L).toInt
       Cluster.train(pts, k, iterations = 2)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4749,12 +4657,10 @@ object Queries {
     * theorem vacuous as a demonstration. */
   private[graft] def prevSemLists(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/semdedup_lists_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"semdedup_lists_old_v1/$sfTag") {
       Cluster.assignQ(quantizedPoints(s, dir).filter(col("id") % 97 =!= 0),
           trainedCentroidsSem(s, dir))
         .select(col("id"), col("cluster_id"))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4762,14 +4668,12 @@ object Queries {
     * maintenance pass reuses untouched rows from. */
   private def prevSemManifest(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/semdedup_manifest_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"semdedup_manifest_old_v1/$sfTag") {
       graft.ops.SemDedup.manifest(
           prevSemLists(s, dir).select(col("id").as("vec_id"),
             col("cluster_id")),
           t(s, dir, "embeddings").filter(col("vec_id") % 97 =!= 0),
           "vec_id", "embedding", minCosine = 0.45)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -4976,12 +4880,10 @@ object Queries {
                         target: Boolean): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
     val tag = if (target) "target" else "raw"
-    val path = s"${Tables.scratchDir(s)}/dsir_buckets3_${tag}_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"dsir_buckets3_${tag}_v1/$sfTag") {
       graft.ops.Dsir.trainBucketCounts(t(s, dir, "documents"),
           "doc_id", "text",
           if (target) col("doc_id") % 20 === 0 else col("doc_id") % 20 =!= 0)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -5011,12 +4913,10 @@ object Queries {
     * the next crawl never re-reads or re-hashes old text. */
   private def prevSnapshotHashes(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/corpus_hashes_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"corpus_hashes_old_v1/$sfTag") {
       q145OldSnap(s, dir)
         .select(col("doc_id"),
           TextStats.contentHash(col("text")).as("content_hash"))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -5227,13 +5127,11 @@ object Queries {
       (0 until 64).map(j =>
         size(filter(col("_bk"), v => v === j)).cast("long"))
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val base = s"${Tables.scratchDir(s)}/qf_ngram_v1/$sfTag"
+    val base = s"qf_ngram_v1/$sfTag"
     graft.ops.QualityFilter.trainPerceptronFeatures(
       withBk, "doc_id",
       when(col("lang") === "en", 1L).otherwise(-1L), feats, rounds = 3,
-      store = (label, df) => Tables.servedArtifact(s, s"$base/$label") {
-        df.write.mode("overwrite").parquet(s"$base/$label")
-      })
+      store = (label, df) => Tables.artifact(s, s"$base/$label")(df))
   }
 
   /** Eval-set decontamination with REMOVAL ([[graft.ops.Decontaminate
@@ -5431,10 +5329,8 @@ object Queries {
     * exact-substring dedup incremental. */
   private def prevSpanIndex(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/span_index_old_v2/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"span_index_old_v2/$sfTag") {
       ExactSpans.spanIndex(q145OldSnap(s, dir), "doc_id", "text", SpanMaintL)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -5443,10 +5339,8 @@ object Queries {
     * never re-aggregated from the index. */
   private def prevSpanOcc(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/span_occ_old_v2/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"span_occ_old_v2/$sfTag") {
       ExactSpans.spanOcc(prevSpanIndex(s, dir))
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -5455,11 +5349,9 @@ object Queries {
     * artifact q176 maintains. */
   private def prevSpanManifest(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/span_manifest_old_v2/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"span_manifest_old_v2/$sfTag") {
       ExactSpans.dedupSpansAll(q145OldSnap(s, dir), "doc_id", "text",
           SpanMaintL)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -5475,7 +5367,19 @@ object Queries {
     * delta-sized: no aggregate anywhere in the maintenance touches the
     * corpus-sized index (see the operator's scaladoc). The oracle
     * replays the FULL recompute over the new snapshot, so a hash match
-    * IS the batch≡incremental theorem. */
+    * IS the batch≡incremental theorem.
+    *
+    * The one-task tier keeps the shared [[Tier.LocalBytes]] cap, not
+    * q144's [[ExactSpans.LocalAllBytes]]. Its kernel holds the stored
+    * index as one `(Long, Long, String)` per window, but that index is
+    * also most of the five-input estimate, so heap grows at about 10 B
+    * per estimated byte, not q144's 56. Measured on local[4] with a 4 GB
+    * driver: the kernel's collections hold 10.3 B of heap per estimated
+    * byte on both 10× corpora (44 MB at sf0.01×10's 4.2 MB estimate,
+    * 430 MB at sf0.1×10's 41.6 MB), and the whole run's peak heap after
+    * GC rose 299 MB and 816 MB over its baseline (about 240 MB fixed +
+    * 14 B per byte). At 64 MB that is about 1.1 GB, inside a 4 GB
+    * driver. */
   def q176IncrementalSpanDedup(s: SparkSession, dir: String,
                                maxLocalBytes: Long = Tier.LocalBytes): DataFrame = {
     val newSnap = q145NewSnap(s, dir)
@@ -5592,12 +5496,10 @@ object Queries {
     * snapshots only add/remove ids). */
   private def prevPqCodes(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/pq_codes_old_m4_k8_i2_e6_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"pq_codes_old_m4_k8_i2_e6_v1/$sfTag") {
       graft.ops.Pq.encode(
           quantizedPoints(s, dir).filter(col("id") % 17 =!= 0),
           pqBooks(s, dir), m = 4)
-        .write.mode("overwrite").parquet(path)
     }
   }
 
@@ -5631,10 +5533,7 @@ object Queries {
     * (%19 retention) + PQ parameters + schema version. */
   private[graft] def q179StoredCodes(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/pq_codes_maint_m4_k8_i2_e6_n19_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
-      q179MaintainedCodes(s, dir).write.mode("overwrite").parquet(path)
-    }
+    Tables.artifact(s, s"pq_codes_maint_m4_k8_i2_e6_n19_v1/$sfTag")(q179MaintainedCodes(s, dir))
   }
 
   /** [[q159MaintainedLists]] as a STORED artifact — the coarse half of
@@ -5642,10 +5541,7 @@ object Queries {
     * ([[q179StoredCodes]]) under the same snapshot convention. */
   private[graft] def q179StoredLists(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val path = s"${Tables.scratchDir(s)}/ivf_lists_maint_k8_i2_e6_n19_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
-      q159MaintainedLists(s, dir).write.mode("overwrite").parquet(path)
-    }
+    Tables.artifact(s, s"ivf_lists_maint_k8_i2_e6_n19_v1/$sfTag")(q159MaintainedLists(s, dir))
   }
 
   /** INCREMENTAL IVF-PQ — the production ANN composition served
@@ -5700,10 +5596,8 @@ object Queries {
     * exactly what a 100 TB stream deployment persists between crawls). */
   private def prevCmsCells(s: SparkSession, dir: String): DataFrame = {
     val sfTag = Tables.corpusTag(s, dir, "documents")
-    val path = s"${Tables.scratchDir(s)}/cms_cells_old_v1/$sfTag"
-    Tables.servedArtifact(s, path) {
+    Tables.artifact(s, s"cms_cells_old_v1/$sfTag") {
       Cms.sketch(snapWords(q145OldSnap(s, dir)), "word")
-        .write.mode("overwrite").parquet(path)
     }
   }
 

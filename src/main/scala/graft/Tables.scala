@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -14,8 +19,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Scratch directory for queries with a write side (CSV round-trip, CTAS
-    * sinks): `spark.graft.scratchDir` when set, else a subdir of the JVM
+  /** Scratch directory for every build-once [[artifact]] and for queries
+    * with a write side (CSV round-trip, CTAS sinks):
+    * `spark.graft.scratchDir` when set, else a subdir of the JVM
     * temp dir — never an absolute repo path, so any checkout/driver layout
     * works. */
   def scratchDir(spark: SparkSession): String =
@@ -43,23 +49,29 @@ object Tables {
   /** Path-based build-once write: run `write` only when `path` has no
     * `_SUCCESS` marker (the committer drops it only after a COMPLETE write,
     * so a half-written directory from a killed JVM is rebuilt, not
-    * trusted). Same amortization contract as
-    * [[graft.sources.Bucketed.writeIfAbsent]] for non-catalog parquet
-    * layouts (partitioned dirs): repeated runs over immutable inputs pay
+    * trusted). The gate under [[artifact]] (and the 10× scale corpus's
+    * table files); [[graft.sources.Bucketed.writeIfAbsent]] is the same
+    * contract for catalog tables: repeated runs over immutable inputs pay
     * the write once and every later run only reads. */
   def writePathIfAbsent(spark: SparkSession, path: String)(write: => Unit): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    val p = new Path(path, "_SUCCESS")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) write
   }
 
-  /** Build-once artifact, served through the session catalog cache:
-    * [[writePathIfAbsent]] + `read.parquet`, but the `_SUCCESS` existence
-    * check and the footer/schema read happen once per session instead of
-    * on every query build. Artifact paths are content-salted (corpusTag /
+  /** The build-once artifact: the derived table at `scratchDir/<name>`,
+    * written once by the `frame` build (parquet, partitioned by
+    * `partitionBy` when given) and served from disk thereafter. The
+    * reference builds each derived table with one `CREATE TABLE … AS`;
+    * this is that statement for a content-salted name (corpusTag /
     * parameter versions), so within a session the path's content never
-    * changes — the same immutability that makes [[table]] cacheable. */
-  def servedArtifact(spark: SparkSession, path: String)(write: => Unit): DataFrame =
+    * changes — the same immutability that makes [[table]] cacheable, and
+    * the `_SUCCESS` check and the footer read happen once per session.
+    * The first read goes through [[read]], so serving an artifact already
+    * on disk launches no Spark job. */
+  def artifact(spark: SparkSession, name: String, partitionBy: String*)(
+      frame: => DataFrame): DataFrame = {
+    val path = s"${scratchDir(spark)}/$name"
     memo(spark, s"artifact:$path") {
       // The build's terminal action (the parquet write) completes inside
       // the block, so every multi-consumer frame an operator persisted
@@ -67,10 +79,43 @@ object Tables {
       // CacheScope.scopedPersist) is released here instead of
       // accumulating until a session-wide clearCache (VERDICT r12 #7).
       CacheScope.withCachedFrames {
-        writePathIfAbsent(spark, path)(write)
+        writePathIfAbsent(spark, path) {
+          frame.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(path)
+        }
       }
-      spark.read.parquet(path)
+      read(spark, path)
     }
+  }
+
+  /** Reads the Spark-written parquet table at `path` with the schema Spark
+    * stored in its footer: one footer read on the driver and no Spark job,
+    * where `spark.read.parquet` runs a schema-inference job. Partition
+    * columns (silver `order_year`, q87's `dpp_v1`) still come from
+    * directory discovery, as with `spark.read.parquet`. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val file = dataFile(root.getFileSystem(conf), root)
+      .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val json =
+      try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY)
+      finally reader.close()
+    require(json != null, s"$file has no Spark schema in its footer")
+    spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(path)
+  }
+
+  /** First data file under `dir`, skipping the names Spark's file index
+    * hides (`_SUCCESS`, `_temporary`, `.crc` files). */
+  private def dataFile(fs: FileSystem, dir: Path): Option[Path] = {
+    val (files, dirs) = fs.listStatus(dir).filterNot { s =>
+      val n = s.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }.partition(_.isFile)
+    files.headOption.map(_.getPath)
+      .orElse(dirs.iterator.flatMap(d => dataFile(fs, d.getPath)).nextOption())
+  }
 
   /** Session-scoped resolved-table cache — the library's stand-in for a
     * metastore catalog. `spark.read.parquet` pays driver-side filesystem
@@ -85,7 +130,7 @@ object Tables {
     * multiple sessions never share state. */
   private val resolved =
     new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
-  // NOT computeIfAbsent: a servedArtifact build re-enters memo (table(),
+  // NOT computeIfAbsent: an artifact build re-enters memo (table(),
   // corpusTag-salted sub-artifacts), and a reentrant computeIfAbsent
   // throws "Recursive update" whenever the two keys land in the same
   // bin — a nondeterministic, data-dependent crash. get/putIfAbsent is
@@ -108,19 +153,6 @@ object Tables {
       else spark.read.parquet(s"$dir/$name.parquet")
     }
 
-  /** Production-layout scan: the generator writes each table as ONE
-    * parquet row group, so every scan plans exactly one input split and
-    * a compute-bound narrow map runs on one core — a layout no real
-    * deployment has (at 100 TB a table is thousands of splits, and
-    * compacting small/degenerate files into well-sized ones is the
-    * standard ingest step; see also [[graft.sources.Bucketed]] for the
-    * keyed version of the same amortized-artifact contract). wide()
-    * materializes that realistic layout ONCE per scratch dir and serves
-    * it thereafter: content-identical rows, multi-split files, so
-    * downstream plans stay shuffle-free but scan with the parallelism a
-    * production layout provides. Use for scan-/compute-bound queries
-    * whose results don't depend on row order (maps, aggregations).
-    * Cache the tiny frames you'd broadcast anyway via [[table]]. */
   /** Identity tag for the corpus snapshot behind `dir/name.parquet`:
     * `<basename>_<bytes>_<mtime>` — the same salt [[wide]] uses. Derived
     * artifacts (shingle sets, pair tables, trained models, ground-truth
@@ -135,7 +167,7 @@ object Tables {
     // the-process testdata, and derived-artifact consumers re-ask for it
     // on every query build.
     tags.computeIfAbsent(s"$dir/$name", _ => {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+      val p = new Path(s"$dir/$name.parquet")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val st = fs.getFileStatus(p)
       val bytes =
@@ -157,32 +189,36 @@ object Tables {
       s"${dp}_${bytes}_${st.getModificationTime}"
     })
 
+  /** Production-layout scan: the generator writes each table as ONE
+    * parquet row group, so every scan plans exactly one input split and
+    * a compute-bound narrow map runs on one core — a layout no real
+    * deployment has (at 100 TB a table is thousands of splits, and
+    * compacting small/degenerate files into well-sized ones is the
+    * standard ingest step; see also [[graft.sources.Bucketed]] for the
+    * keyed version of the same amortized-artifact contract). wide()
+    * materializes that realistic layout ONCE per scratch dir and serves
+    * it thereafter: content-identical rows, multi-split files, so
+    * downstream plans stay shuffle-free but scan with the parallelism a
+    * production layout provides. Use for scan-/compute-bound queries
+    * whose results don't depend on row order (maps, aggregations).
+    * Cache the tiny frames you'd broadcast anyway via [[table]]. */
   def wide(spark: SparkSession, dir: String, name: String): DataFrame =
-    memo(spark, s"wide:$dir/$name")(wideUncached(spark, dir, name))
-
-  private def wideUncached(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val src = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Already a multi-split layout (any real deployment): serve the source.
-    val srcFiles = fs.listStatus(src) match {
-      case null => Array.empty[org.apache.hadoop.fs.FileStatus]
-      case xs => xs.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    memo(spark, s"wide:$dir/$name") {
+      val src = new Path(s"$dir/$name.parquet")
+      val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(src)
+      // Already a multi-split layout (any real deployment): serve the source.
+      val srcFiles = Option(fs.listStatus(src)).getOrElse(Array.empty[FileStatus])
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      if (!st.isFile && srcFiles.length >= 8) table(spark, dir, name)
+      // Key the artifact by the source's size+mtime so a regenerated input
+      // (same path, new content) rebuilds instead of silently serving the
+      // old copy — the staleness trap Tables-level artifacts must not have.
+      else artifact(spark, s"wide_v1/${dir.replaceAll(".*/", "")}/" +
+          s"${name}_${st.getLen}_${st.getModificationTime}.parquet") {
+        table(spark, dir, name).repartition(16)
+      }
     }
-    if (!fs.getFileStatus(src).isFile && srcFiles.length >= 8)
-      return table(spark, dir, name)
-    // Key the artifact by the source's size+mtime so a regenerated input
-    // (same path, new content) rebuilds instead of silently serving the
-    // old copy — the staleness trap Tables-level artifacts must not have.
-    val st = fs.getFileStatus(src)
-    val tag = s"${st.getLen}_${st.getModificationTime}"
-    val sfTag = dir.replaceAll(".*/", "")
-    val path = s"${scratchDir(spark)}/wide_v1/$sfTag/${name}_$tag.parquet"
-    writePathIfAbsent(spark, path) {
-      table(spark, dir, name).repartition(16)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-    }
-    spark.read.parquet(path)
-  }
 
   /** Normalize `events.ts` to Spark's native TimestampType regardless of
     * how the generator wrote it: TIMESTAMP(NANOS) parquet (Spark's reader

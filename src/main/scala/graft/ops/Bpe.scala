@@ -412,7 +412,7 @@ object Bpe {
     // so an unmarked round-r frame would be recomputed once per
     // downstream consumer when the caller finally acts) — so the
     // rounds+1 frames are registered via CacheScope.scopedPersist:
-    // inside a withCachedFrames block (every servedArtifact build) they
+    // inside a withCachedFrames block (every artifact build) they
     // are released when the block's action completes; outside one the
     // session clearCache contract applies (Bench/Verify). Storage is
     // vocabulary-sized (not corpus-sized) per frame, and
@@ -473,7 +473,7 @@ object Bpe {
     * inside train (the checkpoints are eager) — callers get a cheap
     * lazy result (a union of materialized 1-row leaves plus one
     * checkpointed vocab scan), which is why the big-budget trainer
-    * belongs behind a [[graft.Tables.servedArtifact]] build (q147
+    * belongs behind a [[graft.Tables.artifact]] build (q147
     * serves it) rather than on a per-query hot path. */
   private[graft] def trainIterative(wf: DataFrame, rounds: Int,
                              topWords: Int): DataFrame = {
@@ -513,7 +513,7 @@ object Bpe {
     }
     // The result's backing blocks (final vocab + the 1-row tops) are
     // freed by the ambient scope on exit when one is active (the
-    // servedArtifact shape), else by the session clearCache contract.
+    // artifact shape), else by the session clearCache contract.
     graft.CacheScope.scopedCheckpoint(vocab)
     merges.foreach(graft.CacheScope.scopedCheckpoint)
     report(merges, vocab, topWords)

@@ -104,7 +104,7 @@ object Decontaminate {
     * pipelines that store the eval suite's window set as a build-once
     * artifact (the eval suite is a release constant, so extracting and
     * distinct-ing its windows on every decontamination call is exactly
-    * the recomputation [[graft.Tables.servedArtifact]] amortizes
+    * the recomputation [[graft.Tables.artifact]] amortizes
     * elsewhere; q143/q145 serve it stored, q137 times the live
     * extraction). `spanLen` must match the keys' window length — keys
     * of a different token count simply never match. Output contract

@@ -382,7 +382,7 @@ object Dedup {
           .map(i => col(s"mh_$i")): _*)
       struct(lit(b).as("band_idx"), key.as("band_key"))
     }
-    // Persisted (scope-released in servedArtifact builds): the bucket
+    // Persisted (scope-released in artifact builds): the bucket
     // frame feeds the occupancy aggregate AND both sides of the
     // candidate self-join.
     val buckets = graft.CacheScope.scopedPersist(index

@@ -958,7 +958,7 @@ object ExactSpans {
     val tok = docs.select(col(idCol).cast("long").as("doc_id"),
       TextStats.words(lower(col(textCol))).as("ws"))
     // Persisted: the chunk table feeds window extraction AND the final
-    // reassembly join (scope-released in servedArtifact builds).
+    // reassembly join (scope-released in artifact builds).
     val chunks = graft.CacheScope.scopedPersist(tok
       .select(col("doc_id"), size(col("ws")).cast("long").as("n"),
         explode(sequence(lit(0L), size(col("ws")).cast("long") - 1,

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.Tables
 import graft.ops.{DateDim, Star}
 
 /** Gold layer — star schema + scoring (`aact_gold_layer.sql`): dims with
@@ -15,12 +16,12 @@ import graft.ops.{DateDim, Star}
   * it was written with (no inference job) and asserted on that read-back,
   * and the fact and bridge join the dims' read-backs, as the reference
   * joins its gold dims (`aact_gold_layer.sql:182-222`). Silver is read
-  * through [[Layer.read]].
+  * through [[Tables.read]].
   */
 object Gold {
 
   def run(spark: SparkSession, outDir: String): Unit = {
-    val s = (n: String) => Layer.read(spark, s"$outDir/silver/$n")
+    val s = (n: String) => Tables.read(spark, s"$outDir/silver/$n")
     val w = (n: String) => s"$outDir/gold/$n"
 
     /** Table `name` as it landed, S8-asserted unique on `key`. */

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.ops.{Categorize, Cleaning, Duration}
 
 /** Silver layer — cleanse/conform/enrich (`aact_silver_layer.sql:13-408`):
@@ -10,7 +11,7 @@ import graft.ops.{Categorize, Cleaning, Duration}
   * narrow, shuffle-free map stage (zero joins except broadcast mapping
   * enrichment), exactly the reference's one-CTE-per-entity CTAS shape.
   *
-  * [[run]] reads bronze through [[Layer.read]] (footer schema, no
+  * [[run]] reads bronze through [[Tables.read]] (footer schema, no
   * inference job) and writes its four entities as one concurrent
   * [[Layer.wave]].
   */
@@ -237,7 +238,7 @@ object Silver {
         default = "Other").as("category"))
 
   def run(spark: SparkSession, outDir: String): Unit = {
-    val b = (n: String) => Layer.read(spark, s"$outDir/bronze/$n")
+    val b = (n: String) => Tables.read(spark, s"$outDir/bronze/$n")
     val w = (n: String) => s"$outDir/silver/$n"
     Layer.wave(
       // orders partitioned by year: queries with an order_year predicate

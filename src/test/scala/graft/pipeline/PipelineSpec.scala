@@ -2,15 +2,13 @@ package graft.pipeline
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SaveMode
 import org.scalatest.BeforeAndAfterAll
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 /** End-to-end medallion build at sf0.001 — the composed bronze→silver→gold
   * dataflow with S8 uniqueness assertions firing inside Gold.run. Built
@@ -54,43 +52,17 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     dd.count() shouldBe (365 + 366 + 365 + 365).toLong // 1995..1998
   }
 
-  /** Spark jobs started while `body` runs. The listener bus delivers
-    * events in order, so once the listener has seen a sentinel job start
-    * it has seen every job that started before it. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val starts = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.put(Option(e.properties).flatMap(p => Option(p.getProperty("sentinel")))
-          .getOrElse(""))
-    }
-    def sentinel(tag: String): Seq[String] = {
-      sc.setLocalProperty("sentinel", tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("sentinel", null)
-      Iterator.continually(starts.poll(60, TimeUnit.SECONDS))
-        .map { t => assert(t != null, s"sentinel $tag never started"); t }
-        .takeWhile(_ != tag).toSeq
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel("before")
-      body
-      sentinel("after").size
-    } finally sc.removeSparkListener(listener)
-  }
-
-  test("Layer.read launches no Spark job and returns the written schema") {
+  test("Tables.read launches no Spark job and returns the written schema") {
     for (table <- Seq("bronze/orders", "silver/orders")) {
       val path = s"$out/$table"
       var schema: org.apache.spark.sql.types.StructType = null
-      jobsDuring { schema = Layer.read(spark, path).schema } shouldBe 0
+      jobsDuring { schema = Tables.read(spark, path).schema } shouldBe 0
       schema shouldBe spark.read.parquet(path).schema
     }
     // the footer keeps the written type, not Schemas.all's `timestamp`
-    Layer.read(spark, s"$out/bronze/orders").schema("o_orderdate").dataType.typeName shouldBe
+    Tables.read(spark, s"$out/bronze/orders").schema("o_orderdate").dataType.typeName shouldBe
       "timestamp_ntz"
-    Layer.read(spark, s"$out/silver/orders").columns should contain("order_year")
+    Tables.read(spark, s"$out/silver/orders").columns should contain("order_year")
   }
 
   test("Layer.wave waits for every write, then rethrows the first failure") {
