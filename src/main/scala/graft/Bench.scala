@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import SparkEntry.Query
 
 /** The weak-cell decision rules, extracted so the q153-profile drill is a
   * deterministic unit test (BenchWeakSpec) instead of an unmanufacturable
@@ -94,284 +95,8 @@ private[graft] object WeakRule {
   * tell measurement artifacts from real regressions without re-running.
   */
 object Bench {
-  type Query = (SparkSession, String) => DataFrame
   /** One measurement or merged cell: (seconds, stall-flagged, errored). */
   type Sample = (Double, Boolean, Boolean)
-
-  /** The 10x scale cells in run order, each with its declared growth
-    * bound — the REGRESSION GATE: any breach turns the run red (rc 3)
-    * after all JSON lines print. Two regimes, calibrated over
-    * consecutive full runs (which showed up to 2x run-to-run variance on
-    * multi-second sf1 join cells from shared-box/JVM state — the gate
-    * must catch STRUCTURE, not noise): fixed-cost-amortizing plans
-    * (dedup, clustering, BPE, curation — scheduling/codegen/model costs
-    * dominate their sf0.1 cells; observed 0.9-3.0x) get tight 4-6x
-    * bounds, while plans whose work is LINEAR in the corpus by design
-    * (scan-bound codecs/text, the DF-capped shingle join whose pair
-    * count grows with copies; observed 4-9x) get bounds just above the
-    * data growth (12-15x) so only a superlinear shape — an uncapped
-    * shingle join reads >>15x — trips them. Calibration anchor for the
-    * tight regime: the retired seed-stride IVF read 5.4x (and climbing
-    * with corpus size) where the fixed formulation reads 1.5-3.0x —
-    * q59's bound of 5 turns exactly that regression red. */
-  private[graft] val ScaleCells: Seq[(String, Double)] = Seq(
-    "q18_exact_dedup"           -> 5.0,
-    "q21_ngram_jaccard"         -> 15.0,
-    "q40_neardup_clusters"      -> 4.0,
-    "q59_embedding_neardup_ivf" -> 5.0,
-    // q101's base is its own smallest cell (0.1-0.5 s across runs)
-    // and read 5.5x in one loaded window — bound sits above that
-    // noise ceiling; the k-means anchor for real regressions is
-    // the broadcast-assignment plan shape asserted in PlanSpec
-    "q101_kmeans_cluster"       -> 8.0,
-    // ANN serving: coarse route + compressed ADC scan at 10x corpus
-    // (the candidate volume is list-occupancy-bounded, so growth
-    // should track the corpus, not its square)
-    "q117_ivfpq_topk"           -> 6.0,
-    // the headline end-to-end curation pipeline (quality gate +
-    // exact dedup + near-dup survivor manifest off the served pair
-    // table) and the per-source quota window at 10x
-    "q109_curation_pipeline"    -> 4.0,
-    "q124_source_caps"          -> 5.0,
-    // BPE training: the word-count pass is the only corpus-sized
-    // stage; the merge rounds are vocabulary-sized, so total time
-    // should grow far below 10x
-    "q129_bpe_merges"           -> 4.0,
-    // the 32-merge production budget: a served artifact read (the
-    // iterative trainer runs once at build time) — the cell must
-    // stay flat at 10x like every artifact-serving plan
-    "q147_bpe_train32"          -> 4.0,
-    // the perceptron trainer: per-round cost is one map-side-combined
-    // aggregate over the checkpointed feature table — fixed job
-    // overhead dominates small cells and must amortize at 10x
-    "q131_quality_perceptron"   -> 4.0,
-    // scan-bound families: codec + text + feature-extraction
-    // throughput should grow ~linearly in data and amortize fixed
-    // cost (growth << 10x)
-    "q112_png_decode"           -> 10.0,
-    "q20_text_stats"            -> 15.0,
-    // the compressed-video decode (JPEG per frame) — the heaviest
-    // per-byte codec work in the suite; must stay scan-bound
-    "q130_mjpeg_frames"         -> 12.0,
-    // exact-span dedup: one window row per token + equi-join —
-    // linear by construction; a superlinear reading means the
-    // occurrence join degenerated
-    "q132_span_dedup"           -> 15.0,
-    // its round-11 siblings: eval-overlap removal (same window
-    // pass + broadcast probe) and the three-length mask union
-    // (3x the linear pass — growth must still track the corpus)
-    "q137_decontaminate"        -> 15.0,
-    "q139_multi_span_dedup"     -> 15.0,
-    // the all-lengths (suffix-array-semantics) pass: ONE window
-    // explode + one keyed groupBy like q132 — linear by
-    // construction; superlinear growth means the occurrence join
-    // or the coverage union degenerated
-    "q144_all_span_dedup"       -> 15.0,
-    // the chunked formulation: same linear window pass through
-    // chunk-local rows plus the reassembly aggregation — growth
-    // must track q132's
-    "q149_chunked_span_dedup"   -> 15.0,
-    // the 68-feature trainer: featurization is artifact-built in
-    // sample 1; the per-round aggregate carries 68 partial sums
-    // over 10x rows and must amortize like q131's k=4
-    "q138_quality_ngram_perceptron" -> 6.0,
-    // the flagship end-to-end corpus build: every stage is an
-    // amortizing family already gated above (LM model + decon window
-    // set artifact-/broadcast-bounded, manifest joins keyed on
-    // doc_id). r19: the one-task build tier serves at BOTH scales (the
-    // guard admits the 10x documents table), so the cell moved from
-    // the amortizing regime to single-task LINEAR work that tracks
-    // data growth with no multi-core amortization — the same
-    // reclassification q145/q148 got in r15 when their tiers landed;
-    // only a superlinear shape should trip it
-    "q143_corpus_build"         -> 15.0,
-    // the incremental rebuild: at sf0.1 its machinery (delta diff,
-    // hash-table canon recompute, reuse joins) costs more than the
-    // toy-scale full rebuild it replaces — only the delta's text is
-    // re-read at 10x. Round 15: the one-task tiers moved this cell
-    // and q148 from the amortizing regime (stage-floor-dominated) to
-    // LINEAR single-task work (hash+sign/decon/LM verify scale with
-    // the corpus; q148 observed 5.2-8.1x and q145 3.0-5.2x at 10x
-    // across runs as the fixed artifact-read floor amortizes) — the
-    // standard linear-regime bound: only a superlinear shape trips it
-    "q145_incremental_corpus"   -> 12.0,
-    // the incremental MinHash index: delta-only re-signing +
-    // maintained-index banding — the reused majority is an artifact
-    // read (round-15 reclassification as for q145)
-    "q148_incremental_minhash"  -> 12.0,
-    // cohesion diagnostics over the served pair/cluster artifacts:
-    // the 10x corpus is 10 disjoint shingle-spaces (per-copy word
-    // suffixes), so pairs/triangles grow exactly linearly and the
-    // degree-oriented wedge join must track them
-    "q150_dup_cohesion"         -> 6.0,
-    // systematic sampling: one range exchange over 10x rows plus
-    // fixed broadcast machinery — linear, amortizing
-    "q151_systematic_sample"    -> 6.0,
-    // bipartite projection: the fan guard makes join output linear
-    // in the incidence (≤ C(maxFan,2)/maxFan · rows), so the pair
-    // count grows with the data and the cell sits in the linear
-    // regime — a superlinear reading means the guard stopped
-    // bounding the self-join
-    "q152_copurchase_project"   -> 15.0,
-    // incremental cluster maintenance: delta diff + affected-cluster
-    // closure + recompute on the delta subgraph — at 10x the reused
-    // majority is a manifest read, so growth must stay far below a
-    // full re-cluster's
-    "q153_incremental_clusters" -> 6.0,
-    // DSIR scoring: one explode pass + two fixed-size broadcast
-    // model joins + per-doc agg + salted top-N — linear in the
-    // corpus by design; superlinear growth means a model join
-    // stopped broadcasting or the top-N salt stopped spreading
-    "q154_dsir_select"          -> 15.0,
-    // incremental LM maintenance: delta-only bigram extraction +
-    // one model-sized combine; the combine grows with the corpus's
-    // distinct bigrams (linear in this synthetic corpus's copies), so
-    // the cell sits in the linear regime, not the amortizing one
-    "q155_incremental_lm"       -> 15.0,
-    // CMS heavy hitters: the sketch build is one explode + a
-    // combine into <=16384 cells — linear in the token stream by
-    // construction; superlinear growth means the estimate join
-    // stopped broadcasting
-    "q157_cms_heavy_hitters"    -> 15.0,
-    // stratified sampling: q151's machinery per key — one range
-    // exchange + per-key agg join, fixed broadcast machinery
-    "q158_stratified_systematic" -> 6.0,
-    // incremental IVF: presence joins + delta-only assignment +
-    // a FIXED standing query panel probing the maintained lists —
-    // maintenance is delta-sized, serving is linear in list size
-    // under the frozen k-centroid model (candidates/query ∝ N),
-    // so the cell sits in the LINEAR regime; the round-13 gate
-    // caught the earlier corpus-growing panel reading 6.3×
-    // (quadratic drill shape, not an algorithm regression)
-    "q159_incremental_ivf"      -> 15.0,
-    // incremental DSIR models: delta-only feature extraction +
-    // one fixed-size (≤4096-bucket) combine per model
-    "q160_incremental_dsir"     -> 6.0,
-    // weighted percentile: one range exchange + per-key agg join,
-    // same amortizing machinery as q158
-    "q161_weighted_median_len"  -> 6.0,
-    // the suffix-artifact REBUILD policy cell (full live
-    // construction on a fixed corpus slice): positions grow with
-    // the data, round count is pinned by document length, but ~40
-    // fixed-latency stages dominate the sf0.1 cell so amortization
-    // pulls growth DOWN while data pushes it up — the linear-regime
-    // bound catches a superlinear rank blowup
-    "q162_suffix_rebuild"       -> 12.0,
-    // deep-budget BPE (512 merges, one-task trainer tier):
-    // artifact-serving cell plus the tiny check-row echo —
-    // amortizing regime (the training runs ONCE at build, off the
-    // timed path), must stay flat at 10x like q147
-    "q163_bpe_train512"         -> 4.0,
-    // production-depth BPE (8192 merges): same artifact-serving
-    // shape; the capped unit table keeps trainer input fixed at
-    // any corpus scale, so the cell must stay flat too
-    "q169_bpe_train8k"          -> 4.0,
-    // as-of join: one range exchange + partition-local windows +
-    // a (#keys+#partitions)-row carry — linear regime (the ranged
-    // union is 10x rows at 10x data); superlinear growth means the
-    // carry frame or a per-key window went data-sized
-    "q164_asof_join"            -> 12.0,
-    // forward+tolerance flavor: same union+window machinery on
-    // the error/view split — must track q164's linearity
-    "q168_asof_forward_tolerance" -> 12.0,
-    // BM25 retrieval: postings build + stats + query-join +
-    // salted top-k — scan-bound linear in the token stream
-    "q165_bm25_topk"            -> 15.0,
-    // whole-query scoring over the same stored index: one
-    // broadcast-probe pass + per-(query, doc) sum — must stay
-    // index-serving-shaped like q165
-    "q167_bm25_query_score"     -> 15.0,
-    // incremental SemDeDup manifest: one-task tier over the
-    // stored lists/manifest/points + frozen occupancy-16 model —
-    // delta-sized assignment + affected-cluster dominance; the
-    // single-task scan grows with the corpus (linear regime: the
-    // occupancy-16 model keeps the dominance join linear by
-    // construction)
-    "q174_incremental_semdedup" -> 12.0,
-    // tokenizer-vocab maintenance: hash pass + delta-only window
-    // extraction + model-sized combine + top-2048 cap — the
-    // q155 shape over 12-gram units, linear in the corpus
-    "q173_vocab_maintain"       -> 15.0,
-    // incremental BM25 index maintenance + serving: one-task tier
-    // over (stored postings, stored hashes, new snapshot) — the
-    // hash+re-tokenize work scales with the corpus like q148's
-    // while the fixed artifact-read floor amortizes, so the
-    // linear-regime bound catches only a superlinear shape
-    "q171_incremental_bm25"     -> 12.0,
-    // hybrid RRF: the q167 probe + the IVF-served semantic leg
-    // (4 probes vs broadcast centroids + stored-list candidate
-    // join, list-occupancy-bounded) + tiny-list fusion — linear
-    // regime (candidates/query ∝ N under the frozen quantizer)
-    "q170_hybrid_rrf"           -> 15.0,
-    // interval lookback join: 2-bucket equi-join probes per left
-    // row — linear in events; superlinear means the binning
-    // degenerated into a per-key cross
-    "q166_lookback_join"        -> 12.0,
-    // chained LM maintenance: three hash-diff passes over the
-    // corpus + delta-sized bigram legs + model-sized combines —
-    // q155's linear regime, three-fold
-    "q175_stream_lm_chain"      -> 15.0,
-    // incremental span dedup: stored-index scans + delta-restricted
-    // window aggregates — q148's linear regime (the index grows
-    // with the corpus; the aggregates stay delta-keyed). The
-    // one-task tier serves at BOTH scales (guard admits the 10x
-    // artifacts), so the cell is single-task LINEAR work with no
-    // multi-core amortization — measured 8.99x and 10.65x across
-    // closing runs; the span family's bound applies, and only a
-    // superlinear closure blowup should trip it
-    "q176_incremental_span_dedup" -> 15.0,
-    // IVF-PQ from maintained lists + codes: q117/q159's serving
-    // regime (fixed panel, list-occupancy-bounded candidates)
-    "q179_incremental_ivfpq"    -> 15.0,
-    // maintained CMS cells + fixed probe panel: the hash-diff +
-    // delta tokenization is linear in the corpus (q155's regime);
-    // the sketch itself is cell-bounded at any scale
-    "q180_incremental_cms"      -> 15.0,
-    // chained CMS maintenance: three q180-shaped folds in one
-    // plan — q175's linear regime at the sketch layer
-    "q181_stream_cms_chain"     -> 15.0,
-    // chained DSIR maintenance: three fused split combines —
-    // q160's linear regime, three-fold
-    "q182_stream_dsir_chain"    -> 15.0,
-    // chained BM25-df / tokenizer-unit maintenance: three
-    // AdditiveCounts folds over delta-restricted term/window legs
-    // — q175's linear regime at the index-df and tokenizer layers
-    "q183_stream_bm25df_chain"  -> 15.0,
-    "q184_stream_bpe_units_chain" -> 15.0,
-    "q122_audio_frames"         -> 15.0)
-
-  /** A tiered cell forced onto its distributed chain (`maxLocalBytes = 0`). */
-  private def forced(q: (SparkSession, String, Long) => DataFrame): Query = q(_, _, 0L)
-
-  /** The forced-distributed timing lane: the one-task tiers serve the
-    * registered cells at both measured scales, so the DISTRIBUTED
-    * chains — the actual 100 TB shapes — were exercised only by
-    * spec/plan pins at toy sizes. Each is timed once per run at both
-    * scale factors. Observational (no gate): at serving scale these
-    * chains are scheduler-latency-bound by design — that is why the
-    * tiers exist — so the value is the recorded floor table and its
-    * round-over-round drift, not a threshold. */
-  private[graft] val DistCells: Seq[(String, Query)] = Seq(
-    "q52_ann_ivf_topk" -> forced(Queries.q52AnnIvfTopk),
-    "q103_trained_ivf_topk" -> forced(Queries.q103TrainedIvfTopk),
-    "q116_pq_topk" -> forced(Queries.q116PqTopk),
-    "q117_ivfpq_topk" -> forced(Queries.q117IvfpqTopk),
-    "q143_corpus_build" -> forced(Queries.q143CorpusBuild),
-    "q144_all_span_dedup" -> forced(Queries.q144AllSpanDedup),
-    "q145_incremental_corpus" -> forced(Queries.q145IncrementalCorpusBuild),
-    "q148_incremental_minhash" -> forced(Queries.q148IncrementalMinhash),
-    "q170_hybrid_rrf" -> forced(Queries.q170HybridRrf),
-    "q171_incremental_bm25" -> forced(Queries.q171IncrementalBm25),
-    "q173_vocab_maintain" -> forced(Queries.q173VocabMaintain),
-    "q174_incremental_semdedup" -> forced(Queries.q174IncrementalSemdedup),
-    "q175_stream_lm_chain" -> forced(Queries.q175StreamLmChain),
-    "q176_incremental_span_dedup" -> forced(Queries.q176IncrementalSpanDedup),
-    "q179_incremental_ivfpq" -> forced(Queries.q179IncrementalIvfpq),
-    "q180_incremental_cms" -> forced(Queries.q180IncrementalCms),
-    "q181_stream_cms_chain" -> forced(Queries.q181StreamCmsChain),
-    "q182_stream_dsir_chain" -> forced(Queries.q182StreamDsirChain),
-    "q183_stream_bm25df_chain" -> forced(Queries.q183StreamBm25DfChain),
-    "q184_stream_bpe_units_chain" -> forced(Queries.q184StreamBpeUnitsChain))
 
   /** Drill/iteration hook: a comma list in `key` restricts the cells run.
     * NEVER set on recorded runs — totals are only comparable full-sweep. */
@@ -410,16 +135,11 @@ object Bench {
     } catch { case e: Throwable => System.err.println(s"[bench] write $path: $e") }
 
   def main(args: Array[String]): Unit = {
-    // Fail closed: a renamed cell must never silently drop out of the
-    // 10x growth gate or the forced-distributed lane.
-    val unregistered = (ScaleCells.map(_._1) ++ DistCells.map(_._1))
-      .filterNot(SparkEntry.queries.contains)
-    require(unregistered.isEmpty,
-      s"Bench tables name unregistered queries: ${unregistered.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
     val spark = GraftSession.build(8)
     import org.apache.spark.sql.functions.sum
+    val queries = SparkEntry.queries
 
     // Canary: fixed in-memory aggregate — no parquet, no cache interaction;
     // ~100 ms healthy. Threshold is generous (5x warmed median, floor 2 s)
@@ -479,13 +199,13 @@ object Bench {
       (dt, flagged, err)
     }
 
-    val names = SparkEntry.queries.keys.toSeq.filter(envFilter("SPARK_GRAFT_ONLY")).sorted
-    val pass1 = names.map { n => n -> measure(n, SparkEntry.queries(n)) }.toMap
+    val names = queries.keys.toSeq.filter(envFilter("SPARK_GRAFT_ONLY")).sorted
+    val pass1 = names.map { n => n -> measure(n, queries(n)) }.toMap
     // Second full pass, reverse order: a stall window that covered
     // q40..q44 in pass 1 would, re-run forward, plausibly cover them
     // again; reversed, the slow tail runs first while the window (if any)
     // sits elsewhere.
-    val pass2 = names.reverse.map { n => n -> measure(n, SparkEntry.queries(n)) }.toMap
+    val pass2 = names.reverse.map { n => n -> measure(n, queries(n)) }.toMap
 
     val merged: Map[String, Sample] = names.map { n =>
       n -> mergeSamples(Seq(pass1.get(n), pass2.get(n)).flatten)
@@ -505,7 +225,7 @@ object Bench {
         math.max(pass1(n)._1, pass2(n)._1) >
           2.0 * math.min(pass1(n)._1, pass2(n)._1) && t > 0.4
       if ((t > 3.0 && bothFlagged) || disagree)
-        n -> mergeSamples(Seq(cur, measure(n, SparkEntry.queries(n))))
+        n -> mergeSamples(Seq(cur, measure(n, queries(n))))
       else n -> cur
     }.toMap
 
@@ -560,7 +280,7 @@ object Bench {
           s"[bench] weak candidate $n (${finalResults(n)._1} s) — " +
             "re-measuring (min of 3) to confirm")
         n -> mergeSamples(
-          finalResults(n) +: (1 to 3).map(_ => measure(n, SparkEntry.queries(n))))
+          finalResults(n) +: (1 to 3).map(_ => measure(n, queries(n))))
       }
 
     val qs = names.map { k => s"\"" + k + "\":" + results(k)._1 }
@@ -625,7 +345,7 @@ object Bench {
     // while a genuinely slow cell just reconfirms. The min is kept
     // either way — a stall never makes a query faster).
     def confirmWeakFloor(n: String): Option[Double] = {
-      val first = (1 to 3).map(_ => measure(n, SparkEntry.queries(n)))
+      val first = (1 to 3).map(_ => measure(n, queries(n)))
       val (c, cFlag, cErr) = mergeSamples(first)
       if (!WeakRule.isWeak(c, cFlag, cErr, baselines(n))) None
       else {
@@ -633,7 +353,7 @@ object Bench {
           s"[bench] $n min-of-3 floor $c s is over both thresholds — " +
             "buying 2 more samples before publishing")
         val (c5, f5, e5) =
-          mergeSamples(first ++ (1 to 2).map(_ => measure(n, SparkEntry.queries(n))))
+          mergeSamples(first ++ (1 to 2).map(_ => measure(n, queries(n))))
         if (WeakRule.isWeak(c5, f5, e5, baselines(n))) Some(c5) else None
       }
     }
@@ -791,40 +511,31 @@ object Bench {
     // min-of-2) — noise the growth division amplifies. Three samples
     // each way and a same-config base make the published factor
     // reproducible.
-    def minOf3(n: String, dir: String): Sample =
-      mergeSamples(
-        (1 to 3).map(_ => measure(n, (sp, _) => SparkEntry.queries(n)(sp, dir))))
+    def minOf3(c: Cell, dir: String): Sample =
+      mergeSamples((1 to 3).map(_ => measure(c.name, (sp, _) => c.build(sp, dir))))
     // Override for drills: SPARK_GRAFT_GROWTH_BOUND replaces ALL
     // bounds (e.g. =0.1 forces a red run to prove the gate fires).
-    val boundFor: String => Double =
+    val boundFor: Cell => Double =
       sys.env.get("SPARK_GRAFT_GROWTH_BOUND").map(_.toDouble) match {
         case Some(o) => _ => o
-        case None    => ScaleCells.toMap
+        case None    => _.bound.get
       }
     // Noise guard: a bound verdict needs a base the clock can resolve;
     // cells faster than this at sf0.1 get measured + published but
     // never gate (their growth factor divides by scheduler jitter).
     val minGateBase = 0.05
-    val firstPass = ScaleCells.map(_._1).filter(scaleFilter).map { n =>
-      val (base, bFlag, bErr) = minOf3(n, sfDir)
-      val (t, tFlag, tErr) = minOf3(n, sf1Dir)
-      (n, base, bFlag, t, tFlag, bErr || tErr)
-    }
-    // ABSOLUTE sf1 wall-time caps backing the widest ratio bands
-    // (ADVICE r19): q143's band moved 6 -> 15 when its one-task tier
-    // reclassified the cell as single-task LINEAR work, so a 7-14x
-    // superlinear regression would now pass the ratio gate. The
-    // recorded 10x floor is 2.8 s (r19, reconfirmed by the r20
-    // forced-tier lane below); 8 s ≈ 3x that floor tolerates box
-    // noise (the confirm-before-red re-measure absorbs transients)
-    // while a genuinely superlinear build (>20 s at 10x) goes red.
-    val absoluteCaps: Map[String, Double] = Map(
-      "q143_corpus_build" -> 8.0)
-    def breaches(n: String, base: Double, bFlag: Boolean,
+    val firstPass = SparkEntry.cells
+      .filter(c => c.bound.isDefined && scaleFilter(c.name)).map { c =>
+        val (base, bFlag, bErr) = minOf3(c, sfDir)
+        val (t, tFlag, tErr) = minOf3(c, sf1Dir)
+        (c, base, bFlag, t, tFlag, bErr || tErr)
+      }
+    // A cell's absolute sf1 wall-time cap (`Cell.capSec`) backs its
+    // ratio band.
+    def breaches(c: Cell, base: Double, bFlag: Boolean,
                  t: Double, tFlag: Boolean): Boolean =
       !bFlag && !tFlag &&
-        ((base >= minGateBase && t / base > boundFor(n)) ||
-          absoluteCaps.get(n).exists(t > _))
+        ((base >= minGateBase && t / base > boundFor(c)) || c.capSec.exists(t > _))
     // UNMEASURED = RED: a cell whose samples all THREW on either side,
     // or whose sf1 time is below the clock floor while its base is
     // measurable (a real query on 10x data is never faster than the
@@ -844,23 +555,23 @@ object Bench {
     // REPRODUCED breach goes red; the published cell is the better
     // (second) measurement so the JSON reflects what was gated on.
     val measured = firstPass.map {
-      case (n, base, bFlag, t, tFlag, err)
-          if breaches(n, base, bFlag, t, tFlag) || unmeasured(base, t, err) =>
+      case (c, base, bFlag, t, tFlag, err)
+          if breaches(c, base, bFlag, t, tFlag) || unmeasured(base, t, err) =>
         System.err.println(
-          s"[bench] growth gate suspect on $n " +
+          s"[bench] growth gate suspect on ${c.name} " +
             s"(${if (unmeasured(base, t, err)) "unmeasured" else s"${t / base}x"}) " +
             "— re-measuring to confirm")
         System.gc()
-        val (b2, bf2, be2) = minOf3(n, sfDir)
-        val (t2, tf2, te2) = minOf3(n, sf1Dir)
-        (n, b2, bf2, t2, tf2, be2 || te2)
-      case c => c
+        val (b2, bf2, be2) = minOf3(c, sfDir)
+        val (t2, tf2, te2) = minOf3(c, sf1Dir)
+        (c, b2, bf2, t2, tf2, be2 || te2)
+      case m => m
     }
     val violations = measured.collect {
-      case (n, base, bFlag, t, tFlag, err)
-          if breaches(n, base, bFlag, t, tFlag) || unmeasured(base, t, err) => n
+      case (c, base, bFlag, t, tFlag, err)
+          if breaches(c, base, bFlag, t, tFlag) || unmeasured(base, t, err) => c.name
     }
-    val cells = measured.map { case (n, base, bFlag, t, tFlag, err) =>
+    val cells = measured.map { case (c, base, bFlag, t, tFlag, err) =>
       // A missing/zero base would interpolate NaN/Infinity — not valid
       // JSON; emit null so a reader sees "no growth factor" instead of
       // a JSON parser rejecting the whole line. An errored
@@ -868,10 +579,10 @@ object Bench {
       val baseJson = if (base.isNaN || base <= 0.0) "null" else base.toString
       val growthJson =
         if (base.isNaN || base <= 0.0 || err) "null" else (t / base).toString
-      s""""$n":{"sec":$t,"sf01_sec":$baseJson,"growth_x":$growthJson,"bound_x":${boundFor(n)},"stall_suspect":${bFlag || tFlag},"err":$err}"""
+      s""""${c.name}":{"sec":$t,"sf01_sec":$baseJson,"growth_x":$growthJson,"bound_x":${boundFor(c)},"stall_suspect":${bFlag || tFlag},"err":$err}"""
     }
-    val gateBases = measured.map { case (n, base, bFlag, _, _, err) =>
-      n -> (base, bFlag, err)
+    val gateBases = measured.map { case (c, base, bFlag, _, _, err) =>
+      c.name -> (base, bFlag, err)
     }.toMap
     // ---- IO evidence for the incremental family (r13):
     // maintenance vs full-rebuild task metrics at BOTH scales.
@@ -908,90 +619,19 @@ object Bench {
           s"""{"maint":${m.json},"rebuild":${r.json},""" +
             s""""shuffle_ratio":$ratio,"cpu_ratio":$cpuRatio}"""
         }
-        Seq[(String, Query, Query)](
-          // All six theorems measured (r14). Two
-          // regimes, two headline ratios:
-          //  - EXCHANGE-BOUND family (q148/q153): the rebuild
-          //    shuffles corpus-sized data (shingle signing, CC
-          //    rounds), so `shuffle_ratio` carries the claim.
-          //    Measured on the index/maintenance halves where
-          //    serving is shared and corpus-sized. (q159 left this
-          //    family in r18: the fold assignment removed the
-          //    corpus exchange from BOTH sides, so its
-          //    shuffle_ratio reads ~1 over the shared k-row
-          //    centroid-fold constant — IncrementalIoSpec pins
-          //    that neither side shuffles the corpus.)
-          //  - MAP-SIDE-COMBINED MODEL family (q145/q155/q160): the
-          //    rebuild's shuffle is MODEL-sized by construction
-          //    (4096-bucket / bigram-vocab partial aggregation), so
-          //    maintenance — which must shuffle at least one stored
-          //    model — can never win on exchange bytes; the claim
-          //    lives in `cpu_ratio` (delta-only tokenization/
-          //    featurization vs a full-corpus re-featurize).
-          //    Measured from the STORED delta artifact (deployment
-          //    handoff shape — see Queries.servedSnapshotDelta).
-          ("q145_incremental_corpus",
-            Queries.q145MaintainedManifest _, Queries.q145FullRebuild _),
-          ("q148_incremental_minhash",
-            Queries.q148MaintainedIndex _, Queries.q148FullIndex _),
-          ("q153_incremental_clusters",
-            Queries.q153IncrementalClusters _, Queries.q153FullRecompute _),
-          ("q155_incremental_lm",
-            Queries.q155MaintainedModel _, Queries.q155FullRetrain _),
-          ("q159_incremental_ivf",
-            Queries.q159MaintainedLists _, Queries.q159FullAssign _),
-          // q171 joins the EXCHANGE-BOUND family (measured 0.137 at
-          // sf0.01): the rebuild shuffles index-sized combined
-          // postings partials; the maintenance broadcasts the
-          // delta-sized id sets into the stored-postings scan and
-          // shuffles only the delta's fresh postings. cpu_ratio
-          // (delta-only tokenization, ~0.78) rides along.
-          ("q171_incremental_bm25",
-            Queries.q171MaintainedPostings _, Queries.q171FullPostings _),
-          ("q160_incremental_dsir",
-            Queries.q160MaintainedModels _, Queries.q160FullRetrain _),
-          // q174 mirrors q153's regime: the registered cell's
-          // one-task tier moves nothing through an exchange
-          // (shuffle_ratio ~0) while the full recompute pays the
-          // corpus-sized assignment + dominance exchanges.
-          ("q174_incremental_semdedup",
-            Queries.q174IncrementalSemdedup(_, _), Queries.q174FullRecompute _),
-          // q176 joins the EXCHANGE-BOUND family: the rebuild
-          // shuffles corpus-sized window rows (occ groupBy + per-doc
-          // start collection) where the maintenance broadcasts
-          // delta-sized id/key sets into the stored-index scan and
-          // shuffles only delta-adjacent keys' occurrences.
-          ("q176_incremental_span_dedup",
-            Queries.q176IncrementalSpanDedup(_, _), Queries.q176FullRecompute _),
-          // q179's code-table halves (q159's regime, incl. its r18
-          // shift): the rebuild re-computes the per-(id, subspace)
-          // argmin over the whole snapshot — since r18 as an
-          // in-place fold, no N×M exchange — while the maintenance's
-          // reuse leg is one stored-table semi-join and only ADDED
-          // ids pay the argmin; shuffle_ratio reads ~constant-over-
-          // constant, the compute claim lives in cpu_ratio.
-          ("q179_incremental_ivfpq",
-            Queries.q179MaintainedCodes _, Queries.q179FullEncode _),
-          // q180 sits in the MODEL family (q155/q160's regime): both
-          // sides' shuffles are cell-bounded (≤ Depth·4096 rows) by
-          // the sketch's construction, so the claim lives in
-          // cpu_ratio — delta-only tokenization + hashing vs the
-          // full-corpus re-sketch.
-          ("q180_incremental_cms",
-            Queries.q180IncrementalCms(_, _), Queries.q180FullRecompute _))
-          .filter(p => scaleFilter(p._1))
-          .map { case (n, m, r) =>
-            try s""""$n":{"sf01":${fmtPair(m, r, sfDir)},"sf1":${fmtPair(m, r, sf1Dir)}}"""
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] io evidence $n: $e")
-              s""""$n":null""" }
-          }
+        // Each cell's (maintenance, rebuild) pair and its regime: `Cell.io`.
+        for (c <- SparkEntry.cells; (m, r) <- c.io if scaleFilter(c.name)) yield
+          try s""""${c.name}":{"sf01":${fmtPair(m, r, sfDir)},"sf1":${fmtPair(m, r, sf1Dir)}}"""
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] io evidence ${c.name}: $e")
+            s""""${c.name}":null""" }
       }
-    // Forced-distributed lane (see [[DistCells]]); skippable for drills
+    // Forced-distributed lane (see `Cell.forced`); skippable for drills
     // via SPARK_GRAFT_DIST=0.
     val distCells =
       if (sys.env.getOrElse("SPARK_GRAFT_DIST", "1") == "0") Nil
-      else DistCells.filter(p => scaleFilter(p._1)).map { case (n, fn) =>
+      else for (c <- SparkEntry.cells; fn <- c.forced if scaleFilter(c.name)) yield {
+        val n = c.name
         val (b, bFlag, bErr) = measure(s"dist:$n", (sp, _) => fn(sp, sfDir))
         val (t, tFlag, tErr) = measure(s"dist:$n", (sp, _) => fn(sp, sf1Dir))
         s""""$n":{"sf01_sec":$b,"sec":$t,""" +
@@ -1025,6 +665,7 @@ object Bench {
   * Built once per scratch dir via [[Tables.writePathIfAbsent]]. */
 object ScaleCorpus {
   def ensure(spark: SparkSession, srcDir: String, copies: Int): String = {
+    import org.apache.spark.sql.{Column, DataFrame}
     import org.apache.spark.sql.functions._
     // Path salted with the SOURCE corpus identity (size+mtime, the
     // Tables.corpusTag contract): regenerated testdata must rebuild the
@@ -1040,63 +681,40 @@ object ScaleCorpus {
       s"${Tables.corpusTag(spark, srcDir, "lineitem")}__" +
       Tables.corpusTag(spark, srcDir, "events")
     val idStep = 10L * 1000 * 1000
-    Tables.writePathIfAbsent(spark, s"$out/documents.parquet") {
-      val src = spark.read.parquet(s"$srcDir/documents.parquet")
-      (0 until copies).map { k =>
-        if (k == 0) src
-        else src.select(
-          (col("doc_id") + lit(k * idStep)).as("doc_id"),
-          concat_ws(" ", transform(split(col("text"), " "),
-            w => concat(w, lit(s"_$k")))).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_.unionByName(_))
-        .repartition(8)
-        .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    }
-    Tables.writePathIfAbsent(spark, s"$out/embeddings.parquet") {
-      val src = spark.read.parquet(s"$srcDir/embeddings.parquet")
-      (0 until copies).map { k =>
-        if (k == 0) src
-        else {
-          // Circular component rotation: preserves every norm and the
-          // pairwise-distance DISTRIBUTION within a copy, while pointing
-          // cross-copy vectors in genuinely different directions — an
-          // affine nudge would drift all copies toward one corner and
-          // overfill a few IVF buckets (superlinear candidate growth
-          // that says nothing about real corpus scaling).
-          val d = size(col("embedding"))
-          val r = lit(k) % d
-          src.select(
-            (col("vec_id") + lit(k * idStep)).as("vec_id"),
-            concat(slice(col("embedding"), r + 1, d - r),
-              slice(col("embedding"), lit(1), r)).as("embedding"),
-            col("label"))
-        }
-      }.reduce(_.unionByName(_))
-        .repartition(8)
-        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    }
-    Tables.writePathIfAbsent(spark, s"$out/events.parquet") {
-      val src = spark.read.parquet(s"$srcDir/events.parquet")
-      (0 until copies).map { k =>
-        if (k == 0) src
-        else src
-          .withColumn("event_id", col("event_id") + lit(k * idStep))
-          .withColumn("user_id", col("user_id") + lit(k * idStep))
-      }.reduce(_.unionByName(_))
-        .repartition(8)
-        .write.mode("overwrite").parquet(s"$out/events.parquet")
-    }
-    Tables.writePathIfAbsent(spark, s"$out/lineitem.parquet") {
-      val src = spark.read.parquet(s"$srcDir/lineitem.parquet")
-      (0 until copies).map { k =>
-        if (k == 0) src
-        else src
-          .withColumn("l_orderkey", col("l_orderkey") + lit(k * idStep))
-          .withColumn("l_partkey", col("l_partkey") + lit(k * idStep))
-      }.reduce(_.unionByName(_))
-        .repartition(8)
-        .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
+    def salted(c: String, k: Int): Column = col(c) + lit(k * idStep)
+    // Copy k ≥ 1 of each table, re-skinned so no key collides across copies.
+    val skins: Seq[(String, (DataFrame, Int) => DataFrame)] = Seq(
+      "documents" -> ((src, k) => src.select(salted("doc_id", k).as("doc_id"),
+        concat_ws(" ", transform(split(col("text"), " "),
+          w => concat(w, lit(s"_$k")))).as("text"),
+        col("lang"), col("source"), col("n_chars"))),
+      // Circular component rotation: preserves every norm and the
+      // pairwise-distance DISTRIBUTION within a copy, while pointing
+      // cross-copy vectors in genuinely different directions — an
+      // affine nudge would drift all copies toward one corner and
+      // overfill a few IVF buckets (superlinear candidate growth
+      // that says nothing about real corpus scaling).
+      "embeddings" -> { (src, k) =>
+        val d = size(col("embedding"))
+        val r = lit(k) % d
+        src.select(salted("vec_id", k).as("vec_id"),
+          concat(slice(col("embedding"), r + 1, d - r),
+            slice(col("embedding"), lit(1), r)).as("embedding"),
+          col("label"))
+      },
+      "events" -> ((src, k) => src.withColumn("event_id", salted("event_id", k))
+        .withColumn("user_id", salted("user_id", k))),
+      "lineitem" -> ((src, k) => src.withColumn("l_orderkey", salted("l_orderkey", k))
+        .withColumn("l_partkey", salted("l_partkey", k))))
+    for ((table, skin) <- skins) {
+      val path = s"$out/$table.parquet"
+      Tables.writePathIfAbsent(spark, path) {
+        val src = spark.read.parquet(s"$srcDir/$table.parquet")
+        (0 until copies).map(k => if (k == 0) src else skin(src, k))
+          .reduce(_.unionByName(_))
+          .repartition(8)
+          .write.mode("overwrite").parquet(path)
+      }
     }
     out
   }

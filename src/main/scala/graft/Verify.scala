@@ -1,56 +1,71 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import org.apache.spark.sql.SparkSession
+/** Driver-run correctness dump: each SparkEntry cell's result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare. A failing cell
+  * is named on stderr and in failures.txt; the exit code stays 0.
+  *
+  * Usage: Verify <sfDir> <outDir> [queryPrefixes] */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // Optional third arg: comma-separated name prefixes — run only the
-    // matching queries (local iteration; the driver passes two args).
-    val only: String => Boolean = args.lift(2) match {
+    val spark = GraftSession.build(GraftSession.cpus)
+    val only = prefixes(args)
+    dump(spark, args(0), args(1), SparkEntry.cells.filter(c => only(c.name)), "verify")
+    spark.stop()
+  }
+
+  /** The optional third arg: comma-separated name prefixes — run only the
+    * matching cells (local iteration; the driver passes two args). */
+  private[graft] def prefixes(args: Array[String]): String => Boolean =
+    args.lift(2) match {
       case Some(pfx) =>
         val ps = pfx.split(",").toSeq; name => ps.exists(name.startsWith)
       case None => _ => true
     }
-    val spark = GraftSession.build(GraftSession.cpus)
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // frames persisted inside operators (LSH caches etc.) are per-query
-      spark.catalog.clearCache()
-    }
-    // The q163/q169 oracles inline their merge sidecars at dump time,
-    // and the sidecar paths are fixed (any invocation — a spec run at
-    // sf0.001 included — overwrites them). A FILTERED run that skips
-    // them would therefore dump a replay of whatever corpus last wrote
-    // the sidecar; refresh for THIS corpus before dumping (building
-    // the DataFrame writes the sidecar eagerly; the artifact is
-    // build-once per corpus, so this is cheap when it already exists).
-    Seq("q163_bpe_train512", "q169_bpe_train8k").foreach { q =>
-      if (!only(q))
-        try SparkEntry.queries(q)(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $q sidecar refresh failed: ${e.getMessage}")
-        }
-    }
 
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Verify.q(k)}: ${Verify.q(v)}" }
+  /** The one run-and-dump loop of [[Verify]] and [[VerifyScale]]: runs
+    * `rows` over `dir`, writes each result with `coalesce(1)` to
+    * `outDir/<name>`, then `oracle_sql.json` for `rows` and
+    * `failures.txt`. Returns the names of the cells that failed. */
+  private[graft] def dump(spark: SparkSession, dir: String, outDir: String,
+                          rows: Seq[Cell], tag: String): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    val failed = rows.filterNot { c =>
+      val t0 = System.nanoTime()
+      val ok =
+        try {
+          c.build(spark, dir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${c.name}")
+          println(f"[$tag] ${c.name}: ${(System.nanoTime() - t0) / 1e9}%.1f s")
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[$tag] ${c.name} failed: ${e.getMessage}")
+          false
+        }
+      // frames persisted inside operators (LSH caches etc.) are per-cell
+      spark.catalog.clearCache()
+      ok
+    }.map(_.name)
+    // A sidecar's path is fixed and shared by every JVM on the host, so
+    // rebuild each sidecar cell right before the oracle text inlines it
+    // (the build is an artifact hit that rewrites the sidecar).
+    rows.filter(_.sidecar).foreach { c =>
+      try c.build(spark, dir)
+      catch { case e: Throwable =>
+        System.err.println(s"[$tag] ${c.name} sidecar refresh failed: ${e.getMessage}")
+      }
+    }
+    val oracle = SparkEntry.oracleSql
+    val json = rows.flatMap(c => oracle.get(c.name).map(sql => s"${q(c.name)}: ${q(sql)}"))
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Files.writeString(Paths.get(s"$outDir/failures.txt"), failed.map(_ + "\n").mkString)
+    failed
   }
 
   /** JSON string escape: backslash, quote, and ALL control chars
-    * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
+    * (<0x20) — a tab or CR in oracle SQL would otherwise make
     * the driver's json.load fail and silently zero the round's
-    * correctness. The ONE escape implementation — [[VerifyScale]]'s
-    * oracle dump uses it too, so a fix here cannot drift between the
-    * two gates' json. */
+    * correctness. */
   private[graft] def q(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"

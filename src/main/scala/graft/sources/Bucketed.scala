@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Bucketed table sink/source — the co-located-join path for 100 TB fact↔
@@ -17,17 +18,23 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Bucketed {
 
+  /** The table's files: `<warehouse dir>/<table>`. */
+  private def location(spark: SparkSession, table: String): Path =
+    new Path(spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+
+  /** Drops the table's catalog entry AND its files. */
+  def drop(spark: SparkSession, table: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    val loc = location(spark, table)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+  }
+
+  /** (Re)writes the table. It is an external table at [[location]], so
+    * dropping its catalog entry keeps the files. */
   def write(df: DataFrame, table: String, bucketCols: Seq[String],
             numBuckets: Int): Unit = {
     val spark = df.sparkSession
-    // Idempotent rebuild (S4): drop the catalog entry AND any orphaned
-    // location a previous JVM left behind (the in-memory catalog forgets
-    // tables across sessions but their directories survive).
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
+    drop(spark, table)
     // Repartition on the bucket key first so each task holds exactly one
     // bucket: the write emits numBuckets files instead of tasks×buckets
     // (a many-small-files explosion that costs at write time AND at every
@@ -36,22 +43,33 @@ object Bucketed {
       .write
       .mode(SaveMode.Overwrite)
       .format("parquet")
+      .option("path", location(spark, table).toString)
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(table)
   }
 
-  /** Build-once variant: write only when the catalog doesn't already have
-    * the table (or a previous JVM's directory exists without a catalog
-    * entry — then rebuild to heal it). Bucketed tables are amortized
-    * artifacts — built once, joined by every downstream query — so
-    * repeated pipeline runs over immutable inputs shouldn't re-pay the
-    * write+metastore cost each time. Callers whose INPUT data can change
-    * under the same table name must use [[write]]. */
+  /** Build-once variant: bucketed tables are amortized artifacts — built
+    * once, joined by every downstream query — so repeated runs over
+    * immutable inputs pay the write once. Writes only when the table's
+    * location has no `_SUCCESS` ([[graft.Tables.writePathIfAbsent]]: a
+    * half-written location from a killed JVM is rebuilt). The catalog is
+    * in-memory, so a new JVM finds the files without an entry; then the
+    * table is registered over them by DDL carrying the bucket and sort
+    * spec and `df`'s schema, which launches no Spark job. The files
+    * outlive the JVM: callers name the table by its input's content
+    * ([[graft.Tables.corpusTag]]); callers whose input can change under
+    * the same name must use [[write]]. */
   def writeIfAbsent(df: DataFrame, table: String, bucketCols: Seq[String],
                     numBuckets: Int): Unit = {
     val spark = df.sparkSession
-    if (!spark.catalog.tableExists(table)) write(df, table, bucketCols, numBuckets)
+    val loc = location(spark, table)
+    graft.Tables.writePathIfAbsent(spark, loc.toString)(write(df, table, bucketCols, numBuckets))
+    if (!spark.catalog.tableExists(table)) {
+      val cols = bucketCols.map(c => s"`$c`").mkString(", ")
+      spark.sql(s"CREATE TABLE `$table` (${df.schema.toDDL}) USING parquet " +
+        s"CLUSTERED BY ($cols) SORTED BY ($cols) INTO $numBuckets BUCKETS LOCATION '$loc'")
+    }
   }
 
   def read(spark: SparkSession, table: String): DataFrame =

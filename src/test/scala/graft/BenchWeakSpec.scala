@@ -98,14 +98,13 @@ class BenchWeakSpec extends AnyFunSuite with Matchers {
     WeakRule.gateCandidate(0.41, stallFlag = false, err = false, 0.04) shouldBe false
   }
 
-  test("Bench's scale and forced-distributed tables name each registered query once, with positive bounds") {
-    // A renamed cell must not silently drop out of the 10x growth gate;
-    // Bench.main requires the same at startup.
-    for (names <- Seq(Bench.ScaleCells.map(_._1), Bench.DistCells.map(_._1))) {
-      names.filterNot(SparkEntry.queries.contains) shouldBe empty
-      names.diff(names.distinct) shouldBe empty
-    }
-    Bench.ScaleCells.filterNot(_._2 > 0) shouldBe empty
+  test("SparkEntry.cells: names distinct, 188 rows, every bound > 0") {
+    // `queries` is a Map over the rows: a duplicated name would
+    // silently drop a cell from it.
+    val names = SparkEntry.cells.map(_.name)
+    names.diff(names.distinct) shouldBe empty
+    names.size shouldBe 188
+    SparkEntry.cells.flatMap(c => c.bound ++ c.capSec).filterNot(_ > 0) shouldBe empty
   }
 
   test("perfbench's copy of the bench session config matches GraftSession") {

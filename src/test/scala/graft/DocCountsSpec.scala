@@ -18,6 +18,7 @@ class DocCountsSpec extends AnyFunSuite with Matchers {
       .findFirstMatchIn(readme).map(_.group(1).toInt)
     stated shouldBe Some(SparkEntry.queries.size)
     """carries DuckDB SQL for ALL (\d+)""".r.findFirstMatchIn(readme)
-      .map(_.group(1).toInt) shouldBe Some(SparkEntry.queries.size)
+      .map(_.group(1).toInt) shouldBe Some(SparkEntry.oracleSql.size)
+    SparkEntry.oracleSql.keySet shouldBe SparkEntry.queries.keySet
   }
 }

@@ -103,6 +103,18 @@ class PlanSpec extends SparkSpec {
     plan(Queries.q46BucketedJoin) should not include "Exchange"
   }
 
+  test("q46 in a new JVM registers its bucketed tables over the files: no job") {
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    val before = rows(Queries.q46BucketedJoin(spark, dir))
+    // A new JVM's in-memory catalog has no entry; the files stay on disk.
+    spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_bkt_")).foreach(t => spark.sql(s"DROP TABLE `$t`"))
+    var rebuilt: org.apache.spark.sql.DataFrame = null
+    jobsDuring { rebuilt = Queries.q46BucketedJoin(spark, dir) } shouldBe 0
+    rows(rebuilt) shouldBe before
+    plan(Queries.q46BucketedJoin) should not include "Exchange"
+  }
+
   test("q48: vocabulary top-k is map-side-combined and TakeOrderedAndProject") {
     val p = plan(Queries.q48VocabTopk)
     p should include("partial_count")       // combine before the |vocab| shuffle

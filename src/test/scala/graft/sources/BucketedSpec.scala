@@ -35,6 +35,7 @@ class BucketedSpec extends SparkSpec {
   }
 
   test("writeIfAbsent skips the rebuild when the table already exists") {
+    Bucketed.drop(spark, "b_once") // files outlive the JVM: start clean
     val d1 = df("k BIGINT, v INT", (1L to 10L).map(i => Row(i, i.toInt)))
     Bucketed.writeIfAbsent(d1, "b_once", Seq("k"), 2) // builds
     val d2 = df("k BIGINT, v INT", Seq(Row(99L, 99)))

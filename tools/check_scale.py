@@ -8,9 +8,16 @@ and compares row count / schema / value-matrix hash exactly like the
 driver's t2 gate (check_oracle.py's canon/frame_hash, verbatim). Writes
 a JSON record suitable for committing as SCALECHECK_r{N}.json.
 
+DuckDB's threads and memory limit are set from the machine (every core
+this process may use, half the physical memory) and its spill directory
+is <verifyScaleOutDir>/duckdb_tmp, so a spill lands in a known place.
+Each cell records its oracle time (failing cells too) and the process's
+peak RSS after it, so the cell whose oracle spilled or grew the heap
+shows under its own name.
+
 Usage: python3 tools/check_scale.py <verifyScaleOutDir> [out.json]
 """
-import sys, json, glob, os, hashlib, time
+import sys, json, glob, os, resource, time
 import duckdb
 
 # The ONE canonicalization/hash implementation: a fix to the t2 gate's
@@ -25,7 +32,14 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 def main(out_dir, out_json=None):
     scale_dir = open(f"{out_dir}/scale_dir.txt").read().strip()
+    settings = {
+        "threads": len(os.sched_getaffinity(0)),
+        "memory_limit": f"{os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') // 2**21}MB",
+        "temp_directory": os.path.join(os.path.abspath(out_dir), "duckdb_tmp"),
+    }
     con = duckdb.connect()
+    for k, v in settings.items():
+        con.execute(f"SET {k} = '{v}'")
     for t in TABLES:
         p = os.path.join(scale_dir, f"{t}.parquet")
         if not os.path.exists(p):
@@ -35,7 +49,7 @@ def main(out_dir, out_json=None):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    record = {"scale_dir": scale_dir, "copies": 10, "cells": {}}
+    record = {"scale_dir": scale_dir, "copies": 10, "duckdb": settings, "cells": {}}
     n_pass = n_fail = 0
     for name in sorted(oracle):
         sql = oracle[name]
@@ -45,6 +59,7 @@ def main(out_dir, out_json=None):
             cell["status"] = "no_spark_output"
             n_fail += 1
         else:
+            t0 = None
             try:
                 spark_rel = con.execute(f"SELECT * FROM read_parquet({files!r})")
                 s_cols = [d[0] for d in spark_rel.description]
@@ -53,13 +68,16 @@ def main(out_dir, out_json=None):
                 duck_rel = con.execute(sql)
                 d_cols = [d[0] for d in duck_rel.description]
                 d_rows = duck_rel.fetchall()
-                cell["oracle_sec"] = round(time.monotonic() - t0, 2)
             except Exception as e:
                 cell["status"] = f"err: {str(e)[:160]}"
                 record["cells"][name] = cell
                 print(f"FAIL {name}: {cell['status']}")
                 n_fail += 1
                 continue
+            finally:
+                if t0 is not None:
+                    cell["oracle_sec"] = round(time.monotonic() - t0, 2)
+                cell["peak_rss_mb"] = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
             cell["rows"] = len(s_rows)
             if sorted(s_cols) != sorted(d_cols):
                 cell["status"] = "schema_mismatch"
