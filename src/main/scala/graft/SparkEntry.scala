@@ -55,8 +55,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      shape — see Queries.servedSnapshotDelta).
   * @param scaleChecked [[VerifyScale]] hash-checks the cell at the 10×
   *   corpus. The incremental/maintenance cells whose batch≡incremental
-  *   oracles are worth re-proving at 10× density (VERDICT r17 names the
-  *   first twelve; the q181–q184 chains share the same machinery), plus
+  *   oracles are worth re-proving at 10× density (r17 named the first
+  *   twelve; the q181–q184 chains share the same machinery), plus
   *   — since the round-18 narrow-assignment reshape — the ANN family
   *   whose physical paths changed wholesale (fold argmin, bounded
   *   in-task ranking, carried vectors, no pair distinct): tie-break and
@@ -64,8 +64,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   density-dependent (more centroids at 10× ⇒ more near-ties, a
   *   frac-path cap that rounds differently, a slice bound that clips a
   *   rank the filter wanted), so each reshaped cell's full-replay oracle
-  *   is re-proved at the 10× corpus too. The r19 extension (VERDICT r18
-  *   ask #2) adds the remaining density-sensitive families, previously
+  *   is re-proved at the 10× corpus too. The r19 extension adds the remaining density-sensitive families, previously
   *   only growth-TIMED at 10×: span dedup (the family whose L=4 closure
   *   phenomenon motivated this gate; ExactSpans tokenizes by whitespace,
   *   no alpha filter, so the salted copies DO grow the qualifying-window
@@ -75,7 +74,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   width is fixed by construction, so 10× the vocabulary is 10× the
   *   collision pressure per cell); banded near-dup (bucket occupancy and
   *   band-collision counts are the density-dependent arithmetic).
-  *   COVERAGE CAVEAT (r18 self-review): [[ScaleCorpus]] salts copied
+  *   COVERAGE CAVEAT (r18): [[ScaleCorpus]] salts copied
   *   words with a `_k` suffix, which the all-lowercase 12-gram window
   *   filter rejects — so for the window-unit cells (q173, q184) this gate
   *   re-proves the maintenance arithmetic over 10× the DOCUMENTS, but the
@@ -101,7 +100,7 @@ final case class Cell(
   def build: SparkEntry.Query = entry._2
 }
 
-/** Driver contract — see SURVEY.md §7.
+/** The entry-point contract — see SURVEY.md §7.
   *
   * `queries` maps operator-inventory keys (SURVEY §2 / §7.4) to Spark
   * implementations; `oracleSql` carries the mirrored DuckDB SQL the driver
@@ -221,7 +220,7 @@ object SparkEntry {
     Cell("q83b_simhash_exact" -> (Queries.q83bSimhashExact(_, _))),
     Cell("q83c_ann_lsh_recall" -> (Queries.q83cAnnLshRecall(_, _))),
     Cell("q83d_ivf_recall" -> (Queries.q83dIvfRecall(_, _)), scaleChecked = true),
-    // scale-checked again since r19 (VERDICT r18 ask #3): the r18 10x
+    // scale-checked again since r19: the r18 10x
     // check caught q117's fixed 320-row ADC shortlist decaying recall
     // through the 0.3 floor at 10x density (a corpus-independent
     // shortlist's candidate share drops with N). q117 now derives the
@@ -340,7 +339,7 @@ object SparkEntry {
     // reclassification q145/q148 got in r15 when their tiers landed;
     // only a superlinear shape should trip it. So a 7-14x superlinear
     // regression would pass the ratio band: the 8 s absolute cap backs
-    // it (ADVICE r19). The recorded 10x floor is 2.8 s (r19, reconfirmed
+    // it (r19). The recorded 10x floor is 2.8 s (r19, reconfirmed
     // by the r20 forced-tier lane); 8 s ≈ 3x that floor tolerates box
     // noise (the confirm-before-red re-measure absorbs transients) while
     // a genuinely superlinear build (>20 s at 10x) goes red.

@@ -1,9 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
-/** Driver-run correctness dump: each SparkEntry cell's result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. A failing cell
-  * is named on stderr and in failures.txt; the exit code stays 0.
+/** Correctness dump: each SparkEntry cell's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check_oracle.py`
+  * replays it the same way). A failing cell is named on stderr and in
+  * failures.txt; the exit code stays 0.
   *
   * Usage: Verify <sfDir> <outDir> [queryPrefixes] */
 object Verify {
@@ -15,7 +16,7 @@ object Verify {
   }
 
   /** The optional third arg: comma-separated name prefixes — run only the
-    * matching cells (local iteration; the driver passes two args). */
+    * matching cells (local iteration; a full dump passes two args). */
   private[graft] def prefixes(args: Array[String]): String => Boolean =
     args.lift(2) match {
       case Some(pfx) =>

@@ -59,7 +59,7 @@ def main(out_dir, out_json=None):
             cell["status"] = "no_spark_output"
             n_fail += 1
         else:
-            t0 = None
+            t0 = t1 = None
             try:
                 spark_rel = con.execute(f"SELECT * FROM read_parquet({files!r})")
                 s_cols = [d[0] for d in spark_rel.description]
@@ -68,33 +68,32 @@ def main(out_dir, out_json=None):
                 duck_rel = con.execute(sql)
                 d_cols = [d[0] for d in duck_rel.description]
                 d_rows = duck_rel.fetchall()
+                t1 = time.monotonic()
             except Exception as e:
                 cell["status"] = f"err: {str(e)[:160]}"
-                record["cells"][name] = cell
-                print(f"FAIL {name}: {cell['status']}")
-                n_fail += 1
-                continue
-            finally:
-                if t0 is not None:
-                    cell["oracle_sec"] = round(time.monotonic() - t0, 2)
-                cell["peak_rss_mb"] = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
-            cell["rows"] = len(s_rows)
-            if sorted(s_cols) != sorted(d_cols):
-                cell["status"] = "schema_mismatch"
-                n_fail += 1
-            elif len(s_rows) != len(d_rows):
-                cell["status"] = f"rowcount_mismatch ({len(s_rows)} vs {len(d_rows)})"
-                n_fail += 1
-            elif frame_hash(s_cols, s_rows) != frame_hash(d_cols, d_rows):
-                cell["status"] = "hash_mismatch"
-                n_fail += 1
-            else:
-                cell["status"] = "pass"
+            if t0 is not None:
+                cell["oracle_sec"] = round((t1 or time.monotonic()) - t0, 2)
+            cell["peak_rss_mb"] = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
+            if "status" not in cell:
+                cell["rows"] = len(s_rows)
+                if sorted(s_cols) != sorted(d_cols):
+                    cell["status"] = "schema_mismatch"
+                elif len(s_rows) != len(d_rows):
+                    cell["status"] = f"rowcount_mismatch ({len(s_rows)} vs {len(d_rows)})"
+                elif frame_hash(s_cols, s_rows) != frame_hash(d_cols, d_rows):
+                    cell["status"] = "hash_mismatch"
+                else:
+                    cell["status"] = "pass"
+            if cell["status"] == "pass":
                 n_pass += 1
+            else:
+                n_fail += 1
         record["cells"][name] = cell
         print(f"{'PASS' if cell['status'] == 'pass' else 'FAIL'} {name} "
               f"({cell.get('rows', '?')} rows, "
-              f"oracle {cell.get('oracle_sec', '?')}s)")
+              f"oracle {cell.get('oracle_sec', '?')}s, "
+              f"peak RSS {cell.get('peak_rss_mb', '?')} MB)"
+              + ("" if cell["status"] == "pass" else f": {cell['status']}"))
     record["pass"] = n_pass
     record["fail"] = n_fail
     print(f"{n_pass} pass, {n_fail} fail")
