@@ -224,15 +224,18 @@ object Queries {
       .limit(100)
 
   /** Flagship: opportunity_rank structural clone (aact_gold_layer.sql:260-349,
-    * SURVEY §7.3) — J5/J6, A3-A5, F1/F16, P7, W1. The global rank is
-    * tiered by [[graft.Tier]] (PlanSpec pins the distributed rank's
-    * window-free shape; OpportunitySpec pins tier equality). */
+    * SURVEY §7.3) — J5/J6, A3-A5, F1/F16, P7, W1. Tiered twice by
+    * [[graft.Tier]]: inputs under `oneTaskBytes` run as one task, and the
+    * global rank is one window under `maxGlobalRankBytes` (PlanSpec pins
+    * the one-task plan's missing shuffles and the distributed rank's
+    * window-free shape; OpportunitySpec pins the regimes equal). */
   def q17OpportunityScore(s: SparkSession, dir: String,
-                          maxGlobalRankBytes: Long = Tier.LocalBytes): DataFrame =
+                          maxGlobalRankBytes: Long = Tier.LocalBytes,
+                          oneTaskBytes: Long = Tier.OneTaskBytes): DataFrame =
     Opportunity.opportunityRank(
       t(s, dir, "orders"), t(s, dir, "lineitem"),
       t(s, dir, "part"), t(s, dir, "customer"),
-      maxGlobalRankBytes = maxGlobalRankBytes)
+      maxGlobalRankBytes = maxGlobalRankBytes, oneTaskBytes = oneTaskBytes)
 
   // ====== LLM-data-pipeline extension (SURVEY §7.5; BASELINE north star) ====
 

@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -127,9 +130,34 @@ object Tables {
     * session, queries reference the view), so benching against cached
     * resolution is symmetric, not a shortcut. DataFrames are immutable —
     * reuse across queries is safe; keyed per session so tests with
-    * multiple sessions never share state. */
+    * multiple sessions never share state. A session's entries go when its
+    * SparkContext stops, so a stopped session's frames (and through them
+    * the session and its context) are not pinned for the JVM's life. */
   private val resolved =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
+    new ConcurrentHashMap[SparkSession, ConcurrentHashMap[String, DataFrame]]()
+
+  /** `spark`'s entries, made (with the purge on its context's stop) on
+    * first use. */
+  private def entries(spark: SparkSession): ConcurrentHashMap[String, DataFrame] = {
+    val hit = resolved.get(spark)
+    if (hit != null) hit
+    else {
+      val fresh = new ConcurrentHashMap[String, DataFrame]()
+      val prev = resolved.putIfAbsent(spark, fresh)
+      if (prev != null) prev
+      else {
+        val sc = spark.sparkContext
+        sc.addSparkListener(new SparkListener {
+          override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+            resolved.keySet.removeIf(_.sparkContext eq sc)
+        })
+        fresh
+      }
+    }
+  }
+
+  /** Sessions that hold resolved entries (for specs). */
+  private[graft] def sessionsResolved: Int = resolved.size
   // NOT computeIfAbsent: an artifact build re-enters memo (table(),
   // corpusTag-salted sub-artifacts), and a reentrant computeIfAbsent
   // throws "Recursive update" whenever the two keys land in the same
@@ -137,12 +165,11 @@ object Tables {
   // reentrancy-safe; a racing duplicate build is harmless (DataFrames
   // are immutable plans, either instance serves).
   private def memo(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val k = (System.identityHashCode(spark), key)
-    val hit = resolved.get(k)
+    val hit = entries(spark).get(key)
     if (hit != null) hit
     else {
       val built = build
-      val prev = resolved.putIfAbsent(k, built)
+      val prev = entries(spark).putIfAbsent(key, built)
       if (prev != null) prev else built
     }
   }
@@ -160,8 +187,7 @@ object Tables {
     * basename: a table regenerated in place, or two corpora whose
     * directories share a final path component, would otherwise silently
     * serve each other's artifacts. */
-  private val tags =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val tags = new ConcurrentHashMap[String, String]()
   def corpusTag(spark: SparkSession, dir: String, name: String): String =
     // Memoized per path: the tag is a filesystem stat of IMMUTABLE-for-
     // the-process testdata, and derived-artifact consumers re-ask for it

@@ -41,7 +41,8 @@ object Opportunity {
   def opportunityRank(orders: DataFrame, lineitem: DataFrame,
                       part: DataFrame, customer: DataFrame,
                       excludePattern: String = "%old%",
-                      maxGlobalRankBytes: Long = graft.Tier.LocalBytes): DataFrame = {
+                      maxGlobalRankBytes: Long = graft.Tier.LocalBytes,
+                      oneTaskBytes: Long = graft.Tier.OneTaskBytes): DataFrame = {
     // TIERED global rank (r20, the window-audit item): the rank's input
     // was the one partition-less window frame in the engine that GROWS
     // with the corpus (qualifying conditions ∝ the part dimension ∝ SF
@@ -58,8 +59,16 @@ object Opportunity {
     // partition-less window. The guard sums the RAW input stats —
     // post-aggregation the frame only shrinks, so the estimate is an
     // upper bound.
-    val scores = opportunityScores(orders, lineitem, part, customer,
-      excludePattern)
+    //
+    // Inputs that fit `oneTaskBytes` are first coalesced to one
+    // partition ([[graft.Tier.oneTask]]): the per-order window, the
+    // aggregation and the rank then plan with no Exchange (broadcasts
+    // stay), so the whole rank is one task instead of a stage chain
+    // whose fixed cost dwarfs MB-sized inputs. `0L` keeps the
+    // distributed scores; OpportunitySpec pins the three regimes equal.
+    val Seq(o, l, p, c) = graft.Tier.oneTask(oneTaskBytes,
+      orders, lineitem, part, customer)
+    val scores = opportunityScores(o, l, p, c, excludePattern)
     val small = graft.Tier.fits(maxGlobalRankBytes,
       orders, lineitem, part, customer)
     val ranked =

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Star-schema build — dims, fact, bridges (`aact_gold_layer.sql:25-252`)
   * re-expressed over the testdata tables (orders=trials, customer=sponsors,
@@ -61,5 +62,37 @@ object Star {
     val dups = df.groupBy(cols.map(col): _*)
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).count()
     require(dups == 0, s"S8 uniqueness violated on $what(${cols.mkString(",")})")
+  }
+
+  /** A built table and its primary key: one or two integral columns. */
+  final case class Keyed(name: String, df: DataFrame, key: Seq[String])
+
+  /** S8 for several tables in ONE query: a union of exact key values
+    * tagged by table — (name, first key as BIGINT, second key as BIGINT
+    * or null) — grouped, any group above 1 a violation. The cast is
+    * exact for every integral key, so equal keys of different tables
+    * never meet (the tag splits them) and distinct keys of one table
+    * never collide (no hashing). Nulls group as in [[assertUnique]]: two
+    * rows with the same null key are a duplicate. Fails with the
+    * message [[assertUnique]] gives, naming the first violated table in
+    * `tables` order. */
+  def assertUniqueAll(tables: Seq[Keyed]): Unit = {
+    val tagged = tables.map { case Keyed(name, df, key) =>
+      require(key.size == 1 || key.size == 2, s"S8 key of $name must be 1 or 2 columns")
+      val keys = key.map { k =>
+        require(Seq(ByteType, ShortType, IntegerType, LongType).contains(df.schema(k).dataType),
+          s"S8 key $name.$k must be integral, not ${df.schema(k).dataType.sql}")
+        col(k).cast("bigint")
+      }
+      df.select(lit(name).as("_table"), keys.head.as("_k1"),
+        keys.lift(1).getOrElse(lit(null).cast("bigint")).as("_k2"))
+    }.reduce(_ union _)
+    val violated = tagged.groupBy(col("_table"), col("_k1"), col("_k2"))
+      .agg(count(lit(1)).as("n")).filter(col("n") > 1)
+      .select(col("_table")).distinct().collect().map(_.getString(0)).toSet
+    tables.find(t => violated(t.name)).foreach { t =>
+      throw new IllegalArgumentException(
+        s"S8 uniqueness violated on ${t.name}(${t.key.mkString(",")})")
+    }
   }
 }

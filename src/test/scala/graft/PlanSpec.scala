@@ -68,7 +68,7 @@ class PlanSpec extends SparkSpec {
     // every Window node is per-partition (_pid-keyed or the per-order
     // fusion window, which partitions by _ok).
     val forced = plan((s, d) =>
-      Queries.q17OpportunityScore(s, d, maxGlobalRankBytes = 0L))
+      Queries.q17OpportunityScore(s, d, maxGlobalRankBytes = 0L, oneTaskBytes = 0L))
     forced.split("\n").filter(_.contains("Window ")).foreach { l =>
       withClue(l) { (l.contains("_pid") || l.contains("_ok")) shouldBe true }
     }
@@ -76,6 +76,11 @@ class PlanSpec extends SparkSpec {
     // exact single-window rank (the frame is report-sized at guarded
     // input sizes; OpportunitySpec pins tier equality).
     plan(Queries.q17OpportunityScore(_, _)) should include("row_number()")
+    // ...and at sf0.001 its inputs fit Tier.OneTaskBytes: one partition
+    // each, so the window, the aggregation and the rank need no shuffle.
+    val oneTask = plan(Queries.q17OpportunityScore(_, _))
+    oneTask should include("Coalesce 1")
+    shuffles(oneTask) shouldBe 0
   }
 
   test("q28: all three dims broadcast into the fact build") {

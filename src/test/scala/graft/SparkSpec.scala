@@ -10,12 +10,22 @@ import org.scalatest.matchers.should.Matchers
 
 /** Shared one-per-JVM SparkSession fixture for all suites. */
 object SparkSpec {
+  /** `<checkout>/target/spark-warehouse` of the checkout whose test
+    * classes are running (they load from `target/scala-2.13/test-classes`
+    * under it), so two checkouts testing at once never share the
+    * bucketed tables that outlive a run. */
+  val warehouseDir: String = {
+    val classes = new java.io.File(
+      classOf[SparkSpec].getProtectionDomain.getCodeSource.getLocation.toURI)
+    new java.io.File(classes.getParentFile.getParentFile, "spark-warehouse").getAbsolutePath
+  }
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
+      .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -118,20 +118,49 @@ class OpportunitySpec extends SparkSpec {
     got shouldBe expected
   }
 
+  /** The same rows as a LocalRelation, which (unlike df()'s LogicalRDD)
+    * carries Catalyst size stats, so the [[graft.Tier]] guards can admit
+    * it. */
+  private def sized(d: DataFrame): DataFrame =
+    spark.createDataFrame(d.collectAsList(), d.schema)
+
+  private def rows(d: DataFrame): Seq[Seq[Any]] =
+    d.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+
+  private val shuffle =
+    """.*\bExchange (hashpartitioning|rangepartitioning|SinglePartition|RoundRobinPartitioning).*""".r
+
   test("rank tiers identical: guarded global window ≡ distributed prefix count") {
-    // These df() frames carry no Catalyst stats (LogicalRDD → Long.Max),
-    // so the default guard fails CLOSED to the distributed rank — the
-    // end-to-end test above therefore covers that tier. Here both tiers
-    // are forced explicitly and must agree row-for-row (the r20
+    // df() frames carry no Catalyst stats (LogicalRDD → Long.Max), so the
+    // default guards fail CLOSED to the distributed rank — the end-to-end
+    // test above therefore covers that tier. The guarded global window
+    // needs inputs with stats; both tiers run distributed scores here
+    // (one-task tier off) and must agree row-for-row (the r20
     // window-audit conversion: ascending (-score, p_name) prefix count ≡
     // (score DESC, p_name) row_number).
     val dist = Opportunity.opportunityRank(orders, lineitem, part, customer,
-        maxGlobalRankBytes = 0L)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    val global = Opportunity.opportunityRank(orders, lineitem, part, customer,
-        maxGlobalRankBytes = Long.MaxValue)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    dist should not be empty
-    dist shouldBe global
+      maxGlobalRankBytes = 0L, oneTaskBytes = 0L)
+    val global = Opportunity.opportunityRank(sized(orders), sized(lineitem),
+      sized(part), sized(customer), oneTaskBytes = 0L)
+    val globalPlan = global.queryExecution.executedPlan.toString
+    globalPlan should include("row_number()")
+    globalPlan.split("\n").count(l => shuffle.matches(l)) should be > 0
+    rows(dist) should not be empty
+    rows(dist) shouldBe rows(global)
+  }
+
+  test("one-task rank: no shuffle, same rows as both distributed regimes") {
+    val oneTask = Opportunity.opportunityRank(sized(orders), sized(lineitem),
+      sized(part), sized(customer))
+    val plan = oneTask.queryExecution.executedPlan.toString
+    plan should include("Coalesce 1")
+    plan should include("row_number()")
+    plan.split("\n").filter(l => shuffle.matches(l)) shouldBe empty
+    val dist = Opportunity.opportunityRank(orders, lineitem, part, customer,
+      maxGlobalRankBytes = 0L, oneTaskBytes = 0L)
+    rows(oneTask) should not be empty
+    rows(oneTask) shouldBe rows(dist)
+    rows(oneTask) shouldBe rows(Opportunity.opportunityRank(sized(orders),
+      sized(lineitem), sized(part), sized(customer), oneTaskBytes = 0L))
   }
 }

@@ -43,6 +43,39 @@ class StarSpec extends SparkSpec {
     ex.getMessage should include("S8 uniqueness violated")
   }
 
+  test("assertUniqueAll: one query names the violated table, in the given order") {
+    import Star.Keyed
+    val a = df("k INT", Seq(Row(1), Row(2)))
+    val b = df("k BIGINT, j INT", Seq(Row(1L, 1), Row(1L, 2), Row(1L, 2)))
+    val c = df("k SMALLINT", Seq(Row(1.toShort), Row(1.toShort)))
+    val ex = intercept[IllegalArgumentException] {
+      Star.assertUniqueAll(Seq(Keyed("a", a, Seq("k")),
+        Keyed("b", b, Seq("k", "j")), Keyed("c", c, Seq("k"))))
+    }
+    // b's (1, 2) repeats and so does c's 1: b comes first.
+    ex.getMessage should include("S8 uniqueness violated on b(k,j)")
+    Star.assertUniqueAll(Seq(Keyed("a", a, Seq("k")),
+      Keyed("b", b.distinct(), Seq("k", "j"))))
+  }
+
+  test("assertUniqueAll: equal keys in different tables never collide; nulls as before") {
+    import Star.Keyed
+    val a = df("k INT", Seq(Row(1), Row(2), Row(null)))
+    val b = df("k BIGINT", Seq(Row(1L), Row(2L), Row(null)))
+    val pair = df("k BIGINT, j INT", Seq(Row(1L, null), Row(1L, 1), Row(null, 1)))
+    Star.assertUniqueAll(Seq(Keyed("a", a, Seq("k")), Keyed("b", b, Seq("k")),
+      Keyed("pair", pair, Seq("k", "j"))))
+    // Two null keys are a duplicate, as in assertUnique's groupBy.
+    val nulls = df("k BIGINT, j INT", Seq(Row(1L, null), Row(1L, null)))
+    intercept[IllegalArgumentException](Star.assertUnique(nulls, Seq("k", "j"), "nulls"))
+    intercept[IllegalArgumentException](
+      Star.assertUniqueAll(Seq(Keyed("nulls", nulls, Seq("k", "j")))))
+      .getMessage should include("S8 uniqueness violated on nulls(k,j)")
+    // A key that does not cast exactly to BIGINT is refused, not checked.
+    intercept[IllegalArgumentException](
+      Star.assertUniqueAll(Seq(Keyed("s", strDf("k", Seq("x")), Seq("k")))))
+  }
+
   test("bridge: distinct (order, dim-key) pairs via lineitem (J4)") {
     val part = df("p_partkey BIGINT, p_brand STRING", Seq(Row(1L, "B1"), Row(2L, "B1"), Row(3L, "B2")))
     val lineitem = df("l_orderkey BIGINT, l_partkey BIGINT", Seq(

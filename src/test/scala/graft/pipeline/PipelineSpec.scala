@@ -8,7 +8,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SaveMode
 import org.scalatest.BeforeAndAfterAll
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, Tables, Tier}
 
 /** End-to-end medallion build at sf0.001 — the composed bronze→silver→gold
   * dataflow with S8 uniqueness assertions firing inside Gold.run. Built
@@ -63,6 +63,52 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     Tables.read(spark, s"$out/bronze/orders").schema("o_orderdate").dataType.typeName shouldBe
       "timestamp_ntz"
     Tables.read(spark, s"$out/silver/orders").columns should contain("order_year")
+  }
+
+  private val goldTables =
+    Seq("dim_segment", "dim_brand", "dim_dates", "fact_orders", "bridge_order_brand")
+  private def rows(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+
+  test("Gold.run's one-task tier ≡ its distributed plan, table for table") {
+    // Non-vacuous: sf0.001 silver takes the one-task tier by default.
+    Tier.fits(Tier.OneTaskBytes, Seq("orders", "customer", "part", "lineitem")
+      .map(n => Tables.read(spark, s"$out/silver/$n")): _*) shouldBe true
+    val dist = Files.createTempDirectory("graft-pipeline-dist").toString
+    try {
+      Bronze.run(spark, sf, dist)
+      Silver.run(spark, dist)
+      Gold.run(spark, dist, oneTaskBytes = 0L)
+      for (t <- goldTables) withClue(t) {
+        rows(s"$dist/gold/$t") should not be empty
+        rows(s"$dist/gold/$t") shouldBe rows(s"$out/gold/$t")
+      }
+    } finally FileUtils.deleteDirectory(new File(dist))
+  }
+
+  test("Bronze copies row groups: the same schema and rows as a Spark write") {
+    val written = Files.createTempDirectory("graft-pipeline-written").toString
+    try {
+      val copied = Tables.names.filter(n =>
+        Bronze.singleParquetFile(Tables.table(spark, sf, n)).isDefined)
+      copied shouldBe Tables.names.filterNot(_ == "events")
+      for (n <- copied) withClue(n) {
+        Tables.table(spark, sf, n).write.parquet(s"$written/$n")
+        val (copy, spark_) = (s"$out/bronze/$n", s"$written/$n")
+        Tables.read(spark, copy).schema shouldBe Tables.read(spark, spark_).schema
+        spark.read.parquet(copy).schema shouldBe spark.read.parquet(spark_).schema
+        rows(copy) shouldBe rows(spark_)
+        new File(s"$copy/_SUCCESS").exists shouldBe true
+      }
+    } finally FileUtils.deleteDirectory(new File(written))
+  }
+
+  test("Bronze.run launches 1 Spark job and Gold.run at most 12 at sf0.001") {
+    val again = Files.createTempDirectory("graft-pipeline-jobs").toString
+    try {
+      jobsDuring(Bronze.run(spark, sf, again)) shouldBe 1 // the events write
+      jobsDuring(Gold.run(spark, out)) should be <= 12
+    } finally FileUtils.deleteDirectory(new File(again))
   }
 
   test("Layer.wave waits for every write, then rethrows the first failure") {

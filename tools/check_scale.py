@@ -61,26 +61,34 @@ def main(out_dir, out_json=None):
         else:
             t0 = t1 = None
             try:
+                # Each frame is counted and hashed as soon as it is
+                # fetched and its rows freed, so at most one frame's rows
+                # are held at a time: the Spark frame's rows are gone
+                # before the DuckDB oracle runs.
                 spark_rel = con.execute(f"SELECT * FROM read_parquet({files!r})")
                 s_cols = [d[0] for d in spark_rel.description]
                 s_rows = spark_rel.fetchall()
+                s_n, s_hash = len(s_rows), frame_hash(s_cols, s_rows)
+                del s_rows
                 t0 = time.monotonic()
                 duck_rel = con.execute(sql)
                 d_cols = [d[0] for d in duck_rel.description]
                 d_rows = duck_rel.fetchall()
                 t1 = time.monotonic()
+                d_n, d_hash = len(d_rows), frame_hash(d_cols, d_rows)
+                del d_rows
             except Exception as e:
                 cell["status"] = f"err: {str(e)[:160]}"
             if t0 is not None:
                 cell["oracle_sec"] = round((t1 or time.monotonic()) - t0, 2)
             cell["peak_rss_mb"] = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
             if "status" not in cell:
-                cell["rows"] = len(s_rows)
+                cell["rows"] = s_n
                 if sorted(s_cols) != sorted(d_cols):
                     cell["status"] = "schema_mismatch"
-                elif len(s_rows) != len(d_rows):
-                    cell["status"] = f"rowcount_mismatch ({len(s_rows)} vs {len(d_rows)})"
-                elif frame_hash(s_cols, s_rows) != frame_hash(d_cols, d_rows):
+                elif s_n != d_n:
+                    cell["status"] = f"rowcount_mismatch ({s_n} vs {d_n})"
+                elif s_hash != d_hash:
                     cell["status"] = "hash_mismatch"
                 else:
                     cell["status"] = "pass"
