@@ -155,9 +155,6 @@ object Tables {
       }
     }
   }
-
-  /** Sessions that hold resolved entries (for specs). */
-  private[graft] def sessionsResolved: Int = resolved.size
   // NOT computeIfAbsent: an artifact build re-enters memo (table(),
   // corpusTag-salted sub-artifacts), and a reentrant computeIfAbsent
   // throws "Recursive update" whenever the two keys land in the same

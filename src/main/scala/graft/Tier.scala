@@ -15,8 +15,8 @@ import org.apache.spark.sql.DataFrame
   *  - a cap of 0 forces the distributed chain, and is checked before any
   *    plan is touched, so a forced build does no optimizer work here;
   *  - [[LocalBytes]] is the default budget every tiered entry point uses;
-  *    [[OneTaskBytes]] is the smaller budget under which a whole Spark
-  *    plan runs as one task ([[oneTask]]).
+  *    [[OneTaskBytes]] is the smaller budget under which the medallion
+  *    build coalesces its inputs so a whole Spark plan runs as one task.
   *
   * Each caller keeps its own reason for being tiered and the spec that
   * pins its two tiers equal; TierSpec pins this predicate. */
@@ -34,11 +34,6 @@ object Tier {
     * in one task vs 0.71 s distributed at sf0.01 (inputs about 1.4 MB),
     * but 1.56 vs 0.97 s at sf0.1 (about 14 MB). */
   val OneTaskBytes: Long = 4L << 20
-
-  /** `inputs` each coalesced to one partition when together they
-    * [[fits]] `capBytes`, else as they are. */
-  def oneTask(capBytes: Long, inputs: DataFrame*): Seq[DataFrame] =
-    if (fits(capBytes, inputs: _*)) inputs.map(_.coalesce(1)) else inputs
 
   /** True iff `capBytes > 0` and the inputs' summed size estimate is at
     * most `capBytes`. */

@@ -61,13 +61,14 @@ object Opportunity {
     // upper bound.
     //
     // Inputs that fit `oneTaskBytes` are first coalesced to one
-    // partition ([[graft.Tier.oneTask]]): the per-order window, the
-    // aggregation and the rank then plan with no Exchange (broadcasts
-    // stay), so the whole rank is one task instead of a stage chain
-    // whose fixed cost dwarfs MB-sized inputs. `0L` keeps the
-    // distributed scores; OpportunitySpec pins the three regimes equal.
-    val Seq(o, l, p, c) = graft.Tier.oneTask(oneTaskBytes,
-      orders, lineitem, part, customer)
+    // partition: the per-order window, the aggregation and the rank then
+    // plan with no Exchange (broadcasts stay), so the whole rank is one
+    // task instead of a stage chain whose fixed cost dwarfs MB-sized
+    // inputs. `0L` keeps the distributed scores; OpportunitySpec pins
+    // the three regimes equal.
+    val oneTask = graft.Tier.fits(oneTaskBytes, orders, lineitem, part, customer)
+    val Seq(o, l, p, c) = Seq(orders, lineitem, part, customer)
+      .map(d => if (oneTask) d.coalesce(1) else d)
     val scores = opportunityScores(o, l, p, c, excludePattern)
     val small = graft.Tier.fits(maxGlobalRankBytes,
       orders, lineitem, part, customer)
