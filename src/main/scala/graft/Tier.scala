@@ -30,9 +30,9 @@ object Tier {
     * to one partition, so every aggregate and window plans with no
     * Exchange and a whole table is one job of one task. Kept apart from
     * [[LocalBytes]] because a single task stops paying well before 64 MB:
-    * q17 with `local[4]`, median of the last 10 of 15 builds, ran 0.58 s
-    * in one task vs 0.71 s distributed at sf0.01 (inputs about 1.4 MB),
-    * but 1.56 vs 0.97 s at sf0.1 (about 14 MB). */
+    * q17 with `local[4]` on a 4-core VM, median of the last 10 of 15
+    * runs, took 0.57 s in one task vs 0.69 s distributed at sf0.01
+    * (inputs about 1.4 MB), but 1.42 vs 1.08 s at sf0.1 (about 14 MB). */
   val OneTaskBytes: Long = 4L << 20
 
   /** True iff `capBytes > 0` and the inputs' summed size estimate is at

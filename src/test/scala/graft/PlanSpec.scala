@@ -75,12 +75,12 @@ class PlanSpec extends SparkSpec {
     // The registered cell under the stats guard keeps the reference-
     // exact single-window rank (the frame is report-sized at guarded
     // input sizes; OpportunitySpec pins tier equality).
-    plan(Queries.q17OpportunityScore(_, _)) should include("row_number()")
+    val guarded = plan(Queries.q17OpportunityScore(_, _))
+    guarded should include("row_number()")
     // ...and at sf0.001 its inputs fit Tier.OneTaskBytes: one partition
     // each, so the window, the aggregation and the rank need no shuffle.
-    val oneTask = plan(Queries.q17OpportunityScore(_, _))
-    oneTask should include("Coalesce 1")
-    shuffles(oneTask) shouldBe 0
+    guarded should include("Coalesce 1")
+    shuffles(guarded) shouldBe 0
   }
 
   test("q28: all three dims broadcast into the fact build") {
