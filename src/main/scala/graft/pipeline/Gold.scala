@@ -24,8 +24,8 @@ import graft.ops.Star.Keyed
   * Tiered by [[Tier]]: when the four silver tables fit `oneTaskBytes`,
   * the silver reads, the dim read-backs and the date slices are
   * coalesced to one partition, so every aggregate, window and the S8
-  * check plan with no Exchange (broadcast joins stay) and a table is one
-  * job of one task. At sf0.001 the build is 12 jobs: one per dim write
+  * check plan with no Exchange (broadcast joins stay) and each job runs
+  * one task. At sf0.01 the build runs 12 jobs: one per dim write
   * (two for the date dim's slices), the fact's and the bridge's writes
   * with their broadcasts, and the S8 check. `0L` forces the distributed
   * plan; PipelineSpec pins the two tiers equal.
