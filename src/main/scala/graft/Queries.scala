@@ -652,7 +652,7 @@ object Queries {
     DateDim.dateDim(s, "1997-01-01", "1998-12-31")
       .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
     val dim = s.read.parquet(path)
-    Star.assertUnique(dim, Seq("date_key"), "dim_dates_append")
+    Star.assertUnique(Star.Keyed("dim_dates_append", dim, Seq("date_key")))
     dim
   }
 

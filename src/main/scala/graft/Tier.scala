@@ -29,10 +29,17 @@ object Tier {
     * build's gold tables and the opportunity rank coalesce their inputs
     * to one partition, so every aggregate and window plans with no
     * Exchange and a whole table is one job of one task. Kept apart from
-    * [[LocalBytes]] because a single task stops paying well before 64 MB:
-    * q17 with `local[4]` on a 4-core VM, median of the last 10 of 15
-    * runs, took 0.57 s in one task vs 0.69 s distributed at sf0.01
-    * (inputs about 1.4 MB), but 1.42 vs 1.08 s at sf0.1 (about 14 MB). */
+    * [[LocalBytes]] because a single task stops paying well before 64 MB.
+    * Median of 10 alternating runs each, `local[4]` on a 4-core VM, one
+    * task vs distributed, over sf0.01, sf0.1 and two sf0.1 cuts
+    * (orders and lineitem kept to the lowest quarter and half of order
+    * keys):
+    *  - `Gold.run` at 0.61 / 1.94 / 3.85 / 7.32 MB of silver:
+    *    1.11 vs 1.34 s, 1.29 vs 1.50, 1.72 vs 1.72, 2.38 vs 1.78;
+    *  - the rank at 1.32 / 3.42 / 6.60 / 13.39 MB of bronze:
+    *    0.78 vs 0.87 s, 0.84 vs 0.87, 0.89 vs 0.87, 1.19 vs 1.12.
+    * Both cross over between about 3.5 and 6.5 MB; 4 MB sits at gold's
+    * break-even and below the rank's. */
   val OneTaskBytes: Long = 4L << 20
 
   /** True iff `capBytes > 0` and the inputs' summed size estimate is at

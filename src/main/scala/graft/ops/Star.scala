@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   *    defaulting so downstream star joins stay inner-joinable (J3,
   *    `:182-204`);
   *  - bridges: entity rows INNER joined to the keyed dim (J4, `:215-252`);
-  *  - S8: PKs become post-build uniqueness assertions ([[assertUnique]]).
+  *  - S8: PKs become one post-build uniqueness assertion ([[assertUnique]]).
   *
   * Scale notes: dims are small after distinct → broadcast into the fact
   * build; the fact scan itself is never shuffled (all probe-side).
@@ -55,28 +55,22 @@ object Star {
       .select(col("l_orderkey").as("o_orderkey"), col("brand_key"))
       .distinct()
 
-  /** S8 — the reference's `ALTER TABLE ... ADD PRIMARY KEY`
-    * (aact_gold_layer.sql:45-46 etc.) as a post-build assertion: Spark
-    * doesn't enforce constraints, so verify instead of declare. */
-  def assertUnique(df: DataFrame, cols: Seq[String], what: String): Unit = {
-    val dups = df.groupBy(cols.map(col): _*)
-      .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).count()
-    require(dups == 0, s"S8 uniqueness violated on $what(${cols.mkString(",")})")
-  }
-
   /** A built table and its primary key: one or two integral columns. */
   final case class Keyed(name: String, df: DataFrame, key: Seq[String])
 
-  /** S8 for several tables in ONE query: a union of exact key values
-    * tagged by table — (name, first key as BIGINT, second key as BIGINT
-    * or null) — grouped, any group above 1 a violation. The cast is
-    * exact for every integral key, so equal keys of different tables
-    * never meet (the tag splits them) and distinct keys of one table
-    * never collide (no hashing). Nulls group as in [[assertUnique]]: two
-    * rows with the same null key are a duplicate. Fails with the
-    * message [[assertUnique]] gives, naming the first violated table in
-    * `tables` order. */
-  def assertUniqueAll(tables: Seq[Keyed]): Unit = {
+  /** S8 — the reference's `ALTER TABLE ... ADD PRIMARY KEY`
+    * (aact_gold_layer.sql:45-46 etc.) as a post-build assertion: Spark
+    * doesn't enforce constraints, so verify instead of declare. Every
+    * table is checked in ONE query: a union of exact key values tagged
+    * by table — (name, first key as BIGINT, second key as BIGINT or
+    * null) — grouped, any group above 1 a violation. The cast is exact
+    * for every integral key, so equal keys of different tables never
+    * meet (the tag splits them) and distinct keys of one table never
+    * collide (no hashing). Nulls group as in a `GROUP BY`: two rows with
+    * the same null key are a duplicate. Throws
+    * `S8 uniqueness violated on <table>(<key>)`, naming the first
+    * violated table in `tables` order. */
+  def assertUnique(tables: Keyed*): Unit = {
     val tagged = tables.map { case Keyed(name, df, key) =>
       require(key.size == 1 || key.size == 2, s"S8 key of $name must be 1 or 2 columns")
       val keys = key.map { k =>

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -17,9 +18,10 @@ import graft.ops.Star.Keyed
   * it was written with (no inference job), and the fact and bridge join
   * the dims' read-backs, as the reference joins its gold dims
   * (`aact_gold_layer.sql:182-222`). After the last wave ONE query checks
-  * S8 over all five read-backs ([[Star.assertUniqueAll]]) and fails the
-  * run on a duplicate. Silver is read through [[Tables.read]], each table
-  * once.
+  * S8 over all five read-backs ([[Star.assertUnique]]). On a duplicate
+  * the run deletes `gold/` and fails: a fact or bridge joined against a
+  * duplicated dim is corrupt, so no gold table is left behind. Silver is
+  * read through [[Tables.read]], each table once.
   *
   * Tiered by [[Tier]]: when the four silver tables fit `oneTaskBytes`,
   * the silver reads, the dim read-backs and the date slices are
@@ -75,6 +77,11 @@ object Gold {
         "fact_orders", "o_orderkey"),
       () => keyed(Star.bridgeOrderBrand(lineitem, part, dimBrand),
         "bridge_order_brand", "o_orderkey", "brand_key"))
-    Star.assertUniqueAll(dims ++ facts)
+    try Star.assertUnique(dims ++ facts: _*)
+    catch { case e: IllegalArgumentException =>
+      val gold = new Path(s"$outDir/gold")
+      gold.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(gold, true)
+      throw e
+    }
   }
 }

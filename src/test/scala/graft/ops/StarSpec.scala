@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.ops.Star.Keyed
 
 class StarSpec extends SparkSpec {
 
@@ -35,45 +36,42 @@ class StarSpec extends SparkSpec {
   }
 
   test("assertUnique passes on unique keys and throws on duplicates (S8)") {
-    Star.assertUnique(customer, Seq("c_custkey"), "customer")
+    Star.assertUnique(Keyed("customer", customer, Seq("c_custkey")))
     val dup = df("k INT", Seq(Row(1), Row(1)))
     val ex = intercept[IllegalArgumentException] {
-      Star.assertUnique(dup, Seq("k"), "dup")
+      Star.assertUnique(Keyed("dup", dup, Seq("k")))
     }
-    ex.getMessage should include("S8 uniqueness violated")
+    ex.getMessage should include("S8 uniqueness violated on dup(k)")
   }
 
-  test("assertUniqueAll: one query names the violated table, in the given order") {
-    import Star.Keyed
+  test("assertUnique: one query names the violated table, in the given order") {
     val a = df("k INT", Seq(Row(1), Row(2)))
     val b = df("k BIGINT, j INT", Seq(Row(1L, 1), Row(1L, 2), Row(1L, 2)))
     val c = df("k SMALLINT", Seq(Row(1.toShort), Row(1.toShort)))
     val ex = intercept[IllegalArgumentException] {
-      Star.assertUniqueAll(Seq(Keyed("a", a, Seq("k")),
-        Keyed("b", b, Seq("k", "j")), Keyed("c", c, Seq("k"))))
+      Star.assertUnique(Keyed("a", a, Seq("k")),
+        Keyed("b", b, Seq("k", "j")), Keyed("c", c, Seq("k")))
     }
     // b's (1, 2) repeats and so does c's 1: b comes first.
     ex.getMessage should include("S8 uniqueness violated on b(k,j)")
-    Star.assertUniqueAll(Seq(Keyed("a", a, Seq("k")),
-      Keyed("b", b.distinct(), Seq("k", "j"))))
+    Star.assertUnique(Keyed("a", a, Seq("k")),
+      Keyed("b", b.distinct(), Seq("k", "j")))
   }
 
-  test("assertUniqueAll: equal keys in different tables never collide; nulls as before") {
-    import Star.Keyed
+  test("assertUnique: equal keys in different tables never collide; null keys group") {
     val a = df("k INT", Seq(Row(1), Row(2), Row(null)))
     val b = df("k BIGINT", Seq(Row(1L), Row(2L), Row(null)))
     val pair = df("k BIGINT, j INT", Seq(Row(1L, null), Row(1L, 1), Row(null, 1)))
-    Star.assertUniqueAll(Seq(Keyed("a", a, Seq("k")), Keyed("b", b, Seq("k")),
-      Keyed("pair", pair, Seq("k", "j"))))
-    // Two null keys are a duplicate, as in assertUnique's groupBy.
+    Star.assertUnique(Keyed("a", a, Seq("k")), Keyed("b", b, Seq("k")),
+      Keyed("pair", pair, Seq("k", "j")))
+    // Two null keys are a duplicate, as in a GROUP BY.
     val nulls = df("k BIGINT, j INT", Seq(Row(1L, null), Row(1L, null)))
-    intercept[IllegalArgumentException](Star.assertUnique(nulls, Seq("k", "j"), "nulls"))
     intercept[IllegalArgumentException](
-      Star.assertUniqueAll(Seq(Keyed("nulls", nulls, Seq("k", "j")))))
+      Star.assertUnique(Keyed("nulls", nulls, Seq("k", "j"))))
       .getMessage should include("S8 uniqueness violated on nulls(k,j)")
     // A key that does not cast exactly to BIGINT is refused, not checked.
     intercept[IllegalArgumentException](
-      Star.assertUniqueAll(Seq(Keyed("s", strDf("k", Seq("x")), Seq("k")))))
+      Star.assertUnique(Keyed("s", strDf("k", Seq("x")), Seq("k"))))
   }
 
   test("bridge: distinct (order, dim-key) pairs via lineitem (J4)") {
@@ -83,6 +81,6 @@ class StarSpec extends SparkSpec {
       Row(10L, 3L), Row(11L, 1L)))
     val bridge = Star.bridgeOrderBrand(lineitem, part, Star.dim(part, "p_brand", "brand_key"))
     bridge.count() shouldBe 3
-    Star.assertUnique(bridge, Seq("o_orderkey", "brand_key"), "bridge")
+    Star.assertUnique(Keyed("bridge", bridge, Seq("o_orderkey", "brand_key")))
   }
 }

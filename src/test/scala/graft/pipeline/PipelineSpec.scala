@@ -136,6 +136,7 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
         .write.mode(SaveMode.Append).partitionBy("order_year").parquet(path)
       val e = intercept[IllegalArgumentException](Gold.run(spark, dup))
       e.getMessage should include("S8 uniqueness violated on fact_orders(o_orderkey)")
+      new File(s"$dup/gold").exists() shouldBe false
     } finally FileUtils.deleteDirectory(new File(dup))
   }
 }
