@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one Spark session config every `graft` main runs on ([[Bench]],
-  * [[BenchOne]], [[PlanDump]], [[Verify]], [[VerifyScale]], [[IoProbe]]),
+  * [[BenchOne]], [[Probe]], [[PlanDump]], [[Verify]], [[VerifyScale]]),
   * so a drill times the plans the bench times. The shuffle partition
   * count is the only thing a caller chooses: 8 for the small-cell
   * timing mains, `cpus` for the dumps that run 10× data.

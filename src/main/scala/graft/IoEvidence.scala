@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Machine-checked IO evidence for the incremental-maintenance family
@@ -56,41 +55,9 @@ object IoEvidence {
     * the session concurrently (Bench and forked-sequential specs: true
     * by construction). */
   def measure(spark: SparkSession, df: => DataFrame): Io = {
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val recs = new java.util.concurrent.atomic.AtomicLong
-    val shuf = new java.util.concurrent.atomic.AtomicLong
-    val cpu = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          bytes.addAndGet(m.inputMetrics.bytesRead)
-          recs.addAndGet(m.inputMetrics.recordsRead)
-          shuf.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          cpu.addAndGet(m.executorCpuTime)
-        }
-      }
-    }
     spark.catalog.clearCache()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      df.write.format("noop").mode("overwrite").save()
-      // The listener bus is async and its drain API is private[spark].
-      // Poll until the sums are STABLE across two consecutive reads
-      // (ADVICE r14 #4): a fixed sleep undercounts asymmetrically — the
-      // rebuild side runs more tasks, so late straggler TaskEnd events
-      // disproportionately undercount the rebuild denominator and
-      // inflate the published maint/rebuild ratio on a loaded box.
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var prev = (-1L, -1L, -1L, -1L)
-      var cur = (bytes.get, recs.get, shuf.get, cpu.get)
-      while (cur != prev && System.nanoTime() < deadline) {
-        prev = cur
-        Thread.sleep(200)
-        cur = (bytes.get, recs.get, shuf.get, cpu.get)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, rec) = Probe.run(spark)(df.write.format("noop").mode("overwrite").save())
     spark.catalog.clearCache()
-    Io(bytes.get, recs.get, shuf.get, cpu.get)
+    rec.io
   }
 }

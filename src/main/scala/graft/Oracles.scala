@@ -3924,7 +3924,10 @@ object Oracles {
     // unrolled Lloyd iterations), the NEW snapshot's nearest-centroid
     // assignment, and the cluster-sharded exact-cosine dominance — so a
     // hash match is the batch≡incremental theorem for the maintained
-    // survivor manifest.
+    // survivor manifest. Each nearest-centroid argmin is a streaming
+    // `min({'d': dist, 'c': cluster_id}).c` per point (distance, then
+    // cluster id, as a sort would order them), so the 10× oracle never
+    // sorts the point × centroid cross join.
     "q174_incremental_semdedup" ->
       """WITH pts AS MATERIALIZED (
         |  SELECT vec_id AS id,
@@ -3940,13 +3943,11 @@ object Oracles {
         |    FROM pts_old)
         |  WHERE rn <= (SELECT k FROM kk)),
         |a1 AS (
-        |  SELECT id, qv, cluster_id FROM (
-        |    SELECT p.id, p.qv, c.cluster_id,
-        |      row_number() OVER (PARTITION BY p.id ORDER BY
-        |        list_sum(list_transform(list_zip(p.qv, c.cv),
-        |          z -> (z[1]-z[2])*(z[1]-z[2]))), c.cluster_id) AS rn
-        |    FROM pts_old p CROSS JOIN c0 c)
-        |  WHERE rn = 1),
+        |  SELECT p.id, any_value(p.qv) AS qv,
+        |    min({'d': list_sum(list_transform(list_zip(p.qv, c.cv),
+        |      z -> (z[1]-z[2])*(z[1]-z[2]))), 'c': c.cluster_id}).c AS cluster_id
+        |  FROM pts_old p CROSS JOIN c0 c
+        |  GROUP BY p.id),
         |u1 AS (
         |  SELECT cluster_id, pos,
         |    CAST(floor(CAST(sum(v) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS BIGINT) AS cv1
@@ -3954,13 +3955,11 @@ object Oracles {
         |  GROUP BY cluster_id, pos),
         |c1 AS (SELECT cluster_id, list(cv1 ORDER BY pos) AS cv FROM u1 GROUP BY cluster_id),
         |a2 AS (
-        |  SELECT id, qv, cluster_id FROM (
-        |    SELECT p.id, p.qv, c.cluster_id,
-        |      row_number() OVER (PARTITION BY p.id ORDER BY
-        |        list_sum(list_transform(list_zip(p.qv, c.cv),
-        |          z -> (z[1]-z[2])*(z[1]-z[2]))), c.cluster_id) AS rn
-        |    FROM pts_old p CROSS JOIN c1 c)
-        |  WHERE rn = 1),
+        |  SELECT p.id, any_value(p.qv) AS qv,
+        |    min({'d': list_sum(list_transform(list_zip(p.qv, c.cv),
+        |      z -> (z[1]-z[2])*(z[1]-z[2]))), 'c': c.cluster_id}).c AS cluster_id
+        |  FROM pts_old p CROSS JOIN c1 c
+        |  GROUP BY p.id),
         |u2 AS (
         |  SELECT cluster_id, pos,
         |    CAST(floor(CAST(sum(v) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS BIGINT) AS cv1
@@ -3969,13 +3968,11 @@ object Oracles {
         |c2 AS MATERIALIZED (
         |  SELECT cluster_id, list(cv1 ORDER BY pos) AS cv FROM u2 GROUP BY cluster_id),
         |fin AS MATERIALIZED (
-        |  SELECT id, cluster_id FROM (
-        |    SELECT p.id, c.cluster_id,
-        |      row_number() OVER (PARTITION BY p.id ORDER BY
-        |        list_sum(list_transform(list_zip(p.qv, c.cv),
-        |          z -> (z[1]-z[2])*(z[1]-z[2]))), c.cluster_id) AS rn
-        |    FROM pts_new p CROSS JOIN c2 c)
-        |  WHERE rn = 1),
+        |  SELECT p.id,
+        |    min({'d': list_sum(list_transform(list_zip(p.qv, c.cv),
+        |      z -> (z[1]-z[2])*(z[1]-z[2]))), 'c': c.cluster_id}).c AS cluster_id
+        |  FROM pts_new p CROSS JOIN c2 c
+        |  GROUP BY p.id),
         |e AS MATERIALIZED (
         |  SELECT vec_id, embedding::DOUBLE[] AS v,
         |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -51,29 +48,6 @@ trait SparkSpec extends AnyFunSuite with Matchers {
     sel.collect().toSeq.map(r => r.get(0).asInstanceOf[T])
   }
 
-  /** Spark jobs started while `body` runs. The listener bus delivers
-    * events in order, so once the listener has seen a sentinel job start
-    * it has seen every job that started before it. */
-  def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val starts = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.put(Option(e.properties).flatMap(p => Option(p.getProperty("sentinel")))
-          .getOrElse(""))
-    }
-    def sentinel(tag: String): Seq[String] = {
-      sc.setLocalProperty("sentinel", tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("sentinel", null)
-      Iterator.continually(starts.poll(60, TimeUnit.SECONDS))
-        .map { t => assert(t != null, s"sentinel $tag never started"); t }
-        .takeWhile(_ != tag).toSeq
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel("before")
-      body
-      sentinel("after").size
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Spark jobs started while `body` runs, as [[Probe]] records them. */
+  def jobsDuring(body: => Unit): Int = Probe.run(spark)(body)._2.jobs
 }

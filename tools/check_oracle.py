@@ -6,9 +6,11 @@ Mimics the driver's t2 gate: for each query, load the Spark-written parquet
 then compare row count, schema (sorted column names) and a hash of the
 value matrix with columns sorted by name and rows sorted canonically.
 
+DuckDB runs on duckdb_connect's settings, not on its defaults.
+
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
-import sys, json, glob, hashlib
+import sys, json, glob, hashlib, os
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -36,8 +38,23 @@ def frame_hash(cols, rows):
     return h.hexdigest()
 
 
-def main(sf_dir, out_dir, skip_missing=False):
+def duckdb_connect(out_dir):
+    """A DuckDB connection and the settings it was given: every core this
+    process may use, half the physical memory, and <out_dir>/duckdb_tmp as
+    the spill directory, so a spill lands in a known place."""
+    settings = {
+        "threads": len(os.sched_getaffinity(0)),
+        "memory_limit": f"{os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') // 2**21}MB",
+        "temp_directory": os.path.join(os.path.abspath(out_dir), "duckdb_tmp"),
+    }
     con = duckdb.connect()
+    for k, v in settings.items():
+        con.execute(f"SET {k} = '{v}'")
+    return con, settings
+
+
+def main(sf_dir, out_dir, skip_missing=False):
+    con, _ = duckdb_connect(out_dir)
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
@@ -89,7 +106,6 @@ def main(sf_dir, out_dir, skip_missing=False):
             print(f"PASS {name} ({len(s_rows)} rows)")
             n_pass += 1
     # rows-only queries (no oracle): just report counts
-    import os
     for d in sorted(glob.glob(f"{out_dir}/*/")):
         name = os.path.basename(d.rstrip("/"))
         if name not in oracle:

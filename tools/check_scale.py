@@ -8,9 +8,9 @@ and compares row count / schema / value-matrix hash exactly like the
 driver's t2 gate (check_oracle.py's canon/frame_hash, verbatim). Writes
 a JSON record suitable for committing as SCALECHECK_r{N}.json.
 
-DuckDB's threads and memory limit are set from the machine (every core
-this process may use, half the physical memory) and its spill directory
-is <verifyScaleOutDir>/duckdb_tmp, so a spill lands in a known place.
+DuckDB runs on check_oracle.duckdb_connect's settings (every core this
+process may use, half the physical memory, spill directory
+<verifyScaleOutDir>/duckdb_tmp), recorded under "duckdb".
 Each cell records its oracle time (failing cells too) and the process's
 peak RSS after it, so the cell whose oracle spilled or grew the heap
 shows under its own name.
@@ -18,28 +18,17 @@ shows under its own name.
 Usage: python3 tools/check_scale.py <verifyScaleOutDir> [out.json]
 """
 import sys, json, glob, os, resource, time
-import duckdb
 
 # The ONE canonicalization/hash implementation: a fix to the t2 gate's
 # canon/frame_hash must reach this gate too, or the two hash checks
 # disagree on identical frames.
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from check_oracle import canon, frame_hash  # noqa: E402
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+from check_oracle import TABLES, duckdb_connect, frame_hash  # noqa: E402
 
 
 def main(out_dir, out_json=None):
     scale_dir = open(f"{out_dir}/scale_dir.txt").read().strip()
-    settings = {
-        "threads": len(os.sched_getaffinity(0)),
-        "memory_limit": f"{os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') // 2**21}MB",
-        "temp_directory": os.path.join(os.path.abspath(out_dir), "duckdb_tmp"),
-    }
-    con = duckdb.connect()
-    for k, v in settings.items():
-        con.execute(f"SET {k} = '{v}'")
+    con, settings = duckdb_connect(out_dir)
     for t in TABLES:
         p = os.path.join(scale_dir, f"{t}.parquet")
         if not os.path.exists(p):
