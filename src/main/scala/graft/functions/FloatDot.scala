@@ -1,71 +1,36 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native Catalyst expression: left-fold double dot product of two FLOAT
-  * arrays — the one hot-loop computation in this library that the built-in
-  * surface cannot express efficiently (`zip_with`+`aggregate` lambdas are
-  * CodegenFallback: one interpreted expression-tree walk per element, per
-  * row). This expression generates a tight primitive Java loop inside
-  * whole-stage codegen instead — preference order (b) of SURVEY §7.5:
-  * custom Expression over UDF.
+/** Left-fold double dot product of two FLOAT arrays — the kernel behind
+  * `graft_float_dot`, the one hot-loop computation in this library that
+  * the built-in surface cannot express efficiently (`zip_with`+`aggregate`
+  * lambdas are CodegenFallback: one interpreted expression-tree walk per
+  * element, per row). The SQL function is a `StaticInvoke` of [[dot]], so
+  * the loop runs as one static call from inside whole-stage codegen —
+  * preference order (b) of SURVEY §7.5: native expression over UDF.
   *
   * Arithmetic is IDENTICAL to the fold the DuckDB oracle runs
   * (acc += (double)x_i * (double)y_i, left to right), so cosines built on
   * it stay bit-for-bit comparable. Mismatched lengths fold the common
   * prefix (embeddings are fixed-width; zip_with would null out instead).
+  * The `Array[Float]` overload is the same fold for the one-task tiers.
   */
-case class FloatDot(left: Expression, right: Expression)
-  extends BinaryExpression {
+object FloatDot {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<FLOAT> arguments, " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "graft_float_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
     var i = 0
-    while (i < n) {
-      acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
+    while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += (double)$x.getFloat($i) * (double)$y.getFloat($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  def dot(x: Array[Float], y: Array[Float]): Double = {
+    val n = math.min(x.length, y.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += x(i).toDouble * y(i).toDouble; i += 1 }
+    acc
+  }
 }

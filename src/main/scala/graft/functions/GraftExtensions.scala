@@ -1,259 +1,200 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression,
+  ExpressionInfo, If, InheritAnalysisRules, IsNull, Literal, RuntimeReplaceable, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types._
 
 /** Session extension registering graft's native functions — install with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
   * (or `withExtensions`); afterwards the functions resolve by name through
   * `call_function` / SQL. The public, supported way to ship custom
-  * Catalyst expressions — no private Spark API touched.
+  * Catalyst functions — no private Spark API touched.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.floatDot)
-    ext.injectFunction(GraftExtensions.longSqDist)
-    ext.injectFunction(GraftExtensions.rollingHash)
-    ext.injectFunction(GraftExtensions.tokenEstimate)
-    ext.injectFunction(GraftExtensions.kmvDistinct)
-    ext.injectFunction(GraftExtensions.bloomAgg)
-    ext.injectFunction(GraftExtensions.bloomMightContain)
-    ext.injectFunction(GraftExtensions.bmpEncode)
-    ext.injectFunction(GraftExtensions.bmpStats)
-    ext.injectFunction(GraftExtensions.wavEncode)
-    ext.injectFunction(GraftExtensions.wavStats)
-    ext.injectFunction(GraftExtensions.wavEncodeUlaw)
-    ext.injectFunction(GraftExtensions.wavEncodeAlaw)
-    ext.injectFunction(GraftExtensions.wavEncodeIma)
-    ext.injectFunction(GraftExtensions.wavSamples)
-    ext.injectFunction(GraftExtensions.bmpPixels)
-    ext.injectFunction(GraftExtensions.aviEncode)
-    ext.injectFunction(GraftExtensions.aviStats)
-    ext.injectFunction(GraftExtensions.mjpegEncode)
-    ext.injectFunction(GraftExtensions.mjpegStats)
-    ext.injectFunction(GraftExtensions.deflateLen)
-    ext.injectFunction(GraftExtensions.bmpResize)
-    ext.injectFunction(GraftExtensions.wavDownsample)
-    ext.injectFunction(GraftExtensions.pngEncode)
-    ext.injectFunction(GraftExtensions.pngStats)
-    ext.injectFunction(GraftExtensions.pngResize)
-    ext.injectFunction(GraftExtensions.pngPixels)
-    ext.injectFunction(GraftExtensions.jpegEncode)
-    ext.injectFunction(GraftExtensions.jpegStats)
-    ext.injectFunction(GraftExtensions.projEntries)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(f => ext.injectFunction(f.registration))
 }
 
+/** A scalar graft function call as the analyzer sees it: `name(parameters)`
+  * for output column names and `sql`, analysed and executed as its
+  * `replacement` (the kernel's `StaticInvoke`), which the optimizer
+  * substitutes in. */
+case class GraftCall(name: String, parameters: Seq[Expression], replacement: Expression)
+  extends RuntimeReplaceable with InheritAnalysisRules {
+  override def prettyName: String = name
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(replacement = newChild)
+}
+
+/** The function table: one row per `graft_*` name. A scalar row names its
+  * kernel — a static method on an object in this package — with its
+  * result and argument types, and becomes Spark's own `StaticInvoke`:
+  * the kernel runs as one static call per row inside whole-stage codegen
+  * (the ICDE 2025 operator-fusion pattern) from ONE definition, which the
+  * interpreted path calls too. NULL in → NULL out; a null result is SQL
+  * NULL. Non-array arguments are implicitly cast to the declared type;
+  * an ARRAY argument must carry the declared element type, because the
+  * implicit cast would silently narrow `ARRAY<DOUBLE>` to `ARRAY<FLOAT>`.
+  * The aggregate and bloom rows keep their own builders; every row's
+  * argument count is checked before it builds.
+  */
 object GraftExtensions {
-  val floatDot: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_float_dot"),
-    new ExpressionInfo(classOf[FloatDot].getName, null, "graft_float_dot",
-      "graft_float_dot(a, b) - left-fold double dot product of two float arrays", ""),
-    (children: Seq[Expression]) => FloatDot(children.head, children(1)))
 
-  val longSqDist: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_sqdist_q"),
-    new ExpressionInfo(classOf[LongSqDist].getName, null, "graft_sqdist_q",
-      "graft_sqdist_q(a, b) - exact squared L2 distance of two BIGINT arrays", ""),
-    (children: Seq[Expression]) => LongSqDist(children.head, children(1)))
+  final case class Fn(name: String, usage: String, className: String, arity: Range,
+                      build: Seq[Expression] => Expression) {
+    def registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+      FunctionIdentifier(name),
+      new ExpressionInfo(className, null, name, s"$name$usage", ""),
+      args => {
+        if (!arity.contains(args.size)) throw new AnalysisException(
+          "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+            "functionName" -> s"`$name`",
+            "expectedNum" ->
+              (if (arity.size == 1) s"${arity.start}" else arity.mkString("[", ", ", "]")),
+            "actualNum" -> args.size.toString,
+            "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+        build(args)
+      })
+  }
 
-  val rollingHash: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_rolling_hash"),
-    new ExpressionInfo(classOf[RollingHash].getName, null, "graft_rolling_hash",
-      "graft_rolling_hash(s) - Rabin-Karp (acc*31+codepoint) mod 1e9+7 over s", ""),
-    (children: Seq[Expression]) => RollingHash(children.head))
-
-  val tokenEstimate: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_token_estimate"),
-    new ExpressionInfo(classOf[TokenEstimate].getName, null, "graft_token_estimate",
-      "graft_token_estimate(s) - BPE-ish token estimate: ceil(run/4) over letter/digit/punct runs", ""),
-    (children: Seq[Expression]) => TokenEstimate(children.head))
-
-  val kmvDistinct: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_kmv_distinct"),
-    new ExpressionInfo(classOf[KmvDistinct].getName, null, "graft_kmv_distinct",
-      "graft_kmv_distinct(col[, k]) - KMV cardinality sketch: k smallest xxhash64 values; exact below k distinct, (k-1)*2^64/kth_min above", ""),
-    (children: Seq[Expression]) => {
-      val k = children.lift(1) match {
-        case Some(org.apache.spark.sql.catalyst.expressions.Literal(v, _)) =>
-          v.toString.toInt
-        case Some(other) =>
-          throw new IllegalArgumentException(
-            s"graft_kmv_distinct: k must be an integer literal, got $other")
-        case None => 256
+  private def scalar(name: String, usage: String, kernel: AnyRef, method: String,
+                     result: DataType, argTypes: DataType*): Fn = {
+    val cls = kernel.getClass
+    // A primitive result is never null; a boxed or object one (a codec's
+    // null on malformed input) is checked per row.
+    val primitive = cls.getMethods.exists(m => m.getName == method && m.getReturnType.isPrimitive)
+    Fn(name, usage, cls.getName.stripSuffix("$"), argTypes.size to argTypes.size, args => {
+      args.zip(argTypes).zipWithIndex.foreach {
+        case ((a, want: ArrayType), i) if (a.dataType match {
+              case ArrayType(et, _) => et != want.elementType
+              case t => t != NullType
+            }) =>
+          throw new AnalysisException("DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", Map(
+            "sqlExpr" -> s""""$name(${args.map(_.sql).mkString(", ")})"""",
+            "paramIndex" -> Seq("first", "second", "third", "fourth")(i),
+            "requiredType" -> s""""${want.sql}"""",
+            "inputSql" -> s""""${a.sql}"""",
+            "inputType" -> s""""${a.dataType.sql}""""))
+        case _ =>
       }
-      // xxhash64(NULL) passes the seed through (counting null as a value);
-      // null-guard so NULL inputs are skipped like every SQL aggregate.
-      import org.apache.spark.sql.catalyst.expressions.{If, IsNull, Literal, XxHash64}
-      val hashed = If(IsNull(children.head),
-        Literal(null, org.apache.spark.sql.types.LongType),
-        new XxHash64(Seq(children.head)))
-      KmvDistinct(hashed, k).toAggregateExpression()
+      GraftCall(name, args, StaticInvoke(cls, result, method, args, argTypes,
+        returnNullable = !primitive))
     })
+  }
 
-  // Spark ships BloomFilterAggregate/BloomFilterMightContain for its own
-  // runtime row-group filtering but does not register them in the public
-  // function registry — these graft aliases expose them (the semi-join
-  // prefilter every 100 TB pipeline wants: build a bloom over the small
-  // side's keys, drop non-matching corpus rows BEFORE the shuffle).
-  val bloomAgg: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_bloom_agg"),
-    new ExpressionInfo(
-      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-      null, "graft_bloom_agg",
-      "graft_bloom_agg(xxhash64(col), nItems, nBits) - bloom filter over the hashed values", ""),
-    (children: Seq[Expression]) =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        children.head, children(1), children(2)).toAggregateExpression())
+  private val FloatArr = ArrayType(FloatType)
+  private val LongArr = ArrayType(LongType)
+  private val seedWH = Seq(LongType, IntegerType, IntegerType)
+  private val seedWHN = seedWH :+ IntegerType
+  private val payloadWH = Seq(BinaryType, IntegerType, IntegerType)
 
-  val bmpEncode: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_bmp_encode"),
-    new ExpressionInfo(classOf[BmpEncode].getName, null, "graft_bmp_encode",
-      "graft_bmp_encode(seed, width, height) - deterministic 24-bit uncompressed BMP payload", ""),
-    (children: Seq[Expression]) => BmpEncode(children.head, children(1), children(2)))
-
-  val bmpStats: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_bmp_stats"),
-    new ExpressionInfo(classOf[BmpStats].getName, null, "graft_bmp_stats",
-      "graft_bmp_stats(payload) - parse a 24-bit BMP: struct(width, height, sum_r, sum_g, sum_b), NULL if malformed", ""),
-    (children: Seq[Expression]) => BmpStats(children.head))
-
-  val wavEncode: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_wav_encode"),
-    new ExpressionInfo(classOf[WavEncode].getName, null, "graft_wav_encode",
-      "graft_wav_encode(seed, n_samples, sample_rate) - deterministic PCM mono 16-bit WAV payload", ""),
-    (children: Seq[Expression]) => WavEncode(children.head, children(1), children(2)))
-
-  val wavStats: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_wav_stats"),
-    new ExpressionInfo(classOf[WavStats].getName, null, "graft_wav_stats",
-      "graft_wav_stats(payload) - parse a RIFF/WAVE (PCM 16-bit or G.711 u-law 8-bit, decoded): struct(sample_rate, n_samples, sum_abs, peak), NULL if malformed", ""),
-    (children: Seq[Expression]) => WavStats(children.head))
-
-  val wavEncodeUlaw: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_wav_encode_ulaw"),
-    new ExpressionInfo(classOf[WavEncodeUlaw].getName, null, "graft_wav_encode_ulaw",
-      "graft_wav_encode_ulaw(seed, n_samples, sample_rate) - deterministic G.711 u-law compressed mono WAV payload", ""),
-    (children: Seq[Expression]) => WavEncodeUlaw(children.head, children(1), children(2)))
-
-  val wavEncodeAlaw: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_wav_encode_alaw"),
-    new ExpressionInfo(classOf[WavEncodeAlaw].getName, null, "graft_wav_encode_alaw",
-      "graft_wav_encode_alaw(seed, n_samples, sample_rate) - deterministic G.711 A-law compressed mono WAV payload", ""),
-    (children: Seq[Expression]) => WavEncodeAlaw(children.head, children(1), children(2)))
-
-  val wavEncodeIma: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_wav_encode_ima"),
-    new ExpressionInfo(classOf[WavEncodeIma].getName, null, "graft_wav_encode_ima",
-      "graft_wav_encode_ima(seed, n_samples, sample_rate) - deterministic IMA/DVI ADPCM compressed mono WAV payload", ""),
-    (children: Seq[Expression]) => WavEncodeIma(children.head, children(1), children(2)))
-
-  val wavSamples: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_wav_samples"),
-    new ExpressionInfo(classOf[WavSamples].getName, null, "graft_wav_samples",
-      "graft_wav_samples(payload) - decoded PCM sample array of a supported WAVE, NULL if malformed", ""),
-    (children: Seq[Expression]) => WavSamples(children.head))
-
-  val bmpPixels: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_bmp_pixels"),
-    new ExpressionInfo(classOf[BmpPixels].getName, null, "graft_bmp_pixels",
-      "graft_bmp_pixels(payload) - decoded RGB pixel array of a 24-bit BMP: struct(width, height, pix), NULL if malformed", ""),
-    (children: Seq[Expression]) => BmpPixels(children.head))
-
-  val aviEncode: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_avi_encode"),
-    new ExpressionInfo(classOf[AviEncode].getName, null, "graft_avi_encode",
-      "graft_avi_encode(seed, width, height, n_frames) - deterministic uncompressed-DIB AVI payload", ""),
-    (children: Seq[Expression]) => AviEncode(children.head, children(1), children(2), children(3)))
-
-  val aviStats: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_avi_stats"),
-    new ExpressionInfo(classOf[AviStats].getName, null, "graft_avi_stats",
-      "graft_avi_stats(payload) - decode an uncompressed-DIB AVI: struct(width, height, n_frames, frames), NULL if malformed", ""),
-    (children: Seq[Expression]) => AviStats(children.head))
-
-  val deflateLen: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_deflate_len"),
-    new ExpressionInfo(classOf[DeflateLen].getName, null, "graft_deflate_len",
-      "graft_deflate_len(text, level) - DEFLATE-compressed byte length of the UTF-8 text (repetitiveness/quality signal)", ""),
-    (children: Seq[Expression]) => DeflateLen(children.head, children(1)))
-
-  val mjpegEncode: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_mjpeg_encode"),
-    new ExpressionInfo(classOf[MjpegEncode].getName, null, "graft_mjpeg_encode",
-      "graft_mjpeg_encode(seed, width, height, n_frames) - deterministic Motion-JPEG AVI payload (one baseline JFIF per frame)", ""),
-    (children: Seq[Expression]) => MjpegEncode(children.head, children(1), children(2), children(3)))
-
-  val mjpegStats: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_mjpeg_stats"),
-    new ExpressionInfo(classOf[MjpegStats].getName, null, "graft_mjpeg_stats",
-      "graft_mjpeg_stats(payload) - decode a Motion-JPEG AVI through the real JPEG decoder: struct(width, height, n_frames, frames), NULL if malformed", ""),
-    (children: Seq[Expression]) => MjpegStats(children.head))
-
-  val bmpResize: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_bmp_resize"),
-    new ExpressionInfo(classOf[BmpResize].getName, null, "graft_bmp_resize",
-      "graft_bmp_resize(payload, w, h) - nearest-neighbor downscale re-encoded as a real BMP", ""),
-    (children: Seq[Expression]) => BmpResize(children.head, children(1), children(2)))
-
-  val wavDownsample: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_wav_downsample"),
-    new ExpressionInfo(classOf[WavDownsample].getName, null, "graft_wav_downsample",
-      "graft_wav_downsample(payload, factor) - keep every factor-th sample, re-encoded as a real WAV", ""),
-    (children: Seq[Expression]) => WavDownsample(children.head, children(1)))
-
-  val pngEncode: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_png_encode"),
-    new ExpressionInfo(classOf[PngEncode].getName, null, "graft_png_encode",
-      "graft_png_encode(seed, width, height) - deterministic zlib-compressed 8-bit truecolor PNG payload", ""),
-    (children: Seq[Expression]) => PngEncode(children.head, children(1), children(2)))
-
-  val pngStats: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_png_stats"),
-    new ExpressionInfo(classOf[PngStats].getName, null, "graft_png_stats",
-      "graft_png_stats(payload) - decode an 8-bit truecolor or grayscale PNG (inflate + de-filter): struct(width, height, sum_r, sum_g, sum_b), NULL if malformed", ""),
-    (children: Seq[Expression]) => PngStats(children.head))
-
-  val pngResize: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_png_resize"),
-    new ExpressionInfo(classOf[PngResize].getName, null, "graft_png_resize",
-      "graft_png_resize(payload, w, h) - nearest-neighbor downscale through the full PNG decode path, re-encoded as a real PNG", ""),
-    (children: Seq[Expression]) => PngResize(children.head, children(1), children(2)))
-
-  val pngPixels: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_png_pixels"),
-    new ExpressionInfo(classOf[PngPixels].getName, null, "graft_png_pixels",
-      "graft_png_pixels(payload) - decoded RGB pixel array of a supported PNG in graft_bmp_pixels' layout: struct(width, height, pix), NULL if malformed", ""),
-    (children: Seq[Expression]) => PngPixels(children.head))
-
-  val jpegEncode: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_jpeg_encode"),
-    new ExpressionInfo(classOf[JpegEncode].getName, null, "graft_jpeg_encode",
-      "graft_jpeg_encode(seed, width, height) - deterministic baseline grayscale JFIF payload (FDCT + quantize + Huffman)", ""),
-    (children: Seq[Expression]) => JpegEncode(children.head, children(1), children(2)))
-
-  val jpegStats: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_jpeg_stats"),
-    new ExpressionInfo(classOf[JpegStats].getName, null, "graft_jpeg_stats",
-      "graft_jpeg_stats(payload) - decode a baseline sequential JPEG (Huffman + dequant + IDCT; grayscale or YCbCr up to 2x2 sampling): struct(width, height, sum_r, sum_g, sum_b), NULL if malformed or progressive", ""),
-    (children: Seq[Expression]) => JpegStats(children.head))
-
-  val projEntries: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_proj_entries"),
-    new ExpressionInfo(classOf[ProjEntries].getName, null, "graft_proj_entries",
-      "graft_proj_entries(qv, tables, bits, flips) - signed-projection LSH bucket entries " +
-        "array<struct<t,sig>> for a quantized BIGINT vector (exact integer arithmetic)", ""),
-    (children: Seq[Expression]) =>
-      ProjEntries(children.head, children(1), children(2), children(3)))
-
-  val bloomMightContain: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    new FunctionIdentifier("graft_might_contain"),
-    new ExpressionInfo(
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-      null, "graft_might_contain",
-      "graft_might_contain(bloom, xxhash64(col)) - membership probe; false is definite", ""),
-    (children: Seq[Expression]) =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        children.head, children(1)))
+  val functions: Seq[Fn] = Seq(
+    scalar("graft_float_dot", "(a, b) - left-fold double dot product of two float arrays",
+      FloatDot, "dot", DoubleType, FloatArr, FloatArr),
+    scalar("graft_sqdist_q", "(a, b) - exact squared L2 distance of two BIGINT arrays",
+      LongSqDist, "sqDist", LongType, LongArr, LongArr),
+    scalar("graft_rolling_hash", "(s) - Rabin-Karp (acc*31+codepoint) mod 1e9+7 over s",
+      RollingHash, "hash", LongType, StringType),
+    scalar("graft_token_estimate",
+      "(s) - BPE-ish token estimate: ceil(run/4) over letter/digit/punct runs",
+      TokenEstimate, "estimate", LongType, StringType),
+    scalar("graft_deflate_len", "(text, level) - DEFLATE-compressed byte length of the " +
+      "UTF-8 text (repetitiveness/quality signal); NULL on a level outside 1-9",
+      TextCompress, "deflateLen", IntegerType, StringType, IntegerType),
+    scalar("graft_proj_entries", "(qv, tables, bits, flips) - signed-projection LSH bucket " +
+      "entries array<struct<t,sig>> for a quantized BIGINT vector (exact integer arithmetic)",
+      ProjEntries, "compute", ProjEntries.outType, LongArr, IntegerType, IntegerType, IntegerType),
+    scalar("graft_bmp_encode",
+      "(seed, width, height) - deterministic 24-bit uncompressed BMP payload",
+      MediaCodec, "bmpEncode", BinaryType, seedWH: _*),
+    scalar("graft_bmp_stats", "(payload) - parse a 24-bit BMP: struct(width, height, " +
+      "sum_r, sum_g, sum_b), NULL if malformed",
+      MediaCodec, "bmpStats", MediaCodec.bmpStatsType, BinaryType),
+    scalar("graft_bmp_pixels", "(payload) - decoded RGB pixel array of a 24-bit BMP: " +
+      "struct(width, height, pix), NULL if malformed",
+      MediaCodec, "bmpPixels", MediaCodec.bmpPixelsType, BinaryType),
+    scalar("graft_bmp_resize",
+      "(payload, w, h) - nearest-neighbor downscale re-encoded as a real BMP",
+      MediaCodec, "bmpResize", BinaryType, payloadWH: _*),
+    scalar("graft_wav_encode",
+      "(seed, n_samples, sample_rate) - deterministic PCM mono 16-bit WAV payload",
+      MediaCodec, "wavEncode", BinaryType, seedWH: _*),
+    scalar("graft_wav_encode_ulaw", "(seed, n_samples, sample_rate) - deterministic " +
+      "G.711 u-law compressed mono WAV payload",
+      MediaCodec, "wavEncodeUlaw", BinaryType, seedWH: _*),
+    scalar("graft_wav_encode_alaw", "(seed, n_samples, sample_rate) - deterministic " +
+      "G.711 A-law compressed mono WAV payload",
+      MediaCodec, "wavEncodeAlaw", BinaryType, seedWH: _*),
+    scalar("graft_wav_encode_ima", "(seed, n_samples, sample_rate) - deterministic " +
+      "IMA/DVI ADPCM compressed mono WAV payload",
+      MediaCodec, "wavEncodeIma", BinaryType, seedWH: _*),
+    scalar("graft_wav_stats", "(payload) - parse a RIFF/WAVE (PCM 16-bit, G.711 8-bit or " +
+      "IMA ADPCM, decoded): struct(sample_rate, n_samples, sum_abs, peak), NULL if malformed",
+      MediaCodec, "wavStats", MediaCodec.wavStatsType, BinaryType),
+    scalar("graft_wav_samples",
+      "(payload) - decoded PCM sample array of a supported WAVE, NULL if malformed",
+      MediaCodec, "wavSamples", ArrayType(IntegerType, containsNull = false), BinaryType),
+    scalar("graft_wav_downsample",
+      "(payload, factor) - keep every factor-th sample, re-encoded as a real WAV",
+      MediaCodec, "wavDownsample", BinaryType, BinaryType, IntegerType),
+    scalar("graft_avi_encode",
+      "(seed, width, height, n_frames) - deterministic uncompressed-DIB AVI payload",
+      MediaCodec, "aviEncode", BinaryType, seedWHN: _*),
+    scalar("graft_avi_stats", "(payload) - decode an uncompressed-DIB AVI: struct(width, " +
+      "height, n_frames, frames), NULL if malformed",
+      MediaCodec, "aviStats", MediaCodec.aviStatsType, BinaryType),
+    scalar("graft_mjpeg_encode", "(seed, width, height, n_frames) - deterministic " +
+      "Motion-JPEG AVI payload (one baseline JFIF per frame)",
+      MediaCodec, "mjpegEncode", BinaryType, seedWHN: _*),
+    scalar("graft_mjpeg_stats", "(payload) - decode a Motion-JPEG AVI through the real " +
+      "JPEG decoder: struct(width, height, n_frames, frames), NULL if malformed",
+      MediaCodec, "mjpegStats", MediaCodec.aviStatsType, BinaryType),
+    scalar("graft_png_encode", "(seed, width, height) - deterministic zlib-compressed " +
+      "8-bit truecolor PNG payload",
+      PngCodec, "pngEncode", BinaryType, seedWH: _*),
+    scalar("graft_png_stats", "(payload) - decode an 8-bit truecolor or grayscale PNG " +
+      "(inflate + de-filter): struct(width, height, sum_r, sum_g, sum_b), NULL if malformed",
+      PngCodec, "pngStats", MediaCodec.bmpStatsType, BinaryType),
+    scalar("graft_png_pixels", "(payload) - decoded RGB pixel array of a supported PNG in " +
+      "graft_bmp_pixels' layout: struct(width, height, pix), NULL if malformed",
+      PngCodec, "pngPixels", MediaCodec.bmpPixelsType, BinaryType),
+    scalar("graft_png_resize", "(payload, w, h) - nearest-neighbor downscale through the " +
+      "full PNG decode path, re-encoded as a real PNG",
+      PngCodec, "pngResize", BinaryType, payloadWH: _*),
+    scalar("graft_jpeg_encode", "(seed, width, height) - deterministic baseline grayscale " +
+      "JFIF payload (FDCT + quantize + Huffman)",
+      JpegCodec, "jpegEncode", BinaryType, seedWH: _*),
+    scalar("graft_jpeg_stats", "(payload) - decode a baseline sequential JPEG (Huffman + " +
+      "dequant + IDCT; grayscale or YCbCr up to 2x2 sampling): struct(width, height, " +
+      "sum_r, sum_g, sum_b), NULL if malformed or progressive",
+      JpegCodec, "jpegStats", MediaCodec.bmpStatsType, BinaryType),
+    Fn("graft_kmv_distinct", "(col[, k]) - KMV cardinality sketch: k smallest xxhash64 " +
+      "values; exact below k distinct, (k-1)*2^64/kth_min above",
+      classOf[KmvDistinct].getName, 1 to 2, args => {
+        val k = args.lift(1) match {
+          case Some(Literal(v, _)) => v.toString.toInt
+          case Some(other) => throw new IllegalArgumentException(
+            s"graft_kmv_distinct: k must be an integer literal, got $other")
+          case None => 256
+        }
+        // xxhash64(NULL) passes the seed through (counting null as a value);
+        // null-guard so NULL inputs are skipped like every SQL aggregate.
+        val hashed = If(IsNull(args.head), Literal(null, LongType), new XxHash64(Seq(args.head)))
+        KmvDistinct(hashed, k).toAggregateExpression()
+      }),
+    // Spark ships BloomFilterAggregate/BloomFilterMightContain for its own
+    // runtime row-group filtering but does not register them in the public
+    // function registry — these graft aliases expose them (the semi-join
+    // prefilter every 100 TB pipeline wants: build a bloom over the small
+    // side's keys, drop non-matching corpus rows BEFORE the shuffle).
+    Fn("graft_bloom_agg", "(xxhash64(col), nItems, nBits) - bloom filter over the hashed " +
+      "values", classOf[BloomFilterAggregate].getName, 3 to 3,
+      args => new BloomFilterAggregate(args(0), args(1), args(2)).toAggregateExpression()),
+    Fn("graft_might_contain", "(bloom, xxhash64(col)) - membership probe; false is definite",
+      classOf[BloomFilterMightContain].getName, 2 to 2,
+      args => BloomFilterMightContain(args(0), args(1))))
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 
 /** REAL pure-JVM baseline-JPEG codec — the TRANSFORM-coded counterpart of
   * [[PngCodec]]'s entropy-only zlib path, retiring the last declared stub
@@ -736,49 +733,4 @@ object JpegCodec {
     }
     InternalRow(img.width, img.height, sumR, sumG, sumB)
   }
-
-  val jpegStatsType: StructType = StructType(Seq(
-    StructField("width", IntegerType), StructField("height", IntegerType),
-    StructField("sum_r", LongType), StructField("sum_g", LongType),
-    StructField("sum_b", LongType)))
-}
-
-/** `graft_jpeg_encode(seed, width, height)` → BINARY (a real baseline
-  * grayscale JFIF file). */
-case class JpegEncode(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_jpeg_encode"
-  override def nullSafeEval(s: Any, w: Any, h: Any): Any =
-    JpegCodec.jpegEncode(s.asInstanceOf[Long], w.asInstanceOf[Int], h.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, w, h) =>
-      s"""
-         |${ev.value} = graft.functions.JpegCodec.jpegEncode($s, $w, $h);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** `graft_jpeg_stats(payload)` → STRUCT(width, height, sum_r, sum_g,
-  * sum_b); NULL when the payload is not a well-formed baseline
-  * sequential JPEG (8-bit, grayscale or YCbCr, sampling factors ≤ 2). */
-case class JpegStats(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = JpegCodec.jpegStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_jpeg_stats"
-  override def nullSafeEval(b: Any): Any =
-    JpegCodec.jpegStats(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""
-         |${ev.value} = graft.functions.JpegCodec.jpegStats($b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
 }

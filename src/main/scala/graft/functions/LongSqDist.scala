@@ -1,76 +1,38 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Native Catalyst expression: exact squared L2 distance between two BIGINT
-  * arrays — the hot loop of the fixed-point geometry family
+/** Exact squared L2 distance between two BIGINT arrays — the kernel behind
+  * `graft_sqdist_q`, the hot loop of the fixed-point geometry family
   * ([[graft.ops.Cluster]] k-means assignment, trained-IVF probe/search).
   * Like [[FloatDot]], the `zip_with`+`aggregate` formulation of the same
   * sum is CodegenFallback (one interpreted tree-walk per element per row);
-  * this generates a tight primitive loop inside whole-stage codegen — the
-  * N×k assignment pass runs entirely in generated code.
+  * the SQL function is a `StaticInvoke` of [[sqDist]], so the N×k
+  * assignment pass runs entirely in generated code.
   *
   * All-integer arithmetic: quantized components are ≤ ~2^21 (|x| ≤ ~2 in
   * 1e-6 units), so each squared term is ≤ ~2^42 and even million-dimension
   * sums stay far from BIGINT overflow. Identical term order to the DuckDB
   * oracle's `list_sum(list_transform(list_zip(...)))`; integer addition is
   * associative, so the value is order-independent anyway. Mismatched
-  * lengths fold the common prefix (fixed-width vectors upstream).
+  * lengths fold the common prefix (fixed-width vectors upstream). The
+  * `Array[Long]` overload is the same fold for the one-task tiers.
   */
-case class LongSqDist(left: Expression, right: Expression)
-  extends BinaryExpression {
+object LongSqDist {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<BIGINT> arguments, " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "graft_sqdist_q"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def sqDist(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0L
     var i = 0
-    while (i < n) {
-      val d = x.getLong(i) - y.getLong(i)
-      acc += d * d
-      i += 1
-    }
+    while (i < n) { val d = x.getLong(i) - y.getLong(i); acc += d * d; i += 1 }
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $d = $x.getLong($i) - $y.getLong($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  def sqDist(x: Array[Long], y: Array[Long]): Long = {
+    val n = math.min(x.length, y.length)
+    var acc = 0L
+    var i = 0
+    while (i < n) { val d = x(i) - y(i); acc += d * d; i += 1 }
+    acc
+  }
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** REAL pure-JVM media codecs for the multimodal pipeline — no native
@@ -22,9 +20,9 @@ import org.apache.spark.sql.types._
   * sample hash-mismatches the driver's correctness gate. All stats are
   * integer sums — no float drift across engines.
   *
-  * Each expression evaluates through ONE static JVM call per row from
-  * inside whole-stage codegen (same discipline as [[FloatDot]]: no UDF
-  * serialization, no interpreted fallback on the hot path).
+  * Each `graft_*` function is a row of [[GraftExtensions]]' table: ONE
+  * static call of a method here per row from inside whole-stage codegen
+  * (no UDF serialization, no interpreted fallback on the hot path).
   */
 object MediaCodec {
 
@@ -1040,314 +1038,4 @@ object MediaCodec {
   val wavStatsType: StructType = StructType(Seq(
     StructField("sample_rate", IntegerType), StructField("n_samples", LongType),
     StructField("sum_abs", LongType), StructField("peak", IntegerType)))
-}
-
-/** `graft_bmp_encode(seed, width, height)` → BINARY (a real BMP file). */
-case class BmpEncode(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_bmp_encode"
-  override def nullSafeEval(s: Any, w: Any, h: Any): Any =
-    MediaCodec.bmpEncode(s.asInstanceOf[Long], w.asInstanceOf[Int], h.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, w, h) =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.bmpEncode($s, $w, $h);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** `graft_bmp_stats(payload)` → STRUCT(width, height, sum_r, sum_g, sum_b);
-  * NULL when the payload is not a well-formed 24-bit uncompressed BMP. */
-case class BmpStats(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaCodec.bmpStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_bmp_stats"
-  override def nullSafeEval(b: Any): Any =
-    MediaCodec.bmpStats(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.bmpStats($b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
-}
-
-/** `graft_bmp_resize(payload, w, h)` → BINARY: nearest-neighbor downscale,
-  * re-encoded as a real BMP; NULL on malformed input or upscaling. */
-case class BmpResize(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_bmp_resize"
-  override def nullSafeEval(b: Any, w: Any, h: Any): Any =
-    MediaCodec.bmpResize(b.asInstanceOf[Array[Byte]], w.asInstanceOf[Int], h.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, w, h) =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.bmpResize($b, $w, $h);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** `graft_wav_downsample(payload, factor)` → BINARY: keep every factor-th
-  * sample, re-encoded as a real WAV at rate/factor; NULL on malformed. */
-case class WavDownsample(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_wav_downsample"
-  override def nullSafeEval(b: Any, f: Any): Any =
-    MediaCodec.wavDownsample(b.asInstanceOf[Array[Byte]], f.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, f) =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.wavDownsample($b, $f);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** `graft_wav_encode(seed, n_samples, sample_rate)` → BINARY (a real WAV). */
-case class WavEncode(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_wav_encode"
-  override def nullSafeEval(s: Any, n: Any, r: Any): Any =
-    MediaCodec.wavEncode(s.asInstanceOf[Long], n.asInstanceOf[Int], r.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, n, r) =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.wavEncode($s, $n, $r);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** `graft_wav_encode_ulaw(seed, n_samples, sample_rate)` → BINARY: a real
-  * G.711 μ-law compressed WAVE (format code 7, fact chunk, 1 byte/sample). */
-case class WavEncodeUlaw(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_wav_encode_ulaw"
-  override def nullSafeEval(s: Any, n: Any, r: Any): Any =
-    MediaCodec.wavEncodeUlaw(s.asInstanceOf[Long], n.asInstanceOf[Int], r.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, n, r) =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.wavEncodeUlaw($s, $n, $r);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** `graft_wav_encode_alaw(seed, n_samples, sample_rate)` → BINARY: a real
-  * G.711 A-law compressed WAVE (format code 6, fact chunk, 1 byte/sample). */
-case class WavEncodeAlaw(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_wav_encode_alaw"
-  override def nullSafeEval(s: Any, n: Any, r: Any): Any =
-    MediaCodec.wavEncodeAlaw(s.asInstanceOf[Long], n.asInstanceOf[Int], r.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, n, r) =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.wavEncodeAlaw($s, $n, $r);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** `graft_avi_encode(seed, width, height, n_frames)` → BINARY: a real
-  * uncompressed-DIB AVI (RIFF container, vids/DIB stream, idx1 index). */
-case class AviEncode(first: Expression, second: Expression,
-                     third: Expression, fourth: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression
-  with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType, IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_avi_encode"
-  override def nullSafeEval(s: Any, w: Any, h: Any, n: Any): Any =
-    MediaCodec.aviEncode(s.asInstanceOf[Long], w.asInstanceOf[Int],
-      h.asInstanceOf[Int], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, w, h, n) =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.aviEncode($s, $w, $h, $n);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      f: Expression, sd: Expression, t: Expression, fo: Expression): Expression =
-    copy(f, sd, t, fo)
-}
-
-/** `graft_avi_stats(payload)` → STRUCT(width, height, n_frames,
-  * frames ARRAY<STRUCT<sum_r, sum_g, sum_b>>): whole-container decode of
-  * an uncompressed-DIB AVI in one parse; NULL if malformed. */
-case class AviStats(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaCodec.aviStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_avi_stats"
-  override def nullSafeEval(b: Any): Any =
-    MediaCodec.aviStats(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.aviStats($b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
-}
-
-/** `graft_mjpeg_encode(seed, width, height, n_frames)` → BINARY: a real
-  * Motion-JPEG AVI (RIFF container, 'MJPG' vids stream, one baseline
-  * JFIF file per '00dc' chunk, idx1 index). */
-case class MjpegEncode(first: Expression, second: Expression,
-                       third: Expression, fourth: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression
-  with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType, IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_mjpeg_encode"
-  override def nullSafeEval(s: Any, w: Any, h: Any, n: Any): Any =
-    MediaCodec.mjpegEncode(s.asInstanceOf[Long], w.asInstanceOf[Int],
-      h.asInstanceOf[Int], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, w, h, n) =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.mjpegEncode($s, $w, $h, $n);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      f: Expression, sd: Expression, t: Expression, fo: Expression): Expression =
-    copy(f, sd, t, fo)
-}
-
-/** `graft_mjpeg_stats(payload)` → STRUCT(width, height, n_frames,
-  * frames ARRAY<STRUCT<sum_r, sum_g, sum_b>>): whole-container decode of
-  * a Motion-JPEG AVI — every frame through the real baseline JPEG
-  * decoder; NULL if malformed. */
-case class MjpegStats(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaCodec.aviStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_mjpeg_stats"
-  override def nullSafeEval(b: Any): Any =
-    MediaCodec.mjpegStats(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.mjpegStats($b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
-}
-
-/** `graft_bmp_pixels(payload)` → STRUCT(width, height, pix ARRAY<INT>):
-  * the decoded RGB pixel array (row-major top-down interleave) — the
-  * image feature-extraction entry point; NULL if malformed. */
-case class BmpPixels(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaCodec.bmpPixelsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_bmp_pixels"
-  override def nullSafeEval(b: Any): Any =
-    MediaCodec.bmpPixels(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.bmpPixels($b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
-}
-
-/** `graft_wav_samples(payload)` → ARRAY<INT>: the decoded PCM samples of
-  * any supported WAVE (PCM / G.711 / IMA ADPCM) — the feature-extraction
-  * entry point; NULL when the payload is malformed. */
-case class WavSamples(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_wav_samples"
-  override def nullSafeEval(b: Any): Any =
-    MediaCodec.wavSamples(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.wavSamples($b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
-}
-
-/** `graft_wav_encode_ima(seed, n_samples, sample_rate)` → BINARY: a real
-  * IMA/DVI ADPCM compressed WAVE (format code 0x11, 36-byte blocks,
-  * 4-bit codes, fact chunk). */
-case class WavEncodeIma(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_wav_encode_ima"
-  override def nullSafeEval(s: Any, n: Any, r: Any): Any =
-    MediaCodec.wavEncodeIma(s.asInstanceOf[Long], n.asInstanceOf[Int], r.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, n, r) =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.wavEncodeIma($s, $n, $r);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** `graft_wav_stats(payload)` → STRUCT(sample_rate, n_samples, sum_abs,
-  * peak) over the DECODED PCM; NULL when the payload is not well-formed
-  * mono WAVE (PCM 16-bit; G.711 μ-law/A-law 8-bit; or IMA ADPCM 4-bit —
-  * all decoded through the real expanders/state machine). */
-case class WavStats(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaCodec.wavStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_wav_stats"
-  override def nullSafeEval(b: Any): Any =
-    MediaCodec.wavStats(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""
-         |${ev.value} = graft.functions.MediaCodec.wavStats($b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
 }

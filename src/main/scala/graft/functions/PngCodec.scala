@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 
 /** REAL pure-JVM PNG codec — the COMPRESSED-format counterpart of
   * [[MediaCodec]]'s BMP/WAV walkers, built entirely on `java.util.zip`
@@ -350,89 +347,4 @@ object PngCodec {
     }
     new Rgb(width, height, raw)
   }
-
-  val pngStatsType: StructType = StructType(Seq(
-    StructField("width", IntegerType), StructField("height", IntegerType),
-    StructField("sum_r", LongType), StructField("sum_g", LongType),
-    StructField("sum_b", LongType)))
-}
-
-/** `graft_png_encode(seed, width, height)` → BINARY (a real PNG file). */
-case class PngEncode(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_png_encode"
-  override def nullSafeEval(s: Any, w: Any, h: Any): Any =
-    PngCodec.pngEncode(s.asInstanceOf[Long], w.asInstanceOf[Int], h.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, w, h) =>
-      s"""
-         |${ev.value} = graft.functions.PngCodec.pngEncode($s, $w, $h);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** `graft_png_stats(payload)` → STRUCT(width, height, sum_r, sum_g, sum_b);
-  * NULL when the payload is not a well-formed 8-bit truecolor or
-  * grayscale non-interlaced PNG (grayscale decodes as r=g=b). */
-case class PngStats(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = PngCodec.pngStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_png_stats"
-  override def nullSafeEval(b: Any): Any =
-    PngCodec.pngStats(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""
-         |${ev.value} = graft.functions.PngCodec.pngStats($b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
-}
-
-/** `graft_png_pixels(payload)` → STRUCT(width, height, pix ARRAY<INT>):
-  * decoded RGB pixel array in [[MediaCodec.bmpPixels]]'s layout; NULL
-  * when the payload is not a well-formed supported PNG. */
-case class PngPixels(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaCodec.bmpPixelsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_png_pixels"
-  override def nullSafeEval(b: Any): Any =
-    PngCodec.pngPixels(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""
-         |${ev.value} = graft.functions.PngCodec.pngPixels($b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
-}
-
-/** `graft_png_resize(payload, w, h)` → BINARY: nearest-neighbor downscale
-  * decoded through the full PNG path and re-encoded as a real PNG; NULL
-  * on malformed input or upscaling. */
-case class PngResize(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_png_resize"
-  override def nullSafeEval(b: Any, w: Any, h: Any): Any =
-    PngCodec.pngResize(b.asInstanceOf[Array[Byte]], w.asInstanceOf[Int], h.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, w, h) =>
-      s"""
-         |${ev.value} = graft.functions.PngCodec.pngResize($b, $w, $h);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
 }

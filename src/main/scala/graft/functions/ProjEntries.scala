@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: the signed-projection banding kernel of
+/** The signed-projection banding kernel of
   * [[graft.ops.Similarity.projNearDupPairs]] — for one quantized vector,
   * ALL `tables`×(1+`flips`) bucket entries in a single primitive loop.
   *
@@ -28,49 +25,16 @@ import org.apache.spark.sql.types._
   * The dataframe formulation of the same kernel (a 72-column sum
   * aggregation over a posexploded vector + HOF sig packing) measures
   * ~0.5 s per pass at sf0.1 and codegens a multi-second compile unit;
-  * this expression is a few hundred bytes of generated code calling one
-  * static loop — `bits` may be a runtime column (it scales with
-  * log2(corpus size) via a broadcast count), which a static column
-  * expansion could not express.
+  * the SQL function is a `StaticInvoke` of [[compute]], one static loop
+  * called from generated code — `bits` may be a runtime column (it
+  * scales with log2(corpus size) via a broadcast count), which a static
+  * column expansion could not express.
   */
-case class ProjEntries(first: Expression, second: Expression,
-                       third: Expression, fourth: Expression)
-  extends QuaternaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = (first.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }) && Seq(second, third, fourth).forall(_.dataType == IntegerType)
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (ARRAY<BIGINT>, INT, INT, INT), got (" +
-        children.map(_.dataType.simpleString).mkString(", ") + ")")
-  }
-
-  override def dataType: DataType = ProjEntries.outType
-  override def prettyName: String = "graft_proj_entries"
-
-  override def nullSafeEval(qv: Any, tables: Any, bits: Any, flips: Any): Any =
-    ProjEntries.compute(qv.asInstanceOf[ArrayData],
-      tables.asInstanceOf[Int], bits.asInstanceOf[Int], flips.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (qv, tables, bits, flips) => s"""
-       |${ev.value} = graft.functions.ProjEntries.compute($qv, $tables, $bits, $flips);
-     """.stripMargin)
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): Expression =
-    copy(f, s, t, q)
-}
-
 object ProjEntries {
   val outType: DataType = ArrayType(StructType(Seq(
     StructField("t", IntegerType, nullable = false),
     StructField("sig", LongType, nullable = false))), containsNull = false)
 
-  /** The banding kernel; called from generated code. */
   def compute(qvA: ArrayData, tables: Int, bits: Int, flips: Int): ArrayData = {
     require(tables >= 1 && bits >= 1 && bits <= 62 && flips >= 0 && flips <= bits,
       s"graft_proj_entries: need tables>=1, 1<=bits<=62, 0<=flips<=bits; " +

@@ -1,39 +1,25 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: Rabin-Karp polynomial rolling hash
-  * `acc = (acc*31 + codepoint) mod 1e9+7` over a string's code points.
+/** Rabin-Karp polynomial rolling hash `acc = (acc*31 + codepoint) mod
+  * 1e9+7` over a string's code points — the kernel behind
+  * `graft_rolling_hash`.
   *
   * The built-in formulation (split to chars → transform to code points →
   * aggregate fold) is three nested CodegenFallback lambdas evaluated per
   * row — an interpreted expression-tree walk per CHARACTER on a full-corpus
-  * fingerprint scan. This generates the tight loop instead (preference
-  * order (b) of SURVEY §7.5: custom Expression over UDF), iterating CODE
-  * POINTS exactly like the DuckDB oracle's `unicode(ch)` per-char fold, so
-  * fingerprints stay cross-engine comparable.
+  * fingerprint scan. The SQL function is a `StaticInvoke` of [[hash]]
+  * instead, iterating CODE POINTS exactly like the DuckDB oracle's
+  * `unicode(ch)` per-char fold, so fingerprints stay cross-engine
+  * comparable.
   */
-case class RollingHash(child: Expression) extends UnaryExpression {
+object RollingHash {
 
   private val Mod = 1000000007L
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a STRING argument, got ${t.simpleString}")
-    }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "graft_rolling_hash"
-
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  def hash(u: UTF8String): Long = {
+    val s = u.toString
     var acc = 0L
     var i = 0
     while (i < s.length) {
@@ -43,26 +29,4 @@ case class RollingHash(child: Expression) extends UnaryExpression {
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val s = ctx.freshName("s")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      s"""
-         |java.lang.String $s = $x.toString();
-         |long $acc = 0L;
-         |int $i = 0;
-         |while ($i < $s.length()) {
-         |  int $cp = $s.codePointAt($i);
-         |  $i += java.lang.Character.charCount($cp);
-         |  $acc = ($acc * 31L + $cp) % ${Mod}L;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

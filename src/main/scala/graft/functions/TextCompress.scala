@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compression-ratio text signal — the cheap repetitiveness/quality
@@ -23,12 +20,13 @@ object TextCompress {
 
   val MaxLen = 16 * 1024 * 1024
 
-  /** DEFLATE length of the UTF-8 bytes at `level` (1-9); -1 (→ SQL null
-    * at the expression layer) on null/oversized input or bad level. */
-  def deflateLen(s: UTF8String, level: Int): Int = {
-    if (s == null || level < 1 || level > 9) return -1
+  /** `graft_deflate_len(text, level)`: DEFLATE length of the UTF-8 bytes
+    * at `level` (1-9), raw stream with no zlib header; null (SQL NULL) on
+    * null/oversized input or a level outside 1-9. */
+  def deflateLen(s: UTF8String, level: Int): Integer = {
+    if (s == null || level < 1 || level > 9) return null
     val b = s.getBytes
-    if (b.length > MaxLen) return -1
+    if (b.length > MaxLen) return null
     val d = new java.util.zip.Deflater(level, true)
     try {
       d.setInput(b)
@@ -39,27 +37,4 @@ object TextCompress {
       total
     } finally d.end()
   }
-}
-
-/** `graft_deflate_len(text, level)` → INT: DEFLATE-compressed byte length
-  * of the UTF-8 text (raw stream, no zlib header); NULL on oversized
-  * input or level outside 1-9. */
-case class DeflateLen(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_deflate_len"
-  override def nullSafeEval(s: Any, l: Any): Any = {
-    val r = TextCompress.deflateLen(s.asInstanceOf[UTF8String], l.asInstanceOf[Int])
-    if (r < 0) null else r
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, l) =>
-      s"""
-         |${ev.value} = graft.functions.TextCompress.deflateLen($s, $l);
-         |${ev.isNull} = ${ev.value} < 0;
-       """.stripMargin)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
 }

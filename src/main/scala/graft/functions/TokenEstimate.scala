@@ -1,39 +1,24 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: BPE-ish token-count estimate — lex the text
-  * into ASCII-letter runs / single digits / single other-non-space code
-  * points, each run contributing ceil(len/4) tokens (≈4 chars per BPE
-  * token).
+/** BPE-ish token-count estimate — the kernel behind
+  * `graft_token_estimate`: lex the text into ASCII-letter runs / single
+  * digits / single other-non-space code points, each run contributing
+  * ceil(len/4) tokens (≈4 chars per BPE token).
   *
   * Exactly the semantics of the builtin form
   * `aggregate(transform(regexp_extract_all(s, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]'), ...))`
   * — but that is a regex scan plus two CodegenFallback lambdas per row; on
-  * a full-corpus stats pass the interpreted walk per token dominates. This
-  * generates one tight code-point loop instead. Whitespace is regex-`\s`
-  * ([ \t\n\x0B\f\r]), NOT Character.isWhitespace, to match the regex form
-  * and the DuckDB oracle.
+  * a full-corpus stats pass the interpreted walk per token dominates. The
+  * SQL function is a `StaticInvoke` of [[estimate]], one code-point loop.
+  * Whitespace is regex-`\s` ([ \t\n\x0B\f\r]), NOT Character.isWhitespace,
+  * to match the regex form and the DuckDB oracle.
   */
-case class TokenEstimate(child: Expression) extends UnaryExpression {
+object TokenEstimate {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a STRING argument, got ${t.simpleString}")
-    }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "graft_token_estimate"
-
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  def estimate(u: UTF8String): Long = {
+    val s = u.toString
     var cnt = 0L
     var run = 0
     var i = 0
@@ -51,37 +36,4 @@ case class TokenEstimate(child: Expression) extends UnaryExpression {
     if (run > 0) cnt += (run + 3) / 4
     cnt
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val s = ctx.freshName("s")
-      val cnt = ctx.freshName("cnt")
-      val run = ctx.freshName("run")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      val ws = ctx.freshName("ws")
-      s"""
-         |java.lang.String $s = $x.toString();
-         |long $cnt = 0L;
-         |int $run = 0;
-         |int $i = 0;
-         |while ($i < $s.length()) {
-         |  int $cp = $s.codePointAt($i);
-         |  $i += java.lang.Character.charCount($cp);
-         |  if (($cp >= 'A' && $cp <= 'Z') || ($cp >= 'a' && $cp <= 'z')) {
-         |    $run++;
-         |  } else {
-         |    if ($run > 0) { $cnt += ($run + 3) / 4; $run = 0; }
-         |    boolean $ws = $cp == ' ' || $cp == '\\t' || $cp == '\\n' ||
-         |      $cp == 0x0B || $cp == '\\f' || $cp == '\\r';
-         |    if (!$ws) $cnt += 1L;
-         |  }
-         |}
-         |if ($run > 0) $cnt += ($run + 3) / 4;
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

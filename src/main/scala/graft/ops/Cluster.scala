@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.LongSqDist
+
 /** Distributed Lloyd's k-means over embedding columns — the trained-centroid
   * counterpart of [[Similarity]]'s seed-centroid IVF quantizer (its doc
   * explicitly leaves the `cents` frame swappable for a trained one; this is
@@ -39,10 +41,11 @@ object Cluster {
     transform(vec, x => floor(x.cast("double") * lit(QuantScale.toDouble)).cast("long"))
 
   /** Exact squared L2 distance between two equal-length BIGINT arrays, via
-    * the native codegen'd [[graft.functions.LongSqDist]] expression
-    * (requires `GraftExtensions` on the session — all graft entry points
-    * install it). Keeps the N×k assignment pass inside whole-stage codegen
-    * instead of a per-element interpreted `zip_with`+`aggregate` fold. */
+    * `graft_sqdist_q`: a static call of [[graft.functions.LongSqDist]]'s
+    * fold (requires `GraftExtensions` on the session — all graft entry
+    * points install it). Keeps the N×k assignment pass inside whole-stage
+    * codegen instead of a per-element interpreted `zip_with`+`aggregate`
+    * fold. */
   def sqDistQ(a: Column, b: Column): Column =
     call_function("graft_sqdist_q", a, b)
 
@@ -365,21 +368,15 @@ object Cluster {
           case _ => qIds += row.getLong(1)
         }
       }
-      def sqdist(a: Array[Long], b: Array[Long]): Long = {
-        val n = math.min(a.length, b.length)
-        var acc = 0L; var i = 0
-        while (i < n) { val d = a(i) - b(i); acc += d * d; i += 1 }
-        acc
-      }
       val cents0 = centRows.toArray
       qIds.iterator.filter(vec.contains).flatMap { q =>
         val qv = vec(q)
-        val probed = cents0.map { case (cid, cv) => (sqdist(qv, cv), cid) }
+        val probed = cents0.map { case (cid, cv) => (LongSqDist.sqDist(qv, cv), cid) }
           .sortBy(identity).take(nProbeG).map(_._2)
         probed.iterator
           .flatMap(cid => members.getOrElse(cid, Nil))
           .filter(_ != q)
-          .flatMap(c => vec.get(c).map(cv => (sqdist(qv, cv), c))).toArray
+          .flatMap(c => vec.get(c).map(cv => (LongSqDist.sqDist(qv, cv), c))).toArray
           .sortBy(identity).take(kG).zipWithIndex
           .iterator.map { case ((d, c), i) => (q, c, d, i + 1) }
       }

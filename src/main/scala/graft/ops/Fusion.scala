@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.LongSqDist
+
 /** Reciprocal-Rank Fusion (Cormack, Clarke & Buettcher 2009, public) —
   * the standard way a retrieval stack combines rankers that score on
   * incomparable scales (lexical BM25 vs embedding cosine): each
@@ -183,12 +185,6 @@ object Fusion {
               .getOrElseUpdate(b, mutable.ArrayBuffer.empty) += a
           }
         }
-        def sqDist(x: Array[Long], y: Array[Long]): Long = {
-          val m = math.min(x.length, y.length)
-          var acc = 0L; var i = 0
-          while (i < m) { val dd = x(i) - y(i); acc += dd * dd; i += 1 }
-          acc
-        }
         def bitlen(x: Long): Int = 64 - java.lang.Long.numberOfLeadingZeros(x)
         // ---- lex: per-(query, doc) sum of integer per-term scores
         val panelTerms = panelB.map(_._2).toSet
@@ -220,13 +216,13 @@ object Fusion {
         panelB.map(_._1).distinct.foreach { qid =>
           qvs.get(qid).foreach { qv =>
             val probed = centsB
-              .map { case (cid, cv) => (sqDist(qv, cv), cid) }
+              .map { case (cid, cv) => (LongSqDist.sqDist(qv, cv), cid) }
               .sorted.take(nProbe).map(_._2)
             val cands = mutable.ArrayBuffer.empty[(Long, Long)]
             probed.foreach { cid =>
               byClusterCands.getOrElse(cid, Nil).foreach { cand =>
                 if (cand != qid)
-                  qvs.get(cand).foreach(cv => cands += ((sqDist(qv, cv), cand)))
+                  qvs.get(cand).foreach(cv => cands += ((LongSqDist.sqDist(qv, cv), cand)))
               }
             }
             cands.sorted.take(topKSem).zipWithIndex.foreach {

@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
   * [[graft.functions.MediaCodec]] (header parse, row padding, chunk walk,
   * sample sign-extension), and [[pngAssets]]/[[decodePng]] run the
   * COMPRESSED-format PNG codec in [[graft.functions.PngCodec]] (zlib
-  * inflate + all five scanline-filter reconstructions) — all native
-  * codegen Expressions, oracle-checked end-to-end by q97/q98/q112.
+  * inflate + all five scanline-filter reconstructions) — each a
+  * `graft_*` row of [[graft.functions.GraftExtensions]]' function table,
+  * one static codec call per row inside whole-stage codegen,
+  * oracle-checked end-to-end by q97/q98/q112.
   *
   * [[jpegAssets]]/[[decodeJpeg]] run the TRANSFORM-coded baseline-JPEG
   * codec in [[graft.functions.JpegCodec]] (Huffman entropy decode,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.LongSqDist
+
 /** Product quantization (PQ) — the ANN index shape that actually ships at
   * 100 TB: vectors are compressed to M small codes (one per contiguous
   * subspace) against per-subspace codebooks, queries score candidates by
@@ -349,13 +351,6 @@ object Pq {
           case _ => qIds += row.getLong(1)
         }
       }
-      // LongSqDist's exact fold: common prefix, BIGINT accumulate.
-      def sqdist(a: Array[Long], b: Array[Long]): Long = {
-        val n = math.min(a.length, b.length)
-        var acc = 0L; var i = 0
-        while (i < n) { val d = a(i) - b(i); acc += d * d; i += 1 }
-        acc
-      }
       val cents0 = centRows.toArray
       // The distributed shortlist bound, same integer ceil-division:
       // max(k·oversample, ⌈N·pct/100⌉) when pct > 0, else k·oversample.
@@ -365,7 +360,7 @@ object Pq {
       qIds.iterator.filter(vec.contains).flatMap { q =>
         val qv = vec(q)
         // Probe ranking: (d, cluster_id) ascending, top nProbe.
-        val probed = cents0.map { case (cid, cv) => (sqdist(qv, cv), cid) }
+        val probed = cents0.map { case (cid, cv) => (LongSqDist.sqDist(qv, cv), cid) }
           .sortBy(identity).take(nProbeG).map(_._2)
         // Candidates from the stored lists (inner-join semantics).
         val cands = probed.iterator
@@ -385,8 +380,8 @@ object Pq {
           // (corrupted) stored artifact.
           book.foreach { case ((g, code), cw) =>
             if (g >= 0 && g < mG)
-              dtab.update((g, code),
-                sqdist(java.util.Arrays.copyOfRange(qv, g * sub, g * sub + sub), cw))
+              dtab.update((g, code), LongSqDist.sqDist(
+                java.util.Arrays.copyOfRange(qv, g * sub, g * sub + sub), cw))
           }
           // ADC = sum over the candidate's code rows that MATCH a dtab
           // entry (the inner join); a candidate with zero matches has no
@@ -401,7 +396,7 @@ object Pq {
           val shortlist = adc.sortBy(identity)
             .take(math.min(shortBound, Int.MaxValue.toLong).toInt).map(_._2)
           shortlist.iterator
-            .flatMap(c => vec.get(c).map(cv => (sqdist(qv, cv), c))).toArray
+            .flatMap(c => vec.get(c).map(cv => (LongSqDist.sqDist(qv, cv), c))).toArray
             .sortBy(identity).take(kG).zipWithIndex
             .iterator.map { case ((d, c), i) => (q, c, d, i + 1) }
         }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.{FloatDot, LongSqDist}
+
 /** SemDeDup-style cluster-then-dedup (Abbas et al. 2023, public) as a
   * MAINTAINED artifact family — the survivor-manifest counterpart of the
   * near-dup cluster manifest ([[Dedup.incrementalClusters]]).
@@ -117,10 +119,10 @@ object SemDedup {
   /** [[incrementalManifest]]'s guarded ONE-TASK tier (the q153/q171
     * treatment): the five inputs ride a tagged union into a single
     * task that mirrors the distributed chain step for step — delta-only
-    * argmin assignment (exact [[graft.functions.LongSqDist]] replica:
+    * argmin assignment ([[graft.functions.LongSqDist]]'s own fold:
     * Long Σ(a−b)² over the common prefix, ties to the smallest
     * cluster_id), affected-cluster closure, per-cluster dominance with
-    * the exact [[graft.functions.FloatDot]] replica (left-fold
+    * [[graft.functions.FloatDot]]'s own fold (left-fold
     * float→double products, √ norms, the same ≥ comparison), verbatim
     * reuse. Callers guard (fail CLOSED) on Catalyst size stats — see
     * the q174 cell. */
@@ -166,18 +168,6 @@ object SemDedup {
             case _ => centsB += ((id, qv.toArray))
           }
         }
-        def sqDist(a: Array[Long], b: Array[Long]): Long = {
-          val n = math.min(a.length, b.length)
-          var acc = 0L; var i = 0
-          while (i < n) { val d = a(i) - b(i); acc += d * d; i += 1 }
-          acc
-        }
-        def dot(a: Array[Float], b: Array[Float]): Double = {
-          val n = math.min(a.length, b.length)
-          var acc = 0.0; var i = 0
-          while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-          acc
-        }
         // delta-only assignment: min (sqdist, cluster_id) — assignQ's
         // lexicographic min(struct) tie-break
         val affected = mutable.HashSet.empty[Long]
@@ -186,7 +176,7 @@ object SemDedup {
           if (!prevL.contains(id)) {
             var bestD = Long.MaxValue; var bestC = Long.MaxValue
             centsB.foreach { case (cid, cv) =>
-              val d = sqDist(qv, cv)
+              val d = LongSqDist.sqDist(qv, cv)
               if (d < bestD || (d == bestD && cid < bestC)) {
                 bestD = d; bestC = cid
               }
@@ -218,7 +208,7 @@ object SemDedup {
           // frame in the distributed plan (inner join with `e`): it can
           // neither dominate nor be dominated — kept = true
           val vecs = ids.map(id => embV.get(id))
-          val norms = vecs.map(_.map(v => math.sqrt(dot(v, v))))
+          val norms = vecs.map(_.map(v => math.sqrt(FloatDot.dot(v, v))))
           var j = 0
           while (j < ids.length) {
             var dominated = false
@@ -226,7 +216,7 @@ object SemDedup {
               var i = 0
               while (i < j && !dominated) {
                 if (vecs(i).isDefined) {
-                  val cos = dot(vecs(i).get, vecs(j).get) /
+                  val cos = FloatDot.dot(vecs(i).get, vecs(j).get) /
                     (norms(i).get * norms(j).get)
                   if (cos >= minCosine) dominated = true
                 }

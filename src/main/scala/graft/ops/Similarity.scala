@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.FloatDot
+
 /** Embedding similarity search for the LLM-data-pipeline extension (SURVEY
   * §7.5) over the `embeddings` table (`Array[Float]` column).
   *
@@ -23,8 +25,9 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Left-fold double dot product of two float-array columns, via the
-    * native codegen'd [[graft.functions.FloatDot]] expression. Requires
+  /** Left-fold double dot product of two float-array columns, via
+    * `graft_float_dot`: a static call of [[graft.functions.FloatDot.dot]]
+    * inside whole-stage codegen. Requires
     * `graft.functions.GraftExtensions` installed on the session (all graft
     * entry points do); [[dotHof]] is the extension-free equivalent. */
   def dot(a: Column, b: Column): Column =
@@ -270,12 +273,6 @@ object Similarity {
           (r.getLong(0), r.getSeq[Float](1).toArray,
             !r.isNullAt(2) && r.getBoolean(2))
         }.toArray
-        def dotD(a: Array[Float], b: Array[Float]): Double = {
-          val n = math.min(a.length, b.length)
-          var acc = 0.0; var i = 0
-          while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-          acc
-        }
         val stride =
           if (centroidEveryG > 0) centroidEveryG.toLong
           else {
@@ -284,7 +281,7 @@ object Similarity {
             math.max(1L, math.ceil(nD / c1).toLong)
           }
         val cents = rows.filter(_._1 % stride == 0).sortBy(_._1)
-          .map(c => (c._1, c._2, math.sqrt(dotD(c._2, c._2))))
+          .map(c => (c._1, c._2, math.sqrt(FloatDot.dot(c._2, c._2))))
         val cC = cents.length
         if (cC == 0) Iterator.empty
         else {
@@ -304,9 +301,9 @@ object Similarity {
           }
           def rankCents(v: Array[Float], n: Double): Array[(Double, Long)] =
             cents.map { case (cid, cv, cn) =>
-              (-(dotD(v, cv) / (n * cn)), cid)
+              (-(FloatDot.dot(v, cv) / (n * cn)), cid)
             }.sorted(ord)
-          val norms = rows.map(r => math.sqrt(dotD(r._2, r._2)))
+          val norms = rows.map(r => math.sqrt(FloatDot.dot(r._2, r._2)))
           val byId = scala.collection.mutable.HashMap.empty[Long, Int]
           val members =
             scala.collection.mutable.HashMap.empty[Long,
@@ -342,7 +339,7 @@ object Similarity {
               .filter(ci => rows(ci)._1 != qid)
               .map { ci =>
                 val (cid2, cv, _) = rows(ci)
-                (dotD(qv, cv) / (qn * norms(ci)), cid2)
+                (FloatDot.dot(qv, cv) / (qn * norms(ci)), cid2)
               }.toArray.sorted(rankOrd).take(kG).zipWithIndex
               .iterator.map { case ((cos, cid2), i) => (qid, cid2, cos, i + 1) }
           }
@@ -512,10 +509,11 @@ object Similarity {
       else src
 
     // All L×(1+flips) bucket entries per vector from the native
-    // [[graft.functions.ProjEntries]] kernel — one generated-code loop
-    // per row (the dataframe formulation of the same kernel, a 72-column
-    // sum aggregation over a posexploded vector, measured ~0.5 s per pass
-    // at sf0.1 and codegenned a multi-second compile unit).
+    // [[graft.functions.ProjEntries]] kernel — one static call per row
+    // from generated code (the dataframe formulation of the same kernel,
+    // a 72-column sum aggregation over a posexploded vector, measured
+    // ~0.5 s per pass at sf0.1 and codegenned a multi-second compile
+    // unit).
     val entries = widened.crossJoin(broadcast(nn))
       .select(col("_id"),
         explode(call_function("graft_proj_entries",
@@ -602,8 +600,8 @@ object Similarity {
     * oracle). Signature width is FIXED here (a serving index's
     * parameters are deployment constants, unlike the corpus-sized
     * pair-generation path which sizes p to the data); entries come from
-    * the native [[graft.functions.ProjEntries]] kernel, one generated
-    * loop per vector. Multiprobe registers each vector in its `flips`
+    * the native [[graft.functions.ProjEntries]] kernel, one static call
+    * per vector from generated code. Multiprobe registers each vector in its `flips`
     * lowest-|margin| flipped buckets on BOTH sides, the recall lever
     * measured in [[projNearDupPairs]].
     *

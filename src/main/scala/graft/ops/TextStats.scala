@@ -52,8 +52,9 @@ object TextStats {
   }
 
   /** BPE-ish token-count estimate: lex into word / digit / punct runs, each
-    * run contributing ceil(len/4) tokens (≈4 chars per BPE token). Native
-    * codegen'd one-pass loop ([[graft.functions.TokenEstimate]] — requires
+    * run contributing ceil(len/4) tokens (≈4 chars per BPE token). One
+    * static call of [[graft.functions.TokenEstimate.estimate]] per row
+    * inside whole-stage codegen (`graft_token_estimate` — requires
     * GraftExtensions on the session, as all graft entry points install);
     * [[tokenEstimateHof]] is the extension-free equivalent. */
   def tokenEstimate(c: Column): Column =
@@ -170,10 +171,11 @@ object TextStats {
   /** Polynomial rolling hash over the normalized text's code points:
     * acc = (acc*31 + codepoint) mod 1e9+7 — the classic Rabin-Karp
     * fingerprint, left-folded so any engine reproduces it exactly.
-    * Uses the native codegen'd [[graft.functions.RollingHash]] expression
-    * (requires `graft.functions.GraftExtensions` on the session — all
-    * graft entry points install it); [[rollingHashHof]] is the
-    * extension-free equivalent. */
+    * One static call of [[graft.functions.RollingHash.hash]] per row
+    * inside whole-stage codegen (`graft_rolling_hash` — requires
+    * `graft.functions.GraftExtensions` on the session, as all graft entry
+    * points install); [[rollingHashHof]] is the extension-free
+    * equivalent. */
   def rollingHash(c: Column): Column =
     call_function("graft_rolling_hash", normalize(c))
 

@@ -269,8 +269,8 @@ class PlanSpec extends SparkSpec {
     Seq(plan(Queries.q101KmeansCluster), q103dist).foreach { p =>
       // every N-by-k pass must broadcast the k centroids, never shuffle N
       p should include("BroadcastNestedLoopJoin")
-      // native expression resolved (not an interpreted zip_with fold)
-      p should include("graft_sqdist_q")
+      // the graft_sqdist_q kernel call (not an interpreted zip_with fold)
+      p should include("static_invoke(graft.functions.LongSqDist.sqDist(")
     }
     // r18 fold-assignment pin: assignQ computes the argmin where the row
     // sits, so q101's ONLY shuffle is the k-row centroid fold aggregate —
@@ -381,7 +381,8 @@ class PlanSpec extends SparkSpec {
 
   test("q25: portable LSH top-k runs the native projection kernel, queries broadcast") {
     val p = plan(Queries.q25AnnLshTopk)
-    p should include("graft_proj_entries") // the codegen'd signature kernel
+    // graft_proj_entries' signature kernel, one static call per row
+    p should include("static_invoke(graft.functions.ProjEntries.compute(")
     // the query-side bucket join is broadcast (50 query ids), never a
     // corpus-wide shuffle of the signature table against itself
     p should include("BroadcastHashJoin")

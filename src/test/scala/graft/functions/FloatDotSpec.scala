@@ -31,10 +31,4 @@ class FloatDotSpec extends SparkSpec {
       "SELECT graft_float_dot(a, b) FROM fd_vecs WHERE a IS NOT NULL AND b IS NOT NULL")
     sql.collect().map(_.getDouble(0)).head shouldBe 32.0
   }
-
-  test("interpreted eval (nullSafeEval) agrees with codegen path") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val e = FloatDot(Literal.create(Array(1.0f, 2.0f)), Literal.create(Array(3.0f, 4.0f)))
-    e.eval(null) shouldBe 11.0
-  }
 }

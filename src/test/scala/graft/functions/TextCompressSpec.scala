@@ -6,8 +6,9 @@ import graft.SparkSpec
 
 class TextCompressSpec extends SparkSpec {
 
-  private def dl(s: String, level: Int = 6): Int =
+  private def deflate(s: String, level: Int): Integer =
     TextCompress.deflateLen(UTF8String.fromString(s), level)
+  private def dl(s: String, level: Int = 6): Int = deflate(s, level)
 
   test("deflateLen is deterministic and orders repetition below entropy") {
     val rep = "ab" * 64
@@ -26,10 +27,10 @@ class TextCompressSpec extends SparkSpec {
     }
   }
 
-  test("invalid level and null input signal -1 (SQL null)") {
-    dl("abc", 0) shouldBe -1
-    dl("abc", 10) shouldBe -1
-    TextCompress.deflateLen(null, 6) shouldBe -1
+  test("invalid level and null input return null (SQL NULL)") {
+    deflate("abc", 0) shouldBe null
+    deflate("abc", 10) shouldBe null
+    TextCompress.deflateLen(null, 6) shouldBe null
   }
 
   test("expression runs inside the SQL surface with codegen") {

@@ -101,7 +101,7 @@ class SemDedupSpec extends SparkSpec {
     // maxLocalBytes = 0 forces the distributed chain on the same stored
     // artifacts; plan asserts keep the divergence (and so the test)
     // non-vacuous. Floating cosines must match BIT-for-bit — the local
-    // tier replicates FloatDot's left fold exactly.
+    // tier calls FloatDot's own left fold.
     val dir = "/root/testdata/sf0.01"
     val localF = graft.Queries.q174IncrementalSemdedup(spark, dir)
     val distF = graft.Queries.q174IncrementalSemdedup(spark, dir,
