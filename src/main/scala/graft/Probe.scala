@@ -80,8 +80,9 @@ object Probe {
   /** The profiler: `runMain graft.Probe <cells…>` on [[BenchOne]]'s
     * session, warm-up and noop sink (`SPARK_GRAFT_SF_DIR`, default sf0.1).
     * Per cell it prints DataFrame build + Catalyst planning vs execution,
-    * the stage table, the executed (final adaptive) plan and, for a cell
-    * with a [[Cell.io]] pair, the [[IoEvidence.Io]] sums of its
+    * the stage table with the cell's [[IoEvidence.Io]] sums (shuffle
+    * bytes written among them), the executed (final adaptive) plan and,
+    * for a cell with a [[Cell.io]] pair, the [[IoEvidence.Io]] sums of its
     * maintenance and rebuild halves (the maintenance side warmed first, as
     * Bench's `io` block does). */
   def main(args: Array[String]): Unit = {
@@ -113,7 +114,8 @@ object Probe {
             }
             println(f"$name%-28s plan $planS%6.3f s  exec $execS%6.3f s  " +
               s"${rec.jobs} jobs, ${rec.tasks} tasks")
-            println(f"   ${rec.stages.size} stages, wall sum ${rec.stages.map(_.wallMs).sum / 1e3}%.2f s")
+            println(f"   ${rec.stages.size} stages, wall sum ${rec.stages.map(_.wallMs).sum / 1e3}%.2f s, " +
+              s"io ${rec.io.json}")
             rec.stages.take(45).foreach { s =>
               println(f"   stage ${s.id}%4d wall ${s.wallMs}%5d ms run ${s.runMs}%6d ms  ${s.name.take(100)}")
             }

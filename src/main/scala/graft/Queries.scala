@@ -327,10 +327,14 @@ object Queries {
     * truth the MinHash path approximates. Consumes the materialized
     * [[corpusShingles]] artifact, so the timed work is the pair
     * computation itself (the capped-shingle self-join + Jaccard), not the
-    * corpus re-shingling the artifact amortizes. */
-  def q21NgramJaccard(s: SparkSession, dir: String): DataFrame =
+    * corpus re-shingling the artifact amortizes. A shingle set under
+    * `maxLocalBytes` takes the one-task posting-list tier; `0L` forces the
+    * distributed self-join (see
+    * [[graft.ops.Dedup.ngramJaccardPairsFromShingles]]). */
+  def q21NgramJaccard(s: SparkSession, dir: String,
+                      maxLocalBytes: Long = Tier.LocalBytes): DataFrame =
     Dedup.ngramJaccardPairsFromShingles(corpusShingles(s, dir), "doc_id",
-      minJaccard = 0.5)
+      minJaccard = 0.5, maxLocalBytes = maxLocalBytes)
 
   /** SimHash near-dup: 64-bit shingle fingerprint, 16-bit-chunk banding,
     * Hamming verify — the seeded-MD5 PORTABLE flavor ([[graft.ops.Dedup

@@ -151,7 +151,7 @@ object SparkEntry {
     Cell("q19_minhash_neardup" -> (Queries.q19MinhashNeardup(_, _)), scaleChecked = true),
     Cell("q20_text_stats" -> (Queries.q20TextStats(_, _)), bound = Some(15.0)),
     Cell("q21_ngram_jaccard" -> (Queries.q21NgramJaccard(_, _)), bound = Some(15.0),
-      scaleChecked = true),
+      forced = Some(Queries.q21NgramJaccard(_, _, 0L)), scaleChecked = true),
     Cell("q22_simhash_neardup" -> (Queries.q22SimhashNeardup(_, _)), scaleChecked = true),
     Cell("q23_lang_id" -> (Queries.q23LangId(_, _))),
     Cell("q24_ann_cosine_topk" -> (Queries.q24AnnCosineTopk(_, _))),

@@ -13,11 +13,14 @@ import org.apache.spark.storage.StorageLevel
   * is a hash-partitioned window; Jaccard pairs are generated by an
   * equi-join on shared shingles (only docs that share at least one shingle
   * ever meet); MinHash/SimHash candidates are generated by equi-joins on
-  * band buckets. All joins are shuffle hash/sort-merge joins on
-  * high-cardinality keys — AQE handles stop-shingle skew, and the
-  * `maxShingleDf` cap removes the one input AQE cannot fix: a single
-  * corpus-common shingle whose O(df²) candidate pairs would dominate the
-  * self-join.
+  * band buckets. The distributed joins are shuffle hash/sort-merge joins
+  * on high-cardinality keys (AQE turns a small side into a broadcast at
+  * runtime) — AQE handles stop-shingle skew, and the `maxShingleDf` cap
+  * removes the one input AQE cannot fix: a single corpus-common shingle
+  * whose O(df²) candidate pairs would dominate the self-join. Inputs that
+  * [[graft.Tier]] admits take one-task `mapPartitions` kernels instead:
+  * the exact Jaccard pairs, q148's maintained MinHash pairs, the
+  * union-find cluster fast path and the incremental cluster manifest.
   *
   * CACHING CONTRACT: the pair/cluster operators persist intermediate frames
   * (shingle sets, band buckets, CC labels) at MEMORY_AND_DISK because they
@@ -108,30 +111,67 @@ object Dedup {
     * Pair generation is an equi-join on the shingle itself: docs sharing no
     * shingle (Jaccard 0) never pair — candidate count is bounded by
     * sum(docs-per-shingle²), not docs², and `maxShingleDf` bounds the
-    * per-shingle term itself (see [[capShingleDf]]). The shingle set feeds
-    * three branches (two join sides + per-doc sizes), so it is persisted
-    * rather than recomputed from the raw scan per branch.
-    *
-    * The surviving pair set is joined to the per-doc sizes WITHOUT a
-    * broadcast hint: on a heavily-duplicated corpus the pair set is
-    * unbounded (a forced broadcast would OOM the driver), and AQE already
-    * converts the join to a broadcast at runtime whenever the pair set
-    * turns out small.
+    * per-shingle term itself (see [[capShingleDf]]). On the distributed
+    * tier the shingle set feeds three branches (two join sides + per-doc
+    * sizes), so it is persisted rather than recomputed from the raw scan
+    * per branch; the one-task tier reads it once and persists nothing.
+    * Tiers and cap as in [[ngramJaccardPairsFromShingles]].
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int, minJaccard: Double,
-                        maxShingleDf: Int = 0): DataFrame =
-    ngramJaccardPairsFromShingles(
-      capShingleDf(shingleSet(docs, idCol, textCol, n), maxShingleDf)
-        .persist(StorageLevel.MEMORY_AND_DISK),
+                        maxShingleDf: Int = 0): DataFrame = {
+    val sh = capShingleDf(shingleSet(docs, idCol, textCol, n), maxShingleDf)
+    if (jaccardOneTask(sh, idCol, graft.Tier.LocalBytes))
+      jaccardPairsLocal(sh, idCol, minJaccard)
+    else jaccardPairsDistributed(sh.persist(StorageLevel.MEMORY_AND_DISK),
       idCol, minJaccard)
+  }
 
   /** [[ngramJaccardPairs]] over a caller-supplied (id, shingle) set —
     * callers that feed several operators from ONE shingle pass (e.g. q83
     * verifying MinHash against the exact pairs) build and persist the set
-    * once instead of re-sharding the corpus per operator. */
+    * once instead of re-sharding the corpus per operator.
+    *
+    * Two tiers, equal row for row (DedupSpec runs both on every input it
+    * pins):
+    *  - distributed: the hashed self-join below, five stages at sf0.1;
+    *  - one task: when the id column is a `LongType` and [[graft.Tier]]
+    *    admits `sh` under `maxLocalBytes`, the posting-list kernel
+    *    [[jaccardPairsLocal]] computes the same pairs in one
+    *    `mapPartitions` task with no shuffle. `maxLocalBytes = 0` forces
+    *    the distributed tier.
+    *
+    * The default cap is [[graft.Tier.LocalBytes]], because the one task
+    * never lost. q21 on the bench session, `local[4]` on a 4-core VM,
+    * median of 10 alternating runs each, one task vs `0L`, by the
+    * shingle set's estimate:
+    *  - sf0.01, 0.17 MB (26k rows): 0.087 vs 0.251 s;
+    *  - sf0.1, 0.84 MB (260k rows): 0.139 vs 0.581 s;
+    *  - the 10× sf0.01 corpus, 2.05 MB (261k rows): 0.144 vs 0.368 s;
+    *  - the 10× sf0.1 corpus, 12.98 MB (2.6M rows): 1.16 vs 4.66 s.
+    * With no crossover up to 13 MB, [[graft.Tier.OneTaskBytes]] would
+    * only split the sizes: the 10× sf0.1 corpus would run distributed
+    * while sf0.1 runs the task, and q21's 10× growth would read about
+    * 33× (4.66 / 0.139), past its bound of 15. The kernel's arrays cost
+    * 40 B per row plus a `LongMap` entry per distinct hash; on the
+    * 13 MB input the one-task run's peak heap (garbage included, no GC
+    * pressure) was 0.56–0.71 GB, against 3.1 GB for the distributed
+    * run. */
   def ngramJaccardPairsFromShingles(sh: DataFrame, idCol: String,
-                                    minJaccard: Double): DataFrame = {
+                                    minJaccard: Double,
+                                    maxLocalBytes: Long = graft.Tier.LocalBytes): DataFrame =
+    if (jaccardOneTask(sh, idCol, maxLocalBytes)) jaccardPairsLocal(sh, idCol, minJaccard)
+    else jaccardPairsDistributed(sh, idCol, minJaccard)
+
+  /** The one-task tier's guard: Long ids (the kernel's id lane) and a
+    * shingle set [[graft.Tier]] admits. */
+  private def jaccardOneTask(sh: DataFrame, idCol: String,
+                             maxLocalBytes: Long): Boolean =
+    sh.schema(idCol).dataType == org.apache.spark.sql.types.LongType &&
+      graft.Tier.fits(maxLocalBytes, sh)
+
+  private def jaccardPairsDistributed(sh: DataFrame, idCol: String,
+                                      minJaccard: Double): DataFrame = {
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("m"))
 
     // The candidate self-join is keyed on xxhash64(shingle) — a FIXED
@@ -151,15 +191,148 @@ object Dedup {
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("intersection"))
 
-    inter
+    // The pair set is joined to the per-doc sizes WITHOUT a broadcast
+    // hint: on a heavily-duplicated corpus it is unbounded (a forced
+    // broadcast would OOM the driver), and AQE already converts the join
+    // to a broadcast at runtime whenever it turns out small.
+    withJaccard(inter
       .join(sizes.select(col(idCol).as("doc_a"), col("m").as("size_a")), Seq("doc_a"))
-      .join(sizes.select(col(idCol).as("doc_b"), col("m").as("size_b")), Seq("doc_b"))
+      .join(sizes.select(col(idCol).as("doc_b"), col("m").as("size_b")), Seq("doc_b")),
+      minJaccard)
+  }
+
+  /** Both tiers' last step over (doc_a, doc_b, size_a, size_b,
+    * intersection): one `long → double` division and threshold, so the
+    * tiers cannot drift apart on it (a zero denominator included). */
+  private def withJaccard(counts: DataFrame, minJaccard: Double): DataFrame =
+    counts
       .withColumn("jaccard",
         col("intersection").cast("double") /
           (col("size_a") + col("size_b") - col("intersection")).cast("double"))
       .filter(col("jaccard") >= minJaccard)
       .select(col("doc_a"), col("doc_b"), col("size_a"), col("size_b"),
         col("intersection"), col("jaccard"))
+
+  /** [[ngramJaccardPairsFromShingles]]' ONE-TASK tier: a posting-list
+    * kernel over (id, xxhash64(shingle)) in a single `mapPartitions` task.
+    *  - Rows go into primitive arrays; a null id is dropped, as the
+    *    distributed `doc_a < doc_b` filter drops it, and its rows count
+    *    toward no other document's size.
+    *  - Documents get dense ordinals in id order and hash groups dense
+    *    ordinals through `LongMap`; two counting sorts build each
+    *    document's row list and each group's posting list (document
+    *    ordinals, ascending).
+    *  - For each document `a`, every posting entry `b > a` of every row's
+    *    group is counted in a dense accumulator. A row, not a distinct
+    *    hash, is the unit, so duplicate (id, shingle) rows give the
+    *    join's product multiplicity, and the size `m` is the row count,
+    *    as the distributed `count` is.
+    *  - A pair leaves the kernel when its Jaccard passes, or when its
+    *    denominator is zero; [[withJaccard]] then applies the same
+    *    division and threshold to both tiers.
+    * Pairs stream out document by document; only the current
+    * document's pairs are ever buffered. */
+  private def jaccardPairsLocal(sh: DataFrame, idCol: String,
+                                minJaccard: Double): DataFrame = {
+    val spark = sh.sparkSession
+    import spark.implicits._
+    withJaccard(sh.select(col(idCol), xxhash64(col("shingle"))).coalesce(1)
+      .mapPartitions { rows =>
+        import scala.collection.mutable
+        val idB = new mutable.ArrayBuilder.ofLong
+        val hB = new mutable.ArrayBuilder.ofLong
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) { idB += r.getLong(0); hB += r.getLong(1) }
+        }
+        val ids = idB.result()
+        val hs = hB.result()
+        val n = ids.length
+        // distinct ids, ascending: ordinal order is id order
+        val docId = ids.clone()
+        java.util.Arrays.sort(docId)
+        var nd = 0
+        var i = 0
+        while (i < n) {
+          if (nd == 0 || docId(nd - 1) != docId(i)) { docId(nd) = docId(i); nd += 1 }
+          i += 1
+        }
+        val docOrd = new mutable.LongMap[Int](nd * 2)
+        i = 0
+        while (i < nd) { docOrd.update(docId(i), i); i += 1 }
+        val grpOrd = new mutable.LongMap[Int]()
+        val doc = new Array[Int](n)
+        val grp = new Array[Int](n)
+        var ng = 0
+        i = 0
+        while (i < n) {
+          doc(i) = docOrd(ids(i))
+          val g = grpOrd.getOrElse(hs(i), -1)
+          if (g >= 0) grp(i) = g
+          else { grpOrd.update(hs(i), ng); grp(i) = ng; ng += 1 }
+          i += 1
+        }
+        // counting sort 1: rows by document
+        val docStart = new Array[Int](nd + 1)
+        i = 0
+        while (i < n) { docStart(doc(i) + 1) += 1; i += 1 }
+        i = 0
+        while (i < nd) { docStart(i + 1) += docStart(i); i += 1 }
+        val byDoc = new Array[Int](n)
+        val fill = docStart.clone()
+        i = 0
+        while (i < n) { byDoc(fill(doc(i))) = i; fill(doc(i)) += 1; i += 1 }
+        // counting sort 2, in document order: posting lists sorted by doc
+        val grpStart = new Array[Int](ng + 1)
+        i = 0
+        while (i < n) { grpStart(grp(i) + 1) += 1; i += 1 }
+        i = 0
+        while (i < ng) { grpStart(i + 1) += grpStart(i); i += 1 }
+        val post = new Array[Int](n)
+        val next = grpStart.clone() // per group: first entry not yet placed
+        i = 0
+        while (i < n) {
+          val r = byDoc(i)
+          post(next(grp(r))) = doc(r); next(grp(r)) += 1
+          i += 1
+        }
+        // per group: first entry still > the current document (documents
+        // run in ascending order, so it only moves forward)
+        val from = grpStart.clone()
+        val cnt = new Array[Long](nd)
+        val touched = new Array[Int](nd)
+        Iterator.range(0, nd).flatMap { a =>
+          var nt = 0
+          var k = docStart(a)
+          while (k < docStart(a + 1)) {
+            val g = grp(byDoc(k))
+            val end = grpStart(g + 1)
+            var j = from(g)
+            while (j < end && post(j) <= a) j += 1
+            from(g) = j
+            while (j < end) {
+              val b = post(j)
+              if (cnt(b) == 0L) { touched(nt) = b; nt += 1 }
+              cnt(b) += 1
+              j += 1
+            }
+            k += 1
+          }
+          val sa = (docStart(a + 1) - docStart(a)).toLong
+          val out = mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long)]
+          var t = 0
+          while (t < nt) {
+            val b = touched(t)
+            val inter = cnt(b)
+            cnt(b) = 0L
+            val sb = (docStart(b + 1) - docStart(b)).toLong
+            val den = sa + sb - inter
+            if (den == 0L || inter.toDouble / den.toDouble >= minJaccard)
+              out += ((docId(a), docId(b), sa, sb, inter))
+            t += 1
+          }
+          out
+        }
+      }.toDF("doc_a", "doc_b", "size_a", "size_b", "intersection"), minJaccard)
   }
 
   // -------------------------------------------------------------- MinHash
@@ -689,9 +862,9 @@ object Dedup {
     // checkpoint job + a convergence probe per round PAIR, ~25-30 stages
     // on the delta subgraphs incremental maintenance feeds in here
     // (q153) — pure per-stage latency for data measured in kilobytes.
-    // This is the one sanctioned mapPartitions in the dedup family:
-    // genuinely imperative per-partition logic, reached only under the
-    // guards, and the guarded subgraph is delta-sized by construction in
+    // Like the family's other one-task kernels, this mapPartitions is
+    // genuinely imperative logic, reached only under the guards, and the
+    // guarded subgraph is delta-sized by construction in
     // the incremental callers — at a real delta spike the node/edge
     // guards fail closed and the scale-proof iterative path runs instead.
     // Long ids only (the repo-wide id type); other types use the loop.

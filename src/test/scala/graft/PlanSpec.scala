@@ -379,6 +379,19 @@ class PlanSpec extends SparkSpec {
     p should not include "Exchange"
   }
 
+  test("q21: the one-task tier plans no shuffle; 0L keeps the hashed self-join") {
+    val sf001 = "/root/testdata/sf0.01"
+    val p = Queries.q21NgramJaccard(spark, sf001).queryExecution.executedPlan.toString
+    shuffles(p) shouldBe 0
+    p.split("\n").count(_.contains("MapPartitions")) shouldBe 1
+    val d = Queries.q21NgramJaccard(spark, sf001, 0L).queryExecution.executedPlan.toString
+    // the pair count and the two size aggregates shuffle; at this size
+    // the self-join on xxhash64(shingle) is a broadcast hash join
+    shuffles(d) shouldBe 3
+    d should include("xxhash64(shingle")
+    d should include("HashJoin [_h")
+  }
+
   test("q25: portable LSH top-k runs the native projection kernel, queries broadcast") {
     val p = plan(Queries.q25AnnLshTopk)
     // graft_proj_entries' signature kernel, one static call per row

@@ -138,6 +138,117 @@ class DedupSpec extends SparkSpec {
     pairs(graft.Queries.MaxShingleDf) shouldBe pairs(0)
   }
 
+  /** Asserts the one-task plan (a `mapPartitions`, no shuffle), the
+    * forced plan (the hashed self-join), equal schemas (names and types)
+    * and equal rows; returns the rows. */
+  private def tiersAgree(local: org.apache.spark.sql.DataFrame,
+                         dist: org.apache.spark.sql.DataFrame): Seq[Row] = {
+    val (lp, dp) = (local.queryExecution.executedPlan.toString,
+      dist.queryExecution.executedPlan.toString)
+    lp should include("MapPartitions")
+    lp should not include "Exchange"
+    dp should include("HashAggregate")
+    dp should include("Join")
+    def shape(d: org.apache.spark.sql.DataFrame) = d.schema.map(f => (f.name, f.dataType))
+    shape(local) shouldBe shape(dist)
+    val rows = local.collect().toSeq.sortBy(_.toString)
+    rows shouldBe dist.collect().toSeq.sortBy(_.toString)
+    rows
+  }
+
+  /** Both tiers of [[Dedup.ngramJaccardPairsFromShingles]] on `sh`. */
+  private def bothTiers(sh: org.apache.spark.sql.DataFrame, minJaccard: Double): Seq[Row] =
+    tiersAgree(Dedup.ngramJaccardPairsFromShingles(sh, "id", minJaccard),
+      Dedup.ngramJaccardPairsFromShingles(sh, "id", minJaccard, 0L))
+
+  test("n-gram Jaccard one-task tier ≡ the distributed self-join on the testdata corpora") {
+    for (sf <- Seq("sf0.001", "sf0.01")) withClue(s"$sf: ") {
+      val dir = s"/root/testdata/$sf"
+      tiersAgree(graft.Queries.q21NgramJaccard(spark, dir),
+        graft.Queries.q21NgramJaccard(spark, dir, 0L)) should not be empty
+    }
+  }
+
+  test("n-gram Jaccard tiers agree on duplicate rows, null ids, the threshold and empty inputs") {
+    import spark.implicits._
+    // duplicate (id, shingle) rows: the join counts their product
+    val dup = Seq((1L, "a b c"), (1L, "a b c"), (1L, "b c d"),
+      (2L, "a b c"), (2L, "b c d"), (2L, "c d e"),
+      (3L, "a b c"), (3L, "a b c"), (3L, "a b c"), (3L, "z z z"))
+      .toDF("id", "shingle")
+    val dupRows = bothTiers(dup, 0.5)
+    // 2 × 3 copies of "a b c" intersect 6 times, more than either size
+    dupRows.map(r => (r.getLong(0), r.getLong(1), r.getLong(4))) should contain((1L, 3L, 6L))
+    // null ids never pair, and their rows count toward no size
+    val nulls = Seq((None, "a b c"), (None, "b c d"), (Some(1L), "a b c"),
+      (Some(1L), "b c d"), (Some(2L), "a b c"), (Some(2L), "b c d"))
+      .toDF("id", "shingle")
+    bothTiers(nulls, 0.5).map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) shouldBe
+      Seq((1L, 2L, 2L))
+    // 2 of 4 distinct shingles: Jaccard exactly 0.5 is kept; 2 of 5 is not
+    val edge = Seq((1L, "a"), (1L, "b"), (1L, "c"), (2L, "a"), (2L, "b"),
+      (2L, "d"), (3L, "a"), (3L, "b"), (3L, "e"), (3L, "f"))
+      .toDF("id", "shingle")
+    bothTiers(edge, 0.5).map(r => (r.getLong(0), r.getLong(1), r.getDouble(5))) shouldBe
+      Seq((1L, 2L, 0.5))
+    // one shingle twice in each of two docs: 4 / (2 + 2 - 4), so the
+    // ANSI division fails on both tiers alike
+    val zero = Seq((1L, "a"), (1L, "a"), (2L, "a"), (2L, "a")).toDF("id", "shingle")
+    for (cap <- Seq(graft.Tier.LocalBytes, 0L))
+      intercept[Exception](Dedup.ngramJaccardPairsFromShingles(zero, "id", 0.5, cap)
+        .collect()).getMessage should include("DIVIDE_BY_ZERO")
+    // no shared shingle
+    bothTiers(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "shingle"), 0.5) shouldBe
+      empty
+    // no rows: Catalyst folds the forced plan to an empty scan
+    val none = Seq.empty[(Long, String)].toDF("id", "shingle")
+    val (l0, d0) = (Dedup.ngramJaccardPairsFromShingles(none, "id", 0.5),
+      Dedup.ngramJaccardPairsFromShingles(none, "id", 0.5, 0L))
+    l0.queryExecution.executedPlan.toString should include("MapPartitions")
+    l0.schema.map(f => (f.name, f.dataType)) shouldBe d0.schema.map(f => (f.name, f.dataType))
+    l0.collect() shouldBe empty
+    d0.collect() shouldBe empty
+  }
+
+  test("n-gram Jaccard tiers agree on the uncapped df=1000 shingle") {
+    import spark.implicits._
+    // collected to a local relation, so the one-task plan holds no
+    // shuffle of the shingle set's own DISTINCT
+    val sh = Dedup.shingleSet(
+      (0 until 1000).map(i => (i.toLong, s"common boiler plate tail$i unique$i only$i"))
+        .toDF("id", "text"), "id", "text", 3)
+      .as[(Long, String)].collect().toSeq.toDF("id", "shingle")
+    // each pair shares one of seven shingles: 499,500 pairs pass 0.1
+    bothTiers(sh, 0.1).size shouldBe 1000 * 999 / 2
+  }
+
+  test("an IntegerType id takes the distributed n-gram Jaccard plan") {
+    import spark.implicits._
+    val sh = Seq((1, "a"), (1, "b"), (2, "a"), (2, "b")).toDF("id", "shingle")
+    val out = Dedup.ngramJaccardPairsFromShingles(sh, "id", 0.5)
+    val p = out.queryExecution.executedPlan.toString
+    p should not include "MapPartitions"
+    p should include("Join")
+    out.collect().map(r => (r.getInt(0), r.getInt(1))) shouldBe Array((1, 2))
+  }
+
+  test("ngramJaccardPairs persists its shingle set on the distributed tier only") {
+    import spark.implicits._
+    val rows = Seq((1L, "one two three four"), (2L, "one two three five"))
+    def cached(d: org.apache.spark.sql.DataFrame): Boolean =
+      d.queryExecution.executedPlan.toString.contains("InMemoryTableScan")
+    val local = Dedup.ngramJaccardPairs(rows.toDF("id", "text"), "id", "text", 3, 0.3)
+    cached(local) shouldBe false
+    local.queryExecution.executedPlan.toString should include("MapPartitions")
+    // RDD-backed: no size estimate, so the guard fails closed
+    val dist = Dedup.ngramJaccardPairs(
+      df("id BIGINT, text STRING", rows.map { case (i, t) => Row(i, t) }),
+      "id", "text", 3, 0.3)
+    cached(dist) shouldBe true
+    local.collect().toSeq shouldBe dist.collect().toSeq
+    spark.catalog.clearCache()
+  }
+
   test("nearDupClusters converges on a 50-node chain (pointer jumping + checkpointing)") {
     // doc_i = "x_i x_{i+1} x_{i+2}": with 2-gram shingles, adjacent docs
     // share 1 of 3 shingles (Jaccard 1/3), non-adjacent share none — a pure
