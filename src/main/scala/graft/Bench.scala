@@ -511,8 +511,8 @@ object Bench {
     // min-of-2) — noise the growth division amplifies. Three samples
     // each way and a same-config base make the published factor
     // reproducible.
-    def minOf3(c: Cell, dir: String): Sample =
-      mergeSamples((1 to 3).map(_ => measure(c.name, (sp, _) => c.build(sp, dir))))
+    def minOf3(name: String, fn: Query, dir: String): Sample =
+      mergeSamples((1 to 3).map(_ => measure(name, (sp, _) => fn(sp, dir))))
     // Override for drills: SPARK_GRAFT_GROWTH_BOUND replaces ALL
     // bounds (e.g. =0.1 forces a red run to prove the gate fires).
     val boundFor: Cell => Double =
@@ -526,8 +526,8 @@ object Bench {
     val minGateBase = 0.05
     val firstPass = SparkEntry.cells
       .filter(c => c.bound.isDefined && scaleFilter(c.name)).map { c =>
-        val (base, bFlag, bErr) = minOf3(c, sfDir)
-        val (t, tFlag, tErr) = minOf3(c, sf1Dir)
+        val (base, bFlag, bErr) = minOf3(c.name, c.build, sfDir)
+        val (t, tFlag, tErr) = minOf3(c.name, c.build, sf1Dir)
         (c, base, bFlag, t, tFlag, bErr || tErr)
       }
     // A cell's absolute sf1 wall-time cap (`Cell.capSec`) backs its
@@ -562,8 +562,8 @@ object Bench {
             s"(${if (unmeasured(base, t, err)) "unmeasured" else s"${t / base}x"}) " +
             "— re-measuring to confirm")
         System.gc()
-        val (b2, bf2, be2) = minOf3(c, sfDir)
-        val (t2, tf2, te2) = minOf3(c, sf1Dir)
+        val (b2, bf2, be2) = minOf3(c.name, c.build, sfDir)
+        val (t2, tf2, te2) = minOf3(c.name, c.build, sf1Dir)
         (c, b2, bf2, t2, tf2, be2 || te2)
       case m => m
     }
@@ -600,7 +600,7 @@ object Bench {
           // Warm the maintenance side UNTIMED first (the spec's
           // protocol): the model family's measured halves read the
           // stored delta artifact, which no growth cell builds —
-          // on a fresh corpus tag its one-time build (full
+          // on a fresh artifact tag its one-time build (full
           // re-hash + diff + parquet write) would otherwise land
           // inside the metered window and inflate the published
           // ratios on exactly the first recorded run.
@@ -626,14 +626,14 @@ object Bench {
             System.err.println(s"[bench] io evidence ${c.name}: $e")
             s""""${c.name}":null""" }
       }
-    // Forced-distributed lane (see `Cell.forced`); skippable for drills
-    // via SPARK_GRAFT_DIST=0.
+    // Forced-distributed lane (see `Cell.forced`), min-of-3 on each side
+    // like the growth cells; skippable for drills via SPARK_GRAFT_DIST=0.
     val distCells =
       if (sys.env.getOrElse("SPARK_GRAFT_DIST", "1") == "0") Nil
       else for (c <- SparkEntry.cells; fn <- c.forced if scaleFilter(c.name)) yield {
         val n = c.name
-        val (b, bFlag, bErr) = measure(s"dist:$n", (sp, _) => fn(sp, sfDir))
-        val (t, tFlag, tErr) = measure(s"dist:$n", (sp, _) => fn(sp, sf1Dir))
+        val (b, bFlag, bErr) = minOf3(s"dist:$n", fn, sfDir)
+        val (t, tFlag, tErr) = minOf3(s"dist:$n", fn, sf1Dir)
         s""""$n":{"sf01_sec":$b,"sec":$t,""" +
           s""""stall_suspect":${bFlag || tFlag},"err":${bErr || tErr}}"""
       }
@@ -662,24 +662,14 @@ object Bench {
   * the per-order fan distribution exactly (the fan-guard theorem is
   * exercised at 10x incidence) while cross-copy orders/parts never
   * collide — incidence and co-occurrence pairs grow linearly.
-  * Built once per scratch dir via [[Tables.writePathIfAbsent]]. */
+  * Built once per source dir and build, at `scratchDir/scale10x/<tag>`
+  * ([[Tables.tag]] of the source dir, so regenerated testdata or changed
+  * code rebuilds it), via [[Tables.writePathIfAbsent]]. */
 object ScaleCorpus {
   def ensure(spark: SparkSession, srcDir: String, copies: Int): String = {
     import org.apache.spark.sql.{Column, DataFrame}
     import org.apache.spark.sql.functions._
-    // Path salted with the SOURCE corpus identity (size+mtime, the
-    // Tables.corpusTag contract): regenerated testdata must rebuild the
-    // scale corpus, not benchmark a stale copy and publish bogus growth.
-    // _v4: lineitem added round 14 (the q152 gate measured nothing
-    // against _v3 dirs, which held only documents+embeddings);
-    // _v5: events added for the as-of-join cell (q164) — copy k salts
-    // event_id AND user_id, preserving each user's event-per-user
-    // timeline shape while cross-copy users never collide.
-    val out = s"${Tables.scratchDir(spark)}/scale10x_v5/" +
-      s"${Tables.corpusTag(spark, srcDir, "documents")}__" +
-      s"${Tables.corpusTag(spark, srcDir, "embeddings")}__" +
-      s"${Tables.corpusTag(spark, srcDir, "lineitem")}__" +
-      Tables.corpusTag(spark, srcDir, "events")
+    val out = s"${Tables.scratchDir(spark)}/scale10x/${Tables.tag(spark, srcDir)}"
     val idStep = 10L * 1000 * 1000
     def salted(c: String, k: Int): Column = col(c) + lit(k * idStep)
     // Copy k ≥ 1 of each table, re-skinned so no key collides across copies.
@@ -702,6 +692,8 @@ object ScaleCorpus {
             slice(col("embedding"), lit(1), r)).as("embedding"),
           col("label"))
       },
+      // event_id AND user_id salted: each user's timeline keeps its
+      // shape while cross-copy users never collide.
       "events" -> ((src, k) => src.withColumn("event_id", salted("event_id", k))
         .withColumn("user_id", salted("user_id", k))),
       "lineitem" -> ((src, k) => src.withColumn("l_orderkey", salted("l_orderkey", k))

@@ -290,12 +290,10 @@ object Queries {
     * every byte of text once per snapshot, so paying it once and
     * equi-joining the materialized set is the difference between one
     * corpus scan and five. Same `_SUCCESS`-gated [[Tables.artifact]]
-    * contract as the other scratch artifacts; the path carries the
-    * shingle/cap parameters and a schema version, so a semantics change
-    * rebuilds rather than silently reusing stale data. */
+    * contract as the other scratch artifacts; the name carries the
+    * shingle/cap parameters. */
   private def corpusShingles(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"shingles_n3_df${MaxShingleDf}_v1/$sfTag") {
+    Tables.artifact(s, dir, s"shingles_n3_df${MaxShingleDf}") {
       Dedup.capShingleDf(
         Dedup.shingleSet(t(s, dir, "documents"), "doc_id", "text", 3),
         MaxShingleDf)
@@ -316,8 +314,7 @@ object Queries {
     * [[corpusShingles]] artifact, so the build itself pays only the
     * self-join, not a second shingle extraction. */
   private def neardupPairs(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"neardup_pairs_n3_j05_df${MaxShingleDf}_v1/$sfTag") {
+    Tables.artifact(s, dir, s"neardup_pairs_n3_j05_df${MaxShingleDf}") {
       Dedup.ngramJaccardPairsFromShingles(corpusShingles(s, dir), "doc_id",
         minJaccard = 0.5)
     }
@@ -598,8 +595,7 @@ object Queries {
     * loop's barriers every time. Same [[Tables.artifact]] contract and
     * parameter-salted path as the artifacts it derives from. */
   private def neardupClusters(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"neardup_clusters_n3_j05_df${MaxShingleDf}_v1/$sfTag") {
+    Tables.artifact(s, dir, s"neardup_clusters_n3_j05_df${MaxShingleDf}") {
       Dedup.nearDupClustersFromPairs(neardupPairs(s, dir),
         t(s, dir, "documents").select(col("doc_id")), "doc_id")
     }
@@ -673,7 +669,7 @@ object Queries {
     // zero-Exchange join, not the table build (which a real warehouse
     // amortizes over every downstream query anyway).
     def bucketed(name: String): String =
-      s"graft_bkt_${name}_${Tables.corpusTag(s, dir, name)}".replaceAll("\\W", "_")
+      s"graft_bkt_${name}_${Tables.tag(s, dir)}".replaceAll("\\W", "_")
     val ordersTbl = bucketed("orders")
     val lineitemTbl = bucketed("lineitem")
     graft.sources.Bucketed.writeIfAbsent(
@@ -964,8 +960,7 @@ object Queries {
     // build-once contract as [[corpusShingles]]'s 3-grams): extraction
     // runs once per snapshot; every audit — this one, and any future
     // eval-set revision — probes the stored table.
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    val grams = Tables.artifact(s, s"grams8_v1/$sfTag") {
+    val grams = Tables.artifact(s, dir, "grams8") {
       Dedup.shingleSet(t(s, dir, "documents"), "doc_id", "text", 8)
         .withColumnRenamed("shingle", "gram")
     }
@@ -1466,8 +1461,7 @@ object Queries {
     * SET a snapshot's dedup infrastructure actually serves, so both of
     * its sides read stored tables and the cell times the comparison. */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"minhash_pairs_k16_r2_j05_df${MaxShingleDf}_v1/$sfTag") {
+    Tables.artifact(s, dir, s"minhash_pairs_k16_r2_j05_df${MaxShingleDf}") {
       Dedup.minHashNearDupPairsFromShingles(corpusShingles(s, dir), "doc_id", 16, 2, 0.5)
         .select(col("doc_a"), col("doc_b"))
     }
@@ -1509,8 +1503,7 @@ object Queries {
     // half of both, built once per corpus snapshot (the LIVE SimHash
     // timing cell is q22); the cell times the exactness COMPARISON, which
     // is its actual claim.
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    val fp = Tables.artifact(s, s"simhash_fp_odd_v1/$sfTag") {
+    val fp = Tables.artifact(s, dir, "simhash_fp_odd") {
       Dedup.simHash(sample, "doc_id", "text")
     }
     val brute = fp.select(col("doc_id").as("doc_a"), col("simhash").as("_sa"))
@@ -1535,8 +1528,7 @@ object Queries {
     * LIVE brute-force cell is q24, which times the same operator
     * end-to-end and is hash-checked. */
   private def exactTopK(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"exact_topk_q50_k5_v1/$sfTag") {
+    Tables.artifact(s, dir, "exact_topk_q50_k5") {
       Similarity.bruteForceTopK(Tables.wide(s, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") % 50 === 0, k = 5)
         .select(col("query_id"), col("cand_id"), col("cosine"))
@@ -1549,8 +1541,7 @@ object Queries {
     * recall gate needs an L2 ground truth, not [[exactTopK]]'s cosine
     * one. Same build-once artifact contract. */
   private def exactTopKL2(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"exact_topk_l2_q50b_k5_v2/$sfTag") {
+    Tables.artifact(s, dir, "exact_topk_l2_q50b_k5") {
       val pts = quantizedPoints(s, dir)
       // FIXED standing query panel, base-corpus ids only — the SAME
       // panel contract as q117 (its round-13 growth lesson): a ground
@@ -1632,8 +1623,7 @@ object Queries {
     // Served from the snapshot's stored LSH result — the LIVE hyperplane-
     // LSH timing cell is q25; this gate audits recall of what the served
     // index returns, both sides stored tables (same shape as [[exactTopK]]).
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val lsh = Tables.artifact(s, s"lsh_topk_t4_b8_q50_k5_v1/$sfTag") {
+    val lsh = Tables.artifact(s, dir, "lsh_topk_t4_b8_q50_k5") {
       Similarity.lshTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") % 50 === 0, k = 5, tables = 4, bits = 8)
         .select(col("query_id"), col("cand_id"))
@@ -1660,8 +1650,7 @@ object Queries {
   def q83dIvfRecall(s: SparkSession, dir: String): DataFrame = {
     // Served IVF result, same contract as [[q83cAnnLshRecall]] (the LIVE
     // seed-centroid IVF timing cell is q52).
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    val ivf = Tables.artifact(s, s"ivf_topk_auto_f15_q50_k5_v2/$sfTag") {
+    val ivf = Tables.artifact(s, dir, "ivf_topk_auto_f15_q50_k5") {
       Similarity.ivfTopKFrac(t(s, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") % 50 === 0, k = 5, centroidEvery = 0,
           probeFrac = 0.15, nProbeMin = 3)
@@ -1768,14 +1757,11 @@ object Queries {
     * year's directories (asserted in PlanSpec). At 100 TB this is the
     * mechanism that turns a decade-wide fact scan into one year. */
   def q87DppPrune(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "orders")
-    // _v1: versioned like every Tables.artifact name, so a change
-    // to cleanOrders/partitioning semantics rebuilds rather than reuses.
     // Build-once (same amortized-artifact contract as q46's bucketed
     // table): the partitioned layout is the durable artifact DPP prunes
     // against; rewriting it per invocation would make every run — and the
     // bench cell — time the setup write instead of the pruned read.
-    val fact = Tables.artifact(s, s"dpp_v1/$sfTag/orders", "order_year") {
+    val fact = Tables.artifact(s, dir, "dpp/orders", "order_year") {
       graft.pipeline.Silver.cleanOrders(t(s, dir, "orders"))
         .withColumn("order_year", year(col("order_date")))
     }
@@ -2172,11 +2158,9 @@ object Queries {
     * embedding once per snapshot; storing the BIGINT vectors lets q101's
     * training, q102's assignment, and q103's ranking all read the same
     * stored blocks instead of each paying scan + quantize +
-    * localCheckpoint. Path carries the quantization scale + schema
-    * version so a semantics change rebuilds the artifact. */
+    * localCheckpoint. The name carries the quantization scale. */
   private[graft] def quantizedPoints(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"qpoints_e6_v1/$sfTag") {
+    Tables.artifact(s, dir, "qpoints_e6") {
       t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), Cluster.quantize(col("embedding")).as("qv"))
     }
@@ -2190,8 +2174,7 @@ object Queries {
     * centroid table is k rows; the artifact exists to amortize the
     * training recurrence, not to move data. */
   private def trainedCentroids(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"kmeans_k8_i2_e6_v1/$sfTag") {
+    Tables.artifact(s, dir, "kmeans_k8_i2_e6") {
       Cluster.train(quantizedPoints(s, dir), k = 8, iterations = 2)
     }
   }
@@ -2259,11 +2242,7 @@ object Queries {
     * defines boilerplate); `m` is the capped per-doc shingle-set size, so
     * probe-side Jaccard needs no second corpus pass. */
   private def shingleIndex(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    // Path carries the shingle parameters + a schema version (same
-    // invalidation contract as [[corpusShingles]]): a semantics change
-    // rebuilds the artifact instead of silently reusing a stale one.
-    Tables.artifact(s, s"shingle_index_n3_df${MaxShingleDf}_v1/$sfTag") {
+    Tables.artifact(s, dir, s"shingle_index_n3_df${MaxShingleDf}") {
       val sh = Dedup.capShingleDf(
         Dedup.shingleSet(
           t(s, dir, "documents").filter(col("doc_id") % 10 =!= 0),
@@ -2398,8 +2377,7 @@ object Queries {
     * one), so the shingle self-join must be materialized unthresholded
     * once rather than re-run per measure. */
   private def shingleIntersections(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"shingle_intersections_n3_df${MaxShingleDf}_v1/$sfTag") {
+    Tables.artifact(s, dir, s"shingle_intersections_n3_df${MaxShingleDf}") {
       val sh = corpusShingles(s, dir)
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("m"))
       sh.select(col("doc_id").as("doc_a"), col("shingle"))
@@ -2572,12 +2550,10 @@ object Queries {
   /** Build-once PQ codebooks (g, code_id, cw): m=4 subspaces over the
     * 64-dim corpus, k=8 codewords each, 2 Lloyd rounds over
     * [[quantizedPoints]] — the per-subspace generalization of
-    * [[trainedCentroids]], same train-once/serve-many contract and the
-    * same artifact salting (parameters + quantization scale + schema
-    * version in the path). */
+    * [[trainedCentroids]], same train-once/serve-many contract; the
+    * name carries the parameters and the quantization scale. */
   private def pqBooks(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"pq_books_m4_k8_i2_e6_v1/$sfTag") {
+    Tables.artifact(s, dir, "pq_books_m4_k8_i2_e6") {
       graft.ops.Pq.trainCodebooks(quantizedPoints(s, dir), m = 4, k = 8, iterations = 2)
     }
   }
@@ -2586,8 +2562,7 @@ object Queries {
     * copy of the corpus (M=4 codebook indices per vector instead of 64
     * floats); ADC queries scan THIS, not embeddings. */
   private def pqCodes(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"pq_codes_m4_k8_i2_e6_v1/$sfTag") {
+    Tables.artifact(s, dir, "pq_codes_m4_k8_i2_e6") {
       graft.ops.Pq.encode(quantizedPoints(s, dir), pqBooks(s, dir), m = 4)
     }
   }
@@ -3109,12 +3084,11 @@ object Queries {
     // featurized corpus + per-round weights): content-salted parquet
     // artifacts, the same build-once contract as the BPE merge/vocab
     // tables — survives executor loss where a localCheckpoint would not.
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    val base = s"qf_perceptron_v1/$sfTag"
+    val base = "qf_perceptron"
     graft.ops.QualityFilter.trainPerceptron(
       t(s, dir, "documents"), "doc_id", "text", "n_chars",
       when(col("lang") === "en", 1L).otherwise(-1L), rounds = 3,
-      store = (label, df) => Tables.artifact(s, s"$base/$label")(df))
+      store = (label, df) => Tables.artifact(s, dir, s"$base/$label")(df))
   }
 
   /** Build-once corpus word-frequency table (word, n) — BPE training's
@@ -3127,8 +3101,7 @@ object Queries {
     * replays the counting from the documents table and still
     * hash-checks end-to-end. */
   private def bpeWordFreq(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"bpe_wordfreq_v1/$sfTag") {
+    Tables.artifact(s, dir, "bpe_wordfreq") {
       graft.ops.Bpe.wordFreq(t(s, dir, "documents"), "text")
     }
   }
@@ -3303,15 +3276,14 @@ object Queries {
     * scanned exactly once across all three. */
   private def bm25Index(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    val base = s"bm25_idx_v1/$sfTag"
-    val post = Tables.artifact(s, s"$base/postings") {
+    val base = "bm25_idx"
+    val post = Tables.artifact(s, dir, s"$base/postings") {
       graft.ops.Bm25.postings(t(s, dir, "documents"), "doc_id", "text")
     }
-    val dfT = Tables.artifact(s, s"$base/df") {
+    val dfT = Tables.artifact(s, dir, s"$base/df") {
       graft.ops.Bm25.docFreq(post)
     }
-    val stats = Tables.artifact(s, s"$base/stats") {
+    val stats = Tables.artifact(s, dir, s"$base/stats") {
       graft.ops.Bm25.corpusStats(post)
     }
     (post, dfT, stats)
@@ -3359,8 +3331,7 @@ object Queries {
     * artifact hash-mismatches. */
   private def bm25Panel(s: SparkSession, dir: String,
                         dfT: DataFrame): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"bm25_idx_v1/$sfTag/panel")(bm25QueryPanel(dfT))
+    Tables.artifact(s, dir, "bm25_idx/panel")(bm25QueryPanel(dfT))
   }
 
   /** HYBRID retrieval via Reciprocal-Rank Fusion ([[graft.ops.Fusion
@@ -3431,8 +3402,7 @@ object Queries {
     * snapshot filter: that artifact exists to exercise MAINTENANCE;
     * this one is the serve-everything index a retrieval stack ships). */
   private def fullIvfLists(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"ivf_lists_full_v1/$sfTag") {
+    Tables.artifact(s, dir, "ivf_lists_full") {
       Cluster.assignQ(quantizedPoints(s, dir), trainedCentroids(s, dir))
         .select(col("id"), col("cluster_id"))
     }
@@ -3454,12 +3424,10 @@ object Queries {
     // computed once per corpus and the gate is two artifact scans + a
     // join. The oracle recomputes BOTH compositions from scratch, so a
     // stale or drifted artifact hash-mismatches.
-    val tag = s"${Tables.corpusTag(s, dir, "documents")}__" +
-      Tables.corpusTag(s, dir, "embeddings")
-    val served = Tables.artifact(s, s"hybrid_rrf_ivf_q4_v1/$tag") {
+    val served = Tables.artifact(s, dir, "hybrid_rrf_ivf_q4") {
       q170HybridRrf(s, dir).select(col("query_id"), col("doc_id"))
     }.withColumn("_f", lit(1L))
-    val reference = Tables.artifact(s, s"hybrid_rrf_brute_q4_v1/$tag") {
+    val reference = Tables.artifact(s, dir, "hybrid_rrf_brute_q4") {
       val (post, dfT, stats) = bm25Index(s, dir)
       val lex = graft.ops.Bm25.topKQueries(post, bm25Panel(s, dir, dfT),
           k = 10, dfT = Some(dfT), stats = Some(stats))
@@ -3555,8 +3523,7 @@ object Queries {
     * stored artifact (train once, serve many; the tokenizer-release
     * contract). */
   private def trainedBpe512(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"bpe_r512_units_v1/$sfTag") {
+    Tables.artifact(s, dir, "bpe_r512_units") {
       graft.ops.Bpe.trainFromWordFreq(bpe512Units(s, dir),
           rounds = 512, topWords = 50)
     }
@@ -3612,8 +3579,7 @@ object Queries {
     * table) is what makes maintenance exact — a unit can enter or
     * leave the top-k only if its full count is tracked. */
   private def prevUnitCounts(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"bpe8k_unitcounts_old_v1/$sfTag") {
+    Tables.artifact(s, dir, "bpe8k_unitcounts_old") {
       bpe8kUnitWindows(q145OldSnap(s, dir))
         .groupBy(col("word")).agg(count(lit(1)).as("n"))
     }
@@ -3689,8 +3655,7 @@ object Queries {
   /** Build-once 8192-merge training result — [[q169BpeTrain8k]]'s
     * stored artifact. */
   private def trainedBpe8k(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"bpe_r8k_units_v1/$sfTag") {
+    Tables.artifact(s, dir, "bpe_r8k_units") {
       graft.ops.Bpe.trainFromWordFreq(bpe8kUnits(s, dir),
           rounds = 8192, topWords = 50)
     }
@@ -3699,8 +3664,7 @@ object Queries {
   /** Build-once 32-merge training result (merge rows + top-50 word
     * segmentations) — [[q147BpeTrain32]]'s stored artifact. */
   private def trainedBpe32(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"bpe_r32_v1/$sfTag") {
+    Tables.artifact(s, dir, "bpe_r32") {
       // maxLocalWords = 0: q147 exists to pin the DISTRIBUTED iterative
       // trainer in a hash-checked, growth-gated cell — the one-task
       // tier has its own deep-budget cell (q163).
@@ -3724,8 +3688,7 @@ object Queries {
     * trained-tokenizer consumer does — train once, serve many (the
     * same contract as [[trainedCentroids]] for q102/q103). */
   private def trainedBpeMerges(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"bpe_r3_v1/$sfTag") {
+    Tables.artifact(s, dir, "bpe_r3") {
       graft.ops.Bpe.trainFromWordFreq(bpeWordFreq(s, dir),
           rounds = 3, topWords = 1)
         .filter(col("kind") === "merge")
@@ -3741,8 +3704,7 @@ object Queries {
     * snapshot is the production shape anyway: a deployed tokenizer
     * ships its vocab, it does not re-derive segmentations per query. */
   private def trainedBpeVocab(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"bpe_vocab_r3_v1/$sfTag") {
+    Tables.artifact(s, dir, "bpe_vocab_r3") {
       graft.ops.Bpe.encodeVocab(t(s, dir, "documents"), "text",
         trainedBpeMerges(s, dir), nMerges = 3)
     }
@@ -3956,8 +3918,7 @@ object Queries {
     * A deployed LM quality gate is a release constant: deliberately NOT
     * derived per corpus snapshot. */
   private def lmModel(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"lm_bigram_v1/$sfTag") {
+    Tables.artifact(s, dir, "lm_bigram") {
       graft.ops.LmScore.trainCounts(t(s, dir, "documents"),
           "doc_id", "text", col("lang") === "en")
     }
@@ -4086,8 +4047,7 @@ object Queries {
     * runs at build time, inside the scoped-cache artifact
     * wrapper). */
   private def suffixDupPrefix(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"suffix_f_v1/$sfTag") {
+    Tables.artifact(s, dir, "suffix_f") {
       graft.ops.Suffix.longestDupPrefix(
           t(s, dir, "documents"), "doc_id", "text")
     }
@@ -4120,8 +4080,7 @@ object Queries {
     * snapshot, incl. content_hash) as a stored artifact — what an
     * incremental system actually has on disk when the new crawl lands. */
   private def prevCorpusBuild(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"corpus_build_old_v1/$sfTag") {
+    Tables.artifact(s, dir, "corpus_build_old") {
       corpusBuildCore(s, dir, q145OldSnap(s, dir))
     }
   }
@@ -4133,8 +4092,7 @@ object Queries {
     * extraction + size guard in its cell — that IS the operator under
     * test there; q143/q145 serve this stored set, the deployed shape). */
   private def evalWindowKeys(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"eval_windows8_v1/$sfTag") {
+    Tables.artifact(s, dir, "eval_windows8") {
       val ws = TextStats.words(lower(col("text")))
       t(s, dir, "documents").filter(col("doc_id") % 20 === 0)
         .filter(size(ws) >= 8)
@@ -4153,8 +4111,7 @@ object Queries {
     * each document's own shingles, so this is the near-dup analog of
     * [[prevCorpusBuild]]. */
   private def prevMinhashIndex(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"minhash_idx16_old_v1/$sfTag") {
+    Tables.artifact(s, dir, "minhash_idx16_old") {
       Dedup.minHashSignaturesPortable(
           Dedup.shingleSet(q145OldSnap(s, dir), "doc_id", "text", 3),
           "doc_id", k = 16)
@@ -4267,8 +4224,7 @@ object Queries {
     * every document's effective shingles to the whole corpus, which
     * would invalidate [[q153IncrementalClusters]]'s component reuse. */
   private def incStopShingles(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"stop_shingles3_df${MaxShingleDf}_old_v1/$sfTag") {
+    Tables.artifact(s, dir, s"stop_shingles3_df${MaxShingleDf}_old") {
       Dedup.stopShingles(
           Dedup.shingleSet(q145OldSnap(s, dir), "doc_id", "text", 3),
           MaxShingleDf)
@@ -4283,9 +4239,8 @@ object Queries {
     * cell is the manifest maintenance itself). */
   private def incSnapPairs(s: SparkSession, dir: String,
                            old: Boolean): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
     val tag = if (old) "old" else "new"
-    Tables.artifact(s, s"neardup_pairs_stop_j05_${tag}_v1/$sfTag") {
+    Tables.artifact(s, dir, s"neardup_pairs_stop_j05_${tag}") {
       val snap = if (old) q145OldSnap(s, dir) else q145NewSnap(s, dir)
       Dedup.ngramJaccardPairsFromShingles(
           Dedup.removeStopShingles(
@@ -4299,8 +4254,7 @@ object Queries {
   /** The previous crawl's cluster manifest over [[incSnapPairs]] —
     * what the maintenance pass has on disk when the new crawl lands. */
   private def prevClustersInc(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"neardup_clusters_stop_old_v1/$sfTag") {
+    Tables.artifact(s, dir, "neardup_clusters_stop_old") {
       Dedup.nearDupClustersFromPairs(
           incSnapPairs(s, dir, old = true),
           q145OldSnap(s, dir).select(col("doc_id")), "doc_id")
@@ -4350,8 +4304,7 @@ object Queries {
     * [[graft.ops.LmScore.trainCounts]] over the OLD snapshot's English
     * docs) — the stored artifact [[q155IncrementalLm]] maintains. */
   private def prevLmModel(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"lm_bigram_old_v1/$sfTag") {
+    Tables.artifact(s, dir, "lm_bigram_old") {
       graft.ops.LmScore.trainCounts(q145OldSnap(s, dir),
           "doc_id", "text", col("lang") === "en")
     }
@@ -4412,8 +4365,7 @@ object Queries {
     * (vectors are immutable by id: an embedding row is
     * content-addressed, so snapshots only add/remove ids). */
   private def prevIvfLists(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"ivf_lists_old_v1/$sfTag") {
+    Tables.artifact(s, dir, "ivf_lists_old") {
       Cluster.assignQ(quantizedPoints(s, dir).filter(col("id") % 17 =!= 0),
           trainedCentroids(s, dir))
         .select(col("id"), col("cluster_id"))
@@ -4494,9 +4446,8 @@ object Queries {
     * maintains. */
   private def prevDsirModel(s: SparkSession, dir: String,
                             target: Boolean): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
     val tag = if (target) "target" else "raw"
-    Tables.artifact(s, s"dsir_buckets3_${tag}_old_v1/$sfTag") {
+    Tables.artifact(s, dir, s"dsir_buckets3_${tag}_old") {
       graft.ops.Dsir.trainBucketCounts(q145OldSnap(s, dir),
           "doc_id", "text",
           if (target) col("doc_id") % 20 === 0 else col("doc_id") % 20 =!= 0)
@@ -4544,8 +4495,7 @@ object Queries {
     * snapshot — a scan deployment never pays). The registered cells
     * keep the live in-plan diff. */
   private def servedSnapshotDelta(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"snapshot_delta_v1/$sfTag") {
+    Tables.artifact(s, dir, "snapshot_delta") {
       graft.ops.SnapshotDelta.diffHashed(
           prevSnapshotHashes(s, dir),
           q145NewSnap(s, dir).select(col("doc_id"),
@@ -4565,15 +4515,13 @@ object Queries {
     * df/stats artifacts derive from the stored postings, so the old
     * text is scanned once across all of them. */
   private def prevBm25Postings(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"bm25_idx_old_v1/$sfTag/postings") {
+    Tables.artifact(s, dir, "bm25_idx_old/postings") {
       graft.ops.Bm25.postings(q145OldSnap(s, dir), "doc_id", "text")
     }
   }
 
   private def prevBm25Df(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"bm25_idx_old_v1/$sfTag/df") {
+    Tables.artifact(s, dir, "bm25_idx_old/df") {
       graft.ops.Bm25.docFreq(prevBm25Postings(s, dir))
     }
   }
@@ -4648,8 +4596,7 @@ object Queries {
     * contract. k derives from one count at artifact-build time and is
     * replayed by the oracle as (count+15)//16. */
   private[graft] def trainedCentroidsSem(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"kmeans_occ16_i2_e6_old_v1/$sfTag") {
+    Tables.artifact(s, dir, "kmeans_occ16_i2_e6_old") {
       val pts = quantizedPoints(s, dir).filter(col("id") % 97 =!= 0)
       val k = math.max(1L, (pts.count() + 15L) / 16L).toInt
       Cluster.train(pts, k, iterations = 2)
@@ -4664,8 +4611,7 @@ object Queries {
     * occupancy 16 would touch nearly every cluster and make the reuse
     * theorem vacuous as a demonstration. */
   private[graft] def prevSemLists(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"semdedup_lists_old_v1/$sfTag") {
+    Tables.artifact(s, dir, "semdedup_lists_old") {
       Cluster.assignQ(quantizedPoints(s, dir).filter(col("id") % 97 =!= 0),
           trainedCentroidsSem(s, dir))
         .select(col("id"), col("cluster_id"))
@@ -4675,8 +4621,7 @@ object Queries {
   /** The old snapshot's survivor manifest — the stored artifact the
     * maintenance pass reuses untouched rows from. */
   private def prevSemManifest(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"semdedup_manifest_old_v1/$sfTag") {
+    Tables.artifact(s, dir, "semdedup_manifest_old") {
       graft.ops.SemDedup.manifest(
           prevSemLists(s, dir).select(col("id").as("vec_id"),
             col("cluster_id")),
@@ -4886,9 +4831,8 @@ object Queries {
     * construction, so they broadcast at any corpus size. */
   private def dsirModel(s: SparkSession, dir: String,
                         target: Boolean): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
     val tag = if (target) "target" else "raw"
-    Tables.artifact(s, s"dsir_buckets3_${tag}_v1/$sfTag") {
+    Tables.artifact(s, dir, s"dsir_buckets3_${tag}") {
       graft.ops.Dsir.trainBucketCounts(t(s, dir, "documents"),
           "doc_id", "text",
           if (target) col("doc_id") % 20 === 0 else col("doc_id") % 20 =!= 0)
@@ -4920,8 +4864,7 @@ object Queries {
     * [[graft.ops.SnapshotDelta.diffHashed]] assumes: the delta against
     * the next crawl never re-reads or re-hashes old text. */
   private def prevSnapshotHashes(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"corpus_hashes_old_v1/$sfTag") {
+    Tables.artifact(s, dir, "corpus_hashes_old") {
       q145OldSnap(s, dir)
         .select(col("doc_id"),
           TextStats.contentHash(col("text")).as("content_hash"))
@@ -5134,12 +5077,11 @@ object Queries {
       col("text"), col("n_chars")) ++
       (0 until 64).map(j =>
         size(filter(col("_bk"), v => v === j)).cast("long"))
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    val base = s"qf_ngram_v1/$sfTag"
+    val base = "qf_ngram"
     graft.ops.QualityFilter.trainPerceptronFeatures(
       withBk, "doc_id",
       when(col("lang") === "en", 1L).otherwise(-1L), feats, rounds = 3,
-      store = (label, df) => Tables.artifact(s, s"$base/$label")(df))
+      store = (label, df) => Tables.artifact(s, dir, s"$base/$label")(df))
   }
 
   /** Eval-set decontamination with REMOVAL ([[graft.ops.Decontaminate
@@ -5336,8 +5278,7 @@ object Queries {
     * .spanIndex]]) — the stored fingerprint artifact that makes
     * exact-substring dedup incremental. */
   private def prevSpanIndex(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"span_index_old_v2/$sfTag") {
+    Tables.artifact(s, dir, "span_index_old") {
       ExactSpans.spanIndex(q145OldSnap(s, dir), "doc_id", "text", SpanMaintL)
     }
   }
@@ -5346,8 +5287,7 @@ object Queries {
     * .spanOcc]]) — the second stored artifact: old-side status is READ,
     * never re-aggregated from the index. */
   private def prevSpanOcc(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"span_occ_old_v2/$sfTag") {
+    Tables.artifact(s, dir, "span_occ_old") {
       ExactSpans.spanOcc(prevSpanIndex(s, dir))
     }
   }
@@ -5356,8 +5296,7 @@ object Queries {
     * at L=[[SpanMaintL]] over the OLD snapshot) — the third stored
     * artifact q176 maintains. */
   private def prevSpanManifest(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"span_manifest_old_v2/$sfTag") {
+    Tables.artifact(s, dir, "span_manifest_old") {
       ExactSpans.dedupSpansAll(q145OldSnap(s, dir), "doc_id", "text",
           SpanMaintL)
     }
@@ -5503,8 +5442,7 @@ object Queries {
     * q159's convention: embeddings are content-addressed by id, so
     * snapshots only add/remove ids). */
   private def prevPqCodes(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"pq_codes_old_m4_k8_i2_e6_v1/$sfTag") {
+    Tables.artifact(s, dir, "pq_codes_old_m4_k8_i2_e6") {
       graft.ops.Pq.encode(
           quantizedPoints(s, dir).filter(col("id") % 17 =!= 0),
           pqBooks(s, dir), m = 4)
@@ -5537,19 +5475,17 @@ object Queries {
     * the maintained PQ code table is exactly what a deployment persists
     * between crawls — maintenance (semi-join reuse + delta-only encode)
     * runs once per snapshot at artifact-build time, and every serving
-    * call reads the parquet store. Path carries the snapshot convention
-    * (%19 retention) + PQ parameters + schema version. */
+    * call reads the parquet store. The name carries the snapshot
+    * convention (%19 retention) and the PQ parameters. */
   private[graft] def q179StoredCodes(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"pq_codes_maint_m4_k8_i2_e6_n19_v1/$sfTag")(q179MaintainedCodes(s, dir))
+    Tables.artifact(s, dir, "pq_codes_maint_m4_k8_i2_e6_n19")(q179MaintainedCodes(s, dir))
   }
 
   /** [[q159MaintainedLists]] as a STORED artifact — the coarse half of
     * the maintained ANN serving stack, persisted beside the fine codes
     * ([[q179StoredCodes]]) under the same snapshot convention. */
   private[graft] def q179StoredLists(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "embeddings")
-    Tables.artifact(s, s"ivf_lists_maint_k8_i2_e6_n19_v1/$sfTag")(q159MaintainedLists(s, dir))
+    Tables.artifact(s, dir, "ivf_lists_maint_k8_i2_e6_n19")(q159MaintainedLists(s, dir))
   }
 
   /** INCREMENTAL IVF-PQ — the production ANN composition served
@@ -5603,8 +5539,7 @@ object Queries {
     * sketch state [[q180IncrementalCms]] maintains (counter state is
     * exactly what a 100 TB stream deployment persists between crawls). */
   private def prevCmsCells(s: SparkSession, dir: String): DataFrame = {
-    val sfTag = Tables.corpusTag(s, dir, "documents")
-    Tables.artifact(s, s"cms_cells_old_v1/$sfTag") {
+    Tables.artifact(s, dir, "cms_cells_old") {
       Cms.sketch(snapWords(q145OldSnap(s, dir)), "word")
     }
   }

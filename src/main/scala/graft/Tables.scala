@@ -1,6 +1,12 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+import java.security.MessageDigest
 import java.util.concurrent.ConcurrentHashMap
+import java.util.jar.JarFile
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -38,8 +44,8 @@ object Tables {
     * when the oracle map is materialized. Works because graft.Verify
     * runs every query BEFORE dumping oracle_sql.json (the dump happens
     * in the same process, after q163 refreshed the sidecar from the
-    * corpus under test). Deliberately NOT salted with the corpus tag:
-    * the freshest write is by construction the corpus the dump
+    * corpus under test). Deliberately NOT keyed by [[tag]]: the
+    * freshest write is by construction the corpus the dump
     * describes. */
   val Bpe512Sidecar: String =
     s"${System.getProperty("java.io.tmpdir")}/graft-scratch/bpe512_sidecar_v1"
@@ -62,19 +68,29 @@ object Tables {
     if (!fs.exists(p)) write
   }
 
-  /** The build-once artifact: the derived table at `scratchDir/<name>`,
+  /** The build-once artifact: the table derived from the input dir
+    * `dir`, at `scratchDir/<name>/<tag>` with `tag = `[[tag]]`(spark, dir)`,
     * written once by the `frame` build (parquet, partitioned by
     * `partitionBy` when given) and served from disk thereafter. The
-    * reference builds each derived table with one `CREATE TABLE … AS`;
-    * this is that statement for a content-salted name (corpusTag /
-    * parameter versions), so within a session the path's content never
-    * changes — the same immutability that makes [[table]] cacheable, and
-    * the `_SUCCESS` check and the footer read happen once per session.
-    * The first read goes through [[read]], so serving an artifact already
-    * on disk launches no Spark job. */
-  def artifact(spark: SparkSession, name: String, partitionBy: String*)(
-      frame: => DataFrame): DataFrame = {
-    val path = s"${scratchDir(spark)}/$name"
+    * reference builds each derived table with one `CREATE TABLE … AS`
+    * inside a rebuild; here the path names everything that produced the
+    * table — `name` what is built (with its parameters), the tag the
+    * code that built it and the input it read — so a stored table is
+    * reused only by the same build over the same input, and within a
+    * session the path's content never changes (the same immutability
+    * that makes [[table]] cacheable: the `_SUCCESS` check and the footer
+    * read happen once per session). The first read goes through [[read]],
+    * so serving an artifact already on disk launches no Spark job. The
+    * name comes first in the path because a plan prints a scan's
+    * location cut to 100 chars. */
+  def artifact(spark: SparkSession, dir: String, name: String, partitionBy: String*)(
+      frame: => DataFrame): DataFrame =
+    artifactAt(spark, name, tag(spark, dir), partitionBy: _*)(frame)
+
+  /** [[artifact]] under a given tag. */
+  private[graft] def artifactAt(spark: SparkSession, name: String, tag: String,
+      partitionBy: String*)(frame: => DataFrame): DataFrame = {
+    val path = s"${scratchDir(spark)}/$name/$tag"
     memo(spark, s"artifact:$path") {
       // The build's terminal action (the parquet write) completes inside
       // the block, so every multi-consumer frame an operator persisted
@@ -93,7 +109,7 @@ object Tables {
   /** Reads the Spark-written parquet table at `path` with the schema Spark
     * stored in its footer: one footer read on the driver and no Spark job,
     * where `spark.read.parquet` runs a schema-inference job. Partition
-    * columns (silver `order_year`, q87's `dpp_v1`) still come from
+    * columns (silver `order_year`, q87's `dpp/orders`) still come from
     * directory discovery, as with `spark.read.parquet`. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -156,7 +172,7 @@ object Tables {
     }
   }
   // NOT computeIfAbsent: an artifact build re-enters memo (table(),
-  // corpusTag-salted sub-artifacts), and a reentrant computeIfAbsent
+  // the artifacts it derives from), and a reentrant computeIfAbsent
   // throws "Recursive update" whenever the two keys land in the same
   // bin — a nondeterministic, data-dependent crash. get/putIfAbsent is
   // reentrancy-safe; a racing duplicate build is harmless (DataFrames
@@ -177,40 +193,66 @@ object Tables {
       else spark.read.parquet(s"$dir/$name.parquet")
     }
 
-  /** Identity tag for the corpus snapshot behind `dir/name.parquet`:
-    * `<basename>_<bytes>_<mtime>` — the same salt [[wide]] uses. Derived
-    * artifacts (shingle sets, pair tables, trained models, ground-truth
-    * top-k) must key their scratch paths with this, not the bare dir
-    * basename: a table regenerated in place, or two corpora whose
-    * directories share a final path component, would otherwise silently
-    * serve each other's artifacts. */
+  /** The build's code fingerprint: one digest of the bytes of every
+    * compiled class under `graft/` at this object's code source (a class
+    * directory or a jar), taken once per JVM. Any code change gives a new
+    * fingerprint, so every [[artifact]] is rebuilt after it. */
+  private[graft] lazy val codeFingerprint: String = {
+    val src = Option(getClass.getProtectionDomain.getCodeSource)
+      .getOrElse(throw new IllegalStateException(
+        "graft.Tables has no code source, so the build has no fingerprint"))
+    val root = new File(src.getLocation.toURI)
+    val classes: Seq[(String, Array[Byte])] =
+      if (root.isDirectory) {
+        val base = root.toPath
+        val walk = Files.walk(base.resolve("graft"))
+        try walk.iterator.asScala.filter(Files.isRegularFile(_)).toList
+          .map(p => base.relativize(p).toString -> Files.readAllBytes(p))
+        finally walk.close()
+      } else {
+        val jar = new JarFile(root)
+        try jar.entries.asScala.filter(e => !e.isDirectory && e.getName.startsWith("graft/"))
+          .toList.map(e => e.getName -> jar.getInputStream(e).readAllBytes())
+        finally jar.close()
+      }
+    require(classes.nonEmpty, s"no graft/ classes under $root to fingerprint")
+    val md = MessageDigest.getInstance("SHA-256")
+    classes.sortBy(_._1).foreach { case (name, bytes) =>
+      md.update(name.getBytes("UTF-8"))
+      md.update(0.toByte)
+      md.update(bytes)
+    }
+    hex(md.digest())
+  }
+
+  private def hex(bytes: Array[Byte]): String = bytes.take(8).map("%02x".format(_)).mkString
+
+  private def digest(s: String): String =
+    hex(MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8")))
+
+  /** `dir`'s artifact tag under the code `fingerprint`: the dir's
+    * basename (a bounded digest past 80 chars), then one digest of the
+    * fingerprint and the name, byte size and mtime of every `*.parquet`
+    * table in `dir` — a table regenerated in place, or two corpora whose
+    * dirs share a basename, get distinct tags. */
+  private[graft] def tag(spark: SparkSession, dir: String, fingerprint: String): String = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val inputs = fs.listStatus(root).filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName).map { st =>
+        val bytes = if (st.isFile) st.getLen else fs.getContentSummary(st.getPath).getLength
+        s"${st.getPath.getName} $bytes ${st.getModificationTime}"
+      }
+    val base = root.getName
+    val shown = if (base.length <= 80) base else "h" + digest(base)
+    s"${shown}_${digest((fingerprint +: inputs).mkString("\n"))}"
+  }
+
+  /** `dir`'s artifact tag under this build's [[codeFingerprint]],
+    * memoized per dir: inputs are immutable for the process. */
   private val tags = new ConcurrentHashMap[String, String]()
-  def corpusTag(spark: SparkSession, dir: String, name: String): String =
-    // Memoized per path: the tag is a filesystem stat of IMMUTABLE-for-
-    // the-process testdata, and derived-artifact consumers re-ask for it
-    // on every query build.
-    tags.computeIfAbsent(s"$dir/$name", _ => {
-      val p = new Path(s"$dir/$name.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      val bytes =
-        if (st.isFile) st.getLen else fs.getContentSummary(p).getLength
-      // Tags COMPOSE: derived artifacts key their paths by one or more
-      // corpus tags, and a derived CORPUS (ScaleCorpus's 10× dir) bakes
-      // four source tags into its own dir name — so an uncapped dir
-      // part compounds geometrically and a two-tag artifact over the
-      // scale corpus exceeds the filesystem's 255-byte path-segment
-      // limit (observed r19: q172's hybrid_rrf artifact failed mkdir at
-      // the 10× corpus). Long dir parts collapse to a deterministic
-      // digest; identity is preserved, short base tags are unchanged.
-      val dirPart = dir.replaceAll(".*/", "")
-      val dp =
-        if (dirPart.length <= 80) dirPart
-        else "h" + java.security.MessageDigest.getInstance("MD5")
-          .digest(dirPart.getBytes("UTF-8")).map("%02x".format(_))
-          .mkString.take(16)
-      s"${dp}_${bytes}_${st.getModificationTime}"
-    })
+  def tag(spark: SparkSession, dir: String): String =
+    tags.computeIfAbsent(dir, d => tag(spark, d, codeFingerprint))
 
   /** Production-layout scan: the generator writes each table as ONE
     * parquet row group, so every scan plans exactly one input split and
@@ -219,8 +261,8 @@ object Tables {
     * compacting small/degenerate files into well-sized ones is the
     * standard ingest step; see also [[graft.sources.Bucketed]] for the
     * keyed version of the same amortized-artifact contract). wide()
-    * materializes that realistic layout ONCE per scratch dir and serves
-    * it thereafter: content-identical rows, multi-split files, so
+    * materializes that realistic layout ONCE per build and input (an
+    * [[artifact]]) and serves it thereafter: content-identical rows, multi-split files, so
     * downstream plans stay shuffle-free but scan with the parallelism a
     * production layout provides. Use for scan-/compute-bound queries
     * whose results don't depend on row order (maps, aggregations).
@@ -234,11 +276,7 @@ object Tables {
       val srcFiles = Option(fs.listStatus(src)).getOrElse(Array.empty[FileStatus])
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       if (!st.isFile && srcFiles.length >= 8) table(spark, dir, name)
-      // Key the artifact by the source's size+mtime so a regenerated input
-      // (same path, new content) rebuilds instead of silently serving the
-      // old copy — the staleness trap Tables-level artifacts must not have.
-      else artifact(spark, s"wide_v1/${dir.replaceAll(".*/", "")}/" +
-          s"${name}_${st.getLen}_${st.getModificationTime}.parquet") {
+      else artifact(spark, dir, s"wide/$name.parquet") {
         table(spark, dir, name).repartition(16)
       }
     }

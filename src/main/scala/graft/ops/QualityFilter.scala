@@ -74,8 +74,8 @@ object QualityFilter {
     * weight state ("w1".."wN") — frames that later stages reference
     * repeatedly — and must return a re-readable frame. The production
     * implementation is a RELIABLE stored artifact (q131 passes
-    * [[graft.Tables.artifact]], parquet salted by corpus snapshot
-    * + feature version): `localCheckpoint`, the obvious in-session
+    * [[graft.Tables.artifact]], parquet keyed by the build and the
+    * corpus snapshot): `localCheckpoint`, the obvious in-session
     * alternative, pins blocks to executors NON-reliably — on a real
     * cluster one lost executor makes the corpus-sized feature table
     * unrecoverable mid-training and fails the job; a written artifact

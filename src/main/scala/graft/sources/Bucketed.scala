@@ -57,9 +57,9 @@ object Bucketed {
     * in-memory, so a new JVM finds the files without an entry; then the
     * table is registered over them by DDL carrying the bucket and sort
     * spec and `df`'s schema, which launches no Spark job. The files
-    * outlive the JVM: callers name the table by its input's content
-    * ([[graft.Tables.corpusTag]]); callers whose input can change under
-    * the same name must use [[write]]. */
+    * outlive the JVM: callers name the table by the build and the input
+    * it reads ([[graft.Tables.tag]]); callers whose input can change
+    * under the same name must use [[write]]. */
   def writeIfAbsent(df: DataFrame, table: String, bucketCols: Seq[String],
                     numBuckets: Int): Unit = {
     val spark = df.sparkSession

@@ -12,12 +12,10 @@ class PlanSpec extends SparkSpec {
     q(spark, dir).queryExecution.executedPlan.toString
 
   /** Plan lines scanning `table` — matches both the raw single-file layout
-    * (`orders.parquet`) and the compacted wide artifact
-    * (`wide_v1/<sf>/orders_<size>_<mtime>.parquet`), whose long path the
-    * plan printer may truncate before the `.parquet` suffix. */
+    * (`<dir>/orders.parquet`) and the compacted wide artifact
+    * (`<scratch>/wide/orders.parquet/<tag>`). */
   private def scans(p: String, table: String): Int =
-    p.split("\n").count(l =>
-      l.contains(s"/$table.parquet") || l.contains(s"/${table}_"))
+    p.split("\n").count(_.contains(s"/$table.parquet"))
 
   /** Shuffle-exchange lines, matched on the PHYSICAL OPERATOR NAME, not a
     * bare "Exchange" substring (ADVICE r18): `\bExchange <partitioning>`
@@ -369,7 +367,7 @@ class PlanSpec extends SparkSpec {
     plan(q144Dist) should include("HashAggregate")
     // q146's reporting plan reads the stored suffix index, never
     // re-derives the doubling construction in-query
-    plan(Queries.q146MaximalSpans) should include("suffix_f_v1")
+    plan(Queries.q146MaximalSpans) should include("/suffix_f/")
   }
 
   test("q144: a corpus under the cap runs the one-task tier, no shuffle") {
@@ -405,8 +403,8 @@ class PlanSpec extends SparkSpec {
     val p = plan(Queries.q145IncrementalCorpusBuild(_, _))
     // previous manifest, previous fingerprint table, eval window set and
     // the LM model must come from their parquet artifacts
-    Seq("corpus_build_old_v1", "corpus_hashes_old_v1", "eval_windows8_v1",
-      "lm_bigram_v1").foreach { a =>
+    Seq("/corpus_build_old/", "/corpus_hashes_old/", "/eval_windows8/",
+      "/lm_bigram/").foreach { a =>
       withClue(s"artifact $a: ") { p should include(a) }
     }
     // (a per-stage corpus-scan bound is NOT asserted here: the plan
@@ -451,8 +449,8 @@ class PlanSpec extends SparkSpec {
 
   test("q154: DSIR models broadcast; selection is the salted two-window top-N") {
     val p = plan(Queries.q154DsirSelect)
-    p should include("dsir_buckets3_target_v1")
-    p should include("dsir_buckets3_raw_v1")
+    p should include("/dsir_buckets3_target/")
+    p should include("/dsir_buckets3_raw/")
     // two fixed-4096-row model joins + the doc-spine join broadcast; a
     // SortMergeJoin on `bucket` means a model stopped broadcasting and
     // the corpus-sized feature stream is being sorted at 100 TB
@@ -467,8 +465,8 @@ class PlanSpec extends SparkSpec {
 
   test("q155: LM maintenance serves the stored model and combines in ONE bigram exchange") {
     val p = plan(Queries.q155IncrementalLm)
-    p should include("lm_bigram_old_v1")
-    p should include("corpus_hashes_old_v1")
+    p should include("/lm_bigram_old/")
+    p should include("/corpus_hashes_old/")
     // the three legs (stored model + minus + plus occurrence streams)
     // must meet in a single hash aggregation on the bigram: a second
     // bigram exchange means a leg re-grew its own pre-aggregation
@@ -486,8 +484,8 @@ class PlanSpec extends SparkSpec {
 
   test("q159: IVF serving reads the stored list artifact; only queries rank centroids") {
     val p = plan(Queries.q159IncrementalIvf)
-    p should include("ivf_lists_old_v1")
-    p should include("kmeans_k8_i2_e6_v1")
+    p should include("/ivf_lists_old/")
+    p should include("/kmeans_k8_i2_e6/")
     // exactly TWO ranking windows run: the delta-only assignment argmin
     // is an aggregate (no window), so windows = query-probe rank + the
     // final top-k rank; a third means a corpus-wide nearest-list pass
@@ -527,7 +525,7 @@ class PlanSpec extends SparkSpec {
     val p = plan(Queries.q165Bm25TopK)
     // retrieval reads the postings/df/stats ARTIFACTS (r14 ask #1c) —
     // a live postings rebuild would scan documents.parquet
-    p should include("bm25_idx_v1")
+    p should include("/bm25_idx/")
     p should not include "documents.parquet"
     // the query-term list and the (N, avgdl) stats row broadcast
     p.split("\n").count(_.contains("BroadcastHashJoin")) should be >= 1
@@ -539,7 +537,7 @@ class PlanSpec extends SparkSpec {
 
   test("q167: whole-query BM25 serves the same stored index (one scored pass + sum)") {
     val p = plan(Queries.q167Bm25QueryScore)
-    p should include("bm25_idx_v1")
+    p should include("/bm25_idx/")
     p should not include "documents.parquet"
     p should not include "CartesianProduct"
     // windows: the salted top-k pair only — the query panel is a
@@ -555,9 +553,9 @@ class PlanSpec extends SparkSpec {
     // IVF structures into a single MapPartitions — no join, no window,
     // no corpus scan anywhere
     p should include("MapPartitions")
-    p should include("bm25_idx_v1")
-    p should include("ivf_lists_full_v1")
-    p should include("qpoints_e6_v1")
+    p should include("/bm25_idx/")
+    p should include("/ivf_lists_full/")
+    p should include("/qpoints_e6/")
     p should not include "documents.parquet"
     p should not include "embeddings.parquet"
     p.split("\n").count(_.contains("Window [")) shouldBe 0
@@ -573,9 +571,9 @@ class PlanSpec extends SparkSpec {
     // the brute-force cosine pass over embeddings.parquet is gone,
     // gated instead by q172)
     p should not include "MapPartitions"
-    p should include("bm25_idx_v1")
-    p should include("ivf_lists_full_v1")
-    p should include("qpoints_e6_v1")
+    p should include("/bm25_idx/")
+    p should include("/ivf_lists_full/")
+    p should include("/qpoints_e6/")
     p should not include "documents.parquet"
     p should not include "embeddings.parquet"
     p should not include "CartesianProduct"

@@ -8,17 +8,16 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Artifact-identity plumbing: the corpus tag is the salt every derived
-  * artifact keys its scratch path with, and tags COMPOSE (a derived
-  * corpus bakes its sources' tags into its dir name, and a multi-input
-  * artifact concatenates several tags) — so the tag must stay bounded
-  * however long the underlying dir name grows, without ever colliding
-  * two distinct corpora. Round 19 found the unbounded form exceeding
-  * the filesystem's 255-byte path-segment limit at the 10× scale
-  * corpus (q172's two-tag artifact failed mkdir).
+/** Artifact identity: [[Tables.artifact]] keys every derived table by
+  * its name and [[Tables.tag]] — the input dir's basename plus one digest
+  * of the build's code fingerprint and the dir's tables — so a changed
+  * build or a regenerated input rebuilds, and the same build over the
+  * same input serves from disk with no Spark job. The tag stays bounded
+  * however long the dir name grows, without colliding two corpora.
   *
   * Also pins [[Tables.artifact]], the one build-once artifact primitive,
-  * and keeps hand-rolled artifact writes from being copied back in. */
+  * and keeps hand-rolled artifact writes and hand-kept versions from
+  * being copied back in. */
 class TablesSpec extends SparkSpec {
 
   private def mkCorpus(dirName: String): String = {
@@ -31,24 +30,38 @@ class TablesSpec extends SparkSpec {
 
   test("short dir names keep the literal basename in the tag") {
     val dir = mkCorpus("sf0.0001x")
-    val tag = Tables.corpusTag(spark, dir, "documents")
-    tag should startWith("sf0.0001x_")
+    Tables.tag(spark, dir) should startWith("sf0.0001x_")
   }
 
   test("long (composed) dir names collapse to a bounded digest, distinct per corpus") {
-    // two dir names that share a long prefix the way composed scale-dir
-    // tags do, differing only deep inside — the digest must keep them apart
+    // two dir names that share a long prefix, differing only deep
+    // inside — the digest must keep them apart
     val stem = "sf0.1_594568_1786839540587__" * 6 // ~168 chars, over the cap
     val a = mkCorpus(stem + "a")
     val b = mkCorpus(stem + "b")
-    val ta = Tables.corpusTag(spark, a, "documents")
-    val tb = Tables.corpusTag(spark, b, "documents")
-    // bounded: digest part + bytes + mtime stays far under the 255-byte
-    // segment limit even when an artifact concatenates several tags
+    val ta = Tables.tag(spark, a)
+    val tb = Tables.tag(spark, b)
+    // bounded: far under the 255-byte path-segment limit
     ta.length should be < 60
     ta should startWith("h")
     ta.takeWhile(_ != '_').length shouldBe 17 // "h" + 16 hex chars
     ta.takeWhile(_ != '_') should not be tb.takeWhile(_ != '_')
+  }
+
+  test("the tag changes with the code fingerprint and with any input table") {
+    Tables.codeFingerprint should fullyMatch regex "[0-9a-f]{16}"
+    val dir = mkCorpus("sfspec")
+    val before = Tables.tag(spark, dir, "fpA")
+    Tables.tag(spark, dir, "fpA") shouldBe before
+    Tables.tag(spark, dir, "fpB") should not be before
+    // rewriting one input table under dir gives a new tag
+    df("doc_id BIGINT", Seq(Row(1L), Row(2L), Row(3L))).coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    Tables.tag(spark, dir, "fpA") should not be before
+    // so does adding one
+    val rewritten = Tables.tag(spark, dir, "fpA")
+    df("k BIGINT", Seq(Row(1L))).write.parquet(s"$dir/orders.parquet")
+    Tables.tag(spark, dir, "fpA") should not be rewritten
   }
 
   /** A fresh session (so the artifact memo misses) over its own scratch
@@ -62,44 +75,77 @@ class TablesSpec extends SparkSpec {
   private def scratch(): String =
     Files.createTempDirectory("artifactspec").toFile.getAbsolutePath
 
+  private lazy val corpus = mkCorpus("sfspec")
+
+  /** Where [[Tables.artifact]] puts `name` under `scratch`. */
+  private def at(scratch: String, name: String): String =
+    s"$scratch/$name/${Tables.tag(spark, corpus)}"
+
   test("an artifact on disk is served to a new session with no Spark job and the inferred schema") {
     val dir = scratch()
-    Tables.artifact(session(dir), "served_v1")(
+    Tables.artifact(session(dir), corpus, "served")(
       spark.range(20).selectExpr("id", "cast(id % 3 as int) as k", "repeat('x', 2) as s"))
       .count() shouldBe 20
     var schema: StructType = null
     jobsDuring {
-      schema = Tables.artifact(session(dir), "served_v1")(
+      schema = Tables.artifact(session(dir), corpus, "served")(
         throw new AssertionError("an artifact on disk must not be rebuilt")).schema
     } shouldBe 0
-    schema shouldBe spark.read.parquet(s"$dir/served_v1").schema
+    schema shouldBe spark.read.parquet(at(dir, "served")).schema
+  }
+
+  test("a changed code fingerprint rebuilds an artifact at a new path; the same one serves it with no job") {
+    val dir = scratch()
+    val (tagA, tagB) = (Tables.tag(spark, corpus, "fpA"), Tables.tag(spark, corpus, "fpB"))
+    Tables.artifactAt(session(dir), "fp", tagA)(spark.range(3).toDF()).count() shouldBe 3
+    var rebuilt = false
+    Tables.artifactAt(session(dir), "fp", tagB) { rebuilt = true; spark.range(4).toDF() }
+      .count() shouldBe 4
+    rebuilt shouldBe true
+    new File(s"$dir/fp/$tagB/_SUCCESS").exists() shouldBe true
+    var served: org.apache.spark.sql.DataFrame = null
+    jobsDuring {
+      served = Tables.artifactAt(session(dir), "fp", tagA)(
+        throw new AssertionError("the same fingerprint must serve, not rebuild"))
+    } shouldBe 0
+    served.count() shouldBe 3
   }
 
   test("an artifact directory without _SUCCESS is rebuilt, not trusted") {
     val dir = scratch()
-    spark.range(3).write.parquet(s"$dir/half_v1")
-    new File(s"$dir/half_v1/_SUCCESS").delete() shouldBe true
-    Tables.artifact(session(dir), "half_v1")(spark.range(5).toDF()).count() shouldBe 5
-    new File(s"$dir/half_v1/_SUCCESS").exists() shouldBe true
+    val path = at(dir, "half")
+    spark.range(3).write.parquet(path)
+    new File(s"$path/_SUCCESS").delete() shouldBe true
+    Tables.artifact(session(dir), corpus, "half")(spark.range(5).toDF()).count() shouldBe 5
+    new File(s"$path/_SUCCESS").exists() shouldBe true
   }
 
   test("a partitioned artifact keeps its partition column") {
     val dir = scratch()
-    val served = Tables.artifact(session(dir), "part_v1", "year")(
+    val served = Tables.artifact(session(dir), corpus, "part", "year")(
       spark.range(6).selectExpr("id", "cast(1995 + id % 2 as int) as year"))
     served.columns.toSeq shouldBe Seq("id", "year")
-    served.schema shouldBe spark.read.parquet(s"$dir/part_v1").schema
-    new File(s"$dir/part_v1").list().filter(_.startsWith("year=")).sorted shouldBe
+    served.schema shouldBe spark.read.parquet(at(dir, "part")).schema
+    new File(at(dir, "part")).list().filter(_.startsWith("year=")).sorted shouldBe
       Array("year=1995", "year=1996")
     served.filter("year = 1996").count() shouldBe 3
   }
 
-  test("an artifact lands at scratchDir/<name>") {
+  test("an artifact lands at scratchDir/<name>/<tag>") {
     val dir = scratch()
-    val served = Tables.artifact(session(dir), "nested/name_v1/tag")(spark.range(4).toDF())
-    new File(s"$dir/nested/name_v1/tag/_SUCCESS").exists() shouldBe true
+    val served = Tables.artifact(session(dir), corpus, "nested/name")(spark.range(4).toDF())
+    Tables.tag(spark, corpus) should startWith("sfspec_")
+    val path = s"$dir/nested/name/${Tables.tag(spark, corpus)}"
+    new File(s"$path/_SUCCESS").exists() shouldBe true
     served.inputFiles should not be empty
-    served.inputFiles.foreach(_ should include(s"$dir/nested/name_v1/tag/"))
+    served.inputFiles.foreach(_ should include(s"$path/"))
+  }
+
+  test("Queries keys no artifact by hand: no corpusTag, no _vN version") {
+    val text = new String(
+      Files.readAllBytes(Paths.get("src/main/scala/graft/Queries.scala")), "UTF-8")
+    text should not include "corpusTag("
+    """_v[0-9]""".r.findAllIn(text).toSeq shouldBe empty
   }
 
   test("no file under src/main hand-rolls a build-once artifact") {
